@@ -7,8 +7,9 @@ Each directory holds the JSON records ``run.py`` writes under
 ``.perfbench_results/``. For every workload and end-to-end metric it
 prints each side's median and quartiles and a verdict:
 
-- ``improved``: the change wins at least 9 of 10 seed-matched pairs and
-  the medians differ by more than the parent's quartile spread;
+- ``improved``: the change wins at least 9 of 10 matched pairs (the
+  n-th run of a seed on each side) and the medians differ by more than
+  the parent's quartile spread;
 - ``worse``: the change's median is worse by more than the metric's
   bound in BENCHMARK.json;
 - ``within bound``: neither;
@@ -20,7 +21,8 @@ highest percentile with ten samples beyond it), flags runs whose CPU
 canary drifted by more than 1.3x between start and end of the run (not
 a quiet machine), reports the tracing overhead (traced minus untraced
 op median), and, from the traced runs, names the layer whose self time
-moved most and every count that changed.
+moved most and every count that changed. Waits for concurrent jobs
+stay in the self time of the span that waited and count for no layer.
 """
 
 from __future__ import annotations
@@ -35,6 +37,7 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, HERE)
 
 from run import tail  # noqa: E402
+from tracer import WAITS  # noqa: E402
 
 QUIET_GATE = 1.3
 
@@ -63,7 +66,20 @@ def spread(xs: list[float]) -> float:
     return (q3 - q1) / q2 if q2 else 0.0
 
 
-def verdict(par: dict[int, float], chg: dict[int, float], bound: float, lower: bool) -> str:
+def by_run(recs: list[dict], wl: str, metric: str) -> dict[tuple[int, int], float]:
+    """The untraced runs of one workload, keyed by (seed, n) where n
+    counts the runs of that seed in the order they were recorded, so
+    repeated runs on one seed are all kept and pair up in order."""
+    out: dict[tuple[int, int], float] = {}
+    for r in sorted(recs, key=lambda r: (r["seed"], os.path.basename(r["_file"]))):
+        if r["workload"] != wl or r["trace"] or not r.get("end_to_end"):
+            continue
+        n = sum(1 for s, _ in out if s == r["seed"])
+        out[(r["seed"], n)] = r["end_to_end"][metric]
+    return out
+
+
+def verdict(par: dict[tuple, float], chg: dict[tuple, float], bound: float, lower: bool) -> str:
     p, c = list(par.values()), list(chg.values())
     sign = -1.0 if lower else 1.0  # positive = better
     pm, cm = statistics.median(p), statistics.median(c)
@@ -90,13 +106,7 @@ def e2e_table(par: list[dict], chg: list[dict], bench: dict) -> None:
     print("workload      metric          parent median [q1, q3]          change median [q1, q3]          verdict")
     for wl in sorted({r["workload"] for r in par + chg}):
         for m in bench["end_to_end"]:
-            sides = []
-            for recs in (par, chg):
-                sides.append({
-                    r["seed"]: r["end_to_end"][m["name"]]
-                    for r in recs
-                    if r["workload"] == wl and not r["trace"] and r.get("end_to_end")
-                })
+            sides = [by_run(recs, wl, m["name"]) for recs in (par, chg)]
             if not sides[0] or not sides[1]:
                 continue
             cells = []
@@ -163,7 +173,7 @@ def trace_diff(par: list[dict], chg: list[dict]) -> None:
                 over = statistics.median(traced) - statistics.median(plain)
                 print(f"  tracing overhead ({label}): {fmt(over)} s per op")
         layers: dict[str, float] = {}
-        for k in set(ps) | set(cs):
+        for k in (set(ps) | set(cs)) - WAITS:
             layers[k.split(".")[0]] = layers.get(k.split(".")[0], 0.0) + cs.get(k, 0.0) - ps.get(k, 0.0)
         for k in sorted(set(ps) | set(cs)):
             print(f"  self  {k:28s} {fmt(ps.get(k, 0.0)):>10s} -> {fmt(cs.get(k, 0.0)):>10s} s/op")

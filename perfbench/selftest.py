@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""Self-test of the benchmark at tiny scale (sf0.001, a dozen media
+"""Self-test of the benchmark at tiny scale (sf0.001, 36 media
 documents), in one Spark session:
 
     python3 perfbench/selftest.py [workload ...]
@@ -35,7 +35,7 @@ TINY = {
     "backfill": {"sf": 0.001, "setups": 1, "min_ops": 1},
     "flow_tick": {"sf": 0.001, "ticks": 3, "setups": 1, "min_ops": 1},
     "dashboard": {"sf": 0.001, "setups": 1, "min_ops": 1},
-    "media_tick": {"base_docs": 12, "batch_docs": 2, "setups": 1, "min_ops": 1},
+    "media_tick": {"docs": 36, "batches": 1, "setups": 1, "min_ops": 1},
 }
 
 
@@ -55,7 +55,7 @@ def main(argv: list[str]) -> int:
     cores = int(command[command.index("--cores") + 1])
     spark = None
     try:
-        event_dir = run.configure_env(work, True, run.load_config())
+        event_dir = run.configure_env(work, True)
         spark = run.start_session("selftest", cores)
         for name in names:
             t0 = time.perf_counter()

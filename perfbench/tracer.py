@@ -9,9 +9,11 @@ A ``Tracer`` is off by default; ``enabled`` is flipped per op, so an
 untraced op pays one attribute test per wrapped call. For each traced
 op the tracer keeps, per span name, the call count, the summed wall
 time and the summed self time (wall time minus the time of child spans
-opened on the same thread). Spark job, stage and task counts come from
-the status tracker, read after the op over the job ids the op created;
-shuffle and spill bytes come from the Spark event log.
+opened on the same thread, waits for concurrent jobs excepted). The
+media tick's own phase marks become spans too. Spark job, stage and
+task counts come from the status tracker, read after the op over the
+job ids the op created; shuffle and spill bytes come from the Spark
+event log.
 """
 
 from __future__ import annotations
@@ -26,6 +28,19 @@ import time
 from contextlib import contextmanager
 
 ENGINE = "falcon_metrics_etl_spark"
+# spans that only wait for work other spans submitted: their time stays
+# in the enclosing span's self time and counts for no layer of its own
+WAITS = frozenset({"session.concurrent_wait"})
+# the media tick's own phase marks -> span names
+TICK_PHASES = {
+    "decode": "functions.decode",
+    "edges": "streaming.edges",
+    "resolve": "streaming.resolve",
+    "flags": "streaming.land",
+    "repoint": "streaming.land",
+    "append": "streaming.land",
+    "maintenance": "streaming.maintenance",
+}
 
 
 class OpTrace:
@@ -67,25 +82,73 @@ class Tracer:
         self._patched: list[tuple[object, str, object]] = []
 
     # -- spans ---------------------------------------------------------
+    def _stack(self) -> list[float]:
+        """Per thread, the child time accumulated by each open span."""
+        stack = getattr(self._local, "stack", None)
+        if stack is None:
+            stack = self._local.stack = []
+        return stack
+
     @contextmanager
     def span(self, name: str):
         if not self.enabled or self._op is None:
             yield
             return
-        stack = getattr(self._local, "stack", None)
-        if stack is None:
-            stack = self._local.stack = []
-        stack.append(0.0)  # child time accumulated on this thread
+        # a call inside a span of the same name on this thread (as
+        # merge_state commits through overwrite_state) is part of it
+        open_names = self._local.__dict__.setdefault("names", [])
+        if name in open_names:
+            yield
+            return
+        open_names.append(name)
+        stack = self._stack()
+        depth = len(stack)
+        stack.append(0.0)
         t0 = time.perf_counter()
         try:
             yield
         finally:
             wall = time.perf_counter() - t0
-            child = stack.pop()
-            if stack:
-                stack[-1] += wall
+            open_names.pop()
+            child = stack[depth]
+            del stack[depth:]  # also drops phases left open inside
+            # a wait stays in its parent's self time (see WAITS)
+            if depth and name not in WAITS:
+                stack[depth - 1] += wall
             with self._lock:
                 self._op.add(name, wall, wall - child)
+
+    def phase_timer(self, names: dict[str, str]):
+        """A stand-in for an engine phase timer, a factory of
+        ``mark(label)`` closures: each mark ends the phase that began
+        at the previous mark (or at the factory call) and records it as
+        a span named ``names[label]``. Used inside a span that closes
+        the last phase's stack entry."""
+        tracer = self
+
+        def factory():
+            if not tracer.enabled or tracer._op is None:
+                return lambda label: None
+            stack = tracer._stack()
+            depth = len(stack)
+            stack.append(0.0)
+            t = [time.perf_counter()]
+
+            def mark(label: str) -> None:
+                now = time.perf_counter()
+                if len(stack) <= depth or tracer._op is None:
+                    return
+                wall, child = now - t[0], stack[depth]
+                stack[depth] = 0.0
+                if depth:
+                    stack[depth - 1] += wall
+                with tracer._lock:
+                    tracer._op.add(names.get(label, "streaming." + label), wall, wall - child)
+                t[0] = now
+
+            return mark
+
+        return factory
 
     def count(self, name: str, value: float = 1.0) -> None:
         if self.enabled and self._op is not None:
@@ -139,6 +202,15 @@ class Tracer:
                 self._patched.append((mod, func_name, original))
                 setattr(mod, func_name, wrapper)
 
+    def replace(self, module_name: str, attr: str, value) -> None:
+        """Set ``module_name.attr`` to ``value`` until ``unpatch``, if
+        the module has such an attribute."""
+        __import__(module_name)
+        mod = sys.modules[module_name]
+        if hasattr(mod, attr):
+            self._patched.append((mod, attr, getattr(mod, attr)))
+            setattr(mod, attr, value)
+
     def timed_join(self, span: str):
         """Result wrapper for ``start_concurrent``: time the blocking
         ``join()`` it returns."""
@@ -173,6 +245,12 @@ def install_layer_spans(tracer: Tracer) -> None:
     tracer.wrap(f"{ENGINE}.streaming.cursors", "load_cursor", "streaming.cursor")
     tracer.wrap(f"{ENGINE}.streaming.cursors", "advance_cursor", "streaming.cursor")
     tracer.wrap(f"{ENGINE}.sources.tables", "load_table", "sources.load_table")
+    # the media tick: a span per tick, and its own phase marks as spans
+    # (decode is the functions.multimodal fingerprinting of the batch)
+    cm = f"{ENGINE}.streaming.cross_modal_tick"
+    tracer.wrap(cm, "trimodal_ingest_tick", "streaming.tick")
+    tracer.wrap(cm, "unified_media_ingest_tick", "streaming.tick")
+    tracer.replace(cm, "_phase_timer", tracer.phase_timer(TICK_PHASES))
 
 
 # -- Spark counters ---------------------------------------------------

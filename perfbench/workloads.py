@@ -112,21 +112,25 @@ class Backfill(Workload):
     name = "backfill"
 
     def setup(self) -> None:
-        from falcon_metrics_etl_spark.sources import load_table
-
-        tables = os.path.join(self.work, "tables")
-        inputs.make_tables(self.seed, self.cfg["sf"], tables)
-        self.input_paths = [os.path.join(tables, "lineitem.parquet")]
+        self.tables = os.path.join(self.work, "tables")
+        inputs.make_tables(self.seed, self.cfg["sf"], self.tables)
+        self.input_paths = [os.path.join(self.tables, "lineitem.parquet")]
         li = pq.read_table(self.input_paths[0], columns=["l_orderkey"])
         self.n_items = len(np.unique(li.column("l_orderkey").to_numpy()))
-        self.lineitem = load_table(self.spark, tables, "lineitem")
         tag = os.path.basename(self.work).replace("-", "_")
         self.states_tbl, self.snaps_tbl = f"pb_states_{tag}", f"pb_snaps_{tag}"
         self.states_dir = os.path.join(self.work, "sink", "states")
         self.snaps_dir = os.path.join(self.work, "sink", "snaps")
         self.sink_dirs = [self.states_dir, self.snaps_dir]
+        self.cached = ()
+
+    def _release(self) -> None:
+        for df in self.cached:
+            df.unpersist()
+        self.cached = ()
 
     def prepare(self, i: int) -> None:
+        self._release()  # the previous op's stage frames
         for tbl in (self.states_tbl, self.snaps_tbl):
             self.spark.sql(f"DROP TABLE IF EXISTS {tbl}")
         for d in self.sink_dirs:
@@ -140,9 +144,10 @@ class Backfill(Workload):
             dedupe_consecutive,
         )
         from falcon_metrics_etl_spark.operators.snapshots import derive_snapshots
+        from falcon_metrics_etl_spark.sources import load_table
 
         tr = self.tracer
-        li = self.lineitem
+        li = load_table(self.spark, self.tables, "lineitem")
         zone = (
             F.when(F.col("l_returnflag") == "N", 1)
             .when(F.col("l_returnflag") == "A", 2)
@@ -219,13 +224,11 @@ class Backfill(Workload):
             tr.count("sinks.bytes_written", nbytes)
 
     def op(self, i: int) -> None:
-        states, snaps, cached = self._frames()
-        self._sink_phase("sinks.load", states, snaps)
-        self._sink_phase("sinks.resync", states, snaps)
+        self.states, self.snaps, self.cached = self._frames()
+        self._sink_phase("sinks.load", self.states, self.snaps)
+        self._sink_phase("sinks.resync", self.states, self.snaps)
         with self.tracer.span("plans.gold"):
             self._gold().write.format("noop").mode("overwrite").save()
-        for df in cached:
-            df.unpersist()
 
     def _gold(self) -> DataFrame:
         """The gold insights aggregate over the merged states table."""
@@ -258,11 +261,10 @@ class Backfill(Workload):
             None if items == self.n_items
             else f"gold items {items} != distinct items {self.n_items}"
         )
-        # replay idempotence: one more re-sync must not change content
-        states, snaps, cached = self._frames()
-        self._upsert(states, snaps)
-        for df in cached:
-            df.unpersist()
+        # replay idempotence: one more re-sync of the last op's frames
+        # (still cached) must not change content
+        self._upsert(self.states, self.snaps)
+        self._release()
         h2 = [content_hash(self.spark.table(t)) for t in tables]
         out["backfill.resync_idempotent"] = (
             None if h1 == h2 else f"re-sync changed content: {h1} -> {h2}"
@@ -527,15 +529,17 @@ class MediaTick(Workload):
             stage_trimodal_state,
         )
 
-        # base docs are a seed-chosen sample of one id range; the delta
-        # pool is every doc_id % MEDIA_DELTA_MOD == 0 in that range (the
-        # engine's base/delta split), seed-ordered, one batch per tick
+        # a documents corpus of doc ids 0 .. docs-1 split as bench.py
+        # splits it: the base is every doc_id % MEDIA_DELTA_MOD != 0 and
+        # is staged once; the delta is the rest, seed-ordered and cut
+        # into ``batches`` equal batches, one per tick
         rng = np.random.default_rng([self.seed, 5])
-        n_base, bs = self.cfg["base_docs"], self.cfg["batch_docs"]
-        ids = np.arange(4 * n_base)
-        base = np.sort(rng.choice(ids[ids % MEDIA_DELTA_MOD != 0], n_base, replace=False))
+        ids = np.arange(self.cfg["docs"], dtype=np.int64)
+        base = ids[ids % MEDIA_DELTA_MOD != 0]
+        n_base = len(base)
         delta = rng.permutation(ids[ids % MEDIA_DELTA_MOD == 0])
-        self.n_batches = len(delta) // bs
+        self.n_batches = self.cfg["batches"]
+        bs = len(delta) // self.n_batches
         delta = delta[: self.n_batches * bs]
         docs = pa.table({
             "doc_id": np.concatenate([base, delta]).astype(np.int64),
@@ -594,6 +598,8 @@ class MediaTick(Workload):
         r = MM.audio_spectral_dhash(MM.attach_payload_soundtrack_wavs(d)).select(
             "doc_id", "sphash"
         )
+        # decode once: the closure reads each fingerprint frame twice
+        t, v, a, r = (x.localCheckpoint(eager=True) for x in (t, v, a, r))
         return {
             row["node"]: row["keep_node"]
             for row in trimodal_keep_best_of(t, v, a, r).collect()
