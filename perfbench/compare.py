@@ -16,11 +16,11 @@ prints each side's median and quartiles and a verdict:
 - ``unresolved``: either side's quartile spread exceeds the bound,
   unless every change run beats (or loses to) every parent run.
 
-It also pools the op latencies of each side into one tail (the
-highest percentile with ten samples beyond it), flags runs whose CPU
-canary drifted by more than 1.3x between start and end of the run (not
-a quiet machine), reports the tracing overhead (traced minus untraced
-op median), and, from the traced runs, names the layer whose self time
+It also pools the timed op latencies of each side into one median
+(the per-op p50) and one tail (the highest percentile with ten samples
+beyond it), flags runs whose CPU canary drifted by more than 1.3x
+between start and end of the run (not a quiet machine), reports the tracing overhead (traced minus untraced
+op mean), and, from the traced runs, names the layer whose self time
 moved most and every count that changed. Waits for concurrent jobs
 stay in the self time of the span that waited and count for no layer.
 """
@@ -118,18 +118,19 @@ def e2e_table(par: list[dict], chg: list[dict], bench: dict) -> None:
 
 
 def tails(par: list[dict], chg: list[dict]) -> None:
-    print("\npooled op latency tail (all untraced runs of a side)")
+    print("\npooled op latency p50 and tail (all untraced runs of a side)")
     for wl in sorted({r["workload"] for r in par + chg}):
         row = []
         for recs in (par, chg):
             lat = [o["s"] for r in recs if r["workload"] == wl and not r["trace"]
                    for o in r["ops"] if o["ok"]]
             t = tail(lat)
+            p50 = f"p50={fmt(statistics.median(lat))}s " if lat else ""
             row.append(
-                f"p{t['percentile']}={fmt(t['value_s'])}s of {t['n']}" if t
-                else f"n={len(lat)} (too few for a tail)"
+                p50 + (f"p{t['percentile']}={fmt(t['value_s'])}s of {t['n']}" if t
+                       else f"n={len(lat)} (too few for a tail)")
             )
-        print(f"  {wl:13s} parent {row[0]:28s} change {row[1]}")
+        print(f"  {wl:13s} parent {row[0]:40s} change {row[1]}")
 
 
 def noisy(recs: list[dict]) -> list[str]:
@@ -165,9 +166,9 @@ def trace_diff(par: list[dict], chg: list[dict]) -> None:
             continue
         print(f"\ntrace diff: {wl}")
         for recs, label in ((par, "parent"), (chg, "change")):
-            traced = [r["per_layer"]["trace.op_p50_s"] for r in recs
+            traced = [r["per_layer"]["trace.op_mean_s"] for r in recs
                       if r["workload"] == wl and r["trace"] and r.get("per_layer")]
-            plain = [r["end_to_end"]["op_p50_s"] for r in recs
+            plain = [r["end_to_end"]["op_mean_s"] for r in recs
                      if r["workload"] == wl and not r["trace"] and r.get("end_to_end")]
             if traced and plain:
                 over = statistics.median(traced) - statistics.median(plain)

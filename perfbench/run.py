@@ -1,14 +1,15 @@
 #!/usr/bin/env python3
 """Benchmark runner: one workload, one seed, one run.
 
-    python3 perfbench/run.py --cores 4 --workload backfill --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --cores 2 --workload backfill --seed 1 --seconds 10 --trace 0
 
 Run from the root of a source checkout. The runner makes the
 workload's inputs from the seed, sets it up (several times when set-up
-is cheap, reporting the median), then runs ops in a closed loop with
-one client for ``--seconds`` (at least ``min_ops`` ops, and whole
-rounds where the workload has rounds), checks the outputs outside the
-timed region, and prints one JSON line as the last line of stdout:
+is cheap, reporting the median), runs ``warmup_ops`` untimed ops, then
+runs ops in a closed loop with one client for ``--seconds`` (at least
+``min_ops`` timed ops, and whole rounds where the workload has rounds),
+checks the outputs outside the timed region, and prints one JSON line
+as the last line of stdout:
 
     {"correct": ..., "attempted": ..., "failed": ..., "metrics": {...}}
 
@@ -53,7 +54,7 @@ LAST_OP_START_S = 110  # no op starts later than this after launch
 # sets the JVM's high-water mark (README.md, "Heap")
 DRIVER_MEMORY = "1g"
 
-END_TO_END = {"setup_s": "s", "op_p50_s": "s", "peak_rss_mb": "MB"}
+END_TO_END = {"setup_s": "s", "op_mean_s": "s", "peak_rss_mb": "MB"}
 
 # (metric, unit, source kind, trace key): per-op means over traced ops
 PER_LAYER = [
@@ -94,7 +95,7 @@ DERIVED = {
     "sinks.write_amp": "ratio",
     "sinks.useful_ratio": "ratio",
     "stored_bytes_per_input_byte": "ratio",
-    "trace.op_p50_s": "s",
+    "trace.op_mean_s": "s",
 }
 
 
@@ -145,6 +146,27 @@ def vm_hwm_kb(pid: int | str) -> int:
     except OSError:
         pass
     return 0
+
+
+def jvm_gc_s(spark) -> float:
+    """The driver JVM's garbage-collection time so far."""
+    beans = spark._jvm.java.lang.management.ManagementFactory.getGarbageCollectorMXBeans()
+    return sum(b.getCollectionTime() for b in beans) / 1000.0
+
+
+def cpu_s(*pids: int | str) -> float:
+    """User plus system CPU time so far of the given processes (and of
+    children they have waited for)."""
+    tick = os.sysconf("SC_CLK_TCK")
+    total = 0.0
+    for pid in pids:
+        try:
+            with open(f"/proc/{pid}/stat", encoding="utf-8") as fh:
+                f = fh.read().rsplit(")", 1)[1].split()
+            total += sum(int(x) for x in f[11:15]) / tick
+        except OSError:
+            pass
+    return total
 
 
 def source_revision() -> dict:
@@ -258,7 +280,7 @@ def layer_metrics(traces: list, wl, ops: list[dict]) -> dict[str, float]:
     out["sinks.useful_ratio"] = changed / rewritten if rewritten else 0.0
     out["stored_bytes_per_input_byte"] = wl.stored_bytes() / in_bytes
     good = [o["s"] for o in ops if o["ok"]]
-    out["trace.op_p50_s"] = statistics.median(good) if good else 0.0
+    out["trace.op_mean_s"] = statistics.mean(good) if good else 0.0
     return out
 
 
@@ -333,20 +355,13 @@ def run(args, overrides: dict | None = None, session=None, after_checks=None) ->
             record["check_s"] = time.perf_counter() - t0
             return out
 
-        if wl.check_first:
-            checks = run_checks()
-        ops: list[dict] = []
-        t_start = time.perf_counter()
-        i = 0
-        while wl.has_next(i) and time.perf_counter() - t_launch < LAST_OP_START_S and (
-            i < wcfg["min_ops"]
-            or i % wl.round_size
-            or time.perf_counter() - t_start < args.seconds
-        ):
-            wl.prepare(i)
-            if trace:
-                before = workloads.list_files(*wl.sink_dirs)
-                tr.begin_op(spark)
+        from pyspark import SparkContext
+
+        def one_op(i: int) -> dict:
+            """Run op ``i``; its latency, and the JVM's GC time and the
+            CPU time of the JVM and this process spent meanwhile."""
+            jvm = SparkContext._gateway.proc.pid
+            gc0, cpu0 = jvm_gc_s(spark), cpu_s("self", jvm)
             ok = True
             t0 = time.perf_counter()
             try:
@@ -355,17 +370,40 @@ def run(args, overrides: dict | None = None, session=None, after_checks=None) ->
                 traceback.print_exc(file=sys.stderr)
                 ok = False
             dt = time.perf_counter() - t0
+            return {
+                "i": i, "s": dt, "ok": ok,
+                "gc_s": jvm_gc_s(spark) - gc0, "cpu_s": cpu_s("self", jvm) - cpu0,
+            }
+
+        if wl.check_first:
+            checks = run_checks()
+        # untimed, untraced warm-up ops: the JIT settles on the op's own
+        # code paths before the first timed op (README.md, "Warm-up")
+        warmup: list[dict] = []
+        for i in range(wcfg["warmup_ops"]):
+            wl.prepare(i)
+            warmup.append(one_op(i))
+        ops: list[dict] = []
+        t_start = time.perf_counter()
+        i = len(warmup)
+        while wl.has_next(i) and time.perf_counter() - t_launch < LAST_OP_START_S and (
+            len(ops) < wcfg["min_ops"]
+            or len(ops) % wl.round_size
+            or time.perf_counter() - t_start < args.seconds
+        ):
+            wl.prepare(i)
+            if trace:
+                before = workloads.list_files(*wl.sink_dirs)
+                tr.begin_op(spark)
+            ops.append(one_op(i))
             if trace:
                 wl.after_traced_op(i, before)
                 tr.end_op(spark)
-            ops.append({"i": i, "s": dt, "ok": ok})
             i += 1
         record["measure_s"] = time.perf_counter() - t_start
 
         if not wl.check_first:
             checks = run_checks()
-
-        from pyspark import SparkContext
 
         jvm = getattr(SparkContext._gateway, "proc", None)
         record["vm_hwm_kb"] = {"python": vm_hwm_kb("self"), "jvm": vm_hwm_kb(jvm.pid) if jvm else 0}
@@ -373,7 +411,7 @@ def run(args, overrides: dict | None = None, session=None, after_checks=None) ->
         good = [o["s"] for o in ops if o["ok"]]
         e2e = {
             "setup_s": statistics.median(setup_times),
-            "op_p50_s": statistics.median(good) if good else record["measure_s"],
+            "op_mean_s": statistics.mean(good) if good else record["measure_s"],
             "peak_rss_mb": rss_kb / 1024.0,
         }
         layers = None
@@ -394,17 +432,17 @@ def run(args, overrides: dict | None = None, session=None, after_checks=None) ->
             stop_session(spark)
         shutil.rmtree(work, ignore_errors=True)
 
-    failed_ops = sum(not o["ok"] for o in ops)
+    failed_ops = sum(not o["ok"] for o in warmup + ops)
     failed_checks = sum(v is not None for v in checks.values())
     metrics = summary_metrics(layers, "per_layer") if trace else summary_metrics(e2e, "end_to_end")
     summary = {
         "correct": failed_ops == 0 and failed_checks == 0,
-        "attempted": len(ops) + len(checks),
+        "attempted": len(warmup) + len(ops) + len(checks),
         "failed": failed_ops + failed_checks,
         "metrics": metrics,
     }
     record.update({
-        "setup_times_s": setup_times, "ops": ops, "tail": tail(good),
+        "setup_times_s": setup_times, "warmup": warmup, "ops": ops, "tail": tail(good),
         "checks": checks, "end_to_end": e2e, "per_layer": layers,
         "op_traces": [t.to_dict() for t in tr.ops],
         "input_bytes": wl.input_bytes() if wl else 0,

@@ -32,10 +32,10 @@ sys.path.insert(0, HERE)
 import run  # noqa: E402
 
 TINY = {
-    "backfill": {"sf": 0.001, "setups": 1, "min_ops": 1},
-    "flow_tick": {"sf": 0.001, "ticks": 3, "setups": 1, "min_ops": 1},
-    "dashboard": {"sf": 0.001, "setups": 1, "min_ops": 1},
-    "media_tick": {"docs": 36, "batches": 1, "setups": 1, "min_ops": 1},
+    "backfill": {"sf": 0.001, "setups": 1, "warmup_ops": 0, "min_ops": 1},
+    "flow_tick": {"sf": 0.001, "ticks": 3, "setups": 1, "warmup_ops": 0, "min_ops": 1},
+    "dashboard": {"sf": 0.001, "setups": 1, "warmup_ops": 0, "min_ops": 1},
+    "media_tick": {"docs": 36, "batches": 1, "setups": 1, "warmup_ops": 0, "min_ops": 1},
 }
 
 

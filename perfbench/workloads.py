@@ -135,6 +135,13 @@ class Backfill(Workload):
             self.spark.sql(f"DROP TABLE IF EXISTS {tbl}")
         for d in self.sink_dirs:
             shutil.rmtree(d, ignore_errors=True)
+        # a full refresh reads its source afresh: each op loads its own
+        # copy of the table, which the engine's per-session table cache
+        # has not seen
+        shutil.rmtree(os.path.join(self.work, f"tables_op{i - 1}"), ignore_errors=True)
+        self.op_tables = os.path.join(self.work, f"tables_op{i}")
+        os.makedirs(self.op_tables)
+        shutil.copyfile(self.input_paths[0], os.path.join(self.op_tables, "lineitem.parquet"))
 
     def _frames(self):
         from falcon_metrics_etl_spark.operators.event_dates import (
@@ -147,7 +154,7 @@ class Backfill(Workload):
         from falcon_metrics_etl_spark.sources import load_table
 
         tr = self.tracer
-        li = load_table(self.spark, self.tables, "lineitem")
+        li = load_table(self.spark, self.op_tables, "lineitem")
         zone = (
             F.when(F.col("l_returnflag") == "N", 1)
             .when(F.col("l_returnflag") == "A", 2)
