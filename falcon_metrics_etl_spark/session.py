@@ -190,7 +190,9 @@ def start_concurrent(*thunks):
             except Exception as e:  # noqa: BLE001 — re-raised below
                 errs.append(e)
                 out.append(None)
-        ex.shutdown(wait=False)
+        # every future is done: joining the idle workers is immediate,
+        # and no pool thread outlives join()
+        ex.shutdown(wait=True)
         if errs:
             raise errs[0]
         return out

@@ -61,6 +61,9 @@ import uuid
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from falcon_metrics_etl_spark import session
 
 CURRENT_POINTER = "_CURRENT"
 RETIRED_MARKER = "_RETIRED"
@@ -489,6 +492,105 @@ def merge_state(
     overwrite_state(
         survivors.unionByName(updates, allowMissingColumns=True), path
     )
+
+
+class TickState:
+    """The streaming ticks' replay contract (at-least-once
+    ``foreachBatch`` with idempotent upserts), bound to one tick's
+    ``(spark, state_dir, batch_id)``. Every index row carries its
+    replay-stable ``batch_id``, and:
+
+    * ``probe`` reads a table WITHOUT this batch's own rows, so a
+      replayed batch scores against exactly the state it first saw;
+    * ``append`` anti-joins the full table on a key and tags the
+      batch_id, so a replay appends nothing (through ``append_state``);
+    * ``merge`` and ``repoint`` are keyed MERGEs — a replay rewrites
+      the same keys with identical values;
+    * ``start`` runs a background wave; leaving the ``with`` block
+      joins every wave started in it, on success or failure, so no
+      writer outlives a failed tick and its replay never races one.
+      Only then does it re-raise: the block's own error, else the
+      first wave error.
+
+    The ticks mutate in the order flags -> repoint -> append, each step
+    idempotent on its own, so a tick that fails between (or inside)
+    steps replays to the same final state. All writes go through the
+    module's ``append_state`` / ``merge_state`` and
+    ``session.start_concurrent``."""
+
+    def __init__(self, spark: SparkSession, state_dir: str, batch_id: int):
+        self.spark = spark
+        self.state_dir = state_dir
+        self.batch_id = int(batch_id)
+        self._joins: list = []
+
+    def _path(self, table: str) -> str:
+        return f"{self.state_dir}/{table}"
+
+    def exists(self, table: str) -> bool:
+        return _table_exists(self.spark, resolve_state_path(self._path(table)))
+
+    def read(self, table: str, schema: Optional[str] = None) -> DataFrame:
+        return read_state(self.spark, self._path(table), schema=schema)
+
+    def probe(self, table: str, schema: str) -> DataFrame:
+        return self.read(table, schema).filter(
+            F.col("batch_id") != self.batch_id
+        )
+
+    def append(
+        self, table: str, schema: str, frame: DataFrame, key: str, cols
+    ) -> None:
+        from falcon_metrics_etl_spark.sinks.merge import anti_existing
+
+        new = anti_existing(frame, self.read(table, schema), key)
+        append_state(
+            new.select(*cols, F.lit(self.batch_id).alias("batch_id")),
+            self._path(table),
+        )
+
+    def merge(self, table: str, updates: DataFrame, keys) -> None:
+        merge_state(self.spark, self._path(table), updates, keys)
+
+    def repoint(
+        self, table: str, schema: str, displaced: DataFrame, key: str, keys
+    ) -> None:
+        """Point every row whose ``key`` names a displaced keeper
+        (``displaced``: doc_id, new_keep) at its new keeper. The table
+        is rewritten only when at least one of its rows moves, so tick
+        cost scales with the delta, not with the untouched tables."""
+        moved = (
+            self.read(table, schema)
+            .join(
+                F.broadcast(
+                    displaced.select(F.col("doc_id").alias(key), "new_keep")
+                ),
+                key,
+            )
+            .withColumn(key, F.col("new_keep"))
+            .drop("new_keep")
+        )
+        if not moved.isEmpty():
+            self.merge(table, moved, keys)
+
+    def start(self, *thunks) -> None:
+        self._joins.append(session.start_concurrent(*thunks))
+
+    def __enter__(self) -> "TickState":
+        return self
+
+    def __exit__(self, exc_type, exc, tb) -> bool:
+        first = None
+        for join in self._joins:
+            try:
+                join()
+            except Exception as e:  # noqa: BLE001 — re-raised below
+                if first is None:
+                    first = e
+        self._joins.clear()
+        if exc is None and first is not None:
+            raise first
+        return False
 
 
 def _local_file_stats(path: str) -> tuple[int, int]:

@@ -31,12 +31,7 @@ probe side plans with no Exchange):
 - ``flags``       (doc_id, status, n_tokens, batch_id) — per-doc
   verdicts, landed through the keyed MERGE writer
 
-Replay safety (at-least-once foreachBatch, same contract as
-streaming/admission.py): every index row carries its (replay-stable)
-batch_id; probes EXCLUDE the current batch's own rows, so a replayed
-batch scores against exactly the state it originally saw; appends
-anti-join the full index, so a replay appends nothing; flags land
-keyed on doc_id (last-write-wins with identical values).
+Replay safety: the contract of ``state.TickState``, flags keyed on doc_id.
 
 Admission policy for near-dups is greedy keep-first: a batch doc is
 rejected when it near-dups the admitted corpus (the corpus always
@@ -57,17 +52,16 @@ from falcon_metrics_etl_spark.plans.dedup_lsh import (
     MINHASH_JACCARD_T,
     lsh_frames_of,
 )
-from falcon_metrics_etl_spark.session import run_concurrent, start_concurrent
+from falcon_metrics_etl_spark.session import run_concurrent
 from falcon_metrics_etl_spark.state import (
+    TickState,
     maintain_state_dir,
-    merge_state,
     overwrite_state,
 )
-from falcon_metrics_etl_spark.state import resolve_state_path as _rsp
-from falcon_metrics_etl_spark.sinks.merge import (
-    _target_exists,
-    anti_existing,
-)
+
+FP_SCHEMA = "fp string, canonical_id long, batch_id long"
+BAND_SCHEMA = "doc_id long, band int, bkey string, batch_id long"
+SHINGLE_SCHEMA = "doc_id long, shs array<string>, batch_id long"
 
 
 def _gate_status(docs: DataFrame) -> DataFrame:
@@ -83,12 +77,6 @@ def _gate_status(docs: DataFrame) -> DataFrame:
         "fp",
         TX.cleaning_gate_verdict().alias("gate_status"),
     )
-
-
-def _read_or_empty(spark: SparkSession, path: str, schema: str) -> DataFrame:
-    if _target_exists(spark, path):
-        return spark.read.parquet(path)
-    return spark.createDataFrame([], schema)
 
 
 def stage_corpus_state(
@@ -160,11 +148,10 @@ def corpus_ingest_tick(
     schedules compaction in its own window)."""
     bid = int(batch_id)
     gated = _gate_status(batch_df).localCheckpoint(eager=True)
+    st = TickState(spark, state_dir, bid)
 
     # --- exact-dup gate: probe the fp index (excluding own batch) ---
-    fp_idx = _read_or_empty(
-        spark, _rsp(f"{state_dir}/fp_index"), "fp string, canonical_id long, batch_id long"
-    ).filter(F.col("batch_id") != bid)
+    fp_idx = st.probe("fp_index", FP_SCHEMA)
     batch_canon = F.min(
         F.when(F.col("gate_status") == "pass", F.col("doc_id"))
     ).over(Window.partitionBy("fp"))
@@ -217,11 +204,7 @@ def corpus_ingest_tick(
         lambda: sh.localCheckpoint(eager=True),
         lambda: bands.localCheckpoint(eager=True),
     )
-    band_idx = _read_or_empty(
-        spark,
-        _rsp(f"{state_dir}/band_index"),
-        "doc_id long, band int, bkey string, batch_id long",
-    ).filter(F.col("batch_id") != bid)
+    band_idx = st.probe("band_index", BAND_SCHEMA)
     # candidates vs the admitted corpus + smaller-id batch mates
     # the probing side is the batch — micro-batch-bounded, broadcast
     cand = (
@@ -242,11 +225,7 @@ def corpus_ingest_tick(
     )
     # exact verification: batch shingles vs (index ∪ batch) shingles,
     # fetched ONLY for candidate ids
-    sh_idx = _read_or_empty(
-        spark,
-        _rsp(f"{state_dir}/shingle_index"),
-        "doc_id long, shs array<string>, batch_id long",
-    ).filter(F.col("batch_id") != bid)
+    sh_idx = st.probe("shingle_index", SHINGLE_SCHEMA)
     old_toks = sh_idx.select("doc_id", "shs").unionByName(
         toks.select("doc_id", "shs")
     )
@@ -289,16 +268,16 @@ def corpus_ingest_tick(
     # --- tokenize admitted docs with the FROZEN tokenizer -----------
     # whichever the corpus was trained with: byte-BPE merge table or
     # unigram-LM vocabulary (r11 — never retrain inside a tick)
-    if _target_exists(spark, _rsp(f"{state_dir}/ulm_vocab")):
+    if st.exists("ulm_vocab"):
         from falcon_metrics_etl_spark.plans.ulm import (
             ulm_token_budgets,
             words_of,
         )
 
-        vocab = spark.read.parquet(_rsp(f"{state_dir}/ulm_vocab"))
+        vocab = st.read("ulm_vocab")
         budgets = ulm_token_budgets(words_of(admitted), vocab=vocab)
     else:
-        merges = spark.read.parquet(_rsp(f"{state_dir}/merges"))
+        merges = st.read("merges")
         budgets = byte_token_budgets(
             byte_words_of(admitted), merges=merges
         )
@@ -325,66 +304,35 @@ def corpus_ingest_tick(
     flags = status.join(
         budgets.select("doc_id", "n_tokens"), "doc_id", "left"
     ).select("doc_id", "status", "n_tokens", F.lit(bid).alias("batch_id"))
-    # r17: the flags merge (which carries the tokenize compute in its
-    # lineage) touches only the flags table — disjoint from the three
-    # index appends — so it overlaps them (joined below, before
-    # maintenance)
-    join_flags = start_concurrent(
-        lambda: merge_state(spark, f"{state_dir}/flags", flags, ["doc_id"])
-    )
-
     # only ADMITTED docs register their fp (advisor r10: a near-dup-
     # rejected doc must not become canonical_id for future exact
     # copies — those copies now fall through to the near-dup gate and
     # are rejected against the same corpus doc their original was)
-    admitted_ids = admitted.select("doc_id")
-    tag = F.lit(bid).alias("batch_id")
-
-    def _append_fps() -> None:
-        full_fp = _read_or_empty(
-            spark,
-            _rsp(f"{state_dir}/fp_index"),
-            "fp string, canonical_id long, batch_id long",
+    new_fps = deduped.filter(F.col("gate_status") == "pass").join(
+        near_dups, "doc_id", "left_anti"
+    ).select("fp", F.col("doc_id").alias("canonical_id"))
+    admitted_ids = F.broadcast(admitted.select("doc_id"))
+    with st:
+        # r17: the flags merge (which carries the tokenize compute in
+        # its lineage) touches only the flags table — disjoint from the
+        # three index appends — so it overlaps them
+        st.start(lambda: st.merge("flags", flags, ["doc_id"]))
+        # the three appends target disjoint tables — one concurrent wave
+        run_concurrent(
+            lambda: st.append(
+                "fp_index", FP_SCHEMA, new_fps, "fp", ["fp", "canonical_id"]
+            ),
+            lambda: st.append(
+                "band_index", BAND_SCHEMA,
+                bands.join(admitted_ids, "doc_id", "left_semi"),
+                "doc_id", ["doc_id", "band", "bkey"],
+            ),
+            lambda: st.append(
+                "shingle_index", SHINGLE_SCHEMA,
+                toks.join(admitted_ids, "doc_id", "left_semi"),
+                "doc_id", ["doc_id", "shs"],
+            ),
         )
-        new_fps = deduped.filter(F.col("gate_status") == "pass").join(
-            near_dups, "doc_id", "left_anti"
-        ).select("fp", F.col("doc_id").alias("canonical_id"))
-        (
-            anti_existing(new_fps, full_fp, "fp")
-            .select("fp", "canonical_id", tag)
-            .write.mode("append").parquet(_rsp(f"{state_dir}/fp_index"))
-        )
-
-    def _append_admitted(sub: str, schema: str, frame, cols: list) -> None:
-        full = _read_or_empty(spark, _rsp(f"{state_dir}/{sub}"), schema)
-        (
-            anti_existing(
-                frame.join(F.broadcast(admitted_ids), "doc_id", "left_semi"),
-                full,
-                "doc_id",
-            )
-            .select(*cols, tag)
-            .write.mode("append").parquet(_rsp(f"{state_dir}/{sub}"))
-        )
-
-    # the three appends target disjoint tables with the same anti-join
-    # + batch-tag replay contract — one concurrent wave
-    run_concurrent(
-        _append_fps,
-        lambda: _append_admitted(
-            "band_index",
-            "doc_id long, band int, bkey string, batch_id long",
-            bands,
-            ["doc_id", "band", "bkey"],
-        ),
-        lambda: _append_admitted(
-            "shingle_index",
-            "doc_id long, shs array<string>, batch_id long",
-            toks,
-            ["doc_id", "shs"],
-        ),
-    )
-    join_flags()
 
     # ---- in-cadence maintenance (r15, verdict #1) -------------------
     if maintenance_file_threshold is not None:

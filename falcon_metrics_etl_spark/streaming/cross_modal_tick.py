@@ -43,10 +43,8 @@ through sinks/bucketed.py keyed on their join columns):
 - ``cm_flags`` (doc_id, modality, status, batch_id) — 'kept',
   'dropped:near_dup', 'displaced:near_dup' through the keyed MERGE.
 
-Replay safety (the media tick's contract): probes exclude the current
-batch_id's own rows, appends anti-join on node, flags land keyed on
-(doc_id, modality), mutation order flags -> repoint -> append with
-each step idempotent.
+Replay safety: the contract of ``state.TickState``, flags keyed on
+(doc_id, modality).
 
 r13 additions:
 - ``unified_media_ingest_tick`` — THE production entry for a corpus
@@ -76,19 +74,17 @@ from falcon_metrics_etl_spark.plans.media_dedup import (
     cross_modal_keep_best_of,
     image_bands_of,
 )
-from falcon_metrics_etl_spark.session import run_concurrent, start_concurrent
+from falcon_metrics_etl_spark.session import run_concurrent
 from falcon_metrics_etl_spark.state import (
+    TickState,
     claim_state_layout,
     maintain_state_dir,
-    merge_state,
     overwrite_state,
 )
-from falcon_metrics_etl_spark.state import resolve_state_path as _rsp
-from falcon_metrics_etl_spark.sinks.merge import (
-    _target_exists,
-    anti_existing as _anti_existing,
-)
 
+# node = len(modalities) * doc_id + index of the doc's modality
+CM_MODALITIES = ("image", "video")
+CM3_MODALITIES = ("image", "video", "audio")
 CM_IMG_SCHEMA = (
     "node long, doc_id long, dhash long, keep_node long, batch_id long"
 )
@@ -104,10 +100,37 @@ CM_FRAME_SCHEMA = (
 )
 
 
-def _read_or_empty(spark: SparkSession, path: str, schema: str) -> DataFrame:
-    if _target_exists(spark, path):
-        return spark.read.parquet(path)
-    return spark.createDataFrame([], schema)
+def _flags(
+    verdicts: DataFrame,
+    modalities: tuple,
+    batch_id: int,
+    displaced: DataFrame | None = None,
+) -> DataFrame:
+    """Per-doc flag rows (doc_id, modality, status, batch_id) of node
+    verdicts (doc_id = node = len(modalities) * doc + modality index,
+    is_kept) and of the keepers they displaced (doc_id = node)."""
+    nodes = verdicts.select(
+        F.col("doc_id").alias("node"),
+        F.when(F.col("is_kept"), F.lit("kept"))
+        .otherwise(F.lit("dropped:near_dup"))
+        .alias("status"),
+    )
+    if displaced is not None:
+        nodes = nodes.unionByName(
+            displaced.select(
+                F.col("doc_id").alias("node"),
+                F.lit("displaced:near_dup").alias("status"),
+            )
+        )
+    n = len(modalities)
+    return nodes.select(
+        F.expr(f"node div {n}").cast("long").alias("doc_id"),
+        F.array(*(F.lit(m) for m in modalities))[
+            (F.col("node") % n).cast("int")
+        ].alias("modality"),
+        "status",
+        F.lit(int(batch_id)).alias("batch_id"),
+    )
 
 
 def _phase_timer():
@@ -213,15 +236,17 @@ def stage_cross_modal_state(
             "cm_fband_index",
         ),
     )
-    _stage_flags = kb.select(
-        "doc_id",
-        "modality",
-        F.when(F.col("node") == F.col("keep_node"), F.lit("kept"))
-        .otherwise(F.lit("dropped:near_dup"))
-        .alias("status"),
-        F.lit(int(batch_id)).alias("batch_id"),
+    overwrite_state(
+        _flags(
+            kb.select(
+                F.col("node").alias("doc_id"),
+                (F.col("node") == F.col("keep_node")).alias("is_kept"),
+            ),
+            CM_MODALITIES,
+            batch_id,
+        ),
+        f"{state_dir}/cm_flags",
     )
-    overwrite_state(_stage_flags, f"{state_dir}/cm_flags")
 
 
 def cross_modal_ingest_tick(
@@ -255,203 +280,144 @@ def cross_modal_ingest_tick(
         F.count(F.lit(1)).cast("long").alias("n_frames")
     )
 
-    img_idx = _read_or_empty(
-        spark, _rsp(f"{state_dir}/cm_image_index"), CM_IMG_SCHEMA
-    ).filter(F.col("batch_id") != bid)
-    tband_idx = _read_or_empty(
-        spark, _rsp(f"{state_dir}/cm_tband_index"), CM_TBAND_SCHEMA
-    ).filter(F.col("batch_id") != bid)
-    frame_idx = _read_or_empty(
-        spark, _rsp(f"{state_dir}/cm_frame_index"), CM_FRAME_SCHEMA
-    ).filter(F.col("batch_id") != bid)
-    fband_idx = _read_or_empty(
-        spark, _rsp(f"{state_dir}/cm_fband_index"), CM_FBAND_SCHEMA
-    ).filter(F.col("batch_id") != bid)
+    with TickState(spark, state_dir, bid) as st:
+        img_idx = st.probe("cm_image_index", CM_IMG_SCHEMA)
+        tband_idx = st.probe("cm_tband_index", CM_TBAND_SCHEMA)
+        frame_idx = st.probe("cm_frame_index", CM_FRAME_SCHEMA)
+        fband_idx = st.probe("cm_fband_index", CM_FBAND_SCHEMA)
 
-    # probed side = stored band rows (hash carried) + the batch's own
-    # bands (batch-mate edges); these ARE the frames image_bands_of
-    # builds, so the tick feeds the factored edge builder unchanged —
-    # one definition of the three families across batch query, delta
-    # query and tick
-    tb_new = image_bands_of(t_new)
-    fb_new = image_bands_of(vsig_new, "frame_dhash")
-    tb_all = tband_idx.select("doc_id", "dhash", "band", "byte").unionByName(
-        tb_new
-    )
-    fb_all = fband_idx.select(
-        "doc_id", "frame_dhash", "band", "byte"
-    ).unionByName(fb_new)
-    # no DISTINCT here: stored frame rows are distinct per doc by the
-    # append contract, vsig_new is distinct, and the clip<->clip edge
-    # family re-distincts its (pair, frame) rows before counting — so
-    # the union-wide dedupe was a state-sized shuffle for nothing
-    vsig_all = frame_idx.select("doc_id", "frame_dhash").unionByName(
-        vsig_new
-    )
-
-    from falcon_metrics_etl_spark.plans.media_dedup import (
-        cross_modal_edges_of,
-    )
-
-    # ---- band appends, overlapped (r17, guide §2.6) -----------------
-    # the two band-index appends depend ONLY on the decode outputs —
-    # they run WHILE the edge/resolve jobs compute and join before the
-    # node appends below. Safe against the concurrent edge reads:
-    # every state-side read filters batch_id != bid (the replay
-    # contract already tolerates this batch's rows), and the
-    # _read_or_empty frames above listed their files before these
-    # writes land.
-    tag = F.lit(bid).alias("batch_id")
-
-    def _append(sub: str, schema: str, frame: DataFrame, key: str, cols) -> None:
-        full = _read_or_empty(spark, _rsp(f"{state_dir}/{sub}"), schema)
-        (
-            _anti_existing(frame, full, key)
-            .select(*cols, tag)
-            .write.mode("append").parquet(_rsp(f"{state_dir}/{sub}"))
+        # probed side = stored band rows (hash carried) + the batch's own
+        # bands (batch-mate edges); these ARE the frames image_bands_of
+        # builds, so the tick feeds the factored edge builder unchanged —
+        # one definition of the three families across batch query, delta
+        # query and tick
+        tb_new = image_bands_of(t_new)
+        fb_new = image_bands_of(vsig_new, "frame_dhash")
+        tb_all = tband_idx.select(
+            "doc_id", "dhash", "band", "byte"
+        ).unionByName(tb_new)
+        fb_all = fband_idx.select(
+            "doc_id", "frame_dhash", "band", "byte"
+        ).unionByName(fb_new)
+        # no DISTINCT here: stored frame rows are distinct per doc by the
+        # append contract, vsig_new is distinct, and the clip<->clip edge
+        # family re-distincts its (pair, frame) rows before counting — so
+        # the union-wide dedupe was a state-sized shuffle for nothing
+        vsig_all = frame_idx.select("doc_id", "frame_dhash").unionByName(
+            vsig_new
         )
 
-    join_bands = start_concurrent(
-        lambda: _append(
-            "cm_tband_index", CM_TBAND_SCHEMA, tb_new, "doc_id",
-            ["doc_id", "dhash", "band", "byte"],
-        ),
-        lambda: _append(
-            "cm_fband_index", CM_FBAND_SCHEMA, fb_new, "doc_id",
-            ["doc_id", "frame_dhash", "band", "byte"],
-        ),
-    )
-
-    # the probing side is the batch — micro-batch-bounded, so every
-    # edge family broadcasts it and the state side never shuffles
-    edges = cross_modal_edges_of(
-        F.broadcast(tb_new), tb_all, F.broadcast(fb_new), fb_all,
-        F.broadcast(vsig_new), vsig_all,
-    ).localCheckpoint(eager=True)
-
-    # joint resolution over modality-tagged nodes
-    new_q = t_new.select(
-        (F.col("doc_id") * 2).alias("doc_id"),
-        F.lit(1).cast("long").alias("n_frames"),
-    ).unionByName(
-        n_new.select(
-            (F.col("doc_id") * 2 + 1).alias("doc_id"), "n_frames"
-        )
-    )
-    idx_q = img_idx.select(
-        F.col("node").alias("doc_id"),
-        F.col("keep_node").alias("keep_id"),
-        F.lit(1).cast("long").alias("n_frames"),
-    ).unionByName(
-        # one row per (doc, frame_dhash): resolve_keep_best's bounded
-        # path dedupes per doc AFTER its endpoint semi-join (r16) —
-        # deduping here cost a state-wide shuffle every tick
-        frame_idx.select(
-            F.col("node").alias("doc_id"),
-            F.col("keep_node").alias("keep_id"),
-            "n_frames",
-        )
-    )
-    verdicts, displaced = resolve_keep_best(
-        new_q, idx_q, edges, ["n_frames"], bounded_batch=True
-    )
-    verdicts, displaced = run_concurrent(
-        lambda: verdicts.localCheckpoint(eager=True),
-        lambda: displaced.localCheckpoint(eager=True),
-    )
-
-    # ---- 1) land flags (keyed merge) --------------------------------
-    def _fmt(node_col):
-        return (
-            F.when(node_col % 2 == 1, F.lit("video"))
-            .otherwise(F.lit("image"))
-            .alias("modality")
+        from falcon_metrics_etl_spark.plans.media_dedup import (
+            cross_modal_edges_of,
         )
 
-    flags = (
-        verdicts.select(
-            F.expr("doc_id div 2").cast("long").alias("did"),
-            _fmt(F.col("doc_id")),
-            F.when(F.col("is_kept"), F.lit("kept"))
-            .otherwise(F.lit("dropped:near_dup"))
-            .alias("status"),
-        )
-        .unionByName(
-            displaced.select(
-                F.expr("doc_id div 2").cast("long").alias("did"),
-                _fmt(F.col("doc_id")),
-                F.lit("displaced:near_dup").alias("status"),
-            )
-        )
-        .select(
-            F.col("did").alias("doc_id"), "modality", "status",
-            F.lit(bid).alias("batch_id"),
-        )
-    )
-    # r17: the flags merge touches only cm_flags — disjoint from the
-    # repoints and appends — so it overlaps them (joined below)
-    join_flags = start_concurrent(
-        lambda: merge_state(
-            spark, f"{state_dir}/cm_flags", flags, ["doc_id", "modality"]
-        )
-    )
-
-    # ---- 2) repoint displaced keepers across BOTH indexes -----------
-    if not displaced.isEmpty():
-        rp = displaced.select(
-            F.col("doc_id").alias("keep_node"), "new_keep"
-        )
-
-        def _repoint(sub: str, schema: str, keys: list) -> None:
-            full = _read_or_empty(spark, _rsp(f"{state_dir}/{sub}"), schema)
-            upd = (
-                full.join(F.broadcast(rp), "keep_node")
-                .withColumn("keep_node", F.col("new_keep"))
-                .drop("new_keep")
-            )
-            merge_state(spark, f"{state_dir}/{sub}", upd, keys)
-
-        # the two index repoints touch disjoint tables — concurrent
-        run_concurrent(
-            lambda: _repoint("cm_image_index", CM_IMG_SCHEMA, ["node"]),
-            lambda: _repoint(
-                "cm_frame_index", CM_FRAME_SCHEMA, ["node", "frame_dhash"]
+        # ---- band appends, overlapped (r17, guide §2.6) -----------------
+        # the two band-index appends depend ONLY on the decode outputs —
+        # they run WHILE the edge/resolve jobs compute and join as the
+        # block exits. Safe against the concurrent edge reads:
+        # every state-side read filters batch_id != bid (the replay
+        # contract already tolerates this batch's rows), and the probe
+        # frames above listed their files before these writes land.
+        st.start(
+            lambda: st.append(
+                "cm_tband_index", CM_TBAND_SCHEMA, tb_new, "doc_id",
+                ["doc_id", "dhash", "band", "byte"],
+            ),
+            lambda: st.append(
+                "cm_fband_index", CM_FBAND_SCHEMA, fb_new, "doc_id",
+                ["doc_id", "frame_dhash", "band", "byte"],
             ),
         )
 
-    # ---- 3) append the batch (kept AND dropped; anti-joined) --------
-    # (the two band appends were started after decode; joined below)
-    kmap = verdicts.select(
-        F.col("doc_id").alias("node"), F.col("keep_id").alias("keep_node")
-    )
+        # the probing side is the batch — micro-batch-bounded, so every
+        # edge family broadcasts it and the state side never shuffles
+        edges = cross_modal_edges_of(
+            F.broadcast(tb_new), tb_all, F.broadcast(fb_new), fb_all,
+            F.broadcast(vsig_new), vsig_all,
+        ).localCheckpoint(eager=True)
 
-    new_img = t_new.select(
-        (F.col("doc_id") * 2).alias("node"), "doc_id", "dhash"
-    ).join(F.broadcast(kmap), "node")
-    new_fr = (
-        vsig_new.select(
-            (F.col("doc_id") * 2 + 1).alias("node"),
-            "doc_id",
-            "frame_dhash",
+        # joint resolution over modality-tagged nodes
+        new_q = t_new.select(
+            (F.col("doc_id") * 2).alias("doc_id"),
+            F.lit(1).cast("long").alias("n_frames"),
+        ).unionByName(
+            n_new.select(
+                (F.col("doc_id") * 2 + 1).alias("doc_id"), "n_frames"
+            )
         )
-        .join(F.broadcast(n_new), "doc_id")
-        .join(F.broadcast(kmap), "node")
-    )
-    # the two node appends run as one concurrent wave; the band
-    # appends and the flags merge join here, before maintenance can
-    # compact the tables they write
-    run_concurrent(
-        lambda: _append(
-            "cm_image_index", CM_IMG_SCHEMA, new_img, "node",
-            ["node", "doc_id", "dhash", "keep_node"],
-        ),
-        lambda: _append(
-            "cm_frame_index", CM_FRAME_SCHEMA, new_fr, "node",
-            ["node", "doc_id", "frame_dhash", "n_frames", "keep_node"],
-        ),
-    )
-    join_bands()
-    join_flags()
+        idx_q = img_idx.select(
+            F.col("node").alias("doc_id"),
+            F.col("keep_node").alias("keep_id"),
+            F.lit(1).cast("long").alias("n_frames"),
+        ).unionByName(
+            # one row per (doc, frame_dhash): resolve_keep_best's bounded
+            # path dedupes per doc AFTER its endpoint semi-join (r16) —
+            # deduping here cost a state-wide shuffle every tick
+            frame_idx.select(
+                F.col("node").alias("doc_id"),
+                F.col("keep_node").alias("keep_id"),
+                "n_frames",
+            )
+        )
+        verdicts, displaced = resolve_keep_best(
+            new_q, idx_q, edges, ["n_frames"], bounded_batch=True
+        )
+        verdicts, displaced = run_concurrent(
+            lambda: verdicts.localCheckpoint(eager=True),
+            lambda: displaced.localCheckpoint(eager=True),
+        )
+
+        # ---- 1) land flags (keyed merge) --------------------------------
+        flags = _flags(verdicts, CM_MODALITIES, bid, displaced)
+        # r17: the flags merge touches only cm_flags — disjoint from the
+        # repoints and appends — so it overlaps them
+        st.start(lambda: st.merge("cm_flags", flags, ["doc_id", "modality"]))
+
+        # ---- 2) repoint displaced keepers across BOTH indexes -----------
+        if not displaced.isEmpty():
+            # the two index repoints touch disjoint tables — concurrent
+            run_concurrent(
+                lambda: st.repoint(
+                    "cm_image_index", CM_IMG_SCHEMA, displaced, "keep_node",
+                    ["node"],
+                ),
+                lambda: st.repoint(
+                    "cm_frame_index", CM_FRAME_SCHEMA, displaced, "keep_node",
+                    ["node", "frame_dhash"],
+                ),
+            )
+
+        # ---- 3) append the batch (kept AND dropped; anti-joined) --------
+        # (the two band appends were started after decode)
+        kmap = verdicts.select(
+            F.col("doc_id").alias("node"), F.col("keep_id").alias("keep_node")
+        )
+
+        new_img = t_new.select(
+            (F.col("doc_id") * 2).alias("node"), "doc_id", "dhash"
+        ).join(F.broadcast(kmap), "node")
+        new_fr = (
+            vsig_new.select(
+                (F.col("doc_id") * 2 + 1).alias("node"),
+                "doc_id",
+                "frame_dhash",
+            )
+            .join(F.broadcast(n_new), "doc_id")
+            .join(F.broadcast(kmap), "node")
+        )
+        # the two node appends run as one concurrent wave; the band
+        # appends and the flags merge join as the block exits, before
+        # maintenance can compact the tables they write
+        run_concurrent(
+            lambda: st.append(
+                "cm_image_index", CM_IMG_SCHEMA, new_img, "node",
+                ["node", "doc_id", "dhash", "keep_node"],
+            ),
+            lambda: st.append(
+                "cm_frame_index", CM_FRAME_SCHEMA, new_fr, "node",
+                ["node", "doc_id", "frame_dhash", "n_frames", "keep_node"],
+            ),
+        )
 
     # ---- in-cadence maintenance (r15, verdict #1): GC retired state
     # snapshots, compact tables past the live-file threshold
@@ -545,13 +511,6 @@ def unified_media_ingest_tick(
 # while alone is DISPLACED the tick its source footage (whose rip
 # matches it) arrives.
 # ---------------------------------------------------------------------------
-CM3_IMG_SCHEMA = (
-    "node long, doc_id long, dhash long, keep_node long, batch_id long"
-)
-CM3_FRAME_SCHEMA = (
-    "node long, doc_id long, frame_dhash long, n_frames long, "
-    "keep_node long, batch_id long"
-)
 CM3_AUDIO_SCHEMA = (
     "node long, doc_id long, sphash long, n_windows int, "
     "keep_node long, batch_id long"
@@ -704,15 +663,17 @@ def stage_trimodal_state(
             "cm3_trband_index",
         ),
     )
-    _stage_flags = kb.select(
-        "doc_id",
-        "modality",
-        F.when(F.col("node") == F.col("keep_node"), F.lit("kept"))
-        .otherwise(F.lit("dropped:near_dup"))
-        .alias("status"),
-        F.lit(int(batch_id)).alias("batch_id"),
+    overwrite_state(
+        _flags(
+            kb.select(
+                F.col("node").alias("doc_id"),
+                (F.col("node") == F.col("keep_node")).alias("is_kept"),
+            ),
+            CM3_MODALITIES,
+            batch_id,
+        ),
+        f"{state_dir}/cm3_flags",
     )
-    overwrite_state(_stage_flags, f"{state_dir}/cm3_flags")
 
 
 def trimodal_ingest_tick(
@@ -764,288 +725,210 @@ def trimodal_ingest_tick(
         F.count(F.lit(1)).cast("long").alias("n_frames")
     )
 
-    img_idx = _read_or_empty(
-        spark, _rsp(f"{state_dir}/cm3_image_index"), CM3_IMG_SCHEMA
-    ).filter(F.col("batch_id") != bid)
-    tband_idx = _read_or_empty(
-        spark, _rsp(f"{state_dir}/cm3_tband_index"), CM_TBAND_SCHEMA
-    ).filter(F.col("batch_id") != bid)
-    frame_idx = _read_or_empty(
-        spark, _rsp(f"{state_dir}/cm3_frame_index"), CM3_FRAME_SCHEMA
-    ).filter(F.col("batch_id") != bid)
-    fband_idx = _read_or_empty(
-        spark, _rsp(f"{state_dir}/cm3_fband_index"), CM_FBAND_SCHEMA
-    ).filter(F.col("batch_id") != bid)
-    audio_idx = _read_or_empty(
-        spark, _rsp(f"{state_dir}/cm3_audio_index"), CM3_AUDIO_SCHEMA
-    ).filter(F.col("batch_id") != bid)
-    aband_idx = _read_or_empty(
-        spark, _rsp(f"{state_dir}/cm3_aband_index"), CM3_SPBAND_SCHEMA
-    ).filter(F.col("batch_id") != bid)
-    trband_idx = _read_or_empty(
-        spark, _rsp(f"{state_dir}/cm3_trband_index"), CM3_SPBAND_SCHEMA
-    ).filter(F.col("batch_id") != bid)
+    with TickState(spark, state_dir, bid) as st:
+        img_idx = st.probe("cm3_image_index", CM_IMG_SCHEMA)
+        tband_idx = st.probe("cm3_tband_index", CM_TBAND_SCHEMA)
+        frame_idx = st.probe("cm3_frame_index", CM_FRAME_SCHEMA)
+        fband_idx = st.probe("cm3_fband_index", CM_FBAND_SCHEMA)
+        audio_idx = st.probe("cm3_audio_index", CM3_AUDIO_SCHEMA)
+        aband_idx = st.probe("cm3_aband_index", CM3_SPBAND_SCHEMA)
+        trband_idx = st.probe("cm3_trband_index", CM3_SPBAND_SCHEMA)
 
-    tb_new = image_bands_of(t_new)
-    fb_new = image_bands_of(vsig_new, "frame_dhash")
-    rb_new = image_bands_of(a_new.select("doc_id", "sphash"), "sphash", n_bands=AUDIO_SPHASH_BANDS)
-    trb_new = image_bands_of(r_new, "sphash", n_bands=AUDIO_SPHASH_BANDS)
-    tb_all = tband_idx.select("doc_id", "dhash", "band", "byte").unionByName(
-        tb_new
-    )
-    fb_all = fband_idx.select(
-        "doc_id", "frame_dhash", "band", "byte"
-    ).unionByName(fb_new)
-    rb_all = aband_idx.select(
-        "doc_id", "sphash", "band", "byte"
-    ).unionByName(rb_new)
-    trb_all = trband_idx.select(
-        "doc_id", "sphash", "band", "byte"
-    ).unionByName(trb_new)
-    # no DISTINCT here: stored frame rows are distinct per doc by the
-    # append contract, vsig_new is distinct, and the clip<->clip edge
-    # family re-distincts its (pair, frame) rows before counting — so
-    # the union-wide dedupe was a state-sized shuffle for nothing
-    vsig_all = frame_idx.select("doc_id", "frame_dhash").unionByName(
-        vsig_new
-    )
-    # ---- band appends, overlapped (r17, guide §2.6) -----------------
-    # the four band-index appends depend ONLY on the decode outputs —
-    # not on edges/resolve — so they run WHILE the edge and resolve
-    # jobs compute and are joined before the node appends below. Safe
-    # against the concurrent edge reads: every state-side edge read
-    # filters batch_id != bid (the replay contract already tolerates
-    # this batch's rows being present), and the _read_or_empty frames
-    # above listed their file sets before these writes land.
-    band_frames = (
-        ("cm3_tband_index", CM_TBAND_SCHEMA, tb_new,
-         ["doc_id", "dhash", "band", "byte"]),
-        ("cm3_fband_index", CM_FBAND_SCHEMA, fb_new,
-         ["doc_id", "frame_dhash", "band", "byte"]),
-        ("cm3_aband_index", CM3_SPBAND_SCHEMA, rb_new,
-         ["doc_id", "sphash", "band", "byte"]),
-        ("cm3_trband_index", CM3_SPBAND_SCHEMA, trb_new,
-         ["doc_id", "sphash", "band", "byte"]),
-    )
-    tag = F.lit(bid).alias("batch_id")
-
-    def _append_bands(sub: str, schema: str, frame: DataFrame, cols) -> None:
-        full = _read_or_empty(spark, _rsp(f"{state_dir}/{sub}"), schema)
-        (
-            _anti_existing(frame, full, "doc_id")
-            .select(*cols, tag)
-            .write.mode("append").parquet(_rsp(f"{state_dir}/{sub}"))
+        tb_new = image_bands_of(t_new)
+        fb_new = image_bands_of(vsig_new, "frame_dhash")
+        rb_new = image_bands_of(
+            a_new.select("doc_id", "sphash"), "sphash",
+            n_bands=AUDIO_SPHASH_BANDS,
         )
-
-    join_bands = start_concurrent(
-        *(
-            lambda s=sub, sc=schema, f=frame, c=cols: _append_bands(
-                s, sc, f, c
-            )
-            for sub, schema, frame, cols in band_frames
+        trb_new = image_bands_of(r_new, "sphash", n_bands=AUDIO_SPHASH_BANDS)
+        tb_all = tband_idx.select(
+            "doc_id", "dhash", "band", "byte"
+        ).unionByName(tb_new)
+        fb_all = fband_idx.select(
+            "doc_id", "frame_dhash", "band", "byte"
+        ).unionByName(fb_new)
+        rb_all = aband_idx.select(
+            "doc_id", "sphash", "band", "byte"
+        ).unionByName(rb_new)
+        trb_all = trband_idx.select(
+            "doc_id", "sphash", "band", "byte"
+        ).unionByName(trb_new)
+        # no DISTINCT here: stored frame rows are distinct per doc by the
+        # append contract, vsig_new is distinct, and the clip<->clip edge
+        # family re-distincts its (pair, frame) rows before counting — so
+        # the union-wide dedupe was a state-sized shuffle for nothing
+        vsig_all = frame_idx.select("doc_id", "frame_dhash").unionByName(
+            vsig_new
         )
-    )
-
-    # the probing side is the batch — micro-batch-bounded, so every
-    # edge family broadcasts it and the state side never shuffles
-    edges = trimodal_edges_delta(
-        F.broadcast(tb_new), tb_all, F.broadcast(fb_new), fb_all,
-        F.broadcast(vsig_new), vsig_all,
-        F.broadcast(rb_new), rb_all, F.broadcast(trb_new), trb_all,
-    ).localCheckpoint(eager=True)
-    mark("edges")
-
-    # joint resolution: quality = (modality rank, decoded units)
-    new_q = (
-        t_new.select(
-            (F.col("doc_id") * 3).alias("doc_id"),
-            F.lit(0).alias("mrank"),
-            F.lit(1).cast("long").alias("n_units"),
+        # ---- band appends, overlapped (r17, guide §2.6) -----------------
+        # the four band-index appends depend ONLY on the decode outputs —
+        # not on edges/resolve — so they run WHILE the edge and resolve
+        # jobs compute and are joined as the block exits. Safe against
+        # the concurrent edge reads: every state-side edge read
+        # filters batch_id != bid (the replay contract already tolerates
+        # this batch's rows being present), and the probe frames above
+        # listed their file sets before these writes land.
+        band_frames = (
+            ("cm3_tband_index", CM_TBAND_SCHEMA, tb_new,
+             ["doc_id", "dhash", "band", "byte"]),
+            ("cm3_fband_index", CM_FBAND_SCHEMA, fb_new,
+             ["doc_id", "frame_dhash", "band", "byte"]),
+            ("cm3_aband_index", CM3_SPBAND_SCHEMA, rb_new,
+             ["doc_id", "sphash", "band", "byte"]),
+            ("cm3_trband_index", CM3_SPBAND_SCHEMA, trb_new,
+             ["doc_id", "sphash", "band", "byte"]),
         )
-        .unionByName(
-            n_new.select(
-                (F.col("doc_id") * 3 + 1).alias("doc_id"),
-                F.lit(2).alias("mrank"),
-                F.col("n_frames").alias("n_units"),
-            )
-        )
-        .unionByName(
-            a_new.select(
-                (F.col("doc_id") * 3 + 2).alias("doc_id"),
-                F.lit(1).alias("mrank"),
-                F.col("n_windows").cast("long").alias("n_units"),
-            )
-        )
-    )
-    idx_q = (
-        img_idx.select(
-            F.col("node").alias("doc_id"),
-            F.col("keep_node").alias("keep_id"),
-            F.lit(0).alias("mrank"),
-            F.lit(1).cast("long").alias("n_units"),
-        )
-        .unionByName(
-            # per-frame rows: bounded resolve dedupes per doc after
-            # its endpoint semi-join (r16) — no state-wide shuffle
-            frame_idx.select(
-                F.col("node").alias("doc_id"),
-                F.col("keep_node").alias("keep_id"),
-                F.lit(2).alias("mrank"),
-                F.col("n_frames").alias("n_units"),
-            )
-        )
-        .unionByName(
-            audio_idx.select(
-                F.col("node").alias("doc_id"),
-                F.col("keep_node").alias("keep_id"),
-                F.lit(1).alias("mrank"),
-                F.col("n_windows").cast("long").alias("n_units"),
-            )
-        )
-    )
-    verdicts, displaced = resolve_keep_best(
-        new_q, idx_q, edges, ["mrank", "n_units"], bounded_batch=True
-    )
-    verdicts, displaced = run_concurrent(
-        lambda: verdicts.localCheckpoint(eager=True),
-        lambda: displaced.localCheckpoint(eager=True),
-    )
-    mark("resolve")
-
-    # ---- 1) land flags (keyed merge) --------------------------------
-    def _fmt3(node_col):
-        return (
-            F.when(node_col % 3 == 1, F.lit("video"))
-            .when(node_col % 3 == 2, F.lit("audio"))
-            .otherwise(F.lit("image"))
-            .alias("modality")
-        )
-
-    flags = (
-        verdicts.select(
-            F.expr("doc_id div 3").cast("long").alias("did"),
-            _fmt3(F.col("doc_id")),
-            F.when(F.col("is_kept"), F.lit("kept"))
-            .otherwise(F.lit("dropped:near_dup"))
-            .alias("status"),
-        )
-        .unionByName(
-            displaced.select(
-                F.expr("doc_id div 3").cast("long").alias("did"),
-                _fmt3(F.col("doc_id")),
-                F.lit("displaced:near_dup").alias("status"),
-            )
-        )
-        .select(
-            F.col("did").alias("doc_id"), "modality", "status",
-            F.lit(bid).alias("batch_id"),
-        )
-    )
-    # r17: the flags merge touches only cm3_flags — disjoint from the
-    # repoints (node indexes) and every append — so it overlaps them
-    # (joined before maintenance/return)
-    join_flags = start_concurrent(
-        lambda: merge_state(
-            spark, f"{state_dir}/cm3_flags", flags, ["doc_id", "modality"]
-        )
-    )
-    mark("flags")
-
-    # ---- 2) repoint displaced keepers, per modality -----------------
-    # keep_node references stay WITHIN a modality's index (a row's
-    # keeper can be any modality, so match on keep_node regardless of
-    # parity — but an index only needs rewriting when at least one of
-    # ITS rows points at a displaced keeper). Guarding each
-    # merge_state on its own update set keeps a tick that displaces
-    # one audio keeper from read+rewriting the untouched image and
-    # frame tables — tick cost must scale with the delta, not total
-    # state (the media tick's per-modality guards, generalized).
-    if not displaced.isEmpty():
-        rp = displaced.select(
-            F.col("doc_id").alias("keep_node"), "new_keep"
-        ).localCheckpoint(eager=True)
-
-        def _repoint(sub: str, schema: str, keys: list) -> None:
-            full = _read_or_empty(spark, _rsp(f"{state_dir}/{sub}"), schema)
-            upd = (
-                full.join(F.broadcast(rp), "keep_node")
-                .withColumn("keep_node", F.col("new_keep"))
-                .drop("new_keep")
-            )
-            if not upd.isEmpty():
-                merge_state(spark, f"{state_dir}/{sub}", upd, keys)
-
-        # per-modality repoints touch disjoint tables — concurrent
-        run_concurrent(
+        st.start(
             *(
-                lambda s=sub, sc=schema, k=keys: _repoint(s, sc, k)
-                for sub, schema, keys in (
-                    ("cm3_image_index", CM3_IMG_SCHEMA, ["node"]),
-                    (
-                        "cm3_frame_index",
-                        CM3_FRAME_SCHEMA,
-                        ["node", "frame_dhash"],
-                    ),
-                    ("cm3_audio_index", CM3_AUDIO_SCHEMA, ["node"]),
+                lambda s=sub, sc=schema, f=frame, c=cols: st.append(
+                    s, sc, f, "doc_id", c
+                )
+                for sub, schema, frame, cols in band_frames
+            )
+        )
+
+        # the probing side is the batch — micro-batch-bounded, so every
+        # edge family broadcasts it and the state side never shuffles
+        edges = trimodal_edges_delta(
+            F.broadcast(tb_new), tb_all, F.broadcast(fb_new), fb_all,
+            F.broadcast(vsig_new), vsig_all,
+            F.broadcast(rb_new), rb_all, F.broadcast(trb_new), trb_all,
+        ).localCheckpoint(eager=True)
+        mark("edges")
+
+        # joint resolution: quality = (modality rank, decoded units)
+        new_q = (
+            t_new.select(
+                (F.col("doc_id") * 3).alias("doc_id"),
+                F.lit(0).alias("mrank"),
+                F.lit(1).cast("long").alias("n_units"),
+            )
+            .unionByName(
+                n_new.select(
+                    (F.col("doc_id") * 3 + 1).alias("doc_id"),
+                    F.lit(2).alias("mrank"),
+                    F.col("n_frames").alias("n_units"),
+                )
+            )
+            .unionByName(
+                a_new.select(
+                    (F.col("doc_id") * 3 + 2).alias("doc_id"),
+                    F.lit(1).alias("mrank"),
+                    F.col("n_windows").cast("long").alias("n_units"),
                 )
             )
         )
-    mark("repoint")
-
-    # ---- 3) append the batch (kept AND dropped; anti-joined) --------
-    # table-driven so the replay contract (anti-join key + batch tag)
-    # is single-sourced across all seven cm3_* tables (the four band
-    # appends were started right after decode and are joined below)
-    kmap = verdicts.select(
-        F.col("doc_id").alias("node"), F.col("keep_id").alias("keep_node")
-    )
-    node_frames = (
-        (
-            "cm3_image_index", CM3_IMG_SCHEMA,
-            t_new.select(
-                (F.col("doc_id") * 3).alias("node"), "doc_id", "dhash"
-            ),
-            ["node", "doc_id", "dhash", "keep_node"],
-        ),
-        (
-            "cm3_frame_index", CM3_FRAME_SCHEMA,
-            vsig_new.select(
-                (F.col("doc_id") * 3 + 1).alias("node"),
-                "doc_id", "frame_dhash",
-            ).join(n_new.select("doc_id", "n_frames"), "doc_id"),
-            ["node", "doc_id", "frame_dhash", "n_frames", "keep_node"],
-        ),
-        (
-            "cm3_audio_index", CM3_AUDIO_SCHEMA,
-            a_new.select(
-                (F.col("doc_id") * 3 + 2).alias("node"),
-                "doc_id", "sphash", "n_windows",
-            ),
-            ["node", "doc_id", "sphash", "n_windows", "keep_node"],
-        ),
-    )
-    def _append_nodes(sub: str, schema: str, frame: DataFrame, cols) -> None:
-        full = _read_or_empty(spark, _rsp(f"{state_dir}/{sub}"), schema)
-        (
-            _anti_existing(frame.join(F.broadcast(kmap), "node"), full, "node")
-            .select(*cols, tag)
-            .write.mode("append").parquet(_rsp(f"{state_dir}/{sub}"))
-        )
-
-    # the three node appends run as one concurrent wave; the band
-    # appends (started after decode) and the flags merge (started
-    # after resolve) join here, before maintenance can compact the
-    # tables they write
-    run_concurrent(
-        *(
-            lambda s=sub, sc=schema, f=frame, c=cols: _append_nodes(
-                s, sc, f, c
+        idx_q = (
+            img_idx.select(
+                F.col("node").alias("doc_id"),
+                F.col("keep_node").alias("keep_id"),
+                F.lit(0).alias("mrank"),
+                F.lit(1).cast("long").alias("n_units"),
             )
-            for sub, schema, frame, cols in node_frames
+            .unionByName(
+                # per-frame rows: bounded resolve dedupes per doc after
+                # its endpoint semi-join (r16) — no state-wide shuffle
+                frame_idx.select(
+                    F.col("node").alias("doc_id"),
+                    F.col("keep_node").alias("keep_id"),
+                    F.lit(2).alias("mrank"),
+                    F.col("n_frames").alias("n_units"),
+                )
+            )
+            .unionByName(
+                audio_idx.select(
+                    F.col("node").alias("doc_id"),
+                    F.col("keep_node").alias("keep_id"),
+                    F.lit(1).alias("mrank"),
+                    F.col("n_windows").cast("long").alias("n_units"),
+                )
+            )
         )
-    )
-    join_bands()
-    join_flags()
+        verdicts, displaced = resolve_keep_best(
+            new_q, idx_q, edges, ["mrank", "n_units"], bounded_batch=True
+        )
+        verdicts, displaced = run_concurrent(
+            lambda: verdicts.localCheckpoint(eager=True),
+            lambda: displaced.localCheckpoint(eager=True),
+        )
+        mark("resolve")
+
+        # ---- 1) land flags (keyed merge) --------------------------------
+        flags = _flags(verdicts, CM3_MODALITIES, bid, displaced)
+        # r17: the flags merge touches only cm3_flags — disjoint from the
+        # repoints (node indexes) and every append — so it overlaps them
+        st.start(lambda: st.merge("cm3_flags", flags, ["doc_id", "modality"]))
+        mark("flags")
+
+        # ---- 2) repoint displaced keepers, per modality -----------------
+        # a row's keeper can be any modality, so every index matches on
+        # keep_node regardless of parity; st.repoint rewrites only the
+        # indexes with a row that moves
+        if not displaced.isEmpty():
+            rp = displaced.select("doc_id", "new_keep").localCheckpoint(
+                eager=True
+            )
+            # per-modality repoints touch disjoint tables — concurrent
+            run_concurrent(
+                *(
+                    lambda s=sub, sc=schema, k=keys: st.repoint(
+                        s, sc, rp, "keep_node", k
+                    )
+                    for sub, schema, keys in (
+                        ("cm3_image_index", CM_IMG_SCHEMA, ["node"]),
+                        (
+                            "cm3_frame_index",
+                            CM_FRAME_SCHEMA,
+                            ["node", "frame_dhash"],
+                        ),
+                        ("cm3_audio_index", CM3_AUDIO_SCHEMA, ["node"]),
+                    )
+                )
+            )
+        mark("repoint")
+
+        # ---- 3) append the batch (kept AND dropped; anti-joined) --------
+        # (the four band appends were started right after decode)
+        kmap = verdicts.select(
+            F.col("doc_id").alias("node"), F.col("keep_id").alias("keep_node")
+        )
+        node_frames = (
+            (
+                "cm3_image_index", CM_IMG_SCHEMA,
+                t_new.select(
+                    (F.col("doc_id") * 3).alias("node"), "doc_id", "dhash"
+                ),
+                ["node", "doc_id", "dhash", "keep_node"],
+            ),
+            (
+                "cm3_frame_index", CM_FRAME_SCHEMA,
+                vsig_new.select(
+                    (F.col("doc_id") * 3 + 1).alias("node"),
+                    "doc_id", "frame_dhash",
+                ).join(n_new.select("doc_id", "n_frames"), "doc_id"),
+                ["node", "doc_id", "frame_dhash", "n_frames", "keep_node"],
+            ),
+            (
+                "cm3_audio_index", CM3_AUDIO_SCHEMA,
+                a_new.select(
+                    (F.col("doc_id") * 3 + 2).alias("node"),
+                    "doc_id", "sphash", "n_windows",
+                ),
+                ["node", "doc_id", "sphash", "n_windows", "keep_node"],
+            ),
+        )
+        # the three node appends run as one concurrent wave; the band
+        # appends (started after decode) and the flags merge (started
+        # after resolve) join as the block exits, before maintenance can
+        # compact the tables they write
+        run_concurrent(
+            *(
+                lambda s=sub, sc=schema, f=frame, c=cols: st.append(
+                    s, sc, f.join(F.broadcast(kmap), "node"), "node", c
+                )
+                for sub, schema, frame, cols in node_frames
+            )
+        )
     mark("append")
 
     # ---- in-cadence maintenance (r15, verdict #1): GC retired state

@@ -53,16 +53,9 @@ VIDEO_SHARED_T — shared content, order destroyed: a re-cut, not a
 trim — is flagged 'dropped:near_dup:reordered' so downstream can
 treat re-edits differently from copies.
 
-Replay safety (at-least-once foreachBatch, the corpus tick's
-contract): every index row carries its replay-stable batch_id; probes
-EXCLUDE the current batch's own rows, so a replayed batch scores
-against exactly the state it originally saw (a replayed winner's
-matches lift to itself through keep_id and drop out as self-loops);
-appends anti-join the full index on doc_id, so a replay appends
-nothing; flags land keyed on (doc_id, modality) — last-write-wins
-with identical values. Mutation order is flags -> repoint -> append,
-each step individually idempotent, so a crash between steps replays
-to the same final state.
+Replay safety: the contract of ``state.TickState``, flags keyed on
+(doc_id, modality); a replayed winner's matches lift to itself through
+keep_id and drop out as self-loops.
 """
 
 from __future__ import annotations
@@ -80,16 +73,11 @@ from falcon_metrics_etl_spark.plans.media_dedup import (
     image_keep_best_of,
     video_keep_best_of,
 )
-from falcon_metrics_etl_spark.session import run_concurrent, start_concurrent
+from falcon_metrics_etl_spark.session import run_concurrent
 from falcon_metrics_etl_spark.state import (
+    TickState,
     maintain_state_dir,
-    merge_state,
     overwrite_state,
-)
-from falcon_metrics_etl_spark.state import resolve_state_path as _rsp
-from falcon_metrics_etl_spark.sinks.merge import (
-    _target_exists,
-    anti_existing,
 )
 
 FP_SCHEMA = (
@@ -101,12 +89,6 @@ FRAME_SCHEMA = (
     "doc_id long, frame_idx int, frame_dhash long, n_frames long, "
     "keep_id long, batch_id long"
 )
-
-
-def _read_or_empty(spark: SparkSession, path: str, schema: str) -> DataFrame:
-    if _target_exists(spark, path):
-        return spark.read.parquet(path)
-    return spark.createDataFrame([], schema)
 
 
 def _status(is_kept_col):
@@ -237,305 +219,277 @@ def media_ingest_tick(
             lambda: vfp_new.localCheckpoint(eager=True),
         )
 
-    # ---- image side: band probe -> Hamming edges --------------------
-    fp_idx = _read_or_empty(
-        spark, _rsp(f"{state_dir}/fp_index"), FP_SCHEMA
-    ).filter(F.col("batch_id") != bid)
-    band_idx = _read_or_empty(
-        spark, _rsp(f"{state_dir}/band_index"), BAND_SCHEMA
-    ).filter(F.col("batch_id") != bid)
-    new_bands = image_bands_of(fp_new)
+    with TickState(spark, state_dir, bid) as st:
+        # ---- image side: band probe -> Hamming edges --------------------
+        fp_idx = st.probe("fp_index", FP_SCHEMA)
+        band_idx = st.probe("band_index", BAND_SCHEMA)
+        new_bands = image_bands_of(fp_new)
 
-    # ---- band append, overlapped (r17, guide §2.6) ------------------
-    # the band-index append depends ONLY on the decoded batch — it
-    # runs WHILE the edge/resolve jobs compute and joins before the
-    # node appends below. Safe against the concurrent probes: every
-    # state-side read filters batch_id != bid (the replay contract
-    # already tolerates this batch's rows), and band_idx above listed
-    # its file set before this write lands.
-    tag = F.lit(bid).alias("batch_id")
-
-    def _append(sub: str, schema: str, frame, cols: list) -> None:
-        full = _read_or_empty(spark, _rsp(f"{state_dir}/{sub}"), schema)
-        (
-            anti_existing(frame, full, "doc_id")
-            .select(*cols, tag)
-            .write.mode("append").parquet(_rsp(f"{state_dir}/{sub}"))
+        # ---- band append, overlapped (r17, guide §2.6) ------------------
+        # the band-index append depends ONLY on the decoded batch — it
+        # runs WHILE the edge/resolve jobs compute and joins as the
+        # block exits. Safe against the concurrent probes: every
+        # state-side read filters batch_id != bid (the replay contract
+        # already tolerates this batch's rows), and band_idx above listed
+        # its file set before this write lands.
+        st.start(
+            lambda: st.append(
+                "band_index", BAND_SCHEMA, new_bands, "doc_id",
+                ["doc_id", "band", "byte"],
+            )
         )
-
-    join_bands = start_concurrent(
-        lambda: _append(
-            "band_index", BAND_SCHEMA, new_bands,
-            ["doc_id", "band", "byte"],
+        probe_side = band_idx.select("doc_id", "band", "byte").unionByName(
+            new_bands.select("doc_id", "band", "byte")
         )
-    )
-    probe_side = band_idx.select("doc_id", "band", "byte").unionByName(
-        new_bands.select("doc_id", "band", "byte")
-    )
-    # the probing side is the batch — micro-batch-bounded, so the
-    # band probe broadcasts it and the state side never shuffles
-    cand = (
-        F.broadcast(new_bands).alias("a")
-        .join(
-            probe_side.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.byte") == F.col("b.byte"))
-            & (F.col("a.doc_id") != F.col("b.doc_id")),
+        # the probing side is the batch — micro-batch-bounded, so the
+        # band probe broadcasts it and the state side never shuffles
+        cand = (
+            F.broadcast(new_bands).alias("a")
+            .join(
+                probe_side.alias("b"),
+                (F.col("a.band") == F.col("b.band"))
+                & (F.col("a.byte") == F.col("b.byte"))
+                & (F.col("a.doc_id") != F.col("b.doc_id")),
+            )
+            .select(
+                F.least(F.col("a.doc_id"), F.col("b.doc_id")).alias("id_a"),
+                F.greatest(F.col("a.doc_id"), F.col("b.doc_id")).alias("id_b"),
+            )
+            .distinct()
         )
-        .select(
-            F.least(F.col("a.doc_id"), F.col("b.doc_id")).alias("id_a"),
-            F.greatest(F.col("a.doc_id"), F.col("b.doc_id")).alias("id_b"),
+        hashes = fp_idx.select("doc_id", "dhash").unionByName(
+            fp_new.select("doc_id", "dhash")
         )
-        .distinct()
-    )
-    hashes = fp_idx.select("doc_id", "dhash").unionByName(
-        fp_new.select("doc_id", "dhash")
-    )
-    # no broadcast HINT on the candidate side: cand is bounded by
-    # batch x bucket occupancy, not by the batch (a hot band bucket
-    # makes it state-proportional) — AQE broadcasts the post-shuffle
-    # stage when it measures small and degrades gracefully otherwise
-    e1 = cand.join(
-        hashes.select(
-            F.col("doc_id").alias("id_a"), F.col("dhash").alias("h_a")
-        ),
-        "id_a",
-    )
-    edges = (
-        e1
-        .join(
+        # no broadcast HINT on the candidate side: cand is bounded by
+        # batch x bucket occupancy, not by the batch (a hot band bucket
+        # makes it state-proportional) — AQE broadcasts the post-shuffle
+        # stage when it measures small and degrades gracefully otherwise
+        e1 = cand.join(
             hashes.select(
-                F.col("doc_id").alias("id_b"), F.col("dhash").alias("h_b")
+                F.col("doc_id").alias("id_a"), F.col("dhash").alias("h_a")
             ),
-            "id_b",
+            "id_a",
         )
-        .filter(F.bit_count(F.expr("h_a ^ h_b")) <= DHASH_HAMMING_T)
-        .select("id_a", "id_b")
-    )
-    # ---- video side: delta frames probe the inverted index ---------
-    n_new = vfp_new.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_frames")
-    )
-    frame_idx_state = _read_or_empty(
-        spark, _rsp(f"{state_dir}/frame_index"), FRAME_SCHEMA
-    ).filter(F.col("batch_id") != bid)
-    vprobe = frame_idx_state.select(
-        "doc_id", "frame_idx", "frame_dhash"
-    ).unionByName(vfp_new)
-    fm = (
-        F.broadcast(vfp_new).alias("a")
-        .join(
-            vprobe.alias("b"),
-            (F.col("a.frame_dhash") == F.col("b.frame_dhash"))
-            & (F.col("a.doc_id") != F.col("b.doc_id")),
-        )
-        .select(
-            F.least(F.col("a.doc_id"), F.col("b.doc_id")).alias("id_a"),
-            F.greatest(F.col("a.doc_id"), F.col("b.doc_id")).alias("id_b"),
-            F.when(
-                F.col("a.doc_id") < F.col("b.doc_id"), F.col("a.frame_idx")
+        edges = (
+            e1
+            .join(
+                hashes.select(
+                    F.col("doc_id").alias("id_b"), F.col("dhash").alias("h_b")
+                ),
+                "id_b",
             )
-            .otherwise(F.col("b.frame_idx"))
-            .alias("ia"),
-            F.when(
-                F.col("a.doc_id") < F.col("b.doc_id"), F.col("b.frame_idx")
-            )
-            .otherwise(F.col("a.frame_idx"))
-            .alias("ib"),
-            F.col("a.frame_dhash").alias("fd"),
+            .filter(F.bit_count(F.expr("h_a ^ h_b")) <= DHASH_HAMMING_T)
+            .select("id_a", "id_b")
         )
-        # both orientations appear when both sides are batch docs
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    vpairs = (
-        fm.select("id_a", "id_b", "fd")
-        .distinct()
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_shared"))
-        .filter(F.col("n_shared") >= VIDEO_SHARED_T)
-    )
-    # temporal-order verification with the batch query's exact algebra
-    vpairs = vpairs.join(
-        aligned_runs_of(fm.select("id_a", "id_b", "ia", "ib")),
-        ["id_a", "id_b"],
-    ).withColumn(
-        "is_aligned", F.col("aligned_run") >= VIDEO_SHARED_T
-    ).localCheckpoint(eager=True)
+        # ---- video side: delta frames probe the inverted index ---------
+        n_new = vfp_new.groupBy("doc_id").agg(
+            F.count(F.lit(1)).cast("long").alias("n_frames")
+        )
+        frame_idx_state = st.probe("frame_index", FRAME_SCHEMA)
+        vprobe = frame_idx_state.select(
+            "doc_id", "frame_idx", "frame_dhash"
+        ).unionByName(vfp_new)
+        fm = (
+            F.broadcast(vfp_new).alias("a")
+            .join(
+                vprobe.alias("b"),
+                (F.col("a.frame_dhash") == F.col("b.frame_dhash"))
+                & (F.col("a.doc_id") != F.col("b.doc_id")),
+            )
+            .select(
+                F.least(F.col("a.doc_id"), F.col("b.doc_id")).alias("id_a"),
+                F.greatest(F.col("a.doc_id"), F.col("b.doc_id")).alias("id_b"),
+                F.when(
+                    F.col("a.doc_id") < F.col("b.doc_id"), F.col("a.frame_idx")
+                )
+                .otherwise(F.col("b.frame_idx"))
+                .alias("ia"),
+                F.when(
+                    F.col("a.doc_id") < F.col("b.doc_id"), F.col("b.frame_idx")
+                )
+                .otherwise(F.col("a.frame_idx"))
+                .alias("ib"),
+                F.col("a.frame_dhash").alias("fd"),
+            )
+            # both orientations appear when both sides are batch docs
+            .distinct()
+            .localCheckpoint(eager=True)
+        )
+        vpairs = (
+            fm.select("id_a", "id_b", "fd")
+            .distinct()
+            .groupBy("id_a", "id_b")
+            .agg(F.count(F.lit(1)).cast("long").alias("n_shared"))
+            .filter(F.col("n_shared") >= VIDEO_SHARED_T)
+        )
+        # temporal-order verification with the batch query's exact algebra
+        vpairs = vpairs.join(
+            aligned_runs_of(fm.select("id_a", "id_b", "ia", "ib")),
+            ["id_a", "id_b"],
+        ).withColumn(
+            "is_aligned", F.col("aligned_run") >= VIDEO_SHARED_T
+        ).localCheckpoint(eager=True)
 
-    # ---- ONE joint resolution on modality-tagged nodes (r12) --------
-    # image and video edges live on disjoint parities (2*doc_id vs
-    # 2*doc_id + 1), so a single resolve_keep_best call — one
-    # component loop, one argmax — reproduces the two per-modality
-    # resolutions exactly: clusters never mix parities, images compare
-    # on (wh, detail), clips on (n_frames, 0), and the -node tiebreak
-    # is -doc_id within each parity class. Halves the iterative
-    # clustering + checkpoint job count per tick (measured on the
-    # sf0.1 runner; the cross_modal_tick uses the same node algebra).
-    node_edges = edges.select(
-        (F.col("id_a") * 2).alias("id_a"), (F.col("id_b") * 2).alias("id_b")
-    ).unionByName(
-        vpairs.select(
-            (F.col("id_a") * 2 + 1).alias("id_a"),
-            (F.col("id_b") * 2 + 1).alias("id_b"),
-        )
-    )
-    wh_q1 = (F.col("width").cast("long") * F.col("height")).alias("q1")
-    new_q = fp_new.select(
-        (F.col("doc_id") * 2).alias("doc_id"),
-        wh_q1,
-        F.col("detail").alias("q2"),
-    ).unionByName(
-        n_new.select(
-            (F.col("doc_id") * 2 + 1).alias("doc_id"),
-            F.col("n_frames").alias("q1"),
-            F.lit(0).cast("long").alias("q2"),
-        )
-    )
-    idx_q = fp_idx.select(
-        (F.col("doc_id") * 2).alias("doc_id"),
-        (F.col("keep_id") * 2).alias("keep_id"),
-        wh_q1,
-        F.col("detail").alias("q2"),
-    ).unionByName(
-        # per-frame rows: bounded resolve dedupes per doc after its
-        # endpoint semi-join (r16) — no state-wide shuffle per tick
-        frame_idx_state.select("doc_id", "keep_id", "n_frames")
-        .select(
-            (F.col("doc_id") * 2 + 1).alias("doc_id"),
-            (F.col("keep_id") * 2 + 1).alias("keep_id"),
-            F.col("n_frames").alias("q1"),
-            F.lit(0).cast("long").alias("q2"),
-        )
-    )
-    verdicts, displaced = resolve_keep_best(
-        new_q, idx_q, node_edges, ["q1", "q2"], bounded_batch=True
-    )
-    # freeze the decisions BEFORE any state mutation: their lineage
-    # reads the index parquet the repoint/appends are about to rewrite
-    verdicts, displaced = run_concurrent(
-        lambda: verdicts.localCheckpoint(eager=True),
-        lambda: displaced.localCheckpoint(eager=True),
-    )
-    half = F.expr("doc_id div 2").cast("long").alias("doc_id")
-    keep_half = F.expr("keep_id div 2").cast("long").alias("keep_id")
-    img_verdicts = verdicts.filter(F.col("doc_id") % 2 == 0).select(
-        half, keep_half, "is_kept"
-    )
-    vid_verdicts = verdicts.filter(F.col("doc_id") % 2 == 1).select(
-        half, keep_half, "is_kept"
-    )
-    img_displaced = displaced.filter(F.col("doc_id") % 2 == 0).select(
-        half, F.expr("new_keep div 2").cast("long").alias("new_keep")
-    )
-    vid_displaced = displaced.filter(F.col("doc_id") % 2 == 1).select(
-        half, F.expr("new_keep div 2").cast("long").alias("new_keep")
-    )
-
-    # ---- 1) land flags (keyed merge) --------------------------------
-    # a dropped clip NONE of whose candidate pairs is order-aligned is
-    # a re-cut, not a copy — flag the distinction
-    aligned_touch = (
-        vpairs.filter(F.col("is_aligned"))
-        .select(F.col("id_a").alias("doc_id"))
-        .unionByName(
-            vpairs.filter(F.col("is_aligned")).select(
-                F.col("id_b").alias("doc_id")
+        # ---- ONE joint resolution on modality-tagged nodes (r12) --------
+        # image and video edges live on disjoint parities (2*doc_id vs
+        # 2*doc_id + 1), so a single resolve_keep_best call — one
+        # component loop, one argmax — reproduces the two per-modality
+        # resolutions exactly: clusters never mix parities, images compare
+        # on (wh, detail), clips on (n_frames, 0), and the -node tiebreak
+        # is -doc_id within each parity class. Halves the iterative
+        # clustering + checkpoint job count per tick (measured on the
+        # sf0.1 runner; the cross_modal_tick uses the same node algebra).
+        node_edges = edges.select(
+            (F.col("id_a") * 2).alias("id_a"),
+            (F.col("id_b") * 2).alias("id_b"),
+        ).unionByName(
+            vpairs.select(
+                (F.col("id_a") * 2 + 1).alias("id_a"),
+                (F.col("id_b") * 2 + 1).alias("id_b"),
             )
         )
-        .distinct()
-        .withColumn("al", F.lit(1))
-    )
-    img_flags = img_verdicts.select(
-        "doc_id",
-        F.lit("image").alias("modality"),
-        _status(F.col("is_kept")).alias("status"),
-    ).unionByName(
-        img_displaced.select(
+        wh_q1 = (F.col("width").cast("long") * F.col("height")).alias("q1")
+        new_q = fp_new.select(
+            (F.col("doc_id") * 2).alias("doc_id"),
+            wh_q1,
+            F.col("detail").alias("q2"),
+        ).unionByName(
+            n_new.select(
+                (F.col("doc_id") * 2 + 1).alias("doc_id"),
+                F.col("n_frames").alias("q1"),
+                F.lit(0).cast("long").alias("q2"),
+            )
+        )
+        idx_q = fp_idx.select(
+            (F.col("doc_id") * 2).alias("doc_id"),
+            (F.col("keep_id") * 2).alias("keep_id"),
+            wh_q1,
+            F.col("detail").alias("q2"),
+        ).unionByName(
+            # per-frame rows: bounded resolve dedupes per doc after its
+            # endpoint semi-join (r16) — no state-wide shuffle per tick
+            frame_idx_state.select("doc_id", "keep_id", "n_frames")
+            .select(
+                (F.col("doc_id") * 2 + 1).alias("doc_id"),
+                (F.col("keep_id") * 2 + 1).alias("keep_id"),
+                F.col("n_frames").alias("q1"),
+                F.lit(0).cast("long").alias("q2"),
+            )
+        )
+        verdicts, displaced = resolve_keep_best(
+            new_q, idx_q, node_edges, ["q1", "q2"], bounded_batch=True
+        )
+        # freeze the decisions BEFORE any state mutation: their lineage
+        # reads the index parquet the repoint/appends are about to rewrite
+        verdicts, displaced = run_concurrent(
+            lambda: verdicts.localCheckpoint(eager=True),
+            lambda: displaced.localCheckpoint(eager=True),
+        )
+        half = F.expr("doc_id div 2").cast("long").alias("doc_id")
+        keep_half = F.expr("keep_id div 2").cast("long").alias("keep_id")
+        img_verdicts = verdicts.filter(F.col("doc_id") % 2 == 0).select(
+            half, keep_half, "is_kept"
+        )
+        vid_verdicts = verdicts.filter(F.col("doc_id") % 2 == 1).select(
+            half, keep_half, "is_kept"
+        )
+        img_displaced = displaced.filter(F.col("doc_id") % 2 == 0).select(
+            half, F.expr("new_keep div 2").cast("long").alias("new_keep")
+        )
+        vid_displaced = displaced.filter(F.col("doc_id") % 2 == 1).select(
+            half, F.expr("new_keep div 2").cast("long").alias("new_keep")
+        )
+
+        # ---- 1) land flags (keyed merge) --------------------------------
+        # a dropped clip NONE of whose candidate pairs is order-aligned is
+        # a re-cut, not a copy — flag the distinction
+        aligned_touch = (
+            vpairs.filter(F.col("is_aligned"))
+            .select(F.col("id_a").alias("doc_id"))
+            .unionByName(
+                vpairs.filter(F.col("is_aligned")).select(
+                    F.col("id_b").alias("doc_id")
+                )
+            )
+            .distinct()
+            .withColumn("al", F.lit(1))
+        )
+        img_flags = img_verdicts.select(
             "doc_id",
             F.lit("image").alias("modality"),
-            F.lit("displaced:near_dup").alias("status"),
-        )
-    )
-    vid_flags = (
-        vid_verdicts.join(aligned_touch, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.lit("video").alias("modality"),
-            F.when(F.col("is_kept"), F.lit("kept"))
-            .when(F.col("al").isNull(), F.lit("dropped:near_dup:reordered"))
-            .otherwise(F.lit("dropped:near_dup"))
-            .alias("status"),
-        )
-        .unionByName(
-            vid_displaced.select(
+            _status(F.col("is_kept")).alias("status"),
+        ).unionByName(
+            img_displaced.select(
                 "doc_id",
-                F.lit("video").alias("modality"),
+                F.lit("image").alias("modality"),
                 F.lit("displaced:near_dup").alias("status"),
             )
         )
-    )
-    flags = img_flags.unionByName(vid_flags).withColumn(
-        "batch_id", F.lit(bid)
-    )
-    # r17: the flags merge touches only media_flags — disjoint from
-    # the repoints and appends — so it overlaps them (joined below)
-    join_flags = start_concurrent(
-        lambda: merge_state(
-            spark, f"{state_dir}/media_flags", flags, ["doc_id", "modality"]
-        )
-    )
-
-    # ---- 2) repoint displaced keepers (keyed merge) -----------------
-    def _repoint(sub: str, schema: str, disp, keys: list) -> None:
-        if disp.isEmpty():
-            return
-        full = _read_or_empty(spark, _rsp(f"{state_dir}/{sub}"), schema)
-        upd = (
-            full.join(
-                F.broadcast(
-                    disp.select(F.col("doc_id").alias("keep_id"), "new_keep")
-                ),
-                "keep_id",
+        vid_flags = (
+            vid_verdicts.join(aligned_touch, "doc_id", "left")
+            .select(
+                "doc_id",
+                F.lit("video").alias("modality"),
+                F.when(F.col("is_kept"), F.lit("kept"))
+                .when(
+                    F.col("al").isNull(), F.lit("dropped:near_dup:reordered")
+                )
+                .otherwise(F.lit("dropped:near_dup"))
+                .alias("status"),
             )
-            .withColumn("keep_id", F.col("new_keep"))
-            .drop("new_keep")
+            .unionByName(
+                vid_displaced.select(
+                    "doc_id",
+                    F.lit("video").alias("modality"),
+                    F.lit("displaced:near_dup").alias("status"),
+                )
+            )
         )
-        merge_state(spark, f"{state_dir}/{sub}", upd, keys)
+        flags = img_flags.unionByName(vid_flags).withColumn(
+            "batch_id", F.lit(bid)
+        )
+        # r17: the flags merge touches only media_flags — disjoint from
+        # the repoints and appends — so it overlaps them
+        st.start(
+            lambda: st.merge("media_flags", flags, ["doc_id", "modality"])
+        )
 
-    # the two index repoints touch disjoint tables — concurrent
-    run_concurrent(
-        lambda: _repoint("fp_index", FP_SCHEMA, img_displaced, ["doc_id"]),
-        lambda: _repoint(
-            "frame_index", FRAME_SCHEMA, vid_displaced,
-            ["doc_id", "frame_idx"],
-        ),
-    )
+        # ---- 2) repoint displaced keepers (keyed merge) -------------
+        # the two index repoints touch disjoint tables — concurrent
+        if not displaced.isEmpty():
+            run_concurrent(
+                lambda: st.repoint(
+                    "fp_index", FP_SCHEMA, img_displaced, "keep_id",
+                    ["doc_id"],
+                ),
+                lambda: st.repoint(
+                    "frame_index", FRAME_SCHEMA, vid_displaced, "keep_id",
+                    ["doc_id", "frame_idx"],
+                ),
+            )
 
-    # ---- 3) append the batch (kept AND dropped; anti-joined) --------
-    # (the band append was started after decode; joined below)
-    new_fp = fp_new.join(
-        F.broadcast(img_verdicts.select("doc_id", "keep_id")), "doc_id"
-    )
-    new_fr = vfp_new.join(F.broadcast(n_new), "doc_id").join(
-        F.broadcast(vid_verdicts.select("doc_id", "keep_id")), "doc_id"
-    )
-    # the two node appends run as one concurrent wave; the band append
-    # and the flags merge join here, before maintenance can compact
-    # the tables they write
-    run_concurrent(
-        lambda: _append(
-            "fp_index", FP_SCHEMA, new_fp,
-            ["doc_id", "codec", "dhash", "width", "height", "detail",
-             "keep_id"],
-        ),
-        lambda: _append(
-            "frame_index", FRAME_SCHEMA, new_fr,
-            ["doc_id", "frame_idx", "frame_dhash", "n_frames", "keep_id"],
-        ),
-    )
-    join_bands()
-    join_flags()
+        # ---- 3) append the batch (kept AND dropped; anti-joined) --------
+        # (the band append was started after decode)
+        new_fp = fp_new.join(
+            F.broadcast(img_verdicts.select("doc_id", "keep_id")), "doc_id"
+        )
+        new_fr = vfp_new.join(F.broadcast(n_new), "doc_id").join(
+            F.broadcast(vid_verdicts.select("doc_id", "keep_id")), "doc_id"
+        )
+        # the two node appends run as one concurrent wave; the band append
+        # and the flags merge join as the block exits, before maintenance
+        # can compact the tables they write
+        run_concurrent(
+            lambda: st.append(
+                "fp_index", FP_SCHEMA, new_fp, "doc_id",
+                ["doc_id", "codec", "dhash", "width", "height", "detail",
+                 "keep_id"],
+            ),
+            lambda: st.append(
+                "frame_index", FRAME_SCHEMA, new_fr, "doc_id",
+                ["doc_id", "frame_idx", "frame_dhash", "n_frames", "keep_id"],
+            ),
+        )
 
     # ---- in-cadence maintenance (r15, verdict #1): GC retired state
     # snapshots, compact tables past the live-file threshold

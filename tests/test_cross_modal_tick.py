@@ -173,6 +173,36 @@ def test_footage_displaces_admitted_still(spark, tmp_path_factory):
     assert keeps[2 * d + 1] == 2 * d + 1
 
 
+def test_displacement_rewrites_only_indexes_it_touches(
+    spark, tmp_path_factory
+):
+    """A displaced still repoints the image index; the frame index has
+    no row pointing at the still, so its snapshot pointer must not
+    move (an unguarded repoint rewrote it as a new snapshot)."""
+    import os
+
+    from falcon_metrics_etl_spark.state import CURRENT_POINTER
+
+    def pointer(table):
+        with open(os.path.join(state, table, CURRENT_POINTER)) as f:
+            return f.read()
+
+    d = 7
+    state = str(tmp_path_factory.mktemp("cm_guard"))
+    stage_cross_modal_state(
+        spark, _docs(spark, [d]), state, batch_id=0,
+        clips=_empty_media(spark),
+    )
+    img, frame = pointer("cm_image_index"), pointer("cm_frame_index")
+    cross_modal_ingest_tick(
+        spark, _docs(spark, [d]), state, batch_id=1,
+        thumbs=_empty_media(spark), maintenance_file_threshold=None,
+    )
+    assert _flags(spark, state)[(d, "image")] == "displaced:near_dup"
+    assert pointer("cm_image_index") != img
+    assert pointer("cm_frame_index") == frame
+
+
 def test_replay_is_idempotent(spark, ticked):
     def snapshot():
         counts = {
