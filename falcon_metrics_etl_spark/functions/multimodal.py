@@ -24,7 +24,9 @@ Scale notes: ``mapInPandas`` is a pure map — no shuffle, linear in
 bytes scanned; with payloads in their own parquet column, column
 pruning means metadata-only queries never read the bytes at all.
 ``spark.sql.execution.arrow.maxRecordsPerBatch`` bounds batch memory
-for fat rows.
+for fat rows. Every Arrow stage goes through the one row-map
+``_map_rows``; whether a ``_fan_out`` exchange goes in front of it is
+the caller's choice.
 """
 
 from __future__ import annotations
@@ -40,6 +42,7 @@ import pandas as pd
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import _parse_datatype_string
 
 # media_type assignment for the synthetic corpus: stable on doc_id
 MEDIA_TYPES = ("image", "audio", "video")
@@ -78,6 +81,35 @@ def _fan_out(df: DataFrame, heavy: bool = True) -> DataFrame:
     return df.repartition(sc.defaultParallelism)
 
 
+PAYLOAD_SCHEMA = "doc_id long, media_type string, codec string, payload binary"
+
+
+def _md5hex(text: str) -> str:
+    """md5 hex of a doc's utf-8 text: the seed every synthetic payload
+    draws its dimensions, levels and durations from."""
+    return hashlib.md5(text.encode("utf-8")).hexdigest()
+
+
+def _map_rows(df: DataFrame, fn, schema: str) -> DataFrame:
+    """The module's one Arrow batch boundary: ``fn(*row)`` runs once per
+    row of ``df`` (its columns in order) and yields zero or more output
+    tuples in ``schema`` order; the column names come from ``schema``.
+    A pure map — no shuffle — so exchange placement stays with the
+    caller."""
+    names = _parse_datatype_string(schema).names
+
+    def mapped(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [
+                out
+                for row in pdf.itertuples(index=False, name=None)
+                for out in fn(*row)
+            ]
+            yield pd.DataFrame(rows, columns=names)
+
+    return df.mapInPandas(mapped, schema=schema)
+
+
 def attach_payload(docs: DataFrame) -> DataFrame:
     """documents -> (doc_id, media_type, codec, payload binary).
 
@@ -105,25 +137,14 @@ def attach_payload_png(docs: DataFrame) -> DataFrame:
     header fields without parsing bytes. Built in Arrow-batched Python
     (byte assembly can't be a JVM expression); map-only, no shuffle."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for text in pdf["text"]:
-                h = hashlib.md5(text.encode("utf-8")).hexdigest()
-                w = int(h[0:4], 16) % PNG_DIM_MOD + 1
-                ht = int(h[4:8], 16) % PNG_DIM_MOD + 1
-                payloads.append(encode_png(w, ht, fill=int(h[8:10], 16)))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "media_type": "image",
-                    "codec": "png",
-                    "payload": payloads,
-                }
-            )
+    def row(doc_id, text):
+        h = _md5hex(text)
+        w = int(h[0:4], 16) % PNG_DIM_MOD + 1
+        ht = int(h[4:8], 16) % PNG_DIM_MOD + 1
+        yield doc_id, "image", "png", encode_png(w, ht, fill=int(h[8:10], 16))
 
-    return _fan_out(docs.select("doc_id", "text"), heavy=False).mapInPandas(
-        run, schema="doc_id long, media_type string, codec string, payload binary"
+    return _map_rows(
+        _fan_out(docs.select("doc_id", "text"), heavy=False), row, PAYLOAD_SCHEMA
     )
 
 
@@ -833,25 +854,12 @@ def attach_payload_wav(docs: DataFrame) -> DataFrame:
     is a REAL PCM WAV whose duration derives from md5(text) — the
     audio twin of attach_payload_png. Map-only Arrow-batched build."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for text in pdf["text"]:
-                h = hashlib.md5(text.encode("utf-8")).hexdigest()
-                dur = int(h[8:12], 16) % WAV_DUR_MOD + 1
-                payloads.append(encode_wav(dur, fill=int(h[10:12], 16)))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "media_type": "audio",
-                    "codec": "wav",
-                    "payload": payloads,
-                }
-            )
+    def row(doc_id, text):
+        h = _md5hex(text)
+        dur = int(h[8:12], 16) % WAV_DUR_MOD + 1
+        yield doc_id, "audio", "wav", encode_wav(dur, fill=int(h[10:12], 16))
 
-    return _fan_out(docs.select("doc_id", "text")).mapInPandas(
-        run, schema="doc_id long, media_type string, codec string, payload binary"
-    )
+    return _map_rows(_fan_out(docs.select("doc_id", "text")), row, PAYLOAD_SCHEMA)
 
 
 def encode_wav(duration_ms: int, fill: int = 0) -> bytes:
@@ -1711,30 +1719,19 @@ def decode_wav_samples_np(payload: bytes) -> dict:
     }
 
 
-def _decode_one(media_type: str, codec: str, payload) -> dict:
+def _decode_one(media_type: str, codec: str, payload) -> tuple:
+    """(n_bytes, width, height, duration_ms, n_frames) of one payload,
+    the ``META_SCHEMA`` columns after the three keys."""
     if payload is None:
         # failed upstream fetch: raise the same error family as the
         # codec parsers (ValueError), not a TypeError from bytes(None)
         raise ValueError("null media payload")
     payload = bytes(payload)
     if codec == "wav":
-        hdr = parse_wav_header(payload)
-        return {
-            "n_bytes": len(payload),
-            "width": 0,
-            "height": 0,
-            "duration_ms": hdr["duration_ms"],
-            "n_frames": 0,
-        }
+        return len(payload), 0, 0, parse_wav_header(payload)["duration_ms"], 0
     if codec == "png":
         hdr = parse_png_header(payload)
-        return {
-            "n_bytes": len(payload),
-            "width": hdr["width"],
-            "height": hdr["height"],
-            "duration_ms": 0,
-            "n_frames": 1,
-        }
+        return len(payload), hdr["width"], hdr["height"], 0, 1
     if codec != "synthetic":
         # STUB: real decoders (PIL / soundfile / pyav) are not in this
         # container. The dispatch, schema, and batching around this
@@ -1747,34 +1744,28 @@ def _decode_one(media_type: str, codec: str, payload) -> dict:
     height = int(h[4:8], 16) % 1024 + 1
     duration_ms = int(h[8:12], 16) % 60000 + 1
     fps25_frames = duration_ms // 40  # 25 fps
-    return {
-        "n_bytes": len(payload),
-        "width": width if media_type in ("image", "video") else 0,
-        "height": height if media_type in ("image", "video") else 0,
-        "duration_ms": duration_ms if media_type in ("audio", "video") else 0,
-        "n_frames": fps25_frames if media_type == "video" else (
+    pictured = media_type in ("image", "video")
+    return (
+        len(payload),
+        width if pictured else 0,
+        height if pictured else 0,
+        duration_ms if media_type in ("audio", "video") else 0,
+        fps25_frames if media_type == "video" else (
             1 if media_type == "image" else 0
         ),
-    }
+    )
 
 
 def decode_media_meta(media: DataFrame) -> DataFrame:
     """Arrow-batched decode: (doc_id, media_type, codec, payload) ->
     typed metadata rows, schema ``META_SCHEMA``."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            metas = [
-                _decode_one(mt, c, p)
-                for mt, c, p in zip(pdf["media_type"], pdf["codec"], pdf["payload"])
-            ]
-            out = pd.DataFrame(metas)
-            out.insert(0, "codec", pdf["codec"].values)
-            out.insert(0, "media_type", pdf["media_type"].values)
-            out.insert(0, "doc_id", pdf["doc_id"].values)
-            yield out
+    def row(doc_id, media_type, codec, payload):
+        yield (doc_id, media_type, codec) + _decode_one(media_type, codec, payload)
 
-    return media.mapInPandas(run, schema=META_SCHEMA)
+    return _map_rows(
+        media.select("doc_id", "media_type", "codec", "payload"), row, META_SCHEMA
+    )
 
 
 def sample_frame_indices(n_frames: Column, every_k: int) -> Column:
@@ -1815,30 +1806,19 @@ def attach_payload_png_gradient(docs: DataFrame) -> DataFrame:
     None/Up filters, real deflate): dims from md5(text) like
     attach_payload_png, base = md5[9:10 hex] % 200."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for text in pdf["text"]:
-                h = hashlib.md5(text.encode("utf-8")).hexdigest()
-                w = int(h[0:4], 16) % PNG_DIM_MOD + 1
-                ht = int(h[4:8], 16) % PNG_DIM_MOD + 1
-                base = int(h[8:10], 16) % GRAD_BASE_MOD
-                payloads.append(encode_png_gradient(w, ht, base))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "media_type": "image",
-                    "codec": "png",
-                    "payload": payloads,
-                }
-            )
+    def row(doc_id, text):
+        h = _md5hex(text)
+        w = int(h[0:4], 16) % PNG_DIM_MOD + 1
+        ht = int(h[4:8], 16) % PNG_DIM_MOD + 1
+        base = int(h[8:10], 16) % GRAD_BASE_MOD
+        yield doc_id, "image", "png", encode_png_gradient(w, ht, base)
 
     # heavy=False: the <=16x16 grayscale gradient assembly + decode is
     # trivial per row — the r8 unconditional fan-out shuffle cost more
     # than the decode saved (0.35 -> 0.93 s, the round's only
     # plan-changed regression; restored r9)
-    return _fan_out(docs.select("doc_id", "text"), heavy=False).mapInPandas(
-        run, schema="doc_id long, media_type string, codec string, payload binary"
+    return _map_rows(
+        _fan_out(docs.select("doc_id", "text"), heavy=False), row, PAYLOAD_SCHEMA
     )
 
 
@@ -1852,36 +1832,24 @@ def attach_payload_png_depth_variants(docs: DataFrame) -> DataFrame:
     dims/base/depth from md5(text) as everywhere. Map-only
     Arrow-batched build."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                h = hashlib.md5(text.encode("utf-8")).hexdigest()
-                w = int(h[0:4], 16) % PNG_DIM_MOD + 1
-                ht = int(h[4:8], 16) % PNG_DIM_MOD + 1
-                base = int(h[8:10], 16) % GRAD_BASE_MOD
-                depth = (1, 2, 4)[int(h[10:12], 16) % 3]
-                variant = int(doc_id) % 4
-                if variant == 0:
-                    payloads.append(encode_png_gray16(w, ht, base))
-                elif variant == 1:
-                    payloads.append(encode_png_gray_interlaced(w, ht, base))
-                elif variant == 2:
-                    payloads.append(encode_png_gray_subbyte(w, ht, depth))
-                else:
-                    payloads.append(encode_png_palette_subbyte(w, ht, depth))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "media_type": "image",
-                    "codec": "png",
-                    "payload": payloads,
-                }
-            )
+    def row(doc_id, text):
+        h = _md5hex(text)
+        w = int(h[0:4], 16) % PNG_DIM_MOD + 1
+        ht = int(h[4:8], 16) % PNG_DIM_MOD + 1
+        base = int(h[8:10], 16) % GRAD_BASE_MOD
+        depth = (1, 2, 4)[int(h[10:12], 16) % 3]
+        variant = doc_id % 4
+        if variant == 0:
+            payload = encode_png_gray16(w, ht, base)
+        elif variant == 1:
+            payload = encode_png_gray_interlaced(w, ht, base)
+        elif variant == 2:
+            payload = encode_png_gray_subbyte(w, ht, depth)
+        else:
+            payload = encode_png_palette_subbyte(w, ht, depth)
+        yield doc_id, "image", "png", payload
 
-    return _fan_out(docs.select("doc_id", "text")).mapInPandas(
-        run, schema="doc_id long, media_type string, codec string, payload binary"
-    )
+    return _map_rows(_fan_out(docs.select("doc_id", "text")), row, PAYLOAD_SCHEMA)
 
 
 PIXEL_STATS_SCHEMA = (
@@ -1896,63 +1864,33 @@ def png_pixel_stats(media: DataFrame, box: int | None = None) -> DataFrame:
     a ``box`` (resample_nearest), then aggregate the raster. Map-only:
     no shuffle, linear in bytes."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, p in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, ch, px = decode_png_pixels(bytes(p))
-                if box is not None:
-                    m = max(w, h)
-                    tw = max(1, w * box // m)
-                    th = max(1, h * box // m)
-                    px = resample_nearest(px, w, h, tw, th, ch)
-                    w, h = tw, th
-                n = len(px)
-                a = np.asarray(px)
-                s = int(a.sum(dtype=np.int64))
-                rows.append(
-                    (
-                        int(doc_id), w, h, n,
-                        int(a.min()), int(a.max()), s, s / n,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "n_pixels",
-                    "min_pixel", "max_pixel", "sum_pixel", "mean_pixel",
-                ],
-            )
+    def row(doc_id, p):
+        w, h, ch, px = decode_png_pixels(bytes(p))
+        if box is not None:
+            m = max(w, h)
+            tw = max(1, w * box // m)
+            th = max(1, h * box // m)
+            px = resample_nearest(px, w, h, tw, th, ch)
+            w, h = tw, th
+        n = len(px)
+        a = np.asarray(px)
+        s = int(a.sum(dtype=np.int64))
+        yield doc_id, w, h, n, int(a.min()), int(a.max()), s, s / n
 
-    return media.select("doc_id", "payload").mapInPandas(
-        run, schema=PIXEL_STATS_SCHEMA
-    )
+    return _map_rows(media.select("doc_id", "payload"), row, PIXEL_STATS_SCHEMA)
 
 
 def attach_payload_wav_square(docs: DataFrame) -> DataFrame:
     """documents -> square-wave PCM WAVs: duration from md5 like
     attach_payload_wav, base level = md5[13:14 hex] % 200."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for text in pdf["text"]:
-                h = hashlib.md5(text.encode("utf-8")).hexdigest()
-                dur = int(h[8:12], 16) % WAV_DUR_MOD + 1
-                base = int(h[12:14], 16) % SQUARE_BASE_MOD
-                payloads.append(encode_wav_square(dur, base))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "media_type": "audio",
-                    "codec": "wav",
-                    "payload": payloads,
-                }
-            )
+    def row(doc_id, text):
+        h = _md5hex(text)
+        dur = int(h[8:12], 16) % WAV_DUR_MOD + 1
+        base = int(h[12:14], 16) % SQUARE_BASE_MOD
+        yield doc_id, "audio", "wav", encode_wav_square(dur, base)
 
-    return _fan_out(docs.select("doc_id", "text")).mapInPandas(
-        run, schema="doc_id long, media_type string, codec string, payload binary"
-    )
+    return _map_rows(_fan_out(docs.select("doc_id", "text")), row, PAYLOAD_SCHEMA)
 
 
 ADPCM_DUR_MOD = 250  # shorter clips than PCM: the per-nibble state
@@ -1963,6 +1901,40 @@ ADPCM_DUR_MOD = 250  # shorter clips than PCM: the per-nibble state
 
 JPEG_BLOCKS_MOD = 4
 JPEG_DC_RANGE = 49  # per-block dc in [-24, 24] -> values 80..176
+JPEG_CHROMA_RANGE = 41  # per-doc chroma offsets in [-20, 20]
+
+
+def _jpeg_planes(h: str, sub: int = 0) -> list:
+    """The JPEG corpora's planes from md5 hex ``h``: a per-block luma
+    ramp, block (bx, by) constant at 128 + 2*(((base + by*bw + bx)
+    mod 49) - 24) with base = h[8:10]. ``sub=0`` returns the luma
+    plane alone over a bw x bh grid of 1..4 blocks (h[0:4], h[4:8]);
+    ``sub=1`` (4:4:4, same grid) and ``sub=2`` (4:2:0, an even grid
+    of 2 or 4 blocks) add constant Cb/Cr planes at 1/sub resolution,
+    Cb, Cr = 128 + 2*((h[10:12] | h[12:14]) mod 41 - 20)."""
+    if sub == 2:
+        bw = 2 * (int(h[0:4], 16) % 2 + 1)
+        bh = 2 * (int(h[4:8], 16) % 2 + 1)
+    else:
+        bw = int(h[0:4], 16) % JPEG_BLOCKS_MOD + 1
+        bh = int(h[4:8], 16) % JPEG_BLOCKS_MOD + 1
+    base = int(h[8:10], 16)
+    planes = [
+        [
+            [
+                128 + 2 * (
+                    ((base + (y // 8) * bw + (x // 8)) % JPEG_DC_RANGE) - 24
+                )
+                for x in range(8 * bw)
+            ]
+            for y in range(8 * bh)
+        ]
+    ]
+    if sub:
+        for lo in (10, 12):
+            c = 128 + 2 * (int(h[lo : lo + 2], 16) % JPEG_CHROMA_RANGE - 20)
+            planes.append([[c] * (8 * bw // sub) for _ in range(8 * bh // sub)])
+    return planes
 
 
 def attach_payload_jpeg_blocks(docs: DataFrame) -> DataFrame:
@@ -1976,33 +1948,11 @@ def attach_payload_jpeg_blocks(docs: DataFrame) -> DataFrame:
     while decode still runs Huffman + dezigzag + dequant + IDCT."""
     from falcon_metrics_etl_spark.functions.jpeg import encode_jpeg_gray
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for text in pdf["text"]:
-                h = hashlib.md5(text.encode("utf-8")).hexdigest()
-                bw = int(h[0:4], 16) % JPEG_BLOCKS_MOD + 1
-                bh = int(h[4:8], 16) % JPEG_BLOCKS_MOD + 1
-                base = int(h[8:10], 16)
-                block_idx = np.add.outer(
-                    np.arange(8 * bh) // 8 * bw, np.arange(8 * bw) // 8
-                )
-                img = 128 + 2 * (
-                    ((base + block_idx) % JPEG_DC_RANGE) - 24
-                )
-                payloads.append(encode_jpeg_gray(img))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "media_type": "image",
-                    "codec": "jpeg",
-                    "payload": payloads,
-                }
-            )
+    def row(doc_id, text):
+        (img,) = _jpeg_planes(_md5hex(text))
+        yield doc_id, "image", "jpeg", encode_jpeg_gray(img)
 
-    return _fan_out(docs.select("doc_id", "text")).mapInPandas(
-        run, schema="doc_id long, media_type string, codec string, payload binary"
-    )
+    return _map_rows(_fan_out(docs.select("doc_id", "text")), row, PAYLOAD_SCHEMA)
 
 
 def jpeg_pixel_stats(media: DataFrame) -> DataFrame:
@@ -2010,36 +1960,17 @@ def jpeg_pixel_stats(media: DataFrame) -> DataFrame:
     decode: Huffman entropy decode -> dequant -> IDCT -> raster)."""
     from falcon_metrics_etl_spark.functions.jpeg import decode_jpeg_gray
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, p in zip(pdf["doc_id"], pdf["payload"]):
-                d = decode_jpeg_gray(bytes(p))
-                a = np.asarray(d["pixels"], dtype=np.int64)
-                n = a.size
-                s = int(a.sum())
-                rows.append(
-                    (
-                        int(doc_id), d["width"], d["height"], n,
-                        int(a.min()), int(a.max()), s, s / n,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "n_pixels",
-                    "min_pixel", "max_pixel", "sum_pixel", "mean_pixel",
-                ],
-            )
+    def row(doc_id, p):
+        d = decode_jpeg_gray(bytes(p))
+        a = np.asarray(d["pixels"], dtype=np.int64)
+        n = a.size
+        s = int(a.sum())
+        yield (
+            doc_id, d["width"], d["height"], n,
+            int(a.min()), int(a.max()), s, s / n,
+        )
 
-    return media.select("doc_id", "payload").mapInPandas(
-        run,
-        schema="doc_id long, width int, height int, n_pixels long, "
-        "min_pixel int, max_pixel int, sum_pixel long, mean_pixel double",
-    )
-
-
-JPEG_CHROMA_RANGE = 41  # per-doc chroma offsets in [-20, 20]
+    return _map_rows(media.select("doc_id", "payload"), row, PIXEL_STATS_SCHEMA)
 
 
 def attach_payload_jpeg_color(docs: DataFrame) -> DataFrame:
@@ -2055,46 +1986,13 @@ def attach_payload_jpeg_color(docs: DataFrame) -> DataFrame:
         encode_jpeg_ycbcr,
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for text in pdf["text"]:
-                h = hashlib.md5(text.encode("utf-8")).hexdigest()
-                bw = int(h[0:4], 16) % JPEG_BLOCKS_MOD + 1
-                bh = int(h[4:8], 16) % JPEG_BLOCKS_MOD + 1
-                base = int(h[8:10], 16)
-                cb = 128 + 2 * (int(h[10:12], 16) % JPEG_CHROMA_RANGE - 20)
-                cr = 128 + 2 * (int(h[12:14], 16) % JPEG_CHROMA_RANGE - 20)
-                y_plane = [
-                    [
-                        128 + 2 * (
-                            ((base + (y // 8) * bw + (x // 8))
-                             % JPEG_DC_RANGE) - 24
-                        )
-                        for x in range(8 * bw)
-                    ]
-                    for y in range(8 * bh)
-                ]
-                flat_cb = [[cb] * (8 * bw) for _ in range(8 * bh)]
-                flat_cr = [[cr] * (8 * bw) for _ in range(8 * bh)]
-                payloads.append(
-                    encode_jpeg_ycbcr(
-                        y_plane, flat_cb, flat_cr,
-                        quant_y=STD_QUANT, quant_c=STD_QUANT,
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "media_type": "image",
-                    "codec": "jpeg",
-                    "payload": payloads,
-                }
-            )
+    def row(doc_id, text):
+        planes = _jpeg_planes(_md5hex(text), sub=1)
+        yield doc_id, "image", "jpeg", encode_jpeg_ycbcr(
+            *planes, quant_y=STD_QUANT, quant_c=STD_QUANT
+        )
 
-    return _fan_out(docs.select("doc_id", "text")).mapInPandas(
-        run, schema="doc_id long, media_type string, codec string, payload binary"
-    )
+    return _map_rows(_fan_out(docs.select("doc_id", "text")), row, PAYLOAD_SCHEMA)
 
 
 def attach_payload_jpeg_color_progressive(docs: DataFrame) -> DataFrame:
@@ -2108,47 +2006,13 @@ def attach_payload_jpeg_color_progressive(docs: DataFrame) -> DataFrame:
         encode_jpeg_ycbcr_progressive,
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for text in pdf["text"]:
-                h = hashlib.md5(text.encode("utf-8")).hexdigest()
-                bw = int(h[0:4], 16) % JPEG_BLOCKS_MOD + 1
-                bh = int(h[4:8], 16) % JPEG_BLOCKS_MOD + 1
-                base = int(h[8:10], 16)
-                cb = 128 + 2 * (int(h[10:12], 16) % JPEG_CHROMA_RANGE - 20)
-                cr = 128 + 2 * (int(h[12:14], 16) % JPEG_CHROMA_RANGE - 20)
-                y_plane = [
-                    [
-                        128 + 2 * (
-                            ((base + (y // 8) * bw + (x // 8))
-                             % JPEG_DC_RANGE) - 24
-                        )
-                        for x in range(8 * bw)
-                    ]
-                    for y in range(8 * bh)
-                ]
-                flat_cb = [[cb] * (8 * bw) for _ in range(8 * bh)]
-                flat_cr = [[cr] * (8 * bw) for _ in range(8 * bh)]
-                payloads.append(
-                    encode_jpeg_ycbcr_progressive(
-                        y_plane, flat_cb, flat_cr,
-                        quant_y=STD_QUANT, quant_c=STD_QUANT,
-                        restart_interval=3,
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "media_type": "image",
-                    "codec": "jpeg-progressive",
-                    "payload": payloads,
-                }
-            )
+    def row(doc_id, text):
+        planes = _jpeg_planes(_md5hex(text), sub=1)
+        yield doc_id, "image", "jpeg-progressive", encode_jpeg_ycbcr_progressive(
+            *planes, quant_y=STD_QUANT, quant_c=STD_QUANT, restart_interval=3
+        )
 
-    return _fan_out(docs.select("doc_id", "text")).mapInPandas(
-        run, schema="doc_id long, media_type string, codec string, payload binary"
-    )
+    return _map_rows(_fan_out(docs.select("doc_id", "text")), row, PAYLOAD_SCHEMA)
 
 
 def attach_payload_jpeg_420(docs: DataFrame) -> DataFrame:
@@ -2163,46 +2027,13 @@ def attach_payload_jpeg_420(docs: DataFrame) -> DataFrame:
         encode_jpeg_ycbcr_420,
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for text in pdf["text"]:
-                h = hashlib.md5(text.encode("utf-8")).hexdigest()
-                bw = 2 * (int(h[0:4], 16) % 2 + 1)   # 2 or 4 blocks
-                bh = 2 * (int(h[4:8], 16) % 2 + 1)
-                base = int(h[8:10], 16)
-                cb = 128 + 2 * (int(h[10:12], 16) % JPEG_CHROMA_RANGE - 20)
-                cr = 128 + 2 * (int(h[12:14], 16) % JPEG_CHROMA_RANGE - 20)
-                y_plane = [
-                    [
-                        128 + 2 * (
-                            ((base + (y // 8) * bw + (x // 8))
-                             % JPEG_DC_RANGE) - 24
-                        )
-                        for x in range(8 * bw)
-                    ]
-                    for y in range(8 * bh)
-                ]
-                half_cb = [[cb] * (4 * bw) for _ in range(4 * bh)]
-                half_cr = [[cr] * (4 * bw) for _ in range(4 * bh)]
-                payloads.append(
-                    encode_jpeg_ycbcr_420(
-                        y_plane, half_cb, half_cr,
-                        quant_y=STD_QUANT, quant_c=STD_QUANT,
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "media_type": "image",
-                    "codec": "jpeg",
-                    "payload": payloads,
-                }
-            )
+    def row(doc_id, text):
+        planes = _jpeg_planes(_md5hex(text), sub=2)
+        yield doc_id, "image", "jpeg", encode_jpeg_ycbcr_420(
+            *planes, quant_y=STD_QUANT, quant_c=STD_QUANT
+        )
 
-    return _fan_out(docs.select("doc_id", "text")).mapInPandas(
-        run, schema="doc_id long, media_type string, codec string, payload binary"
-    )
+    return _map_rows(_fan_out(docs.select("doc_id", "text")), row, PAYLOAD_SCHEMA)
 
 
 def attach_payload_jpeg_progressive(docs: DataFrame) -> DataFrame:
@@ -2218,39 +2049,13 @@ def attach_payload_jpeg_progressive(docs: DataFrame) -> DataFrame:
         encode_jpeg_gray_progressive,
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for text in pdf["text"]:
-                h = hashlib.md5(text.encode("utf-8")).hexdigest()
-                bw = int(h[0:4], 16) % JPEG_BLOCKS_MOD + 1
-                bh = int(h[4:8], 16) % JPEG_BLOCKS_MOD + 1
-                base = int(h[8:10], 16)
-                img = [
-                    [
-                        128 + 2 * (
-                            ((base + (y // 8) * bw + (x // 8))
-                             % JPEG_DC_RANGE) - 24
-                        )
-                        for x in range(8 * bw)
-                    ]
-                    for y in range(8 * bh)
-                ]
-                payloads.append(
-                    encode_jpeg_gray_progressive(img, restart_interval=5)
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "media_type": "image",
-                    "codec": "jpeg-progressive",
-                    "payload": payloads,
-                }
-            )
+    def row(doc_id, text):
+        (img,) = _jpeg_planes(_md5hex(text))
+        yield doc_id, "image", "jpeg-progressive", encode_jpeg_gray_progressive(
+            img, restart_interval=5
+        )
 
-    return _fan_out(docs.select("doc_id", "text")).mapInPandas(
-        run, schema="doc_id long, media_type string, codec string, payload binary"
-    )
+    return _map_rows(_fan_out(docs.select("doc_id", "text")), row, PAYLOAD_SCHEMA)
 
 
 def attach_payload_jpeg_420_progressive(docs: DataFrame) -> DataFrame:
@@ -2263,47 +2068,13 @@ def attach_payload_jpeg_420_progressive(docs: DataFrame) -> DataFrame:
         encode_jpeg_ycbcr_420_progressive,
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for text in pdf["text"]:
-                h = hashlib.md5(text.encode("utf-8")).hexdigest()
-                bw = 2 * (int(h[0:4], 16) % 2 + 1)
-                bh = 2 * (int(h[4:8], 16) % 2 + 1)
-                base = int(h[8:10], 16)
-                cb = 128 + 2 * (int(h[10:12], 16) % JPEG_CHROMA_RANGE - 20)
-                cr = 128 + 2 * (int(h[12:14], 16) % JPEG_CHROMA_RANGE - 20)
-                y_plane = [
-                    [
-                        128 + 2 * (
-                            ((base + (y // 8) * bw + (x // 8))
-                             % JPEG_DC_RANGE) - 24
-                        )
-                        for x in range(8 * bw)
-                    ]
-                    for y in range(8 * bh)
-                ]
-                half_cb = [[cb] * (4 * bw) for _ in range(4 * bh)]
-                half_cr = [[cr] * (4 * bw) for _ in range(4 * bh)]
-                payloads.append(
-                    encode_jpeg_ycbcr_420_progressive(
-                        y_plane, half_cb, half_cr,
-                        quant_y=STD_QUANT, quant_c=STD_QUANT,
-                        restart_interval=3,
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "media_type": "image",
-                    "codec": "jpeg-progressive",
-                    "payload": payloads,
-                }
-            )
+    def row(doc_id, text):
+        planes = _jpeg_planes(_md5hex(text), sub=2)
+        yield doc_id, "image", "jpeg-progressive", encode_jpeg_ycbcr_420_progressive(
+            *planes, quant_y=STD_QUANT, quant_c=STD_QUANT, restart_interval=3
+        )
 
-    return _fan_out(docs.select("doc_id", "text")).mapInPandas(
-        run, schema="doc_id long, media_type string, codec string, payload binary"
-    )
+    return _map_rows(_fan_out(docs.select("doc_id", "text")), row, PAYLOAD_SCHEMA)
 
 
 def jpeg_rgb_stats(media: DataFrame) -> DataFrame:
@@ -2312,34 +2083,22 @@ def jpeg_rgb_stats(media: DataFrame) -> DataFrame:
     YCbCr->RGB) then per-channel aggregates."""
     from falcon_metrics_etl_spark.functions.jpeg import decode_jpeg
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, p in zip(pdf["doc_id"], pdf["payload"]):
-                d = decode_jpeg(bytes(p))
-                if d["ncomp"] != 3:
-                    raise ValueError("expected a color JPEG")
-                a = np.asarray(d["rgb"], dtype=np.int64)  # (h, w, 3)
-                sums = a.sum(axis=(0, 1))
-                rows.append(
-                    (
-                        int(doc_id), d["width"], d["height"],
-                        d["width"] * d["height"],
-                        int(a[..., 0].min()), int(a[..., 0].max()),
-                        int(sums[0]), int(sums[1]), int(sums[2]),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "n_pixels",
-                    "min_r", "max_r", "sum_r", "sum_g", "sum_b",
-                ],
-            )
+    def row(doc_id, p):
+        d = decode_jpeg(bytes(p))
+        if d["ncomp"] != 3:
+            raise ValueError("expected a color JPEG")
+        a = np.asarray(d["rgb"], dtype=np.int64)  # (h, w, 3)
+        sums = a.sum(axis=(0, 1))
+        yield (
+            doc_id, d["width"], d["height"], d["width"] * d["height"],
+            int(a[..., 0].min()), int(a[..., 0].max()),
+            int(sums[0]), int(sums[1]), int(sums[2]),
+        )
 
-    return media.select("doc_id", "payload").mapInPandas(
-        run,
-        schema="doc_id long, width int, height int, n_pixels long, "
+    return _map_rows(
+        media.select("doc_id", "payload"),
+        row,
+        "doc_id long, width int, height int, n_pixels long, "
         "min_r int, max_r int, sum_r long, sum_g long, sum_b long",
     )
 
@@ -2353,28 +2112,15 @@ def attach_payload_wav_ms_adpcm(docs: DataFrame) -> DataFrame:
     on this signal and the oracle's closed form holds — while decode
     still walks blocks, predictor state and the fact trim."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for text in pdf["text"]:
-                h = hashlib.md5(text.encode("utf-8")).hexdigest()
-                dur = int(h[8:12], 16) % ADPCM_DUR_MOD + 1
-                base = int(h[12:14], 16) % SQUARE_BASE_MOD
-                n = WAV_SAMPLE_RATE * dur // 1000
-                samples = [base + 16 * (i & 1) for i in range(n)]
-                payloads.append(encode_wav_ms_adpcm(samples))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "media_type": "audio",
-                    "codec": "wav",
-                    "payload": payloads,
-                }
-            )
+    def row(doc_id, text):
+        h = _md5hex(text)
+        dur = int(h[8:12], 16) % ADPCM_DUR_MOD + 1
+        base = int(h[12:14], 16) % SQUARE_BASE_MOD
+        n = WAV_SAMPLE_RATE * dur // 1000
+        samples = [base + 16 * (i & 1) for i in range(n)]
+        yield doc_id, "audio", "wav", encode_wav_ms_adpcm(samples)
 
-    return _fan_out(docs.select("doc_id", "text")).mapInPandas(
-        run, schema="doc_id long, media_type string, codec string, payload binary"
-    )
+    return _map_rows(_fan_out(docs.select("doc_id", "text")), row, PAYLOAD_SCHEMA)
 
 
 G711_DUR_MOD = 500
@@ -2386,58 +2132,35 @@ def attach_payload_wav_g711(docs: DataFrame) -> DataFrame:
     a full-range companded sweep, so header math cannot fake the
     decoded statistics and every code point is exercised."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                h = hashlib.md5(text.encode("utf-8")).hexdigest()
-                dur = int(h[8:12], 16) % G711_DUR_MOD + 1
-                base = int(h[12:14], 16)
-                n = WAV_SAMPLE_RATE * dur // 1000
-                data = bytes((base + 7 * i) & 0xFF for i in range(n))
-                for law in ("ulaw", "alaw"):
-                    rows.append(
-                        (int(doc_id), law, encode_wav_g711(data, law))
-                    )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "law", "payload"]
-            )
+    def rows(doc_id, text):
+        h = _md5hex(text)
+        dur = int(h[8:12], 16) % G711_DUR_MOD + 1
+        base = int(h[12:14], 16)
+        n = WAV_SAMPLE_RATE * dur // 1000
+        data = bytes((base + 7 * i) & 0xFF for i in range(n))
+        for law in ("ulaw", "alaw"):
+            yield doc_id, law, encode_wav_g711(data, law)
 
-    return _fan_out(docs.select("doc_id", "text")).mapInPandas(
-        run, schema="doc_id long, law string, payload binary"
+    return _map_rows(
+        _fan_out(docs.select("doc_id", "text")),
+        rows,
+        "doc_id long, law string, payload binary",
     )
 
 
 def wav_g711_stats(media: DataFrame) -> DataFrame:
     """Arrow-batched G.711 sample statistics, one row per (doc, law)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, law, p in zip(
-                pdf["doc_id"], pdf["law"], pdf["payload"]
-            ):
-                d = decode_wav_samples_np(bytes(p))
-                s = d["samples"]
-                if not len(s):
-                    raise ValueError("WAV: empty data chunk")
-                rows.append(
-                    (
-                        int(doc_id), law, len(s),
-                        int(s.min()), int(s.max()), int(s.sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "law", "n_samples",
-                    "min_sample", "max_sample", "sum_samples",
-                ],
-            )
+    def row(doc_id, law, p):
+        s = decode_wav_samples_np(bytes(p))["samples"]
+        if not len(s):
+            raise ValueError("WAV: empty data chunk")
+        yield doc_id, law, len(s), int(s.min()), int(s.max()), int(s.sum())
 
-    return media.mapInPandas(
-        run,
-        schema="doc_id long, law string, n_samples long, "
+    return _map_rows(
+        media.select("doc_id", "law", "payload"),
+        row,
+        "doc_id long, law string, n_samples long, "
         "min_sample int, max_sample int, sum_samples long",
     )
 
@@ -2452,28 +2175,15 @@ def attach_payload_wav_adpcm(docs: DataFrame) -> DataFrame:
     form stays valid — while the decode still has to walk blocks,
     track predictor state and trim via the fact chunk."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for text in pdf["text"]:
-                h = hashlib.md5(text.encode("utf-8")).hexdigest()
-                dur = int(h[8:12], 16) % ADPCM_DUR_MOD + 1
-                base = int(h[12:14], 16) % SQUARE_BASE_MOD
-                n = WAV_SAMPLE_RATE * dur // 1000
-                samples = [base + (i & 1) for i in range(n)]
-                payloads.append(encode_wav_ima_adpcm(samples))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "media_type": "audio",
-                    "codec": "wav",
-                    "payload": payloads,
-                }
-            )
+    def row(doc_id, text):
+        h = _md5hex(text)
+        dur = int(h[8:12], 16) % ADPCM_DUR_MOD + 1
+        base = int(h[12:14], 16) % SQUARE_BASE_MOD
+        n = WAV_SAMPLE_RATE * dur // 1000
+        samples = [base + (i & 1) for i in range(n)]
+        yield doc_id, "audio", "wav", encode_wav_ima_adpcm(samples)
 
-    return _fan_out(docs.select("doc_id", "text")).mapInPandas(
-        run, schema="doc_id long, media_type string, codec string, payload binary"
-    )
+    return _map_rows(_fan_out(docs.select("doc_id", "text")), row, PAYLOAD_SCHEMA)
 
 
 WAV_STATS_SCHEMA = (
@@ -2487,51 +2197,30 @@ def wav_sample_stats(media: DataFrame) -> DataFrame:
     (decode_wav_samples), then aggregate the samples; duration is
     re-derived from the decoded sample count, not the header."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, p in zip(pdf["doc_id"], pdf["payload"]):
-                d = decode_wav_samples_np(bytes(p))
-                s = d["samples"]
-                if not len(s):
-                    # structurally valid WAV, zero-length data chunk:
-                    # raise the documented malformed-payload family so
-                    # the row is quarantine-able, not a bare
-                    # ZeroDivision/ValueError from min([]) below
-                    raise ValueError("WAV: empty data chunk")
-                if s.dtype.kind != "i":
-                    # IEEE-float WAV: keep the scalar left-to-right
-                    # float sum (numpy's pairwise reduction could
-                    # round differently)
-                    s = decode_wav_samples(bytes(p))["samples"]
-                    total = sum(s)
-                    mn, mx = min(s), max(s)
-                else:
-                    total = int(s.sum())
-                    mn, mx = int(s.min()), int(s.max())
-                rows.append(
-                    (
-                        int(doc_id),
-                        d["sample_rate"],
-                        len(s),
-                        len(s) * 1000 // d["sample_rate"],
-                        mn,
-                        mx,
-                        total,
-                        total / len(s),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "sample_rate", "n_samples", "duration_ms",
-                    "min_sample", "max_sample", "sum_samples", "mean_sample",
-                ],
-            )
+    def row(doc_id, p):
+        d = decode_wav_samples_np(bytes(p))
+        s = d["samples"]
+        if not len(s):
+            # structurally valid WAV, zero-length data chunk:
+            # raise the documented malformed-payload family so
+            # the row is quarantine-able, not a bare
+            # ZeroDivision/ValueError from min([]) below
+            raise ValueError("WAV: empty data chunk")
+        if s.dtype.kind != "i":
+            # IEEE-float WAV: keep the scalar left-to-right
+            # float sum (numpy's pairwise reduction could
+            # round differently)
+            s = decode_wav_samples(bytes(p))["samples"]
+            total = sum(s)
+            mn, mx = min(s), max(s)
+        else:
+            total = int(s.sum())
+            mn, mx = int(s.min()), int(s.max())
+        rate = d["sample_rate"]
+        n = len(s)
+        yield doc_id, rate, n, n * 1000 // rate, mn, mx, total, total / n
 
-    return media.select("doc_id", "payload").mapInPandas(
-        run, schema=WAV_STATS_SCHEMA
-    )
+    return _map_rows(media.select("doc_id", "payload"), row, WAV_STATS_SCHEMA)
 
 
 FEATURE_DIM = 8
@@ -2547,20 +2236,12 @@ def extract_feature_stub(media: DataFrame) -> DataFrame:
     Output is LONG form (doc_id, dim_idx, feature): embedding-as-rows
     shuffles and oracles cleanly at any dimensionality."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, dims, feats = [], [], []
-            for doc_id, p in zip(pdf["doc_id"], pdf["payload"]):
-                h = hashlib.md5(bytes(p)).hexdigest()
-                for k in range(FEATURE_DIM):
-                    ids.append(doc_id)
-                    dims.append(k)
-                    feats.append(int(h[4 * k : 4 * k + 4], 16) / 65536.0)
-            yield pd.DataFrame(
-                {"doc_id": ids, "dim_idx": dims, "feature": feats}
-            )
+    def rows(doc_id, p):
+        h = hashlib.md5(bytes(p)).hexdigest()
+        for k in range(FEATURE_DIM):
+            yield doc_id, k, int(h[4 * k : 4 * k + 4], 16) / 65536.0
 
-    return media.mapInPandas(run, schema=FEATURE_SCHEMA)
+    return _map_rows(media.select("doc_id", "payload"), rows, FEATURE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -2575,35 +2256,23 @@ def attach_payload_png_color(docs: DataFrame) -> DataFrame:
     statistic has an oracle-replayable closed form. Map-only
     Arrow-batched build."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                h = hashlib.md5(text.encode("utf-8")).hexdigest()
-                w = int(h[0:4], 16) % PNG_DIM_MOD + 1
-                ht = int(h[4:8], 16) % PNG_DIM_MOD + 1
-                base = int(h[8:10], 16) % GRAD_BASE_MOD
-                variant = int(doc_id) % 4
-                if variant == 0:
-                    payloads.append(encode_png_color(w, ht, base))
-                elif variant == 1:
-                    payloads.append(encode_png_palette(w, ht))
-                elif variant == 2:
-                    payloads.append(encode_png_rgba(w, ht, base))
-                else:
-                    payloads.append(encode_png_gray_alpha(w, ht, base))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "media_type": "image",
-                    "codec": "png",
-                    "payload": payloads,
-                }
-            )
+    def row(doc_id, text):
+        h = _md5hex(text)
+        w = int(h[0:4], 16) % PNG_DIM_MOD + 1
+        ht = int(h[4:8], 16) % PNG_DIM_MOD + 1
+        base = int(h[8:10], 16) % GRAD_BASE_MOD
+        variant = doc_id % 4
+        if variant == 0:
+            payload = encode_png_color(w, ht, base)
+        elif variant == 1:
+            payload = encode_png_palette(w, ht)
+        elif variant == 2:
+            payload = encode_png_rgba(w, ht, base)
+        else:
+            payload = encode_png_gray_alpha(w, ht, base)
+        yield doc_id, "image", "png", payload
 
-    return _fan_out(docs.select("doc_id", "text")).mapInPandas(
-        run, schema="doc_id long, media_type string, codec string, payload binary"
-    )
+    return _map_rows(_fan_out(docs.select("doc_id", "text")), row, PAYLOAD_SCHEMA)
 
 
 COLOR_STATS_SCHEMA = (
@@ -2619,34 +2288,16 @@ def png_color_pixel_stats(media: DataFrame) -> DataFrame:
     stats aggregate the channel-interleaved raster. color_type is read
     from the actual IHDR, not assumed. Map-only: no shuffle."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, p in zip(pdf["doc_id"], pdf["payload"]):
-                payload = bytes(p)
-                ct = parse_png_header(payload)["color_type"]
-                w, h, ch, px = decode_png_pixels(payload)
-                n = len(px)
-                a = np.asarray(px)
-                s = int(a.sum(dtype=np.int64))
-                rows.append(
-                    (
-                        int(doc_id), ct, ch, w, h, n,
-                        int(a.min()), int(a.max()), s, s / n,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "color_type", "channels", "width", "height",
-                    "n_values", "min_value", "max_value", "sum_values",
-                    "mean_value",
-                ],
-            )
+    def row(doc_id, p):
+        payload = bytes(p)
+        ct = parse_png_header(payload)["color_type"]
+        w, h, ch, px = decode_png_pixels(payload)
+        n = len(px)
+        a = np.asarray(px)
+        s = int(a.sum(dtype=np.int64))
+        yield doc_id, ct, ch, w, h, n, int(a.min()), int(a.max()), s, s / n
 
-    return media.select("doc_id", "payload").mapInPandas(
-        run, schema=COLOR_STATS_SCHEMA
-    )
+    return _map_rows(media.select("doc_id", "payload"), row, COLOR_STATS_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -2801,29 +2452,16 @@ def attach_payload_y4m_chroma(docs: DataFrame) -> DataFrame:
     and dims as the mono corpus, so the mono closed-form oracle holds
     while the decode must stride each space's chroma layout."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for text in pdf["text"]:
-                h = hashlib.md5(text.encode("utf-8")).hexdigest()
-                w = int(h[0:4], 16) % PNG_DIM_MOD + 1
-                ht = int(h[4:8], 16) % PNG_DIM_MOD + 1
-                base = int(h[8:10], 16) % GRAD_BASE_MOD
-                n = int(h[12:14], 16) % Y4M_FRAMES_MOD + 1
-                cs = Y4M_CSPACES[int(h[14:16], 16) % len(Y4M_CSPACES)]
-                payloads.append(encode_y4m_chroma(w, ht, n, base, cs))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "media_type": "video",
-                    "codec": "y4m",
-                    "payload": payloads,
-                }
-            )
+    def row(doc_id, text):
+        h = _md5hex(text)
+        w = int(h[0:4], 16) % PNG_DIM_MOD + 1
+        ht = int(h[4:8], 16) % PNG_DIM_MOD + 1
+        base = int(h[8:10], 16) % GRAD_BASE_MOD
+        n = int(h[12:14], 16) % Y4M_FRAMES_MOD + 1
+        cs = Y4M_CSPACES[int(h[14:16], 16) % len(Y4M_CSPACES)]
+        yield doc_id, "video", "y4m", encode_y4m_chroma(w, ht, n, base, cs)
 
-    return _fan_out(docs.select("doc_id", "text")).mapInPandas(
-        run, schema="doc_id long, media_type string, codec string, payload binary"
-    )
+    return _map_rows(_fan_out(docs.select("doc_id", "text")), row, PAYLOAD_SCHEMA)
 
 
 def attach_payload_y4m(docs: DataFrame) -> DataFrame:
@@ -2831,28 +2469,15 @@ def attach_payload_y4m(docs: DataFrame) -> DataFrame:
     like the PNG corpora, n_frames = md5[12:14] % 8 + 1. Map-only
     Arrow-batched build."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for text in pdf["text"]:
-                h = hashlib.md5(text.encode("utf-8")).hexdigest()
-                w = int(h[0:4], 16) % PNG_DIM_MOD + 1
-                ht = int(h[4:8], 16) % PNG_DIM_MOD + 1
-                base = int(h[8:10], 16) % GRAD_BASE_MOD
-                n = int(h[12:14], 16) % Y4M_FRAMES_MOD + 1
-                payloads.append(encode_y4m_mono(w, ht, n, base))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "media_type": "video",
-                    "codec": "y4m",
-                    "payload": payloads,
-                }
-            )
+    def row(doc_id, text):
+        h = _md5hex(text)
+        w = int(h[0:4], 16) % PNG_DIM_MOD + 1
+        ht = int(h[4:8], 16) % PNG_DIM_MOD + 1
+        base = int(h[8:10], 16) % GRAD_BASE_MOD
+        n = int(h[12:14], 16) % Y4M_FRAMES_MOD + 1
+        yield doc_id, "video", "y4m", encode_y4m_mono(w, ht, n, base)
 
-    return _fan_out(docs.select("doc_id", "text")).mapInPandas(
-        run, schema="doc_id long, media_type string, codec string, payload binary"
-    )
+    return _map_rows(_fan_out(docs.select("doc_id", "text")), row, PAYLOAD_SCHEMA)
 
 
 Y4M_STATS_SCHEMA = (
@@ -2867,39 +2492,23 @@ def y4m_frame_stats(media: DataFrame) -> DataFrame:
     and aggregate across the whole clip. Map-only: no shuffle, linear
     in bytes."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, p in zip(pdf["doc_id"], pdf["payload"]):
-                d = decode_y4m_frames(bytes(p))
-                if not d["frames"]:
-                    # header-only stream: structurally parseable but
-                    # statless — same ValueError family as truncated
-                    # media, never a ZeroDivisionError
-                    raise ValueError("Y4M: zero-frame stream")
-                n = d["n_frames"] * d["width"] * d["height"]
-                luma = np.frombuffer(b"".join(d["frames"]), np.uint8)
-                mn = int(luma.min())
-                mx = int(luma.max())
-                sm = int(luma.sum(dtype=np.int64))
-                rows.append(
-                    (
-                        int(doc_id), d["width"], d["height"], d["n_frames"],
-                        d["fps_num"] / d["fps_den"], n, mn, mx, sm, sm / n,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "n_frames", "fps",
-                    "n_luma", "min_luma", "max_luma", "sum_luma",
-                    "mean_luma",
-                ],
-            )
+    def row(doc_id, p):
+        d = decode_y4m_frames(bytes(p))
+        if not d["frames"]:
+            # header-only stream: structurally parseable but
+            # statless — same ValueError family as truncated
+            # media, never a ZeroDivisionError
+            raise ValueError("Y4M: zero-frame stream")
+        n = d["n_frames"] * d["width"] * d["height"]
+        luma = np.frombuffer(b"".join(d["frames"]), np.uint8)
+        sm = int(luma.sum(dtype=np.int64))
+        yield (
+            doc_id, d["width"], d["height"], d["n_frames"],
+            d["fps_num"] / d["fps_den"], n,
+            int(luma.min()), int(luma.max()), sm, sm / n,
+        )
 
-    return media.select("doc_id", "payload").mapInPandas(
-        run, schema=Y4M_STATS_SCHEMA
-    )
+    return _map_rows(media.select("doc_id", "payload"), row, Y4M_STATS_SCHEMA)
 
 
 Y4M_SAMPLE_EVERY = 2
@@ -2915,27 +2524,14 @@ def y4m_sampled_frame_stats(media: DataFrame, every: int = Y4M_SAMPLE_EVERY) -> 
     row per sampled frame with its luma stats — the binary->frames
     fan-out running on an actual container, not the synthetic stub."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, p in zip(pdf["doc_id"], pdf["payload"]):
-                d = decode_y4m_frames(bytes(p))
-                n = d["width"] * d["height"]
-                for k in range(0, d["n_frames"], every):
-                    sm = int(
-                        np.frombuffer(d["frames"][k], np.uint8).sum(
-                            dtype=np.int64
-                        )
-                    )
-                    rows.append((int(doc_id), k, sm, sm / n))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "frame_idx", "sum_luma", "mean_luma"],
-            )
+    def rows(doc_id, p):
+        d = decode_y4m_frames(bytes(p))
+        n = d["width"] * d["height"]
+        for k in range(0, d["n_frames"], every):
+            sm = int(np.frombuffer(d["frames"][k], np.uint8).sum(dtype=np.int64))
+            yield doc_id, k, sm, sm / n
 
-    return media.select("doc_id", "payload").mapInPandas(
-        run, schema=FRAME_SAMPLE_SCHEMA
-    )
+    return _map_rows(media.select("doc_id", "payload"), rows, FRAME_SAMPLE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -2983,28 +2579,15 @@ def attach_payload_wav_padded(docs: DataFrame) -> DataFrame:
     """documents -> silence-padded square-wave WAVs: signal duration,
     base level and lead/tail padding all derive from md5(text)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for text in pdf["text"]:
-                h = hashlib.md5(text.encode("utf-8")).hexdigest()
-                dur = int(h[8:12], 16) % 500 + 1
-                base = int(h[12:14], 16) % 100
-                lead = int(h[14:16], 16) % 50
-                tail = int(h[16:18], 16) % 50
-                payloads.append(encode_wav_padded(dur, base, lead, tail))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "media_type": "audio",
-                    "codec": "wav",
-                    "payload": payloads,
-                }
-            )
+    def row(doc_id, text):
+        h = _md5hex(text)
+        dur = int(h[8:12], 16) % 500 + 1
+        base = int(h[12:14], 16) % 100
+        lead = int(h[14:16], 16) % 50
+        tail = int(h[16:18], 16) % 50
+        yield doc_id, "audio", "wav", encode_wav_padded(dur, base, lead, tail)
 
-    return _fan_out(docs.select("doc_id", "text")).mapInPandas(
-        run, schema="doc_id long, media_type string, codec string, payload binary"
-    )
+    return _map_rows(_fan_out(docs.select("doc_id", "text")), row, PAYLOAD_SCHEMA)
 
 
 TRIM_SCHEMA = (
@@ -3018,29 +2601,12 @@ def wav_silence_trim_stats(media: DataFrame) -> DataFrame:
     exact-silence lead/tail runs, report millisecond spans (8 kHz:
     8 samples per ms). Map-only."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, p in zip(pdf["doc_id"], pdf["payload"]):
-                d = decode_wav_samples_np(bytes(p))
-                lead, sig, tail = trim_silence(d["samples"])
-                rows.append(
-                    (
-                        int(doc_id), len(d["samples"]) // 8,
-                        lead // 8, sig // 8, tail // 8,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "total_ms", "lead_silence_ms", "signal_ms",
-                    "tail_silence_ms",
-                ],
-            )
+    def row(doc_id, p):
+        s = decode_wav_samples_np(bytes(p))["samples"]
+        lead, sig, tail = trim_silence(s)
+        yield doc_id, len(s) // 8, lead // 8, sig // 8, tail // 8
 
-    return media.select("doc_id", "payload").mapInPandas(
-        run, schema=TRIM_SCHEMA
-    )
+    return _map_rows(media.select("doc_id", "payload"), row, TRIM_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -3128,41 +2694,24 @@ def attach_payload_dhash_corpus(docs: DataFrame) -> DataFrame:
     corpus must catch — byte-level dedup can never pair them."""
     from falcon_metrics_etl_spark.functions.jpeg import encode_jpeg_gray
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows_out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                g, v = divmod(doc_id, DHASH_GROUP)
-                # one md5 draw PER BLOCK, expanded to pixels — not one
-                # per pixel (r11: the per-pixel form recomputed each
-                # block's md5 64x and dominated the whole media bench
-                # at ~74% of pair-query cost; identical raster).
-                # r12: the 8x8 expansion is a numpy repeat.
-                bv = np.empty(
-                    (DHASH_GRID_H, DHASH_GRID_W), np.uint8
-                )
-                for by in range(DHASH_GRID_H):
-                    for bx in range(DHASH_GRID_W):
-                        bv[by, bx] = dhash_block_value(g, v, bx, by)
-                img = np.repeat(np.repeat(bv, 8, axis=0), 8, axis=1)
-                if doc_id % 2 == 0:
-                    rows_out.append(
-                        (doc_id, "image", "png", encode_png_gray_raster(img))
-                    )
-                else:
-                    rows_out.append(
-                        (doc_id, "image", "jpeg", encode_jpeg_gray(img))
-                    )
-            yield pd.DataFrame(
-                rows_out,
-                columns=["doc_id", "media_type", "codec", "payload"],
-            )
+    def row(doc_id):
+        g, v = divmod(doc_id, DHASH_GROUP)
+        # one md5 draw PER BLOCK, expanded to pixels — not one
+        # per pixel (r11: the per-pixel form recomputed each
+        # block's md5 64x and dominated the whole media bench
+        # at ~74% of pair-query cost; identical raster).
+        # r12: the 8x8 expansion is a numpy repeat.
+        bv = np.empty((DHASH_GRID_H, DHASH_GRID_W), np.uint8)
+        for by in range(DHASH_GRID_H):
+            for bx in range(DHASH_GRID_W):
+                bv[by, bx] = dhash_block_value(g, v, bx, by)
+        img = np.repeat(np.repeat(bv, 8, axis=0), 8, axis=1)
+        if doc_id % 2 == 0:
+            yield doc_id, "image", "png", encode_png_gray_raster(img)
+        else:
+            yield doc_id, "image", "jpeg", encode_jpeg_gray(img)
 
-    return _fan_out(docs.select("doc_id")).mapInPandas(
-        run,
-        schema="doc_id long, media_type string, codec string, payload binary",
-    )
+    return _map_rows(_fan_out(docs.select("doc_id")), row, PAYLOAD_SCHEMA)
 
 
 def dhash_cell_sums(px, w: int, h: int) -> list:
@@ -3244,11 +2793,7 @@ def media_dhash(media: DataFrame, with_detail: bool = False) -> DataFrame:
     Map-only: no shuffle, linear in bytes."""
     from falcon_metrics_etl_spark.functions.jpeg import decode_jpeg_gray
 
-    cols = ["doc_id", "codec", "width", "height", "dhash"] + (
-        ["detail"] if with_detail else []
-    )
-
-    def one(doc_id, codec, payload):
+    def row(doc_id, codec, payload):
         if codec == "png":
             w, h, ch, px = decode_png_pixels(bytes(payload))
             if ch != 1:
@@ -3261,26 +2806,13 @@ def media_dhash(media: DataFrame, with_detail: bool = False) -> DataFrame:
             cells = dhash_cell_sums(px, w, h)
         except ValueError as e:
             raise ValueError(f"media_dhash: {e}") from e
-        u = dhash64_of_cells(cells)
-        row = (int(doc_id), codec, w, h, u)
-        if with_detail:
-            row = row + (detail_of_cells(cells),)
-        return row
+        out = (doc_id, codec, w, h, dhash64_of_cells(cells))
+        yield out + (detail_of_cells(cells),) if with_detail else out
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                [
-                    one(i, c, p)
-                    for i, c, p in zip(
-                        pdf["doc_id"], pdf["codec"], pdf["payload"]
-                    )
-                ],
-                columns=cols,
-            )
-
-    return media.select("doc_id", "codec", "payload").mapInPandas(
-        run, schema=DHASH_DETAIL_SCHEMA if with_detail else DHASH_SCHEMA
+    return _map_rows(
+        media.select("doc_id", "codec", "payload"),
+        row,
+        DHASH_DETAIL_SCHEMA if with_detail else DHASH_SCHEMA,
     )
 
 
@@ -3343,29 +2875,11 @@ def attach_payload_video_clips(docs: DataFrame) -> DataFrame:
                 bv[by, bx] = video_block_value(fkey, bx, by)
         return np.repeat(np.repeat(bv, 8, axis=0), 8, axis=1).tobytes()
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows_out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                frames = [plane(k) for k in video_frame_keys(doc_id)]
-                rows_out.append(
-                    (
-                        doc_id,
-                        "video",
-                        "y4m",
-                        encode_y4m_mono_raster(w, h, frames),
-                    )
-                )
-            yield pd.DataFrame(
-                rows_out,
-                columns=["doc_id", "media_type", "codec", "payload"],
-            )
+    def row(doc_id):
+        frames = [plane(k) for k in video_frame_keys(doc_id)]
+        yield doc_id, "video", "y4m", encode_y4m_mono_raster(w, h, frames)
 
-    return _fan_out(docs.select("doc_id")).mapInPandas(
-        run,
-        schema="doc_id long, media_type string, codec string, payload binary",
-    )
+    return _map_rows(_fan_out(docs.select("doc_id")), row, PAYLOAD_SCHEMA)
 
 
 VIDEO_DHASH_SCHEMA = (
@@ -3379,26 +2893,13 @@ def video_frame_dhash(media: DataFrame) -> DataFrame:
     output row per frame. Map-only; at 100 TB this is the
     frame-fingerprint extraction stage of a video dedup index."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, p in zip(pdf["doc_id"], pdf["payload"]):
-                d = decode_y4m_frames(bytes(p))
-                w, h = d["width"], d["height"]
-                for i, plane in enumerate(d["frames"]):
-                    rows.append(
-                        (int(doc_id), i, w, h, dhash64_of_raster(plane, w, h))
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "frame_idx", "width", "height", "frame_dhash",
-                ],
-            )
+    def rows(doc_id, p):
+        d = decode_y4m_frames(bytes(p))
+        w, h = d["width"], d["height"]
+        for i, plane in enumerate(d["frames"]):
+            yield doc_id, i, w, h, dhash64_of_raster(plane, w, h)
 
-    return media.select("doc_id", "payload").mapInPandas(
-        run, schema=VIDEO_DHASH_SCHEMA
-    )
+    return _map_rows(media.select("doc_id", "payload"), rows, VIDEO_DHASH_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -3426,32 +2927,19 @@ def attach_payload_keyframe_thumbs(docs: DataFrame) -> DataFrame:
     faithfully. Real PNG encode (all five scanline filters, real
     deflate), decoded by the real unfilter path."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows_out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                if doc_id % CM_THUMB_MOD != 0:
-                    continue
-                fkey = video_frame_keys(doc_id)[thumb_slot(doc_id)]
-                img = []
-                for by in range(DHASH_GRID_H):
-                    row: list = []
-                    for bx in range(DHASH_GRID_W):
-                        row.extend([video_block_value(fkey, bx, by)] * 8)
-                    img.extend([row] * 8)
-                rows_out.append(
-                    (doc_id, "image", "png", encode_png_gray_raster(img))
-                )
-            yield pd.DataFrame(
-                rows_out,
-                columns=["doc_id", "media_type", "codec", "payload"],
-            )
+    def rows(doc_id):
+        if doc_id % CM_THUMB_MOD != 0:
+            return
+        fkey = video_frame_keys(doc_id)[thumb_slot(doc_id)]
+        img = []
+        for by in range(DHASH_GRID_H):
+            line: list = []
+            for bx in range(DHASH_GRID_W):
+                line.extend([video_block_value(fkey, bx, by)] * 8)
+            img.extend([line] * 8)
+        yield doc_id, "image", "png", encode_png_gray_raster(img)
 
-    return _fan_out(docs.select("doc_id")).mapInPandas(
-        run,
-        schema="doc_id long, media_type string, codec string, payload binary",
-    )
+    return _map_rows(_fan_out(docs.select("doc_id")), rows, PAYLOAD_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -3515,24 +3003,10 @@ def attach_payload_audio_clips(docs: DataFrame) -> DataFrame:
     redraws a sparse segment subset — the clipped/re-levelled edit
     class. PCM is lossless, so decode is bit-exact by construction."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows_out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                rows_out.append(
-                    (doc_id, "audio", "wav",
-                     encode_wav_pcm16(recording_samples(doc_id)))
-                )
-            yield pd.DataFrame(
-                rows_out,
-                columns=["doc_id", "media_type", "codec", "payload"],
-            )
+    def row(doc_id):
+        yield doc_id, "audio", "wav", encode_wav_pcm16(recording_samples(doc_id))
 
-    return _fan_out(docs.select("doc_id")).mapInPandas(
-        run,
-        schema="doc_id long, media_type string, codec string, payload binary",
-    )
+    return _map_rows(_fan_out(docs.select("doc_id")), row, PAYLOAD_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -3583,26 +3057,12 @@ def attach_payload_soundtrack_wavs(docs: DataFrame) -> DataFrame:
     (the streams are shared by construction), mirroring the keyframe
     thumbnail oracle (_DUCK_THUMBS)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows_out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                if doc_id % CM_TRACK_MOD != 0:
-                    continue
-                rows_out.append(
-                    (doc_id, "audio", "wav",
-                     encode_wav_pcm16_tagged(recording_samples(doc_id)))
-                )
-            yield pd.DataFrame(
-                rows_out,
-                columns=["doc_id", "media_type", "codec", "payload"],
-            )
+    def rows(doc_id):
+        if doc_id % CM_TRACK_MOD == 0:
+            samples = recording_samples(doc_id)
+            yield doc_id, "audio", "wav", encode_wav_pcm16_tagged(samples)
 
-    return _fan_out(docs.select("doc_id")).mapInPandas(
-        run,
-        schema="doc_id long, media_type string, codec string, payload binary",
-    )
+    return _map_rows(_fan_out(docs.select("doc_id")), rows, PAYLOAD_SCHEMA)
 
 
 AUDIO_FP_SCHEMA = (
@@ -3619,39 +3079,28 @@ def audio_energy_dhash(media: DataFrame) -> DataFrame:
     here is exactly that shape with the FFT as the swap-in.) First
     65 windows -> 64 bits, signed-64 like the image hash. Map-only."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, p in zip(pdf["doc_id"], pdf["payload"]):
-                d = decode_wav_samples_np(bytes(p))
-                xs = d["samples"].astype(np.int64, copy=False)
-                n_win = min(len(xs) // AUDIO_SEG_LEN, AUDIO_SEGMENTS)
-                if n_win < 2:
-                    raise ValueError("audio fingerprint: clip too short")
-                # exact int64 window energies (r12: one reshape+sum,
-                # same integers as the per-sample abs loop)
-                energies = (
-                    np.abs(xs[: n_win * AUDIO_SEG_LEN])
-                    .reshape(n_win, AUDIO_SEG_LEN)
-                    .sum(axis=1)
-                )
-                u = 0
-                for i in range(n_win - 1):
-                    if energies[i + 1] > energies[i]:
-                        u |= 1 << i
-                if u >= 1 << 63:
-                    u -= 1 << 64
-                rows.append(
-                    (int(doc_id), len(xs), d["sample_rate"], u)
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "n_samples", "sample_rate", "ahash"],
-            )
+    def row(doc_id, p):
+        d = decode_wav_samples_np(bytes(p))
+        xs = d["samples"].astype(np.int64, copy=False)
+        n_win = min(len(xs) // AUDIO_SEG_LEN, AUDIO_SEGMENTS)
+        if n_win < 2:
+            raise ValueError("audio fingerprint: clip too short")
+        # exact int64 window energies (r12: one reshape+sum,
+        # same integers as the per-sample abs loop)
+        energies = (
+            np.abs(xs[: n_win * AUDIO_SEG_LEN])
+            .reshape(n_win, AUDIO_SEG_LEN)
+            .sum(axis=1)
+        )
+        u = 0
+        for i in range(n_win - 1):
+            if energies[i + 1] > energies[i]:
+                u |= 1 << i
+        if u >= 1 << 63:
+            u -= 1 << 64
+        yield doc_id, len(xs), d["sample_rate"], u
 
-    return media.select("doc_id", "payload").mapInPandas(
-        run, schema=AUDIO_FP_SCHEMA
-    )
+    return _map_rows(media.select("doc_id", "payload"), row, AUDIO_FP_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -3737,34 +3186,29 @@ def audio_spectral_dhash(media: DataFrame) -> DataFrame:
         dtype=np.int64,
     ).T
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, p in zip(pdf["doc_id"], pdf["payload"]):
-                d = decode_wav_samples_np(bytes(p))
-                xs = d["samples"].astype(np.int64, copy=False)
-                n_win = len(xs) // AUDIO_FFT_HOP - 1
-                if n_win < 2:
-                    raise ValueError("audio spectral: clip too short")
-                idx = (
-                    np.arange(n_win)[:, None] * AUDIO_FFT_HOP
-                    + np.arange(AUDIO_FFT_N)[None, :]
-                )
-                s = xs[idx]  # (n_win, N)
-                xr = s @ mre
-                xi = s @ mim
-                e = (xr * xr + xi * xi).sum(axis=1)
-                u = 0
-                for i in range(min(63, n_win - 1)):
-                    if e[i + 1] > e[i]:
-                        u |= 1 << i
-                if u >= 1 << 63:
-                    u -= 1 << 64
-                rows.append((int(doc_id), int(n_win), u))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "n_windows", "sphash"]
-            )
+    def row(doc_id, p):
+        xs = decode_wav_samples_np(bytes(p))["samples"].astype(
+            np.int64, copy=False
+        )
+        n_win = len(xs) // AUDIO_FFT_HOP - 1
+        if n_win < 2:
+            raise ValueError("audio spectral: clip too short")
+        idx = (
+            np.arange(n_win)[:, None] * AUDIO_FFT_HOP
+            + np.arange(AUDIO_FFT_N)[None, :]
+        )
+        s = xs[idx]  # (n_win, N)
+        xr = s @ mre
+        xi = s @ mim
+        e = (xr * xr + xi * xi).sum(axis=1)
+        u = 0
+        for i in range(min(63, n_win - 1)):
+            if e[i + 1] > e[i]:
+                u |= 1 << i
+        if u >= 1 << 63:
+            u -= 1 << 64
+        yield doc_id, n_win, u
 
-    return media.select("doc_id", "payload").mapInPandas(
-        run, schema=AUDIO_SPECTRAL_SCHEMA
+    return _map_rows(
+        media.select("doc_id", "payload"), row, AUDIO_SPECTRAL_SCHEMA
     )

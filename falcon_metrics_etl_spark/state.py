@@ -477,21 +477,18 @@ def merge_state(
         merge_upsert(spark, path, updates, keys)
         return
     rp = resolve_state_path(path)
-    if not _table_exists(spark, rp):
-        if schema is not None:
-            target = spark.createDataFrame([], schema)
-            merged = target.join(
-                updates.select(keys), on=keys, how="left_anti"
-            ).unionByName(updates, allowMissingColumns=True)
-        else:
-            merged = updates
-        overwrite_state(merged, path)
+    if _table_exists(spark, rp):
+        target = spark.read.parquet(rp)
+    elif schema is not None:
+        target = spark.createDataFrame([], schema)
+    else:
+        overwrite_state(updates, path)
         return
-    target = spark.read.parquet(rp)
     survivors = target.join(updates.select(keys), on=keys, how="left_anti")
-    overwrite_state(
-        survivors.unionByName(updates, allowMissingColumns=True), path
-    )
+    # a USING join puts the keys first; files appended to the new
+    # snapshot later carry the table's own order, so restore it here
+    merged = survivors.unionByName(updates, allowMissingColumns=True)
+    overwrite_state(merged.select(*target.columns), path)
 
 
 class TickState:

@@ -54,6 +54,46 @@ def test_frame_sampling_counts(spark):
         assert r["n_sampled"] == expect
 
 
+
+def test_map_rows_contract(spark):
+    """``_map_rows``, the one Arrow boundary every encoder and decoder
+    uses: an empty input maps to an empty frame of the declared schema,
+    each row yields zero or more tuples, and output columns follow the
+    schema whatever the input columns are called."""
+    schema = "doc_id long, tag string, n int"
+    empty = MM._map_rows(
+        _docs(spark).limit(0), lambda i, t: [(i, t, 1)], schema
+    )
+    assert empty.collect() == []
+    assert empty.dtypes == [("doc_id", "bigint"), ("tag", "string"), ("n", "int")]
+    # batches whose rows all yield nothing map to empty frames too
+    assert MM._map_rows(_docs(spark), lambda i, t: [], schema).collect() == []
+
+    def fan(doc_id, text):
+        if doc_id % 2 == 0:
+            yield doc_id, text, 1
+            yield doc_id, text.upper(), 2
+
+    got = MM._map_rows(_docs(spark), fan, schema)
+    assert got.columns == ["doc_id", "tag", "n"]
+    assert sorted(tuple(r) for r in got.collect()) == [
+        (0, "ALPHA", 2), (0, "alpha", 1),
+        (2, "DELTA ECHO FOXTROT", 2), (2, "delta echo foxtrot", 1),
+    ]
+
+    renamed = _docs(spark).select(
+        F.col("text").alias("z_text"), F.col("doc_id").alias("a_id")
+    )
+    out = MM._map_rows(
+        renamed, lambda text, i: [(len(text), i, text)],
+        "n_chars int, id long, body string",
+    )
+    assert out.columns == ["n_chars", "id", "body"]
+    assert sorted(tuple(r) for r in out.collect()) == [
+        (5, 0, "alpha"), (13, 1, "bravo charlie"),
+        (18, 2, "delta echo foxtrot"),
+    ]
+
 # --------------------------------------------------------------------------
 # Real PNG codec path (encode_png / parse_png_header / codec='png')
 # --------------------------------------------------------------------------

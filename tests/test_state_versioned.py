@@ -323,6 +323,42 @@ def test_merge_state_is_reader_safe_and_last_write_wins(spark, tmp_path):
     assert read_state(spark, path).filter("id = 4").count() == 1
 
 
+
+def test_merge_state_keeps_column_order_when_keys_trail(spark, tmp_path):
+    """Keys that are not a table's leading columns (the frame indexes
+    merge on ``node, frame_dhash``) stay where the table has them: the
+    merged snapshot's files and the files appended to it later share
+    one column order, so a read's order does not depend on which file
+    Spark takes its schema from."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from falcon_metrics_etl_spark.state import append_state, merge_state
+
+    schema = "doc_id long, node long, frame_dhash long, batch_id long"
+    order = ["doc_id", "node", "frame_dhash", "batch_id"]
+    keys = ["node", "frame_dhash"]
+    path = str(tmp_path / "idx")
+
+    def rows(*r):
+        return spark.createDataFrame(list(r), schema)
+
+    # cold start (empty-target schema branch), then a merge into the
+    # existing snapshot, then an append landing inside that snapshot
+    merge_state(spark, path, rows((1, 10, 100, 0), (2, 20, 200, 0)), keys,
+                schema=schema)
+    merge_state(spark, path, rows((3, 20, 200, 1), (4, 30, 300, 1)), keys)
+    append_state(rows((5, 40, 400, 2)), path)
+    files = glob.glob(os.path.join(resolve_state_path(path), "*.parquet"))
+    assert files
+    assert {tuple(pq.read_schema(f).names) for f in files} == {tuple(order)}
+    got = read_state(spark, path)
+    assert got.columns == order
+    assert sorted(tuple(r) for r in got.collect()) == [
+        (1, 10, 100, 0), (3, 20, 200, 1), (4, 30, 300, 1), (5, 40, 400, 2),
+    ]
+
 def test_dangling_pointer_raises_loudly(spark, tmp_path):
     """A _CURRENT pointing at a missing snapshot must raise, never
     silently fall back to an empty flat read (r15 self-review #5)."""
