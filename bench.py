@@ -792,15 +792,10 @@ def corpus_incremental_runner(spark, sf_dir: str):
     return run, cleanup
 
 
-def cross_modal_incremental_runner(spark, sf_dir: str):
-    """Incremental cross-modal tick, benched (r12): stage the mixed
-    thumb/clip closure's node-tagged indexes on the base slice ONCE
-    untimed, then time one delta tick through
-    streaming/cross_modal_tick.py: delta-only PNG still + Y4M frame
-    decode, band / frame-hash probes into BOTH modality indexes, joint
-    keep-best resolution, index appends. Read AGAINST
-    cross_modal_keep_best: that recomputes the full mixed closure
-    every run; this is the per-batch delta cost."""
+def _mixed_tick_runner(spark, sf_dir: str, stage, tick, prefix: str):
+    """Stage a cross-modal family's node-tagged indexes on the base
+    slice ONCE untimed, then return (run_fn, cleanup_fn) where run_fn
+    times one delta tick through streaming/cross_modal_tick.py."""
     import shutil
     import tempfile
 
@@ -808,21 +803,17 @@ def cross_modal_incremental_runner(spark, sf_dir: str):
 
     from falcon_metrics_etl_spark.plans.media_dedup import MEDIA_DELTA_MOD
     from falcon_metrics_etl_spark.sources import load_table
-    from falcon_metrics_etl_spark.streaming.cross_modal_tick import (
-        cross_modal_ingest_tick,
-        stage_cross_modal_state,
-    )
 
-    state_dir = tempfile.mkdtemp(prefix="bench_cm_tick_")
+    state_dir = tempfile.mkdtemp(prefix=prefix)
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     base = docs.filter(F.col("doc_id") % MEDIA_DELTA_MOD != 0)
     delta = docs.filter(F.col("doc_id") % MEDIA_DELTA_MOD == 0).persist()
     delta.write.format("noop").mode("overwrite").save()
-    stage_cross_modal_state(spark, base, state_dir, batch_id=0)
+    stage(spark, base, state_dir, batch_id=0)
 
     def run() -> float:
         t0 = time.time()
-        cross_modal_ingest_tick(
+        tick(
             spark, delta, state_dir, batch_id=1,
             # draws must measure identical work: in-cadence
             # maintenance would fire on one repeat only
@@ -835,6 +826,26 @@ def cross_modal_incremental_runner(spark, sf_dir: str):
         shutil.rmtree(state_dir, ignore_errors=True)
 
     return run, cleanup
+
+
+def cross_modal_incremental_runner(spark, sf_dir: str):
+    """Incremental cross-modal tick, benched (r12): stage the mixed
+    thumb/clip closure's node-tagged indexes on the base slice ONCE
+    untimed, then time one delta tick through
+    streaming/cross_modal_tick.py: delta-only PNG still + Y4M frame
+    decode, band / frame-hash probes into BOTH modality indexes, joint
+    keep-best resolution, index appends. Read AGAINST
+    cross_modal_keep_best: that recomputes the full mixed closure
+    every run; this is the per-batch delta cost."""
+    from falcon_metrics_etl_spark.streaming.cross_modal_tick import (
+        cross_modal_ingest_tick,
+        stage_cross_modal_state,
+    )
+
+    return _mixed_tick_runner(
+        spark, sf_dir, stage_cross_modal_state, cross_modal_ingest_tick,
+        "bench_cm_tick_",
+    )
 
 
 def trimodal_incremental_runner(spark, sf_dir: str):
@@ -847,40 +858,15 @@ def trimodal_incremental_runner(spark, sf_dir: str):
     resolution, index appends. Read AGAINST
     cross_modal_keep_best_trimodal: that recomputes the full mixed
     closure every run; this is the per-batch delta cost."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from falcon_metrics_etl_spark.plans.media_dedup import MEDIA_DELTA_MOD
-    from falcon_metrics_etl_spark.sources import load_table
     from falcon_metrics_etl_spark.streaming.cross_modal_tick import (
         stage_trimodal_state,
         trimodal_ingest_tick,
     )
 
-    state_dir = tempfile.mkdtemp(prefix="bench_cm3_tick_")
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    base = docs.filter(F.col("doc_id") % MEDIA_DELTA_MOD != 0)
-    delta = docs.filter(F.col("doc_id") % MEDIA_DELTA_MOD == 0).persist()
-    delta.write.format("noop").mode("overwrite").save()
-    stage_trimodal_state(spark, base, state_dir, batch_id=0)
-
-    def run() -> float:
-        t0 = time.time()
-        trimodal_ingest_tick(
-            spark, delta, state_dir, batch_id=1,
-            # draws must measure identical work: in-cadence
-            # maintenance would fire on one repeat only
-            maintenance_file_threshold=None,
-        )
-        return time.time() - t0
-
-    def cleanup() -> None:
-        delta.unpersist()
-        shutil.rmtree(state_dir, ignore_errors=True)
-
-    return run, cleanup
+    return _mixed_tick_runner(
+        spark, sf_dir, stage_trimodal_state, trimodal_ingest_tick,
+        "bench_cm3_tick_",
+    )
 
 
 def corpus_incremental_ulm_runner(spark, sf_dir: str):

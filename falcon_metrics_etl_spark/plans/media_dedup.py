@@ -34,6 +34,8 @@ SimHash pairing documents.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
@@ -2280,188 +2282,373 @@ FROM members m JOIN best b ON b.cluster_id = m.cluster_id
     oracle=_CM_KB_ORACLE,
 )
 def cross_modal_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
-    thumbs = perf_checkpoint(
-        _thumb_fingerprints(spark, sf_dir).select("doc_id", "dhash")
-    )
-    vfp = perf_checkpoint(
-        _video_fingerprints(spark, sf_dir).select(
-            "doc_id", "frame_idx", "frame_dhash"
-        )
-    )
-    return _cm_format(cross_modal_keep_best_of(thumbs, vfp))
+    return _mixed_keep_best(spark, sf_dir, CM_MODALITIES)
 
 
-def cross_modal_nodes_of(thumbs: DataFrame, vfp: DataFrame) -> DataFrame:
-    """Stills (doc_id, dhash) + clip frames (doc_id, frame_idx,
-    frame_dhash) -> the modality-tagged node frame (node, doc_id,
-    modality, n_frames) of the mixed closure: node = 2*doc_id +
-    is_video, stills count one frame, clip quality = decoded frame
-    rows. Factored (r12) so the batch closure, the cross-modal tick's
-    staging and the delta query agree on node identity and quality."""
-    nfr = vfp.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_frames")
-    )
-    return thumbs.select(
-        (F.col("doc_id") * 2).alias("node"),
-        "doc_id",
-        F.lit("image").alias("modality"),
-        F.lit(1).cast("long").alias("n_frames"),
-    ).unionByName(
-        nfr.select(
-            (F.col("doc_id") * 2 + 1).alias("node"),
-            "doc_id",
-            F.lit("video").alias("modality"),
-            "n_frames",
-        )
-    )
+# ---------------------------------------------------------------------------
+# The mixed-modality closure, shared by the bimodal family (image +
+# video) and the trimodal one (+ audio): node = len(modalities) *
+# doc_id + index of the doc's modality, so the node stride and the
+# modality set are data and the bimodal family is the trimodal one
+# without its audio roles.
+# ---------------------------------------------------------------------------
+CM_MODALITIES = ("image", "video")
+CM3_MODALITIES = ("image", "video", "audio")
+# trimodal keeper rank: source footage beats both of its exported
+# artifacts, the keyframe still and the soundtrack rip
+_MRANK = {"image": 0, "video": 2, "audio": 1}
 
 
-def cross_modal_edges_of(
-    tbands_a: DataFrame,
-    tbands_b: DataFrame,
-    fbands_a: DataFrame,
-    fbands_b: DataFrame,
-    vsig_a: DataFrame,
-    vsig_b: DataFrame,
-    symmetric: bool = False,
+def keep_rule(modalities: tuple) -> list[str]:
+    """The family's quality columns, each compared DESC in order with
+    node ASC as the final tiebreak: decoded units (``n_frames``; a
+    still counts one frame) for image/video, modality rank first
+    (``mrank``, ``n_units``) once audio joins the family."""
+    return ["mrank", "n_units"] if "audio" in modalities else ["n_frames"]
+
+
+def keep_quality(modalities: tuple, modality: str, units) -> list:
+    """The ``keep_rule`` columns of one modality's node rows, given
+    the column that holds its decoded units."""
+    *rank, unit = keep_rule(modalities)
+    return [F.lit(_MRANK[modality]).alias(c) for c in rank] + [
+        units.cast("long").alias(unit)
+    ]
+
+
+def mixed_fingerprints_of(
+    modalities: tuple,
+    docs: DataFrame,
+    thumbs: DataFrame | None = None,
+    clips: DataFrame | None = None,
+    recordings: DataFrame | None = None,
+    tracks: DataFrame | None = None,
+    vfp: DataFrame | None = None,
+) -> list[DataFrame]:
+    """Decode the family's media roles of ``docs``: (doc_id, dhash)
+    keyframe stills, (doc_id, frame_idx, frame_dhash) clip frames and,
+    with audio, (doc_id, n_windows, sphash) recordings and (doc_id,
+    sphash) soundtrack rips. Media rows passed for a role replace its
+    payload attach; ``vfp`` injects already-decoded clip frames (the
+    unified tick decodes each Y4M stream once for both families)."""
+    if thumbs is None:
+        thumbs = MM.attach_payload_keyframe_thumbs(docs)
+    if vfp is None:
+        if clips is None:
+            clips = MM.attach_payload_video_clips(docs)
+        vfp = MM.video_frame_dhash(clips)
+    fps = [
+        MM.media_dhash(thumbs).select("doc_id", "dhash"),
+        vfp.select("doc_id", "frame_idx", "frame_dhash"),
+    ]
+    if "audio" in modalities:
+        if recordings is None:
+            recordings = MM.attach_payload_audio_clips(docs)
+        if tracks is None:
+            tracks = MM.attach_payload_soundtrack_wavs(docs)
+        fps += [
+            MM.audio_spectral_dhash(recordings).select(
+                "doc_id", "n_windows", "sphash"
+            ),
+            MM.audio_spectral_dhash(tracks).select("doc_id", "sphash"),
+        ]
+    return fps
+
+
+def mixed_probes_of(
+    thumbs: DataFrame,
+    vsig: DataFrame,
+    afp: DataFrame | None = None,
+    trk: DataFrame | None = None,
+) -> list[DataFrame]:
+    """The probe frames of the mixed edge families, in order: the
+    (doc_id, frame_dhash) DISTINCT clip signature ``vsig`` that
+    clip<->clip probes directly, then the band rows (image_bands_of,
+    hash carried) of stills, clip frames and, with audio, recordings
+    and soundtrack rips on the AUDIO_SPHASH_BANDS layout."""
+    probes = [
+        vsig, image_bands_of(thumbs), image_bands_of(vsig, "frame_dhash")
+    ]
+    if afp is not None:
+        probes += [
+            image_bands_of(
+                afp.select("doc_id", "sphash"), "sphash",
+                n_bands=AUDIO_SPHASH_BANDS,
+            ),
+            image_bands_of(trk, "sphash", n_bands=AUDIO_SPHASH_BANDS),
+        ]
+    return probes
+
+
+def mixed_nodes_of(
+    modalities: tuple,
+    thumbs: DataFrame,
+    vfp: DataFrame,
+    afp: DataFrame | None = None,
 ) -> DataFrame:
-    """Node-tagged duplicate edges of the mixed closure from its three
-    families — thumb<->clip frame (banded, Hamming-verified, >= 1
-    matched frame), thumb<->thumb (banded Hamming), clip<->clip
-    (exact frame-hash share >= VIDEO_SHARED_T). The *_a frames are the
-    probing side, *_b the probed side (pass the same frame twice with
-    ``symmetric=True`` for the full closure — the reverse thumb<->clip
-    probe is then redundant and skipped; pass delta vs full for
-    delta-touching edges — every emitted edge touches an *_a doc).
-    Band frames come from image_bands_of; vsig frames are (doc_id,
-    frame_dhash) DISTINCT. Emits (id_a, id_b) NODE pairs."""
-    tc_t = (
-        tbands_a.alias("t")
-        .join(
-            fbands_b.alias("f"),
-            (F.col("t.band") == F.col("f.band"))
-            & (F.col("t.byte") == F.col("f.byte")),
+    """Stills, clip frames and, with audio, recordings -> the node
+    frame (node, doc_id, modality, *keep_rule) of the mixed closure. A
+    still's units are 1, a clip's its decoded frame rows, a
+    recording's its spectral windows. Soundtrack rips add no node:
+    they are edge evidence for their clip."""
+    n = len(modalities)
+    nfr = vfp.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+    roles = ((thumbs, F.lit(1)), (nfr, F.col("n")), (afp, F.col("n_windows")))
+    return reduce(
+        DataFrame.unionByName,
+        (
+            df.select(
+                (F.col("doc_id") * n + i).alias("node"),
+                "doc_id",
+                F.lit(m).alias("modality"),
+                *keep_quality(modalities, m, units),
+            )
+            for i, (m, (df, units)) in enumerate(zip(modalities, roles))
+        ),
+    )
+
+
+def mixed_edges_of(
+    modalities: tuple,
+    probing: list[DataFrame],
+    probed: list[DataFrame] | None = None,
+) -> DataFrame:
+    """Node-tagged duplicate edges (id_a, id_b) of the mixed closure,
+    every family a banded or inverted-index equi-join: thumb<->clip
+    frame and thumb<->thumb (banded, Hamming <= DHASH_HAMMING_T),
+    clip<->clip (>= VIDEO_SHARED_T shared frame hashes) and, with
+    audio, rec<->rec and rec<->clip through the clip's soundtrack rip
+    (spectral bands, Hamming <= AUDIO_SPECTRAL_T).
+
+    ``probing`` and ``probed`` are mixed_probes_of frames. Closure
+    form (``probed`` None): ``probing`` is the whole corpus and each
+    self-family joins x.doc_id < y.doc_id. Delta form: ``probing`` is
+    the delta and ``probed`` everything processed; self-families join
+    on != with least/greatest order and the cross families probe from
+    both sides, so every edge touching a probing doc is emitted and
+    base-base pairs are never recomputed."""
+    n = len(modalities)
+    closure = probed is None
+    if closure:
+        probed = probing
+    da, db = F.col("x.doc_id"), F.col("y.doc_id")
+    other_doc = (da < db) if closure else (da != db)
+
+    def ordered(a, b):
+        # a delta-form self-join meets each new-new pair from both sides
+        return (a, b) if closure else (F.least(a, b), F.greatest(a, b))
+
+    def banded(a, b, hash_a, hash_b, m_a, m_b, t, same):
+        on = (F.col("x.band") == F.col("y.band")) & (
+            F.col("x.byte") == F.col("y.byte")
         )
-        .filter(
-            F.bit_count(F.expr("t.dhash ^ f.frame_dhash"))
-            <= DHASH_HAMMING_T
+        ids = (da * n + modalities.index(m_a), db * n + modalities.index(m_b))
+        if same:
+            on &= other_doc
+            ids = ordered(*ids)
+        return (
+            a.alias("x")
+            .join(b.alias("y"), on)
+            .filter(F.bit_count(F.expr(f"x.{hash_a} ^ y.{hash_b}")) <= t)
+            .select(ids[0].alias("id_a"), ids[1].alias("id_b"))
+        )
+
+    def family(i, j, *pairing):
+        # i, j: positions of the two sides in the probe frames
+        e = banded(probing[i], probed[j], *pairing, i == j)
+        if not closure and i != j:
+            e = e.unionByName(banded(probed[i], probing[j], *pairing, False))
+        return e.distinct()
+
+    lo, hi = ordered(da, db)
+    shared = (
+        probing[0].alias("x")
+        .join(
+            probed[0].alias("y"),
+            (F.col("x.frame_dhash") == F.col("y.frame_dhash")) & other_doc,
         )
         .select(
-            (F.col("t.doc_id") * 2).alias("id_a"),
-            (F.col("f.doc_id") * 2 + 1).alias("id_b"),
+            lo.alias("da"), hi.alias("db"), F.col("x.frame_dhash").alias("fd")
         )
     )
-    if symmetric:
-        tc = tc_t.distinct()
-    else:
-        tc_f = (
-            fbands_a.alias("f")
-            .join(
-                tbands_b.alias("t"),
-                (F.col("f.band") == F.col("t.band"))
-                & (F.col("f.byte") == F.col("t.byte")),
-            )
-            .filter(
-                F.bit_count(F.expr("t.dhash ^ f.frame_dhash"))
-                <= DHASH_HAMMING_T
-            )
-            .select(
-                (F.col("t.doc_id") * 2).alias("id_a"),
-                (F.col("f.doc_id") * 2 + 1).alias("id_b"),
-            )
-        )
-        tc = tc_t.unionByName(tc_f).distinct()
-    tt = (
-        tbands_a.alias("x")
-        .join(
-            tbands_b.alias("y"),
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.byte") == F.col("y.byte"))
-            & (F.col("x.doc_id") != F.col("y.doc_id")),
-        )
-        .filter(
-            F.bit_count(F.expr("x.dhash ^ y.dhash")) <= DHASH_HAMMING_T
-        )
-        .select(
-            F.least(F.col("x.doc_id"), F.col("y.doc_id")).alias("da"),
-            F.greatest(F.col("x.doc_id"), F.col("y.doc_id")).alias("db"),
-        )
-        .select(
-            (F.col("da") * 2).alias("id_a"), (F.col("db") * 2).alias("id_b")
-        )
-        .distinct()
-    )
-    cc = (
-        vsig_a.alias("x")
-        .join(
-            vsig_b.alias("y"),
-            (F.col("x.frame_dhash") == F.col("y.frame_dhash"))
-            & (F.col("x.doc_id") != F.col("y.doc_id")),
-        )
-        .select(
-            F.least(F.col("x.doc_id"), F.col("y.doc_id")).alias("da"),
-            F.greatest(F.col("x.doc_id"), F.col("y.doc_id")).alias("db"),
-            F.col("x.frame_dhash").alias("fd"),
-        )
-        .distinct()
-        .groupBy("da", "db")
+    if not closure:
+        shared = shared.distinct()
+    v = modalities.index("video")
+    dh, sp = DHASH_HAMMING_T, AUDIO_SPECTRAL_T
+    edges = [
+        family(1, 2, "dhash", "frame_dhash", "image", "video", dh),
+        family(1, 1, "dhash", "dhash", "image", "image", dh),
+        shared.groupBy("da", "db")
         .agg(F.count(F.lit(1)).alias("n_shared"))
         .filter(F.col("n_shared") >= VIDEO_SHARED_T)
         .select(
-            (F.col("da") * 2 + 1).alias("id_a"),
-            (F.col("db") * 2 + 1).alias("id_b"),
-        )
-    )
-    return tc.unionByName(tt).unionByName(cc)
+            (F.col("da") * n + v).alias("id_a"),
+            (F.col("db") * n + v).alias("id_b"),
+        ),
+    ]
+    if "audio" in modalities:
+        edges += [
+            family(3, 3, "sphash", "sphash", "audio", "audio", sp),
+            family(3, 4, "sphash", "sphash", "audio", "video", sp),
+        ]
+    return reduce(DataFrame.unionByName, edges)
 
 
-def cross_modal_keep_best_of(thumbs: DataFrame, vfp: DataFrame) -> DataFrame:
+def mixed_keep_best_of(
+    modalities: tuple,
+    thumbs: DataFrame,
+    vfp: DataFrame,
+    afp: DataFrame | None = None,
+    trk: DataFrame | None = None,
+) -> DataFrame:
     """Full mixed-cluster closure -> member rows (node, doc_id,
-    modality, n_frames, cluster_id, keep_node): three banded /
-    inverted-index edge families, connected components over
-    modality-tagged nodes, argmax(n_frames DESC, node ASC). Factored
-    (r12) so the batch query, the cross-modal tick's tick-0 staging
-    and cross_modal_keep_best_delta share ONE closure definition."""
+    modality, *keep_rule, cluster_id, keep_node): closure-form edge
+    families, connected components over the node-tagged ids, argmax of
+    the keep rule with node ASC last. One closure definition for the
+    batch queries, the ticks' tick-0 staging and the delta twins'
+    staged base."""
     from falcon_metrics_etl_spark.operators.components import (
         duplicate_clusters,
     )
 
     vsig = vfp.select("doc_id", "frame_dhash").distinct()
-    tbands = image_bands_of(thumbs)
-    fbands = image_bands_of(vsig, "frame_dhash")
-    # symmetric closure: probing == probed (tc_t and tc_f coincide)
-    edges = cross_modal_edges_of(
-        tbands, tbands, fbands, fbands, vsig, vsig, symmetric=True
-    )
+    edges = mixed_edges_of(modalities, mixed_probes_of(thumbs, vsig, afp, trk))
     comp = duplicate_clusters(edges).select("node", "cluster_id")
-    allnodes = cross_modal_nodes_of(thumbs, vfp)
-    members = allnodes.join(comp, "node", "left").withColumn(
-        "cluster_id", F.coalesce(F.col("cluster_id"), F.col("node"))
+    members = (
+        mixed_nodes_of(modalities, thumbs, vfp, afp)
+        .join(comp, "node", "left")
+        .withColumn(
+            "cluster_id", F.coalesce(F.col("cluster_id"), F.col("node"))
+        )
     )
     best = F.max(
-        F.struct(
-            F.col("n_frames").alias("nf"),
-            (-F.col("node")).alias("negnode"),
-        )
+        F.struct(*keep_rule(modalities), (-F.col("node")).alias("negnode"))
     ).over(Window.partitionBy("cluster_id"))
     return members.withColumn("keep_node", -best.getField("negnode"))
 
 
-def _cm_format(members: DataFrame) -> DataFrame:
-    """(node, doc_id, modality, n_frames, keep_node) member rows ->
-    the registered output shape shared by cross_modal_keep_best and
-    its delta twin (same oracle)."""
+def cross_modal_keep_best_of(thumbs: DataFrame, vfp: DataFrame) -> DataFrame:
+    """The bimodal closure of stills (doc_id, dhash) and clip frames
+    (doc_id, frame_idx, frame_dhash) on nodes 2*doc_id + m -> member
+    rows (node, doc_id, modality, n_frames, cluster_id, keep_node)."""
+    return mixed_keep_best_of(CM_MODALITIES, thumbs, vfp)
+
+
+def _mixed_format(modalities: tuple, members: DataFrame) -> DataFrame:
+    """(node, doc_id, modality, units, keep_node) member rows -> the
+    registered output shape shared by a family's batch query and its
+    delta twin (same oracle)."""
+    n = len(modalities)
     return members.select(
         "doc_id",
         "modality",
-        "n_frames",
-        F.expr("keep_node div 2").cast("long").alias("keep_doc"),
-        F.when(F.col("keep_node") % 2 == 1, F.lit("video"))
-        .otherwise(F.lit("image"))
-        .alias("keep_modality"),
+        keep_rule(modalities)[-1],
+        F.expr(f"keep_node div {n}").cast("long").alias("keep_doc"),
+        F.array(*(F.lit(m) for m in modalities))[
+            (F.col("keep_node") % n).cast("int")
+        ].alias("keep_modality"),
         F.when(F.col("node") == F.col("keep_node"), F.lit("kept"))
         .otherwise(F.lit("dropped"))
         .alias("status"),
+    )
+
+
+def _mixed_keep_best(
+    spark: SparkSession, sf_dir: str, modalities: tuple
+) -> DataFrame:
+    """The batch keep-best query of a family over the whole corpus."""
+    fps = mixed_fingerprints_of(
+        modalities, load_table(spark, sf_dir, "documents")
+    )
+    return _mixed_format(
+        modalities,
+        mixed_keep_best_of(modalities, *(perf_checkpoint(f) for f in fps)),
+    )
+
+
+def _mixed_keep_best_delta(
+    spark: SparkSession, sf_dir: str, modalities: tuple, base_key: str
+) -> DataFrame:
+    """The IVM twin of a family's batch query: the base corpus
+    (doc_id % MEDIA_DELTA_MOD != 0) resolved by the batch closure
+    plays the maintained index, staged under ``base_key``; the delta's
+    fingerprints probe it through the delta-form edge families, edges
+    lift onto the keeper graph, and displaced keepers repoint."""
+    from falcon_metrics_etl_spark.operators.keep_best import (
+        resolve_keep_best,
+    )
+
+    docs = load_table(spark, sf_dir, "documents")
+    is_delta = F.col("doc_id") % MEDIA_DELTA_MOD == 0
+    # maintained state is PERSISTED parquet — the tick's state shapes —
+    # READ on every invocation, so the audited cold plan prices the
+    # delta decode + resolution only. Independent bases stage
+    # concurrently on a cold state root.
+    audio_bases = (
+        (staged_audio_base, staged_track_base)
+        if "audio" in modalities
+        else ()
+    )
+    base = _warm_staged_bases(
+        spark, sf_dir, staged_thumbs_base, staged_video_fp_base, *audio_bases
+    )
+    delta = [
+        perf_checkpoint(f)
+        for f in mixed_fingerprints_of(modalities, docs.filter(is_delta))
+    ]
+    base_kb = staged_index(
+        spark,
+        f"{base_key}:{sf_dir}",
+        lambda: mixed_keep_best_of(modalities, *base),
+        src_dir=sf_dir,
+    )
+    # delta and base doc sets are disjoint, so DISTINCT and the node
+    # frame both distribute over the union: the staged base signature
+    # never re-shuffles and the base members come straight from the
+    # index
+    vsig_delta = delta[1].select("doc_id", "frame_dhash").distinct()
+    vsig = staged_video_sig_base(spark, sf_dir).unionByName(vsig_delta)
+    full = [b.unionByName(d) for b, d in zip(base, delta)]
+    edges = mixed_edges_of(
+        modalities,
+        mixed_probes_of(delta[0], vsig_delta, *delta[2:]),
+        mixed_probes_of(full[0], vsig, *full[2:]),
+    )
+    delta_nodes = perf_checkpoint(mixed_nodes_of(modalities, *delta[:3]))
+    rule = keep_rule(modalities)
+    new_q = delta_nodes.select(F.col("node").alias("doc_id"), *rule)
+    idx_q = base_kb.select(
+        F.col("node").alias("doc_id"),
+        F.col("keep_node").alias("keep_id"),
+        *rule,
+    )
+    verdicts, displaced = resolve_keep_best(new_q, idx_q, edges, rule)
+    cols = ["node", "doc_id", "modality", rule[-1]]
+    delta_rows = delta_nodes.join(
+        verdicts.select(
+            F.col("doc_id").alias("node"), F.col("keep_id").alias("keep_node")
+        ),
+        "node",
+    )
+    base_rows = (
+        base_kb.select(*cols, "keep_node")
+        .join(
+            F.broadcast(
+                displaced.select(
+                    F.col("doc_id").alias("keep_node"), F.col("new_keep")
+                )
+            ),
+            "keep_node",
+            "left",
+        )
+        .select(
+            *cols,
+            F.coalesce("new_keep", F.col("keep_node")).alias("keep_node"),
+        )
+    )
+    return _mixed_format(
+        modalities,
+        base_rows.unionByName(delta_rows.select(*cols, "keep_node")),
     )
 
 
@@ -2486,105 +2673,7 @@ def _cm_format(members: DataFrame) -> DataFrame:
     oracle=_CM_KB_ORACLE,
 )
 def cross_modal_keep_best_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from falcon_metrics_etl_spark.operators.keep_best import (
-        resolve_keep_best,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    is_delta = F.col("doc_id") % MEDIA_DELTA_MOD == 0
-    # maintained state is PERSISTED parquet (r14, r13 verdict #1):
-    # base still fingerprints, base frame rows, the distinct frame
-    # signature and the resolved mixed closure each land once (the
-    # cm_image_index / cm_frame_index shapes the cross-modal tick
-    # persists) and are READ on every invocation — the audited cold
-    # plan prices the delta decode + resolution only. Independent
-    # bases stage concurrently on a cold state root (r16).
-    thumbs_base, vfp_base = _warm_staged_bases(
-        spark, sf_dir, staged_thumbs_base, staged_video_fp_base
-    )
-    thumbs_delta = perf_checkpoint(
-        MM.media_dhash(
-            MM.attach_payload_keyframe_thumbs(docs.filter(is_delta))
-        ).select("doc_id", "dhash")
-    )
-    vfp_delta = perf_checkpoint(
-        MM.video_frame_dhash(
-            MM.attach_payload_video_clips(docs.filter(is_delta))
-        ).select("doc_id", "frame_idx", "frame_dhash")
-    )
-    base_kb = staged_index(
-        spark,
-        f"cm_base_kb:{sf_dir}",
-        lambda: cross_modal_keep_best_of(thumbs_base, vfp_base),
-        src_dir=sf_dir,
-    )
-    # delta and base doc sets are disjoint, so DISTINCT and the node
-    # frame both distribute over the union: the staged base never
-    # re-shuffles and the base members come straight from the index
-    vsig_base = staged_video_sig_base(spark, sf_dir)
-    vsig_delta = vfp_delta.select("doc_id", "frame_dhash").distinct()
-    vsig = vsig_base.unionByName(vsig_delta)
-    tbands_delta = image_bands_of(thumbs_delta)
-    tbands = image_bands_of(thumbs_base).unionByName(tbands_delta)
-    fbands_delta = image_bands_of(vsig_delta, "frame_dhash")
-    fbands = image_bands_of(vsig_base, "frame_dhash").unionByName(
-        fbands_delta
-    )
-    edges = cross_modal_edges_of(
-        tbands_delta,
-        tbands,
-        fbands_delta,
-        fbands,
-        vsig_delta,
-        vsig,
-    )
-    delta_nodes = perf_checkpoint(
-        cross_modal_nodes_of(thumbs_delta, vfp_delta)
-    )
-    new_q = delta_nodes.select(
-        F.col("node").alias("doc_id"), "n_frames"
-    )
-    idx_q = base_kb.select(
-        F.col("node").alias("doc_id"),
-        F.col("keep_node").alias("keep_id"),
-        "n_frames",
-    )
-    verdicts, displaced = resolve_keep_best(
-        new_q, idx_q, edges, ["n_frames"]
-    )
-    delta_rows = delta_nodes.join(
-        verdicts.select(
-            F.col("doc_id").alias("node"), F.col("keep_id").alias("keep_node")
-        ),
-        "node",
-    )
-    base_rows = (
-        base_kb.select("node", "doc_id", "modality", "n_frames", "keep_node")
-        .join(
-            F.broadcast(
-                displaced.select(
-                    F.col("doc_id").alias("keep_node"),
-                    F.col("new_keep"),
-                )
-            ),
-            "keep_node",
-            "left",
-        )
-        .select(
-            "node",
-            "doc_id",
-            "modality",
-            "n_frames",
-            F.coalesce("new_keep", F.col("keep_node")).alias("keep_node"),
-        )
-    )
-    return _cm_format(
-        base_rows.unionByName(
-            delta_rows.select(
-                "node", "doc_id", "modality", "n_frames", "keep_node"
-            )
-        )
-    )
+    return _mixed_keep_best_delta(spark, sf_dir, CM_MODALITIES, "cm_base_kb")
 
 
 # ---------------------------------------------------------------------------
@@ -2807,155 +2896,6 @@ FROM members m JOIN best b ON b.cluster_id = m.cluster_id
 """
 
 
-def trimodal_nodes_of(
-    thumbs: DataFrame, vfp: DataFrame, afp: DataFrame
-) -> DataFrame:
-    """Stills (doc_id, dhash) + clip frames (doc_id, frame_idx,
-    frame_dhash) + recordings (doc_id, n_windows, sphash) -> the
-    modality-tagged node frame (node, doc_id, modality, mrank,
-    n_units) of the trimodal closure: node = 3*doc_id + m
-    (0 image, 1 video, 2 audio); mrank orders keepers video > audio >
-    image so footage beats both of its exported artifacts; n_units is
-    the decoded evidence (frames / spectral windows / 1)."""
-    nfr = vfp.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_units")
-    )
-    return (
-        thumbs.select(
-            (F.col("doc_id") * 3).alias("node"),
-            "doc_id",
-            F.lit("image").alias("modality"),
-            F.lit(0).alias("mrank"),
-            F.lit(1).cast("long").alias("n_units"),
-        )
-        .unionByName(
-            nfr.select(
-                (F.col("doc_id") * 3 + 1).alias("node"),
-                "doc_id",
-                F.lit("video").alias("modality"),
-                F.lit(2).alias("mrank"),
-                "n_units",
-            )
-        )
-        .unionByName(
-            afp.select(
-                (F.col("doc_id") * 3 + 2).alias("node"),
-                "doc_id",
-                F.lit("audio").alias("modality"),
-                F.lit(1).alias("mrank"),
-                F.col("n_windows").cast("long").alias("n_units"),
-            )
-        )
-    )
-
-
-def trimodal_edges_of(
-    tbands: DataFrame,
-    fbands: DataFrame,
-    vsig: DataFrame,
-    rbands: DataFrame,
-    trbands: DataFrame,
-) -> DataFrame:
-    """The five duplicate-edge families of the trimodal closure as
-    (id_a, id_b) node pairs on 3*doc_id + m — every family a banded
-    or inverted-index equi-join, no all-pairs product. Image and
-    video families mirror cross_modal_edges_of (symmetric form);
-    audio adds rec<->rec over spectral bands and rec<->clip through
-    the clip's ripped-soundtrack fingerprint."""
-    tc = (
-        tbands.alias("t")
-        .join(
-            fbands.alias("f"),
-            (F.col("t.band") == F.col("f.band"))
-            & (F.col("t.byte") == F.col("f.byte")),
-        )
-        .filter(
-            F.bit_count(F.expr("t.dhash ^ f.frame_dhash"))
-            <= DHASH_HAMMING_T
-        )
-        .select(
-            (F.col("t.doc_id") * 3).alias("id_a"),
-            (F.col("f.doc_id") * 3 + 1).alias("id_b"),
-        )
-        .distinct()
-    )
-    tt = (
-        tbands.alias("x")
-        .join(
-            tbands.alias("y"),
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.byte") == F.col("y.byte"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .filter(
-            F.bit_count(F.expr("x.dhash ^ y.dhash")) <= DHASH_HAMMING_T
-        )
-        .select(
-            (F.col("x.doc_id") * 3).alias("id_a"),
-            (F.col("y.doc_id") * 3).alias("id_b"),
-        )
-        .distinct()
-    )
-    cc = (
-        vsig.alias("x")
-        .join(
-            vsig.alias("y"),
-            (F.col("x.frame_dhash") == F.col("y.frame_dhash"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .groupBy(
-            F.col("x.doc_id").alias("da"), F.col("y.doc_id").alias("db")
-        )
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-        .filter(F.col("n_shared") >= VIDEO_SHARED_T)
-        .select(
-            (F.col("da") * 3 + 1).alias("id_a"),
-            (F.col("db") * 3 + 1).alias("id_b"),
-        )
-    )
-    rr = (
-        rbands.alias("x")
-        .join(
-            rbands.alias("y"),
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.byte") == F.col("y.byte"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .filter(
-            F.bit_count(F.expr("x.sphash ^ y.sphash"))
-            <= AUDIO_SPECTRAL_T
-        )
-        .select(
-            (F.col("x.doc_id") * 3 + 2).alias("id_a"),
-            (F.col("y.doc_id") * 3 + 2).alias("id_b"),
-        )
-        .distinct()
-    )
-    rt = (
-        rbands.alias("r")
-        .join(
-            trbands.alias("t"),
-            (F.col("r.band") == F.col("t.band"))
-            & (F.col("r.byte") == F.col("t.byte")),
-        )
-        .filter(
-            F.bit_count(F.expr("r.sphash ^ t.sphash"))
-            <= AUDIO_SPECTRAL_T
-        )
-        .select(
-            (F.col("r.doc_id") * 3 + 2).alias("id_a"),
-            (F.col("t.doc_id") * 3 + 1).alias("id_b"),
-        )
-        .distinct()
-    )
-    return (
-        tc.unionByName(tt)
-        .unionByName(cc)
-        .unionByName(rr)
-        .unionByName(rt)
-    )
-
-
 @register(
     "cross_modal_keep_best_trimodal",
     doc="Keep-best over MIXED image/video/AUDIO clusters (r13): "
@@ -2979,23 +2919,7 @@ def trimodal_edges_of(
 def cross_modal_keep_best_trimodal(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    thumbs = perf_checkpoint(
-        _thumb_fingerprints(spark, sf_dir).select("doc_id", "dhash")
-    )
-    vfp = perf_checkpoint(
-        _video_fingerprints(spark, sf_dir).select(
-            "doc_id", "frame_idx", "frame_dhash"
-        )
-    )
-    afp = perf_checkpoint(
-        _audio_spectral_fps(spark, sf_dir).select(
-            "doc_id", "n_windows", "sphash"
-        )
-    )
-    trk = perf_checkpoint(
-        _track_fingerprints(spark, sf_dir).select("doc_id", "sphash")
-    )
-    return _cm3_format(trimodal_keep_best_of(thumbs, vfp, afp, trk))
+    return _mixed_keep_best(spark, sf_dir, CM3_MODALITIES)
 
 
 def trimodal_keep_best_of(
@@ -3004,59 +2928,12 @@ def trimodal_keep_best_of(
     afp: DataFrame,
     trk: DataFrame,
 ) -> DataFrame:
-    """Full trimodal closure -> member rows (node, doc_id, modality,
-    mrank, n_units, cluster_id, keep_node): five banded /
-    inverted-index edge families, connected components over
-    modality-tagged nodes 3*doc_id + m, argmax(mrank DESC, n_units
-    DESC, node ASC). Factored (r13) so the batch query and the
-    trimodal IVM delta twin share ONE closure definition."""
-    from falcon_metrics_etl_spark.operators.components import (
-        duplicate_clusters,
-    )
+    """The trimodal closure of stills, clip frames, recordings
+    (doc_id, n_windows, sphash) and soundtrack rips (doc_id, sphash)
+    on nodes 3*doc_id + m -> member rows (node, doc_id, modality,
+    mrank, n_units, cluster_id, keep_node)."""
+    return mixed_keep_best_of(CM3_MODALITIES, thumbs, vfp, afp, trk)
 
-    vsig = vfp.select("doc_id", "frame_dhash").distinct()
-    edges = trimodal_edges_of(
-        image_bands_of(thumbs),
-        image_bands_of(vsig, "frame_dhash"),
-        vsig,
-        image_bands_of(afp.select("doc_id", "sphash"), "sphash", n_bands=AUDIO_SPHASH_BANDS),
-        image_bands_of(trk, "sphash", n_bands=AUDIO_SPHASH_BANDS),
-    )
-    comp = duplicate_clusters(edges).select("node", "cluster_id")
-    members = (
-        trimodal_nodes_of(thumbs, vfp, afp)
-        .join(comp, "node", "left")
-        .withColumn(
-            "cluster_id", F.coalesce(F.col("cluster_id"), F.col("node"))
-        )
-    )
-    best = F.max(
-        F.struct(
-            F.col("mrank").alias("mr"),
-            F.col("n_units").alias("nu"),
-            (-F.col("node")).alias("negnode"),
-        )
-    ).over(Window.partitionBy("cluster_id"))
-    return members.withColumn("keep_node", -best.getField("negnode"))
-
-
-def _cm3_format(members: DataFrame) -> DataFrame:
-    """(node, doc_id, modality, n_units, keep_node) member rows ->
-    the registered output shape shared by cross_modal_keep_best_trimodal
-    and its delta twin (same oracle)."""
-    return members.select(
-        "doc_id",
-        "modality",
-        "n_units",
-        F.expr("keep_node div 3").cast("long").alias("keep_doc"),
-        F.when(F.col("keep_node") % 3 == 1, F.lit("video"))
-        .when(F.col("keep_node") % 3 == 2, F.lit("audio"))
-        .otherwise(F.lit("image"))
-        .alias("keep_modality"),
-        F.when(F.col("node") == F.col("keep_node"), F.lit("kept"))
-        .otherwise(F.lit("dropped"))
-        .alias("status"),
-    )
 
 
 # band configurations the occupancy audit measures: the shipped
@@ -3303,118 +3180,6 @@ def cross_modal_audio_incremental_update(
     )
 
 
-def trimodal_edges_delta(
-    tb_new: DataFrame, tb_all: DataFrame,
-    fb_new: DataFrame, fb_all: DataFrame,
-    vsig_new: DataFrame, vsig_all: DataFrame,
-    rb_new: DataFrame, rb_all: DataFrame,
-    trb_new: DataFrame, trb_all: DataFrame,
-) -> DataFrame:
-    """Delta-touching edges of the trimodal closure: each of the five
-    families probes new-vs-all from BOTH directions, so every edge
-    with at least one delta endpoint is emitted and base-base pairs
-    are never recomputed. Emits (id_a, id_b) node pairs on
-    3*doc_id + m."""
-
-    def banded(a, b, ha, hb, na, nb, t):
-        return (
-            a.alias("x")
-            .join(
-                b.alias("y"),
-                (F.col("x.band") == F.col("y.band"))
-                & (F.col("x.byte") == F.col("y.byte"))
-                & (F.col("x.doc_id") != F.col("y.doc_id")),
-            )
-            .filter(F.bit_count(F.expr(f"x.{ha} ^ y.{hb}")) <= t)
-            .select(
-                F.least(
-                    F.col("x.doc_id") * 3 + na, F.col("y.doc_id") * 3 + nb
-                ).alias("id_a"),
-                F.greatest(
-                    F.col("x.doc_id") * 3 + na, F.col("y.doc_id") * 3 + nb
-                ).alias("id_b"),
-            )
-        )
-
-    # thumb<->clip frame: cross-kind, so doc_id equality never aliases
-    def tc_probe(t_side, f_side):
-        return (
-            t_side.alias("t")
-            .join(
-                f_side.alias("f"),
-                (F.col("t.band") == F.col("f.band"))
-                & (F.col("t.byte") == F.col("f.byte")),
-            )
-            .filter(
-                F.bit_count(F.expr("t.dhash ^ f.frame_dhash"))
-                <= DHASH_HAMMING_T
-            )
-            .select(
-                (F.col("t.doc_id") * 3).alias("id_a"),
-                (F.col("f.doc_id") * 3 + 1).alias("id_b"),
-            )
-        )
-
-    tc = tc_probe(tb_new, fb_all).unionByName(
-        tc_probe(tb_all, fb_new)
-    ).distinct()
-    tt = banded(
-        tb_new, tb_all, "dhash", "dhash", 0, 0, DHASH_HAMMING_T
-    ).distinct()
-    cc = (
-        vsig_new.alias("x")
-        .join(
-            vsig_all.alias("y"),
-            (F.col("x.frame_dhash") == F.col("y.frame_dhash"))
-            & (F.col("x.doc_id") != F.col("y.doc_id")),
-        )
-        .select(
-            F.least(F.col("x.doc_id"), F.col("y.doc_id")).alias("da"),
-            F.greatest(F.col("x.doc_id"), F.col("y.doc_id")).alias("db"),
-            F.col("x.frame_dhash").alias("fd"),
-        )
-        .distinct()
-        .groupBy("da", "db")
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-        .filter(F.col("n_shared") >= VIDEO_SHARED_T)
-        .select(
-            (F.col("da") * 3 + 1).alias("id_a"),
-            (F.col("db") * 3 + 1).alias("id_b"),
-        )
-    )
-    rr = banded(
-        rb_new, rb_all, "sphash", "sphash", 2, 2, AUDIO_SPECTRAL_T
-    ).distinct()
-
-    def rt_probe(r_side, t_side):
-        return (
-            r_side.alias("r")
-            .join(
-                t_side.alias("t"),
-                (F.col("r.band") == F.col("t.band"))
-                & (F.col("r.byte") == F.col("t.byte")),
-            )
-            .filter(
-                F.bit_count(F.expr("r.sphash ^ t.sphash"))
-                <= AUDIO_SPECTRAL_T
-            )
-            .select(
-                (F.col("r.doc_id") * 3 + 2).alias("id_a"),
-                (F.col("t.doc_id") * 3 + 1).alias("id_b"),
-            )
-        )
-
-    rt = rt_probe(rb_new, trb_all).unionByName(
-        rt_probe(rb_all, trb_new)
-    ).distinct()
-    return (
-        tc.unionByName(tt)
-        .unionByName(cc)
-        .unionByName(rr)
-        .unionByName(rt)
-    )
-
-
 @register(
     "cross_modal_trimodal_delta",
     doc="Incremental TRIMODAL keep-best — the IVM twin of "
@@ -3437,118 +3202,6 @@ def trimodal_edges_delta(
 def cross_modal_trimodal_delta(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from falcon_metrics_etl_spark.operators.keep_best import (
-        resolve_keep_best,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    is_delta = F.col("doc_id") % MEDIA_DELTA_MOD == 0
-    # maintained state is PERSISTED parquet (r14, r13 verdict #1) —
-    # the trimodal tick's state families — read on every invocation;
-    # the audited cold plan prices the delta decode + resolution only.
-    # The four modality bases are independent, so a cold state root
-    # stages them CONCURRENTLY (r16) instead of paying four decode
-    # walls back to back.
-    thumbs_base, vfp_base, afp_base, trk_base = _warm_staged_bases(
-        spark, sf_dir, staged_thumbs_base, staged_video_fp_base,
-        staged_audio_base, staged_track_base,
-    )
-    thumbs_delta = perf_checkpoint(
-        MM.media_dhash(
-            MM.attach_payload_keyframe_thumbs(docs.filter(is_delta))
-        ).select("doc_id", "dhash")
-    )
-    thumbs = thumbs_base.unionByName(thumbs_delta)
-    vfp_delta = perf_checkpoint(
-        MM.video_frame_dhash(
-            MM.attach_payload_video_clips(docs.filter(is_delta))
-        ).select("doc_id", "frame_idx", "frame_dhash")
-    )
-    afp_delta = perf_checkpoint(
-        MM.audio_spectral_dhash(
-            MM.attach_payload_audio_clips(docs.filter(is_delta))
-        ).select("doc_id", "n_windows", "sphash")
-    )
-    afp = afp_base.unionByName(afp_delta)
-    trk_delta = perf_checkpoint(
-        MM.audio_spectral_dhash(
-            MM.attach_payload_soundtrack_wavs(docs.filter(is_delta))
-        ).select("doc_id", "sphash")
-    )
-    trk = trk_base.unionByName(trk_delta)
-
-    base_kb = staged_index(
-        spark,
-        f"cm3_base_kb:{sf_dir}",
-        lambda: trimodal_keep_best_of(
-            thumbs_base, vfp_base, afp_base, trk_base
-        ),
-        src_dir=sf_dir,
-    )
-    # delta and base doc sets are disjoint: DISTINCT and the node
-    # frame distribute over the union, so the staged base signature
-    # never re-shuffles and base members come straight from the index
-    vsig_base = staged_video_sig_base(spark, sf_dir)
-    vsig_delta = vfp_delta.select("doc_id", "frame_dhash").distinct()
-    vsig = vsig_base.unionByName(vsig_delta)
-    tb = image_bands_of(thumbs)
-    fb = image_bands_of(vsig, "frame_dhash")
-    rb = image_bands_of(afp.select("doc_id", "sphash"), "sphash", n_bands=AUDIO_SPHASH_BANDS)
-    trb = image_bands_of(trk, "sphash", n_bands=AUDIO_SPHASH_BANDS)
-    edges = trimodal_edges_delta(
-        image_bands_of(thumbs_delta), tb,
-        image_bands_of(vsig_delta, "frame_dhash"), fb,
-        vsig_delta, vsig,
-        image_bands_of(afp_delta.select("doc_id", "sphash"), "sphash", n_bands=AUDIO_SPHASH_BANDS), rb,
-        image_bands_of(trk_delta, "sphash", n_bands=AUDIO_SPHASH_BANDS), trb,
-    )
-    delta_nodes = perf_checkpoint(
-        trimodal_nodes_of(thumbs_delta, vfp_delta, afp_delta)
-    )
-    new_q = delta_nodes.select(
-        F.col("node").alias("doc_id"), "mrank", "n_units"
-    )
-    idx_q = base_kb.select(
-        F.col("node").alias("doc_id"),
-        F.col("keep_node").alias("keep_id"),
-        "mrank",
-        "n_units",
-    )
-    verdicts, displaced = resolve_keep_best(
-        new_q, idx_q, edges, ["mrank", "n_units"]
-    )
-    delta_rows = delta_nodes.join(
-        verdicts.select(
-            F.col("doc_id").alias("node"),
-            F.col("keep_id").alias("keep_node"),
-        ),
-        "node",
-    )
-    base_rows = (
-        base_kb.select(
-            "node", "doc_id", "modality", "n_units", "keep_node"
-        )
-        .join(
-            F.broadcast(
-                displaced.select(
-                    F.col("doc_id").alias("keep_node"), F.col("new_keep")
-                )
-            ),
-            "keep_node",
-            "left",
-        )
-        .select(
-            "node",
-            "doc_id",
-            "modality",
-            "n_units",
-            F.coalesce("new_keep", F.col("keep_node")).alias("keep_node"),
-        )
-    )
-    return _cm3_format(
-        base_rows.unionByName(
-            delta_rows.select(
-                "node", "doc_id", "modality", "n_units", "keep_node"
-            )
-        )
+    return _mixed_keep_best_delta(
+        spark, sf_dir, CM3_MODALITIES, "cm3_base_kb"
     )

@@ -61,6 +61,14 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # Spark's hidden-path filter logs "All paths were ignored" on every
+    # read of a state snapshot dir (_v-*), which still returns all its
+    # rows; silence only the class that logs it
+    jvm = spark.sparkContext._jvm
+    jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
+        "org.apache.spark.sql.execution.datasources.DataSource",
+        jvm.org.apache.logging.log4j.Level.ERROR,
+    )
     return spark
 
 

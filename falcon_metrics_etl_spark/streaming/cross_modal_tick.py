@@ -1,78 +1,84 @@
 """Incremental CROSS-MODAL ingest tick — the delta shape of the mixed
-image/video keep-best closure (r12; extends the per-modality
-streaming/media_tick.py with the r11 verdict's cross-modal family).
+keep-best closure (plans/media_dedup.mixed_keep_best_of) over one
+node-tagged family of 2 or 3 modalities: node = len(modalities) *
+doc_id + index of the doc's modality. The bimodal family
+(CM_MODALITIES: keyframe stills and clips, ``cm_*`` state) is the
+trimodal one (CM3_MODALITIES: + standalone audio recordings and each
+clip's soundtrack rip, ``cm3_*`` state) without its audio roles, and
+both run the same stage and tick bodies.
 
-A batch of NEW media docs contributes stills (keyframe thumbnails)
-and clips. Both fingerprint delta-only and probe the maintained
-node-tagged indexes through the SAME three edge families as the batch
-closure (plans/media_dedup.cross_modal_edges_of): thumb<->clip frame
-(banded Hamming), thumb<->thumb (banded Hamming), clip<->clip (exact
-frame-hash share >= VIDEO_SHARED_T). Verified edges lift onto the
-keeper graph and resolve by connected components + argmax(n_frames
-DESC, node ASC) over {batch nodes} u {matched incumbents' keepers}
-(operators/keep_best.resolve_keep_best — the same operator as the
-per-modality tick, on node ids 2*doc_id + is_video), so the tick's
-keep set stays row-identical to cross_modal_keep_best recomputed over
-everything processed so far — the IVM invariant the oracled
-``cross_modal_keep_best_delta`` twin hash-matches against the batch
-closure.
+A batch of NEW media docs fingerprints delta-only and probes the
+maintained indexes through the SAME edge families as the batch closure
+(plans/media_dedup.mixed_edges_of, delta form): thumb<->clip frame and
+thumb<->thumb (banded Hamming), clip<->clip (exact frame-hash share
+>= VIDEO_SHARED_T) and, with audio, rec<->rec and rec<->clip through
+the clip's rip (spectral bands). Verified edges lift onto the keeper
+graph and resolve by connected components + argmax of the family's
+keep rule (media_dedup.keep_rule: most frames for the bimodal family;
+modality rank video > audio > image, then units, for the trimodal one)
+with node ASC last (operators/keep_best.resolve_keep_best), so the
+tick's keep set stays row-identical to the batch closure recomputed
+over everything processed so far — the IVM invariant the oracled
+``cross_modal_keep_best_delta`` and ``cross_modal_trimodal_delta``
+twins hash-match against their batch closures.
 
-The semantics this buys a training pipeline: a thumbnail admitted
-while alone is DISPLACED the tick its source footage arrives — the
-footage keeps (most frames), the still flags 'displaced:near_dup',
-and every index row pointing at the still repoints to the clip.
+The semantics this buys a training pipeline: a thumbnail or recording
+admitted while alone is DISPLACED the tick its source footage arrives
+— the footage keeps, the artifact flags 'displaced:near_dup', and
+every index row pointing at it repoints to the clip.
 
-State under ``state_dir`` (plain parquet; production lands these
-through sinks/bucketed.py keyed on their join columns):
+State under ``state_dir`` (plain parquet), ``cm_`` prefix for the
+bimodal family and ``cm3_`` for the trimodal one:
 
-- ``cm_image_index`` (node, doc_id, dhash, keep_node, batch_id) —
-  every processed still, kept AND dropped (dropped fingerprints make
-  the cluster closure exact across ticks — the media tick's design).
-- ``cm_tband_index`` (doc_id, dhash, band, byte, batch_id) —
-  still-hash band rows CARRYING the hash: at DHASH_HAMMING_T = 12 >
-  7 the banding is part of the edge DEFINITION (a pair at Hamming
-  8..12 sharing no band is NOT an edge), so probes must verify the
-  exact banded hash pairs — carrying the hash makes the stored rows
-  the same frames image_bands_of builds, and the tick feeds them to
-  the factored cross_modal_edges_of unchanged.
-- ``cm_frame_index`` (node, doc_id, frame_dhash, n_frames, keep_node,
+- ``image_index`` (node, doc_id, dhash, keep_node, batch_id) — every
+  processed still, kept AND dropped (dropped fingerprints make the
+  cluster closure exact across ticks).
+- ``tband_index`` (doc_id, dhash, band, byte, batch_id) — still-hash
+  band rows CARRYING the hash: at DHASH_HAMMING_T = 12 > 7 the banding
+  is part of the edge DEFINITION (a pair at Hamming 8..12 sharing no
+  band is NOT an edge), so probes verify the exact banded hash pairs —
+  the stored rows are the frames image_bands_of builds, fed to the
+  edge builder unchanged.
+- ``frame_index`` (node, doc_id, frame_dhash, n_frames, keep_node,
   batch_id) — DISTINCT frame hashes per processed clip; n_frames is
-  the clip's decoded frame count (its quality).
-- ``cm_fband_index`` (doc_id, frame_dhash, band, byte, batch_id) —
+  the clip's decoded frame count.
+- ``fband_index`` (doc_id, frame_dhash, band, byte, batch_id) —
   frame-hash band rows, hash carried for the same reason.
-- ``cm_flags`` (doc_id, modality, status, batch_id) — 'kept',
+- trimodal only: ``audio_index`` (node, doc_id, sphash, n_windows,
+  keep_node, batch_id), and ``aband_index`` / ``trband_index``
+  (doc_id, sphash, band, byte, batch_id) — recording and rip band rows
+  on the AUDIO_SPHASH_BANDS layout, stamped by claim_state_layout.
+- ``flags`` (doc_id, modality, status, batch_id) — 'kept',
   'dropped:near_dup', 'displaced:near_dup' through the keyed MERGE.
 
 Replay safety: the contract of ``state.TickState``, flags keyed on
 (doc_id, modality).
 
-r13 additions:
-- ``unified_media_ingest_tick`` — THE production entry for a corpus
-  carrying photos, stills and clips: one Y4M decode of the batch
-  feeds BOTH the per-modality tick and this mixed tick.
-- the TRIMODAL family (``stage_trimodal_state`` /
-  ``trimodal_ingest_tick``) — three-modality state on nodes
-  3*doc_id + m adding standalone audio recordings and each clip's
-  soundtrack rip, resolved with the five edge families and the
-  (modality rank, units, node) argmax of
-  plans/media_dedup.cross_modal_keep_best_trimodal, whose oracled
-  delta twin (``cross_modal_trimodal_delta``) hash-matches the batch
-  closure this tick maintains.
+``unified_media_ingest_tick`` is the production entry for a corpus
+carrying photos, stills and clips: one Y4M decode of the batch feeds
+both the per-modality tick and this mixed tick.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from falcon_metrics_etl_spark.functions import multimodal as MM
 from falcon_metrics_etl_spark.operators.keep_best import resolve_keep_best
+from falcon_metrics_etl_spark.plans import media_dedup as MD
 from falcon_metrics_etl_spark.plans.media_dedup import (
     AUDIO_SPHASH_BANDS,
-    DHASH_HAMMING_T,
-    VIDEO_SHARED_T,
-    cross_modal_keep_best_of,
-    image_bands_of,
+    CM3_MODALITIES,
+    CM_MODALITIES,
+    keep_quality,
+    keep_rule,
+    mixed_fingerprints_of,
+    mixed_keep_best_of,
+    mixed_nodes_of,
+    mixed_probes_of,
 )
 from falcon_metrics_etl_spark.session import run_concurrent
 from falcon_metrics_etl_spark.state import (
@@ -82,9 +88,6 @@ from falcon_metrics_etl_spark.state import (
     overwrite_state,
 )
 
-# node = len(modalities) * doc_id + index of the doc's modality
-CM_MODALITIES = ("image", "video")
-CM3_MODALITIES = ("image", "video", "audio")
 CM_IMG_SCHEMA = (
     "node long, doc_id long, dhash long, keep_node long, batch_id long"
 )
@@ -97,6 +100,39 @@ CM_FBAND_SCHEMA = (
 CM_FRAME_SCHEMA = (
     "node long, doc_id long, frame_dhash long, n_frames long, "
     "keep_node long, batch_id long"
+)
+CM3_AUDIO_SCHEMA = (
+    "node long, doc_id long, sphash long, n_windows int, "
+    "keep_node long, batch_id long"
+)
+CM3_SPBAND_SCHEMA = (
+    "doc_id long, sphash long, band int, byte long, batch_id long"
+)
+# per modality, in family order: node index, its schema, the key a
+# repoint rewrites rows by, and the SQL expression of its decoded units
+_NODE_INDEXES = (
+    ("image_index", CM_IMG_SCHEMA, ["node"], "1"),
+    ("frame_index", CM_FRAME_SCHEMA, ["node", "frame_dhash"], "n_frames"),
+    ("audio_index", CM3_AUDIO_SCHEMA, ["node"], "n_windows"),
+)
+# per band probe frame of mixed_probes_of (after vsig), in order
+_BAND_INDEXES = (
+    ("tband_index", CM_TBAND_SCHEMA),
+    ("fband_index", CM_FBAND_SCHEMA),
+    ("aband_index", CM3_SPBAND_SCHEMA),
+    ("trband_index", CM3_SPBAND_SCHEMA),
+)
+
+# the trimodal state's spectral band tables are layout-sensitive: the
+# 4x16-bit operating point slices sphash differently from the older
+# 8x8, so stage AND tick stamp/verify the layout before touching state
+# (state.claim_state_layout — probing an old-layout index silently
+# re-admits duplicates otherwise)
+CM3_LAYOUT_TOKEN = (
+    f"sphash={AUDIO_SPHASH_BANDS}x{64 // AUDIO_SPHASH_BANDS}"
+)
+_CM3_LAYOUT_GUARDS = (
+    "cm3_aband_index", "cm3_trband_index", "cm3_audio_index"
 )
 
 
@@ -157,27 +193,255 @@ def _phase_timer():
     return mark
 
 
-def _fingerprint_batch(
-    batch_docs: DataFrame,
-    thumbs: DataFrame | None,
-    clips: DataFrame | None,
-    vfp: DataFrame | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Delta-only decode: (doc_id, dhash) stills and (doc_id,
-    frame_idx, frame_dhash) clip frames of the batch. ``vfp`` injects
-    already-decoded clip frames so the unified tick decodes each Y4M
-    stream once for both state families."""
-    if thumbs is None:
-        thumbs = MM.attach_payload_keyframe_thumbs(batch_docs)
-    t = MM.media_dhash(thumbs).select("doc_id", "dhash")
-    if vfp is not None:
-        return t, vfp.select("doc_id", "frame_idx", "frame_dhash")
-    if clips is None:
-        clips = MM.attach_payload_video_clips(batch_docs)
-    v = MM.video_frame_dhash(clips).select(
-        "doc_id", "frame_idx", "frame_dhash"
+def _claim_state(modalities: tuple, state_dir: str) -> str:
+    """The family's state-table prefix; a family with audio first
+    claims the spectral band layout of ``state_dir``."""
+    if "audio" not in modalities:
+        return "cm_"
+    claim_state_layout(
+        state_dir, CM3_LAYOUT_TOKEN, guard_tables=_CM3_LAYOUT_GUARDS
     )
-    return t, v
+    return "cm3_"
+
+
+def _cols(schema: str) -> list[str]:
+    """A state schema's columns without the batch_id tag."""
+    return [c.split()[0] for c in schema.split(",")][:-1]
+
+
+def _checkpoint(*dfs: DataFrame) -> list[DataFrame]:
+    """Eager checkpoints of independent frames, one concurrent wave."""
+    return run_concurrent(
+        *(lambda df=df: df.localCheckpoint(eager=True) for df in dfs)
+    )
+
+
+def _stage(
+    spark: SparkSession,
+    modalities: tuple,
+    docs: DataFrame,
+    state_dir: str,
+    batch_id: int,
+    **media,
+) -> None:
+    """Tick-0 backfill: run the batch closure of the family over the
+    base corpus and persist its full resolution as the maintained
+    state."""
+    pre = _claim_state(modalities, state_dir)
+    # backfill is job-count bound too: the decode checkpoints and the
+    # state writes each run as one concurrent wave
+    t, v, *audio = _checkpoint(
+        *mixed_fingerprints_of(modalities, docs, **media)
+    )
+    kb = mixed_keep_best_of(modalities, t, v, *audio).localCheckpoint(
+        eager=True
+    )
+    tag = F.lit(int(batch_id)).alias("batch_id")
+    vsig = v.select("doc_id", "frame_dhash").distinct()
+    units = F.col(keep_rule(modalities)[-1]).alias("n_frames")
+    writes = [
+        (
+            sub,
+            schema,
+            kb.filter(F.col("modality") == m)
+            .select("node", "doc_id", "keep_node", units)
+            .join(rows, "doc_id"),
+        )
+        for m, (sub, schema, _, _), rows in zip(
+            modalities, _NODE_INDEXES, (t, vsig, *audio)
+        )
+    ]
+    writes += [
+        (sub, schema, bands)
+        for (sub, schema), bands in zip(
+            _BAND_INDEXES, mixed_probes_of(t, vsig, *audio)[1:]
+        )
+    ]
+    run_concurrent(
+        *(
+            lambda sub=sub, schema=schema, df=df: overwrite_state(
+                df.select(*_cols(schema), tag), f"{state_dir}/{pre}{sub}"
+            )
+            for sub, schema, df in writes
+        )
+    )
+    overwrite_state(
+        _flags(
+            kb.select(
+                F.col("node").alias("doc_id"),
+                (F.col("node") == F.col("keep_node")).alias("is_kept"),
+            ),
+            modalities,
+            batch_id,
+        ),
+        f"{state_dir}/{pre}flags",
+    )
+
+
+def _tick(
+    spark: SparkSession,
+    modalities: tuple,
+    batch_docs: DataFrame,
+    state_dir: str,
+    batch_id: int,
+    vfp: DataFrame | None,
+    maintenance_file_threshold: int | None,
+    **media,
+) -> None:
+    """Process ONE delta batch of the family end to end (decode ->
+    probe every index -> joint resolve -> flag/repoint/append ->
+    maintain), idempotent under replay of the same (batch_docs,
+    batch_id)."""
+    pre = _claim_state(modalities, state_dir)
+    n = len(modalities)
+    bid = int(batch_id)
+    mark = _phase_timer()
+    t_new, v_new, *audio_new = mixed_fingerprints_of(
+        modalities, batch_docs, vfp=vfp, **media
+    )
+    # the per-role decode checkpoints are independent jobs — one
+    # concurrent wave (tick cost is job-count dominated at batch scale);
+    # injected frames are already checkpoint blocks
+    if vfp is None:
+        t_new, v_new, *audio_new = _checkpoint(t_new, v_new, *audio_new)
+    else:
+        t_new, *audio_new = _checkpoint(t_new, *audio_new)
+    mark("decode")
+    vsig_new = v_new.select("doc_id", "frame_dhash").distinct()
+    n_new = v_new.groupBy("doc_id").agg(
+        F.count(F.lit(1)).cast("long").alias("n_frames")
+    )
+    new = mixed_probes_of(t_new, vsig_new, *audio_new)
+    node_indexes = list(zip(modalities, _NODE_INDEXES))
+    band_indexes = list(zip(_BAND_INDEXES, new[1:]))
+
+    with TickState(spark, state_dir, bid) as st:
+        idx = [
+            st.probe(pre + sub, schema)
+            for _, (sub, schema, _, _) in node_indexes
+        ]
+        # probed side = stored band rows (hash carried) + the batch's own
+        # bands (batch-mate edges). No DISTINCT on the clip signature:
+        # stored frame rows are distinct per doc by the append contract,
+        # vsig_new is distinct, and the clip<->clip family re-distincts
+        # its (pair, frame) rows before counting
+        full = [idx[1].select("doc_id", "frame_dhash").unionByName(vsig_new)]
+        full += [
+            st.probe(pre + sub, schema).select(*_cols(schema)).unionByName(f)
+            for (sub, schema), f in band_indexes
+        ]
+        # ---- band appends, overlapped ----------------------------------
+        # the band-index appends depend ONLY on the decode outputs — not
+        # on edges/resolve — so they run WHILE the edge and resolve jobs
+        # compute and are joined as the block exits. Safe against the
+        # concurrent edge reads: every state-side edge read filters
+        # batch_id != bid (the replay contract already tolerates this
+        # batch's rows being present), and the probe frames above listed
+        # their file sets before these writes land.
+        st.start(
+            *(
+                lambda sub=sub, schema=schema, f=f: st.append(
+                    pre + sub, schema, f, "doc_id", _cols(schema)
+                )
+                for (sub, schema), f in band_indexes
+            )
+        )
+
+        # the probing side is the batch — micro-batch-bounded, so every
+        # edge family broadcasts it and the state side never shuffles.
+        # The edge builder is looked up at call time.
+        edges = MD.mixed_edges_of(
+            modalities, [F.broadcast(f) for f in new], full
+        ).localCheckpoint(eager=True)
+        mark("edges")
+
+        # joint resolution over the node-tagged ids
+        rule = keep_rule(modalities)
+        new_q = mixed_nodes_of(
+            modalities, t_new, v_new, *audio_new[:1]
+        ).select(F.col("node").alias("doc_id"), *rule)
+        # per-frame rows: bounded resolve dedupes per doc after its
+        # endpoint semi-join — no state-wide shuffle
+        idx_q = reduce(
+            DataFrame.unionByName,
+            (
+                df.select(
+                    F.col("node").alias("doc_id"),
+                    F.col("keep_node").alias("keep_id"),
+                    *keep_quality(modalities, m, F.expr(units)),
+                )
+                for (m, (_, _, _, units)), df in zip(node_indexes, idx)
+            ),
+        )
+        verdicts, displaced = resolve_keep_best(
+            new_q, idx_q, edges, rule, bounded_batch=True
+        )
+        verdicts, displaced = _checkpoint(verdicts, displaced)
+        mark("resolve")
+
+        # ---- 1) land flags (keyed merge) --------------------------------
+        flags = _flags(verdicts, modalities, bid, displaced)
+        # the flags merge touches only the flags table — disjoint from
+        # the repoints (node indexes) and every append — so it overlaps
+        st.start(
+            lambda: st.merge(pre + "flags", flags, ["doc_id", "modality"])
+        )
+        mark("flags")
+
+        # ---- 2) repoint displaced keepers, per modality -----------------
+        # a row's keeper can be any modality, so every index matches on
+        # keep_node; st.repoint rewrites only the indexes with a row
+        # that moves
+        if not displaced.isEmpty():
+            rp = displaced.select("doc_id", "new_keep").localCheckpoint(
+                eager=True
+            )
+            # per-modality repoints touch disjoint tables — concurrent
+            run_concurrent(
+                *(
+                    lambda sub=sub, schema=schema, keys=keys: st.repoint(
+                        pre + sub, schema, rp, "keep_node", keys
+                    )
+                    for _, (sub, schema, keys, _) in node_indexes
+                )
+            )
+        mark("repoint")
+
+        # ---- 3) append the batch (kept AND dropped; anti-joined) --------
+        kmap = verdicts.select(
+            F.col("doc_id").alias("node"), F.col("keep_id").alias("keep_node")
+        )
+        rows = (t_new, vsig_new.join(n_new, "doc_id"), *audio_new[:1])
+        # the node appends run as one concurrent wave; the band appends
+        # (started after decode) and the flags merge (started after
+        # resolve) join as the block exits, before maintenance can
+        # compact the tables they write
+        run_concurrent(
+            *(
+                lambda sub=sub, schema=schema, df=df, i=i: st.append(
+                    pre + sub,
+                    schema,
+                    df.select(
+                        (F.col("doc_id") * n + i).alias("node"),
+                        *_cols(schema)[1:-1],
+                    ).join(F.broadcast(kmap), "node"),
+                    "node",
+                    _cols(schema),
+                )
+                for i, ((_, (sub, schema, _, _)), df) in enumerate(
+                    zip(node_indexes, rows)
+                )
+            )
+        )
+    mark("append")
+
+    # ---- in-cadence maintenance: GC retired state snapshots, compact
+    # tables past the live-file threshold
+    if maintenance_file_threshold is not None:
+        maintain_state_dir(
+            spark, state_dir, file_threshold=maintenance_file_threshold
+        )
+        mark("maintenance")
 
 
 def stage_cross_modal_state(
@@ -188,64 +452,10 @@ def stage_cross_modal_state(
     thumbs: DataFrame | None = None,
     clips: DataFrame | None = None,
 ) -> None:
-    """Tick-0 backfill: run the BATCH mixed closure over the base
-    corpus and persist its full resolution as the maintained state."""
-    t, v = _fingerprint_batch(docs, thumbs, clips)
-    # backfill is job-count bound too: concurrent waves (r14)
-    t, v = run_concurrent(
-        lambda: t.localCheckpoint(eager=True),
-        lambda: v.localCheckpoint(eager=True),
-    )
-    kb = cross_modal_keep_best_of(t, v).localCheckpoint(eager=True)
-    tag = F.lit(int(batch_id)).alias("batch_id")
-    imgs = kb.filter(F.col("modality") == "image").select(
-        "node", "doc_id", "keep_node"
-    )
-    vids = kb.filter(F.col("modality") == "video").select(
-        "node", "doc_id", "n_frames", "keep_node"
-    )
-    vsig = v.select("doc_id", "frame_dhash").distinct()
-
-    def _w(df, sub):
-        return lambda: overwrite_state(df, f"{state_dir}/{sub}")
-
-    run_concurrent(
-        _w(
-            imgs.join(t, "doc_id").select(
-                "node", "doc_id", "dhash", "keep_node", tag
-            ),
-            "cm_image_index",
-        ),
-        _w(
-            image_bands_of(t).select(
-                "doc_id", "dhash", "band", "byte", tag
-            ),
-            "cm_tband_index",
-        ),
-        _w(
-            vids.join(vsig, "doc_id").select(
-                "node", "doc_id", "frame_dhash", "n_frames",
-                "keep_node", tag,
-            ),
-            "cm_frame_index",
-        ),
-        _w(
-            image_bands_of(vsig, "frame_dhash").select(
-                "doc_id", "frame_dhash", "band", "byte", tag
-            ),
-            "cm_fband_index",
-        ),
-    )
-    overwrite_state(
-        _flags(
-            kb.select(
-                F.col("node").alias("doc_id"),
-                (F.col("node") == F.col("keep_node")).alias("is_kept"),
-            ),
-            CM_MODALITIES,
-            batch_id,
-        ),
-        f"{state_dir}/cm_flags",
+    """Tick-0 backfill of the bimodal (still + clip) family."""
+    _stage(
+        spark, CM_MODALITIES, docs, state_dir, batch_id,
+        thumbs=thumbs, clips=clips,
     )
 
 
@@ -259,172 +469,51 @@ def cross_modal_ingest_tick(
     vfp: DataFrame | None = None,
     maintenance_file_threshold: int | None = 64,
 ) -> None:
-    """Process ONE delta batch end to end (decode -> probe both
-    modality indexes -> joint resolve -> flag/repoint/append),
-    idempotent under replay of the same (batch_docs, batch_id).
-    ``vfp`` injects already-decoded clip frames (see
-    unified_media_ingest_tick)."""
-    bid = int(batch_id)
-    t_new, v_new = _fingerprint_batch(batch_docs, thumbs, clips, vfp)
-    if vfp is None:  # injected frames are already checkpoint blocks
-        # the two decode checkpoints are independent jobs — one
-        # concurrent wave (r17, matching the trimodal tick)
-        t_new, v_new = run_concurrent(
-            lambda: t_new.localCheckpoint(eager=True),
-            lambda: v_new.localCheckpoint(eager=True),
-        )
-    else:
-        t_new = t_new.localCheckpoint(eager=True)
-    vsig_new = v_new.select("doc_id", "frame_dhash").distinct()
-    n_new = v_new.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_frames")
+    """One delta tick of the bimodal family. ``vfp`` injects
+    already-decoded clip frames (see unified_media_ingest_tick)."""
+    _tick(
+        spark, CM_MODALITIES, batch_docs, state_dir, batch_id, vfp,
+        maintenance_file_threshold, thumbs=thumbs, clips=clips,
     )
 
-    with TickState(spark, state_dir, bid) as st:
-        img_idx = st.probe("cm_image_index", CM_IMG_SCHEMA)
-        tband_idx = st.probe("cm_tband_index", CM_TBAND_SCHEMA)
-        frame_idx = st.probe("cm_frame_index", CM_FRAME_SCHEMA)
-        fband_idx = st.probe("cm_fband_index", CM_FBAND_SCHEMA)
 
-        # probed side = stored band rows (hash carried) + the batch's own
-        # bands (batch-mate edges); these ARE the frames image_bands_of
-        # builds, so the tick feeds the factored edge builder unchanged —
-        # one definition of the three families across batch query, delta
-        # query and tick
-        tb_new = image_bands_of(t_new)
-        fb_new = image_bands_of(vsig_new, "frame_dhash")
-        tb_all = tband_idx.select(
-            "doc_id", "dhash", "band", "byte"
-        ).unionByName(tb_new)
-        fb_all = fband_idx.select(
-            "doc_id", "frame_dhash", "band", "byte"
-        ).unionByName(fb_new)
-        # no DISTINCT here: stored frame rows are distinct per doc by the
-        # append contract, vsig_new is distinct, and the clip<->clip edge
-        # family re-distincts its (pair, frame) rows before counting — so
-        # the union-wide dedupe was a state-sized shuffle for nothing
-        vsig_all = frame_idx.select("doc_id", "frame_dhash").unionByName(
-            vsig_new
-        )
+def stage_trimodal_state(
+    spark: SparkSession,
+    docs: DataFrame,
+    state_dir: str,
+    batch_id: int = 0,
+    thumbs: DataFrame | None = None,
+    clips: DataFrame | None = None,
+    recordings: DataFrame | None = None,
+    tracks: DataFrame | None = None,
+) -> None:
+    """Tick-0 backfill of the trimodal (still + clip + recording)
+    family."""
+    _stage(
+        spark, CM3_MODALITIES, docs, state_dir, batch_id,
+        thumbs=thumbs, clips=clips, recordings=recordings, tracks=tracks,
+    )
 
-        from falcon_metrics_etl_spark.plans.media_dedup import (
-            cross_modal_edges_of,
-        )
 
-        # ---- band appends, overlapped (r17, guide §2.6) -----------------
-        # the two band-index appends depend ONLY on the decode outputs —
-        # they run WHILE the edge/resolve jobs compute and join as the
-        # block exits. Safe against the concurrent edge reads:
-        # every state-side read filters batch_id != bid (the replay
-        # contract already tolerates this batch's rows), and the probe
-        # frames above listed their files before these writes land.
-        st.start(
-            lambda: st.append(
-                "cm_tband_index", CM_TBAND_SCHEMA, tb_new, "doc_id",
-                ["doc_id", "dhash", "band", "byte"],
-            ),
-            lambda: st.append(
-                "cm_fband_index", CM_FBAND_SCHEMA, fb_new, "doc_id",
-                ["doc_id", "frame_dhash", "band", "byte"],
-            ),
-        )
-
-        # the probing side is the batch — micro-batch-bounded, so every
-        # edge family broadcasts it and the state side never shuffles
-        edges = cross_modal_edges_of(
-            F.broadcast(tb_new), tb_all, F.broadcast(fb_new), fb_all,
-            F.broadcast(vsig_new), vsig_all,
-        ).localCheckpoint(eager=True)
-
-        # joint resolution over modality-tagged nodes
-        new_q = t_new.select(
-            (F.col("doc_id") * 2).alias("doc_id"),
-            F.lit(1).cast("long").alias("n_frames"),
-        ).unionByName(
-            n_new.select(
-                (F.col("doc_id") * 2 + 1).alias("doc_id"), "n_frames"
-            )
-        )
-        idx_q = img_idx.select(
-            F.col("node").alias("doc_id"),
-            F.col("keep_node").alias("keep_id"),
-            F.lit(1).cast("long").alias("n_frames"),
-        ).unionByName(
-            # one row per (doc, frame_dhash): resolve_keep_best's bounded
-            # path dedupes per doc AFTER its endpoint semi-join (r16) —
-            # deduping here cost a state-wide shuffle every tick
-            frame_idx.select(
-                F.col("node").alias("doc_id"),
-                F.col("keep_node").alias("keep_id"),
-                "n_frames",
-            )
-        )
-        verdicts, displaced = resolve_keep_best(
-            new_q, idx_q, edges, ["n_frames"], bounded_batch=True
-        )
-        verdicts, displaced = run_concurrent(
-            lambda: verdicts.localCheckpoint(eager=True),
-            lambda: displaced.localCheckpoint(eager=True),
-        )
-
-        # ---- 1) land flags (keyed merge) --------------------------------
-        flags = _flags(verdicts, CM_MODALITIES, bid, displaced)
-        # r17: the flags merge touches only cm_flags — disjoint from the
-        # repoints and appends — so it overlaps them
-        st.start(lambda: st.merge("cm_flags", flags, ["doc_id", "modality"]))
-
-        # ---- 2) repoint displaced keepers across BOTH indexes -----------
-        if not displaced.isEmpty():
-            # the two index repoints touch disjoint tables — concurrent
-            run_concurrent(
-                lambda: st.repoint(
-                    "cm_image_index", CM_IMG_SCHEMA, displaced, "keep_node",
-                    ["node"],
-                ),
-                lambda: st.repoint(
-                    "cm_frame_index", CM_FRAME_SCHEMA, displaced, "keep_node",
-                    ["node", "frame_dhash"],
-                ),
-            )
-
-        # ---- 3) append the batch (kept AND dropped; anti-joined) --------
-        # (the two band appends were started after decode)
-        kmap = verdicts.select(
-            F.col("doc_id").alias("node"), F.col("keep_id").alias("keep_node")
-        )
-
-        new_img = t_new.select(
-            (F.col("doc_id") * 2).alias("node"), "doc_id", "dhash"
-        ).join(F.broadcast(kmap), "node")
-        new_fr = (
-            vsig_new.select(
-                (F.col("doc_id") * 2 + 1).alias("node"),
-                "doc_id",
-                "frame_dhash",
-            )
-            .join(F.broadcast(n_new), "doc_id")
-            .join(F.broadcast(kmap), "node")
-        )
-        # the two node appends run as one concurrent wave; the band
-        # appends and the flags merge join as the block exits, before
-        # maintenance can compact the tables they write
-        run_concurrent(
-            lambda: st.append(
-                "cm_image_index", CM_IMG_SCHEMA, new_img, "node",
-                ["node", "doc_id", "dhash", "keep_node"],
-            ),
-            lambda: st.append(
-                "cm_frame_index", CM_FRAME_SCHEMA, new_fr, "node",
-                ["node", "doc_id", "frame_dhash", "n_frames", "keep_node"],
-            ),
-        )
-
-    # ---- in-cadence maintenance (r15, verdict #1): GC retired state
-    # snapshots, compact tables past the live-file threshold
-    if maintenance_file_threshold is not None:
-        maintain_state_dir(
-            spark, state_dir, file_threshold=maintenance_file_threshold
-        )
+def trimodal_ingest_tick(
+    spark: SparkSession,
+    batch_docs: DataFrame,
+    state_dir: str,
+    batch_id: int,
+    thumbs: DataFrame | None = None,
+    clips: DataFrame | None = None,
+    recordings: DataFrame | None = None,
+    tracks: DataFrame | None = None,
+    vfp: DataFrame | None = None,
+    maintenance_file_threshold: int | None = 64,
+) -> None:
+    """One delta tick of the trimodal family. ``vfp`` injects
+    already-decoded clip frames (see unified_media_ingest_tick)."""
+    _tick(
+        spark, CM3_MODALITIES, batch_docs, state_dir, batch_id, vfp,
+        maintenance_file_threshold, thumbs=thumbs, clips=clips,
+        recordings=recordings, tracks=tracks,
+    )
 
 
 def unified_media_ingest_tick(
@@ -498,443 +587,3 @@ def unified_media_ingest_tick(
             spark, batch_docs, cm_state_dir, batch_id,
             thumbs=thumbs, vfp=vfp,
         )
-
-
-# ---------------------------------------------------------------------------
-# TRIMODAL tick (r13): the three-modality extension — thumbnails,
-# clips AND audio (standalone recordings + each clip's soundtrack rip)
-# maintain one node-tagged state family on 3*doc_id + m, resolved per
-# batch with the SAME five edge families and (modality rank, units,
-# node) argmax as the batch closure; the oracled
-# ``cross_modal_trimodal_delta`` twin hash-matches that closure, which
-# is the invariant this tick maintains per batch. A recording admitted
-# while alone is DISPLACED the tick its source footage (whose rip
-# matches it) arrives.
-# ---------------------------------------------------------------------------
-CM3_AUDIO_SCHEMA = (
-    "node long, doc_id long, sphash long, n_windows int, "
-    "keep_node long, batch_id long"
-)
-CM3_SPBAND_SCHEMA = (
-    "doc_id long, sphash long, band int, byte long, batch_id long"
-)
-
-# the trimodal state's spectral band tables are layout-sensitive: the
-# r15 4x16-bit operating point slices sphash differently from r14's
-# 8x8, so stage AND tick stamp/verify the layout before touching state
-# (state.claim_state_layout — probing an old-layout index silently
-# re-admits duplicates otherwise)
-CM3_LAYOUT_TOKEN = (
-    f"sphash={AUDIO_SPHASH_BANDS}x{64 // AUDIO_SPHASH_BANDS}"
-)
-_CM3_LAYOUT_GUARDS = (
-    "cm3_aband_index", "cm3_trband_index", "cm3_audio_index"
-)
-
-
-def _claim_cm3_layout(state_dir: str) -> None:
-    claim_state_layout(
-        state_dir, CM3_LAYOUT_TOKEN, guard_tables=_CM3_LAYOUT_GUARDS
-    )
-
-
-def _fingerprint_batch3(
-    batch_docs: DataFrame,
-    thumbs: DataFrame | None,
-    clips: DataFrame | None,
-    recordings: DataFrame | None,
-    tracks: DataFrame | None,
-    vfp: DataFrame | None = None,
-) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
-    """Delta-only decode of all four media roles: (doc_id, dhash)
-    stills, (doc_id, frame_idx, frame_dhash) clip frames, (doc_id,
-    n_windows, sphash) recordings, (doc_id, sphash) soundtrack rips.
-    ``vfp`` injects already-decoded clip frames (the unified tick's
-    decode-once contract)."""
-    if thumbs is None:
-        thumbs = MM.attach_payload_keyframe_thumbs(batch_docs)
-    if clips is None and vfp is None:
-        clips = MM.attach_payload_video_clips(batch_docs)
-    if recordings is None:
-        recordings = MM.attach_payload_audio_clips(batch_docs)
-    if tracks is None:
-        tracks = MM.attach_payload_soundtrack_wavs(batch_docs)
-    t = MM.media_dhash(thumbs).select("doc_id", "dhash")
-    if vfp is not None:
-        v = vfp.select("doc_id", "frame_idx", "frame_dhash")
-    else:
-        v = MM.video_frame_dhash(clips).select(
-            "doc_id", "frame_idx", "frame_dhash"
-        )
-    a = MM.audio_spectral_dhash(recordings).select(
-        "doc_id", "n_windows", "sphash"
-    )
-    r = MM.audio_spectral_dhash(tracks).select("doc_id", "sphash")
-    return t, v, a, r
-
-
-def stage_trimodal_state(
-    spark: SparkSession,
-    docs: DataFrame,
-    state_dir: str,
-    batch_id: int = 0,
-    thumbs: DataFrame | None = None,
-    clips: DataFrame | None = None,
-    recordings: DataFrame | None = None,
-    tracks: DataFrame | None = None,
-) -> None:
-    """Tick-0 backfill: run the BATCH trimodal closure over the base
-    corpus and persist its full resolution as the maintained state."""
-    _claim_cm3_layout(state_dir)
-    from falcon_metrics_etl_spark.plans.media_dedup import (
-        trimodal_keep_best_of,
-    )
-
-    t, v, a, r = _fingerprint_batch3(
-        docs, thumbs, clips, recordings, tracks
-    )
-    # backfill cost is job-count bound too: decode checkpoints and
-    # the eight state writes each run as one concurrent wave (r14)
-    t, v, a, r = run_concurrent(
-        lambda: t.localCheckpoint(eager=True),
-        lambda: v.localCheckpoint(eager=True),
-        lambda: a.localCheckpoint(eager=True),
-        lambda: r.localCheckpoint(eager=True),
-    )
-    kb = trimodal_keep_best_of(t, v, a, r).localCheckpoint(eager=True)
-    tag = F.lit(int(batch_id)).alias("batch_id")
-    vsig = v.select("doc_id", "frame_dhash").distinct()
-
-    def _w(df, sub):
-        return lambda: overwrite_state(df, f"{state_dir}/{sub}")
-
-    run_concurrent(
-        _w(
-            kb.filter(F.col("modality") == "image")
-            .select("node", "doc_id", "keep_node")
-            .join(t, "doc_id")
-            .select("node", "doc_id", "dhash", "keep_node", tag),
-            "cm3_image_index",
-        ),
-        _w(
-            image_bands_of(t).select(
-                "doc_id", "dhash", "band", "byte", tag
-            ),
-            "cm3_tband_index",
-        ),
-        _w(
-            kb.filter(F.col("modality") == "video")
-            .select(
-                "node", "doc_id",
-                F.col("n_units").alias("n_frames"), "keep_node",
-            )
-            .join(vsig, "doc_id")
-            .select(
-                "node", "doc_id", "frame_dhash", "n_frames",
-                "keep_node", tag,
-            ),
-            "cm3_frame_index",
-        ),
-        _w(
-            image_bands_of(vsig, "frame_dhash").select(
-                "doc_id", "frame_dhash", "band", "byte", tag
-            ),
-            "cm3_fband_index",
-        ),
-        _w(
-            kb.filter(F.col("modality") == "audio")
-            .select("node", "doc_id", "keep_node")
-            .join(a, "doc_id")
-            .select(
-                "node", "doc_id", "sphash", "n_windows", "keep_node", tag
-            ),
-            "cm3_audio_index",
-        ),
-        _w(
-            image_bands_of(a.select("doc_id", "sphash"), "sphash", n_bands=AUDIO_SPHASH_BANDS).select(
-                "doc_id", "sphash", "band", "byte", tag
-            ),
-            "cm3_aband_index",
-        ),
-        _w(
-            image_bands_of(r, "sphash", n_bands=AUDIO_SPHASH_BANDS).select(
-                "doc_id", "sphash", "band", "byte", tag
-            ),
-            "cm3_trband_index",
-        ),
-    )
-    overwrite_state(
-        _flags(
-            kb.select(
-                F.col("node").alias("doc_id"),
-                (F.col("node") == F.col("keep_node")).alias("is_kept"),
-            ),
-            CM3_MODALITIES,
-            batch_id,
-        ),
-        f"{state_dir}/cm3_flags",
-    )
-
-
-def trimodal_ingest_tick(
-    spark: SparkSession,
-    batch_docs: DataFrame,
-    state_dir: str,
-    batch_id: int,
-    thumbs: DataFrame | None = None,
-    clips: DataFrame | None = None,
-    recordings: DataFrame | None = None,
-    tracks: DataFrame | None = None,
-    vfp: DataFrame | None = None,
-    maintenance_file_threshold: int | None = 64,
-) -> None:
-    """Process ONE delta batch across all three modalities (decode ->
-    probe every index -> joint resolve -> flag/repoint/append),
-    idempotent under replay of the same (batch_docs, batch_id).
-    ``vfp`` injects already-decoded clip frames (see
-    unified_media_ingest_tick)."""
-    _claim_cm3_layout(state_dir)
-    from falcon_metrics_etl_spark.plans.media_dedup import (
-        trimodal_edges_delta,
-    )
-
-    bid = int(batch_id)
-    mark = _phase_timer()
-    t_new, v_new, a_new, r_new = _fingerprint_batch3(
-        batch_docs, thumbs, clips, recordings, tracks, vfp
-    )
-    # the four per-modality decode checkpoints are independent jobs —
-    # submit them concurrently (r14, r13 verdict #2: tick cost is
-    # job-count dominated at batch scale)
-    if vfp is None:  # injected frames are already checkpoint blocks
-        t_new, v_new, a_new, r_new = run_concurrent(
-            lambda df=t_new: df.localCheckpoint(eager=True),
-            lambda df=v_new: df.localCheckpoint(eager=True),
-            lambda df=a_new: df.localCheckpoint(eager=True),
-            lambda df=r_new: df.localCheckpoint(eager=True),
-        )
-    else:
-        t_new, a_new, r_new = run_concurrent(
-            lambda df=t_new: df.localCheckpoint(eager=True),
-            lambda df=a_new: df.localCheckpoint(eager=True),
-            lambda df=r_new: df.localCheckpoint(eager=True),
-        )
-    mark("decode")
-    vsig_new = v_new.select("doc_id", "frame_dhash").distinct()
-    n_new = v_new.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_frames")
-    )
-
-    with TickState(spark, state_dir, bid) as st:
-        img_idx = st.probe("cm3_image_index", CM_IMG_SCHEMA)
-        tband_idx = st.probe("cm3_tband_index", CM_TBAND_SCHEMA)
-        frame_idx = st.probe("cm3_frame_index", CM_FRAME_SCHEMA)
-        fband_idx = st.probe("cm3_fband_index", CM_FBAND_SCHEMA)
-        audio_idx = st.probe("cm3_audio_index", CM3_AUDIO_SCHEMA)
-        aband_idx = st.probe("cm3_aband_index", CM3_SPBAND_SCHEMA)
-        trband_idx = st.probe("cm3_trband_index", CM3_SPBAND_SCHEMA)
-
-        tb_new = image_bands_of(t_new)
-        fb_new = image_bands_of(vsig_new, "frame_dhash")
-        rb_new = image_bands_of(
-            a_new.select("doc_id", "sphash"), "sphash",
-            n_bands=AUDIO_SPHASH_BANDS,
-        )
-        trb_new = image_bands_of(r_new, "sphash", n_bands=AUDIO_SPHASH_BANDS)
-        tb_all = tband_idx.select(
-            "doc_id", "dhash", "band", "byte"
-        ).unionByName(tb_new)
-        fb_all = fband_idx.select(
-            "doc_id", "frame_dhash", "band", "byte"
-        ).unionByName(fb_new)
-        rb_all = aband_idx.select(
-            "doc_id", "sphash", "band", "byte"
-        ).unionByName(rb_new)
-        trb_all = trband_idx.select(
-            "doc_id", "sphash", "band", "byte"
-        ).unionByName(trb_new)
-        # no DISTINCT here: stored frame rows are distinct per doc by the
-        # append contract, vsig_new is distinct, and the clip<->clip edge
-        # family re-distincts its (pair, frame) rows before counting — so
-        # the union-wide dedupe was a state-sized shuffle for nothing
-        vsig_all = frame_idx.select("doc_id", "frame_dhash").unionByName(
-            vsig_new
-        )
-        # ---- band appends, overlapped (r17, guide §2.6) -----------------
-        # the four band-index appends depend ONLY on the decode outputs —
-        # not on edges/resolve — so they run WHILE the edge and resolve
-        # jobs compute and are joined as the block exits. Safe against
-        # the concurrent edge reads: every state-side edge read
-        # filters batch_id != bid (the replay contract already tolerates
-        # this batch's rows being present), and the probe frames above
-        # listed their file sets before these writes land.
-        band_frames = (
-            ("cm3_tband_index", CM_TBAND_SCHEMA, tb_new,
-             ["doc_id", "dhash", "band", "byte"]),
-            ("cm3_fband_index", CM_FBAND_SCHEMA, fb_new,
-             ["doc_id", "frame_dhash", "band", "byte"]),
-            ("cm3_aband_index", CM3_SPBAND_SCHEMA, rb_new,
-             ["doc_id", "sphash", "band", "byte"]),
-            ("cm3_trband_index", CM3_SPBAND_SCHEMA, trb_new,
-             ["doc_id", "sphash", "band", "byte"]),
-        )
-        st.start(
-            *(
-                lambda s=sub, sc=schema, f=frame, c=cols: st.append(
-                    s, sc, f, "doc_id", c
-                )
-                for sub, schema, frame, cols in band_frames
-            )
-        )
-
-        # the probing side is the batch — micro-batch-bounded, so every
-        # edge family broadcasts it and the state side never shuffles
-        edges = trimodal_edges_delta(
-            F.broadcast(tb_new), tb_all, F.broadcast(fb_new), fb_all,
-            F.broadcast(vsig_new), vsig_all,
-            F.broadcast(rb_new), rb_all, F.broadcast(trb_new), trb_all,
-        ).localCheckpoint(eager=True)
-        mark("edges")
-
-        # joint resolution: quality = (modality rank, decoded units)
-        new_q = (
-            t_new.select(
-                (F.col("doc_id") * 3).alias("doc_id"),
-                F.lit(0).alias("mrank"),
-                F.lit(1).cast("long").alias("n_units"),
-            )
-            .unionByName(
-                n_new.select(
-                    (F.col("doc_id") * 3 + 1).alias("doc_id"),
-                    F.lit(2).alias("mrank"),
-                    F.col("n_frames").alias("n_units"),
-                )
-            )
-            .unionByName(
-                a_new.select(
-                    (F.col("doc_id") * 3 + 2).alias("doc_id"),
-                    F.lit(1).alias("mrank"),
-                    F.col("n_windows").cast("long").alias("n_units"),
-                )
-            )
-        )
-        idx_q = (
-            img_idx.select(
-                F.col("node").alias("doc_id"),
-                F.col("keep_node").alias("keep_id"),
-                F.lit(0).alias("mrank"),
-                F.lit(1).cast("long").alias("n_units"),
-            )
-            .unionByName(
-                # per-frame rows: bounded resolve dedupes per doc after
-                # its endpoint semi-join (r16) — no state-wide shuffle
-                frame_idx.select(
-                    F.col("node").alias("doc_id"),
-                    F.col("keep_node").alias("keep_id"),
-                    F.lit(2).alias("mrank"),
-                    F.col("n_frames").alias("n_units"),
-                )
-            )
-            .unionByName(
-                audio_idx.select(
-                    F.col("node").alias("doc_id"),
-                    F.col("keep_node").alias("keep_id"),
-                    F.lit(1).alias("mrank"),
-                    F.col("n_windows").cast("long").alias("n_units"),
-                )
-            )
-        )
-        verdicts, displaced = resolve_keep_best(
-            new_q, idx_q, edges, ["mrank", "n_units"], bounded_batch=True
-        )
-        verdicts, displaced = run_concurrent(
-            lambda: verdicts.localCheckpoint(eager=True),
-            lambda: displaced.localCheckpoint(eager=True),
-        )
-        mark("resolve")
-
-        # ---- 1) land flags (keyed merge) --------------------------------
-        flags = _flags(verdicts, CM3_MODALITIES, bid, displaced)
-        # r17: the flags merge touches only cm3_flags — disjoint from the
-        # repoints (node indexes) and every append — so it overlaps them
-        st.start(lambda: st.merge("cm3_flags", flags, ["doc_id", "modality"]))
-        mark("flags")
-
-        # ---- 2) repoint displaced keepers, per modality -----------------
-        # a row's keeper can be any modality, so every index matches on
-        # keep_node regardless of parity; st.repoint rewrites only the
-        # indexes with a row that moves
-        if not displaced.isEmpty():
-            rp = displaced.select("doc_id", "new_keep").localCheckpoint(
-                eager=True
-            )
-            # per-modality repoints touch disjoint tables — concurrent
-            run_concurrent(
-                *(
-                    lambda s=sub, sc=schema, k=keys: st.repoint(
-                        s, sc, rp, "keep_node", k
-                    )
-                    for sub, schema, keys in (
-                        ("cm3_image_index", CM_IMG_SCHEMA, ["node"]),
-                        (
-                            "cm3_frame_index",
-                            CM_FRAME_SCHEMA,
-                            ["node", "frame_dhash"],
-                        ),
-                        ("cm3_audio_index", CM3_AUDIO_SCHEMA, ["node"]),
-                    )
-                )
-            )
-        mark("repoint")
-
-        # ---- 3) append the batch (kept AND dropped; anti-joined) --------
-        # (the four band appends were started right after decode)
-        kmap = verdicts.select(
-            F.col("doc_id").alias("node"), F.col("keep_id").alias("keep_node")
-        )
-        node_frames = (
-            (
-                "cm3_image_index", CM_IMG_SCHEMA,
-                t_new.select(
-                    (F.col("doc_id") * 3).alias("node"), "doc_id", "dhash"
-                ),
-                ["node", "doc_id", "dhash", "keep_node"],
-            ),
-            (
-                "cm3_frame_index", CM_FRAME_SCHEMA,
-                vsig_new.select(
-                    (F.col("doc_id") * 3 + 1).alias("node"),
-                    "doc_id", "frame_dhash",
-                ).join(n_new.select("doc_id", "n_frames"), "doc_id"),
-                ["node", "doc_id", "frame_dhash", "n_frames", "keep_node"],
-            ),
-            (
-                "cm3_audio_index", CM3_AUDIO_SCHEMA,
-                a_new.select(
-                    (F.col("doc_id") * 3 + 2).alias("node"),
-                    "doc_id", "sphash", "n_windows",
-                ),
-                ["node", "doc_id", "sphash", "n_windows", "keep_node"],
-            ),
-        )
-        # the three node appends run as one concurrent wave; the band
-        # appends (started after decode) and the flags merge (started
-        # after resolve) join as the block exits, before maintenance can
-        # compact the tables they write
-        run_concurrent(
-            *(
-                lambda s=sub, sc=schema, f=frame, c=cols: st.append(
-                    s, sc, f.join(F.broadcast(kmap), "node"), "node", c
-                )
-                for sub, schema, frame, cols in node_frames
-            )
-        )
-    mark("append")
-
-    # ---- in-cadence maintenance (r15, verdict #1): GC retired state
-    # snapshots, compact tables past the live-file threshold
-    if maintenance_file_threshold is not None:
-        maintain_state_dir(
-            spark, state_dir, file_threshold=maintenance_file_threshold
-        )
-        mark("maintenance")

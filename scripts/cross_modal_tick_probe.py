@@ -1,11 +1,13 @@
-"""Cross-modal tick flatness probe: stage the mixed thumb/clip
-indexes on a 1x corpus (sf0.001, 500 docs) and a 10x corpus (sf0.1,
-5000 docs), then tick the SAME fixed fresh-group delta against each
-and compare wall clock — the claim under test is that tick cost
-scales with the DELTA, not the maintained state (the media tick's
-witness, extended to the joint image/video closure).
+"""Cross-modal tick flatness probe: stage a cross-modal family's
+node-tagged indexes on a 1x corpus (sf0.001, 500 docs) and a 10x
+corpus (sf0.1, 5000 docs), then tick the SAME fixed fresh-group delta
+against each and compare wall clock — the claim under test is that
+tick cost scales with the DELTA, not the maintained state (the media
+tick's witness, extended to the joint closure). ``bimodal`` stages
+thumbnails and clips; ``trimodal`` adds recordings and soundtrack
+rips.
 
-Usage: python scripts/cross_modal_tick_probe.py [n_delta] [draws]
+Usage: python scripts/cross_modal_tick_probe.py [bimodal|trimodal] [n_delta] [draws]
 """
 
 from __future__ import annotations
@@ -22,15 +24,25 @@ from falcon_metrics_etl_spark.sources import load_table
 from falcon_metrics_etl_spark.streaming.cross_modal_tick import (
     cross_modal_ingest_tick,
     stage_cross_modal_state,
+    stage_trimodal_state,
+    trimodal_ingest_tick,
 )
 
 
 def main() -> None:
-    n_delta = int(sys.argv[1]) if len(sys.argv) > 1 else 120
-    draws = int(sys.argv[2]) if len(sys.argv) > 2 else 3
-    spark = get_spark("cross_modal_tick_probe")
+    family = sys.argv[1] if len(sys.argv) > 1 else "bimodal"
+    if family == "bimodal":
+        stage, tick = stage_cross_modal_state, cross_modal_ingest_tick
+    elif family == "trimodal":
+        stage, tick = stage_trimodal_state, trimodal_ingest_tick
+    else:
+        raise SystemExit("family must be bimodal or trimodal")
+    n_delta = int(sys.argv[2]) if len(sys.argv) > 2 else 120
+    draws = int(sys.argv[3]) if len(sys.argv) > 3 else 3
+    spark = get_spark(f"{family}_tick_probe")
     # fixed delta: fresh content groups far beyond both corpora;
-    # multiples of CM_THUMB_MOD land thumbnails in every batch
+    # multiples of CM_THUMB_MOD/CM_TRACK_MOD land thumbnails and rips
+    # in every batch
     delta = spark.createDataFrame(
         [(10_000_000 + i,) for i in range(n_delta)], "doc_id long"
     ).persist()
@@ -39,14 +51,14 @@ def main() -> None:
     results = {}
     for tag, sf_dir in (("1x", "/root/testdata/sf0.001"),
                         ("10x", "/root/testdata/sf0.1")):
-        state = tempfile.mkdtemp(prefix=f"cm_probe_{tag}_")
+        state = tempfile.mkdtemp(prefix=f"{family}_probe_{tag}_")
         base = load_table(spark, sf_dir, "documents").select("doc_id")
-        stage_cross_modal_state(spark, base, state, batch_id=0)
-        cross_modal_ingest_tick(spark, delta, state, batch_id=1)
+        stage(spark, base, state, batch_id=0)
+        tick(spark, delta, state, batch_id=1)
         runs = []
         for _ in range(draws):
             t0 = time.time()
-            cross_modal_ingest_tick(spark, delta, state, batch_id=1)
+            tick(spark, delta, state, batch_id=1)
             runs.append(time.time() - t0)
         med = sorted(runs)[len(runs) // 2]
         results[tag] = med

@@ -442,6 +442,31 @@ def test_unified_tick_trimodal_option(spark, tmp_path_factory):
         assert rows(f"{t_sep}/{sub}") == rows(f"{t_uni}/{sub}"), sub
 
 
+def test_both_families_mark_tick_phases_in_order(
+    spark, tmp_path_factory, monkeypatch
+):
+    """The benchmark tracer swaps ``cross_modal_tick._phase_timer`` for
+    a span recorder keyed on the mark labels (perfbench/tracer.py
+    TICK_PHASES): a bimodal and a trimodal tick both mark every phase,
+    in tick order."""
+    from falcon_metrics_etl_spark.streaming import cross_modal_tick as CMT
+
+    marks = []
+    monkeypatch.setattr(CMT, "_phase_timer", lambda: marks.append)
+    for stage, tick in (
+        (CMT.stage_cross_modal_state, CMT.cross_modal_ingest_tick),
+        (CMT.stage_trimodal_state, CMT.trimodal_ingest_tick),
+    ):
+        state = str(tmp_path_factory.mktemp("phases"))
+        stage(spark, _docs(spark, BASE_IDS), state, batch_id=0)
+        marks.clear()
+        tick(spark, _docs(spark, DELTA_IDS), state, batch_id=1)
+        assert marks == [
+            "decode", "edges", "resolve", "flags", "repoint", "append",
+            "maintenance",
+        ], tick.__name__
+
+
 def test_node_id_arithmetic_exact_on_huge_doc_ids(spark):
     """Property-pin the integer-div id class (r14, r13 verdict #6):
     db49944 fixed float division on node ids — ``(col / k).cast

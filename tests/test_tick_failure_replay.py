@@ -19,6 +19,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from falcon_metrics_etl_spark.session import run_concurrent
+from falcon_metrics_etl_spark.streaming import cross_modal_tick as CMT
 from falcon_metrics_etl_spark.state import TickState, read_state
 
 
@@ -178,18 +179,22 @@ def test_tick_state_joins_every_wave_before_raising(tmp_path):
     assert _new_threads(before) == []
 
 
+@pytest.mark.parametrize(
+    "stage_state, ingest_tick",
+    [
+        (CMT.stage_cross_modal_state, CMT.cross_modal_ingest_tick),
+        (CMT.stage_trimodal_state, CMT.trimodal_ingest_tick),
+    ],
+    ids=["bimodal", "trimodal"],
+)
 def test_failed_trimodal_tick_stops_writers_and_replays(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch, stage_state, ingest_tick
 ):
-    """The trimodal tick's edge phase fails while the four band
-    appends it started are running: no thread started during the call
-    outlives it, and a replay of the same batch with the real edges
-    lands state equal to a control run that never failed."""
+    """A cross-modal tick's edge phase fails while the band appends it
+    started are running: no thread started during the call outlives
+    it, and a replay of the same batch with the real edges lands state
+    equal to a control run that never failed."""
     import falcon_metrics_etl_spark.plans.media_dedup as MD
-    from falcon_metrics_etl_spark.streaming.cross_modal_tick import (
-        stage_trimodal_state,
-        trimodal_ingest_tick,
-    )
 
     def docs(ids):
         return spark.createDataFrame([(i,) for i in ids], "doc_id long")
@@ -198,22 +203,22 @@ def test_failed_trimodal_tick_stops_writers_and_replays(
     batch = docs([i for i in range(18) if i % 3 == 0])
     control = str(tmp_path / "control")
     victim = str(tmp_path / "victim")
-    stage_trimodal_state(spark, base, control, batch_id=0)
-    stage_trimodal_state(spark, base, victim, batch_id=0)
-    trimodal_ingest_tick(spark, batch, control, batch_id=1)
+    stage_state(spark, base, control, batch_id=0)
+    stage_state(spark, base, victim, batch_id=0)
+    ingest_tick(spark, batch, control, batch_id=1)
 
     def boom(*_args, **_kwargs):
         raise RuntimeError("injected edges failure")
 
-    real = MD.trimodal_edges_delta
-    monkeypatch.setattr(MD, "trimodal_edges_delta", boom)
+    real = MD.mixed_edges_of
+    monkeypatch.setattr(MD, "mixed_edges_of", boom)
     before = set(threading.enumerate())
     with pytest.raises(RuntimeError, match="injected"):
-        trimodal_ingest_tick(spark, batch, victim, batch_id=1)
+        ingest_tick(spark, batch, victim, batch_id=1)
     assert _new_threads(before) == []
-    monkeypatch.setattr(MD, "trimodal_edges_delta", real)
+    monkeypatch.setattr(MD, "mixed_edges_of", real)
 
-    trimodal_ingest_tick(spark, batch, victim, batch_id=1)
+    ingest_tick(spark, batch, victim, batch_id=1)
     assert _state_multisets(spark, victim) == _state_multisets(
         spark, control
     )
