@@ -39,8 +39,11 @@ from __future__ import annotations
 
 from typing import Sequence
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.types import BooleanType, StructField, StructType
 
 from falcon_metrics_etl_spark.operators.components import (
     SMALL_GRAPH_EDGES,
@@ -64,6 +67,98 @@ def _admit_all(new_q: DataFrame) -> tuple[DataFrame, DataFrame]:
     return verdicts, displaced
 
 
+def _capped(df: DataFrame) -> list | None:
+    """All rows of ``df``, or None past SMALL_GRAPH_EDGES rows. One
+    partition, so the capped take runs as one job."""
+    rows = df.coalesce(1).limit(SMALL_GRAPH_EDGES + 1).collect()
+    return rows if len(rows) <= SMALL_GRAPH_EDGES else None
+
+
+def _local_frame(spark, fields, rows) -> DataFrame:
+    """Driver rows (tuples in ``fields`` order of (name, type)) as an
+    Arrow-built LocalRelation: the planner sizes (and broadcasts) it,
+    and collect/isEmpty on it run no job — unlike a list-built frame,
+    an RDD whose rows every consumer re-deserializes."""
+    cols = list(zip(*rows)) or [()] * len(fields)
+    table = pa.table(
+        {n: pa.array(c, to_arrow_type(t)) for (n, t), c in zip(fields, cols)}
+    )
+    return spark.createDataFrame(
+        table, StructType([StructField(n, t) for n, t in fields])
+    )
+
+
+def _resolve_on_driver(
+    new_q: DataFrame,
+    idx_q: DataFrame,
+    edges: DataFrame,
+    quality_cols: Sequence[str],
+) -> tuple[DataFrame, DataFrame] | None:
+    """The bounded resolve from driver data (see resolve_keep_best), or
+    None when the raw edges or the batch rows pass the cap. Same
+    semantics as the distributed path: endpoints lift through their
+    index keeper (a null keeper lifts to the doc itself), only nodes
+    with a quality row compete, the argmax compares the quality tuple
+    DESC (null lowest, as Spark orders structs) and node ASC, and a
+    displaced keeper is a beaten component node outside the batch."""
+    raw = _capped(edges.select("id_a", "id_b"))
+    if raw is None:
+        return None
+    batch = _capped(new_q.select("doc_id", *quality_cols))
+    if batch is None:
+        return None
+    qual = {}
+    for r in batch:
+        qual.setdefault(r[0], tuple(r[1:]))
+    keeper: dict = {}
+
+    def read_index(ids, cols):
+        # one isin-filtered scan; the filter pushes into every parquet
+        # scan under idx_q, so no exchange
+        if ids:
+            yield from (
+                idx_q.filter(F.col("doc_id").isin(sorted(ids)))
+                .select("doc_id", *cols)
+                .collect()
+            )
+
+    ends = {x for r in raw for x in r if x is not None}
+    for r in read_index(ends, ["keep_id", *quality_cols]):
+        keeper.setdefault(r[0], r[1])
+        qual.setdefault(r[0], tuple(r[2:]))
+
+    def lift(x):
+        k = keeper.get(x)
+        return x if k is None else k
+
+    labels = _unionfind_min_labels((lift(a), lift(b)) for a, b in raw)
+    for r in read_index({n for n, _ in labels} - qual.keys(), quality_cols):
+        qual.setdefault(r[0], tuple(r[1:]))
+
+    def rank(node):
+        return tuple((v is not None, v) for v in qual[node]) + (-node,)
+
+    best: dict = {}
+    for node, label in labels:
+        if node in qual and (label not in best or rank(node) > rank(best[label])):
+            best[label] = node
+    winner = {n: best[c] for n, c in labels if n in qual}
+    batch_ids = [r[0] for r in batch]
+    id_type = new_q.schema["doc_id"].dataType
+    verdicts = _local_frame(
+        new_q.sparkSession,
+        [("doc_id", id_type), ("keep_id", id_type), ("is_kept", BooleanType())],
+        [(d, winner.get(d, d), winner.get(d, d) == d) for d in batch_ids],
+    )
+    in_batch = set(batch_ids)
+    displaced = _local_frame(
+        new_q.sparkSession,
+        [("doc_id", id_type), ("new_keep", id_type)],
+        [(n, w) for n, w in winner.items() if n != w and n not in in_batch],
+    )
+    return verdicts, displaced
+
+
 def resolve_keep_best(
     new_q: DataFrame,
     idx_q: DataFrame,
@@ -79,9 +174,9 @@ def resolve_keep_best(
             excluded by the caller), keep_id = cluster keeper. On the
             ``bounded_batch`` path a doc MAY appear on several
             value-identical rows (per-frame index rows) — the bounded
-            path dedupes after its endpoint semi-join, so callers
-            need not (and should not) pre-shuffle the state to
-            dedupe. The default path requires unique doc_id rows.
+            path dedupes the endpoint rows it reads, so callers need
+            not (and should not) pre-shuffle the state to dedupe. The
+            default path requires unique doc_id rows.
     edges:  (id_a, id_b) verified duplicate pairs, each touching at
             least one batch doc; either side may be a batch mate or an
             index doc, in either orientation.
@@ -96,25 +191,30 @@ def resolve_keep_best(
       whose keep_id is a displaced doc to new_keep and flag the doc.
 
     ``bounded_batch=True`` declares the delta bounded by a micro-batch
-    contract — the streaming ticks' case. The edge plan materializes
-    once, the keeper lift restricts the index to edge ENDPOINTS (a
-    semi join AQE broadcasts when the endpoint set measures small —
-    the common case — and degrades to a shuffle join under hot-bucket
-    skew, where the endpoint set is occupancy-bounded rather than
-    batch-bounded), and the component solve runs from ONE size-capped
-    collect with a distributed-fixpoint fallback past
-    SMALL_GRAPH_EDGES lifted edges. Tick cost scales with the delta
-    in the common case and stays safe under adversarial skew. The
-    delta QUERIES (SF-proportional delta slice) keep the default
-    path: their edge volume grows with the corpus.
+    contract — the streaming ticks' case — and resolves on the driver
+    (``_resolve_on_driver``): one single-partition capped collect of
+    the raw edges and one of the batch's quality rows, one
+    ``isin``-filtered read of the endpoints' index rows (keepers and
+    qualities; per-frame duplicate rows are folded on the driver, so
+    callers need not pre-shuffle the state to dedupe), one more for
+    any component member whose quality is still unknown, then the
+    union-find and the argmax in Python. ``verdicts`` and
+    ``displaced`` come back as Arrow-built local frames: the planner
+    sizes them, and collecting them runs no job. ``SMALL_GRAPH_EDGES``
+    bounds the raw edges and the batch rows, hence every driver list
+    and ``isin`` literal; past it, the distributed path below runs with
+    the keeper lift restricted to edge endpoints. The delta QUERIES
+    (SF-proportional delta slice) keep the default path: their edge
+    volume grows with the corpus.
     """
-    comp_bounded = False
     rep = idx_q.select("doc_id", "keep_id")
     if bounded_batch:
-        # materialize the caller's edge plan ONCE: the endpoint
-        # harvest below scans it twice and the component collect once
-        # more — without the checkpoint each scan re-executes the
-        # (possibly expensive) candidate-pair lineage
+        resolved = _resolve_on_driver(new_q, idx_q, edges, quality_cols)
+        if resolved is not None:
+            return resolved
+        # past the cap. Materialize the caller's edge plan ONCE: the
+        # endpoint harvest below scans it twice and the keeper lift
+        # once more
         edges = edges.localCheckpoint(eager=True)
         # no broadcast HINT on ids/rep: the endpoint set is bounded
         # by batch x bucket-occupancy, not by the batch alone (a hot
@@ -157,44 +257,14 @@ def resolve_keep_best(
         )
         .filter(F.col("id_a") != F.col("id_b"))
     )
-    if bounded_batch:
-        # ONE size-capped collect serves the empty-graph short
-        # circuit AND the component solve (driver union-find) — vs
-        # three control jobs (checkpoint, isEmpty, probe) on the
-        # general path, which dominate tick latency at micro-batch
-        # scale. The cap keeps the path safe under adversarial bucket
-        # skew: past SMALL_GRAPH_EDGES lifted edges, the distributed
-        # fixpoint takes over instead of an unbounded driver collect.
-        probe = e.limit(SMALL_GRAPH_EDGES + 1).collect()
-        if not probe:
-            return _admit_all(new_q)
-        if len(probe) <= SMALL_GRAPH_EDGES:
-            # broadcast HINT (r16 optimization): driver-built and
-            # bounded by the collect cap (<= 2 * SMALL_GRAPH_EDGES
-            # label pairs, a few MB) but RDD-backed, so without the
-            # hint the members join below shuffled the UNION of batch
-            # and index quality rows — an index-proportional exchange
-            # per tick. Broadcasting comp makes that join map-side;
-            # the index side is scanned once, never shuffled. A graph
-            # past the cap takes the distributed path and no hint.
-            comp = F.broadcast(
-                new_q.sparkSession.createDataFrame(
-                    _unionfind_min_labels((r[0], r[1]) for r in probe),
-                    "node long, cluster_id long",
-                )
-            )
-            comp_bounded = True
-        else:
-            comp = duplicate_clusters(e).select("node", "cluster_id")
-    else:
-        # materialize the (delta-sized) edge list once: it feeds the
-        # empty-graph short circuit AND the component loop. A batch of
-        # fresh content has no edges at all — skip the iterative
-        # clustering (several jobs) and admit everything.
-        e = e.localCheckpoint(eager=True)
-        if e.isEmpty():
-            return _admit_all(new_q)
-        comp = duplicate_clusters(e).select("node", "cluster_id")
+    # materialize the (delta-sized) edge list once: it feeds the
+    # empty-graph short circuit AND the component loop. A batch of
+    # fresh content has no edges at all — skip the iterative
+    # clustering (several jobs) and admit everything.
+    e = e.localCheckpoint(eager=True)
+    if e.isEmpty():
+        return _admit_all(new_q)
+    comp = duplicate_clusters(e).select("node", "cluster_id")
     # quality of every component node: batch docs from new_q, keepers
     # from the index; a doc present in both (a re-sent doc in a fresh
     # batch) decodes to identical values, so the dedup pick is safe.
@@ -228,11 +298,6 @@ def resolve_keep_best(
             "node", "winner"
         )
     )
-    if comp_bounded:
-        # winners has one row per comp node, so the fast-path bound
-        # carries over — hint the verdict/displaced joins broadcast
-        # too (the checkpointed frame is RDD-backed: no size estimate)
-        winners = F.broadcast(winners)
     verdicts = (
         new_q.select("doc_id")
         .join(

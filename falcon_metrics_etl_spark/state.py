@@ -71,6 +71,8 @@ FLAT_RETIRED_MARKER = "_FLAT_RETIRED"
 GC_GRACE_ENV = "FALCON_METRICS_STATE_GC_GRACE_SECONDS"
 DEFAULT_GC_GRACE_SECONDS = 900.0
 
+TARGET_FILE_BYTES = 128 * 1024 * 1024
+
 _VERSION_DIR_RE = re.compile(r"_v-(\d{6})-[0-9a-f]{8}$")
 _REMOTE_SCHEMES = ("s3://", "s3a://", "hdfs://", "abfss://")
 
@@ -264,15 +266,24 @@ def _table_exists(spark: SparkSession, path: str) -> bool:
     return _target_exists(spark, path)
 
 
+def _scan(spark: SparkSession, rp: str, schema: Optional[str]) -> DataFrame:
+    """Parquet scan of a resolved state dir. A given ``schema`` is
+    pinned: without it, Spark runs one job per read to infer the schema
+    from a footer."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(rp)
+
+
 def read_state(
     spark: SparkSession, path: str, schema: Optional[str] = None
 ) -> DataFrame:
-    """Pointer-resolved read of a state table; with ``schema``, a
-    missing table reads as an empty frame (the ticks' cold-start
-    contract)."""
+    """Pointer-resolved read of a state table, with ``schema`` pinned
+    when given (files written with an int32 column the schema declares
+    long read as long). With ``schema``, a missing table reads as an
+    empty frame (the ticks' cold-start contract)."""
     rp = resolve_state_path(path)
     if _table_exists(spark, rp):
-        return spark.read.parquet(rp)
+        return _scan(spark, rp, schema)
     if schema is None:
         raise FileNotFoundError(f"state table missing: {path}")
     return spark.createDataFrame([], schema)
@@ -468,7 +479,8 @@ def merge_state(
     For the ticks' small unpartitioned state tables this is also
     CHEAPER than merge_upsert's stage-then-rewrite (one full write
     instead of two). Remote paths fall through to merge_upsert
-    (snapshot isolation comes from a table format there)."""
+    (snapshot isolation comes from a table format there). A given
+    ``schema`` is pinned on the target read (see read_state)."""
     keys = list(keys)
     updates = updates.dropDuplicates(keys)
     if _is_remote(path):
@@ -478,7 +490,7 @@ def merge_state(
         return
     rp = resolve_state_path(path)
     if _table_exists(spark, rp):
-        target = spark.read.parquet(rp)
+        target = _scan(spark, rp, schema)
     elif schema is not None:
         target = spark.createDataFrame([], schema)
     else:
@@ -488,7 +500,31 @@ def merge_state(
     # a USING join puts the keys first; files appended to the new
     # snapshot later carry the table's own order, so restore it here
     merged = survivors.unionByName(updates, allowMissingColumns=True)
-    overwrite_state(merged.select(*target.columns), path)
+    # a merge rewrites every row, so it also compacts: one file per
+    # TARGET_FILE_BYTES of the table (a broadcast anti join keeps the
+    # target's scan splits, one file per appended file otherwise)
+    n_files = math.ceil(_local_file_stats(rp)[1] / TARGET_FILE_BYTES)
+    overwrite_state(
+        merged.select(*target.columns).coalesce(max(1, n_files)), path
+    )
+
+
+def batch_tag(batch_id: int):
+    """The replay tag column: ``batch_id`` as the ``long`` every state
+    schema declares (a bare ``F.lit`` of a small int is an int32)."""
+    return F.lit(int(batch_id)).cast("long").alias("batch_id")
+
+
+def remap(col, mapping: dict):
+    """``col`` through the driver-held id map ``mapping`` as a literal
+    map lookup (no join), ``col`` itself where unmapped. The map is a
+    plan literal, so callers keep it batch-bounded."""
+    if not mapping:
+        return col
+    lookup = F.create_map(
+        *(F.lit(x).cast("long") for kv in sorted(mapping.items()) for x in kv)
+    )
+    return F.coalesce(lookup[col], col)
 
 
 class TickState:
@@ -542,33 +578,29 @@ class TickState:
 
         new = anti_existing(frame, self.read(table, schema), key)
         append_state(
-            new.select(*cols, F.lit(self.batch_id).alias("batch_id")),
-            self._path(table),
+            new.select(*cols, batch_tag(self.batch_id)), self._path(table)
         )
 
-    def merge(self, table: str, updates: DataFrame, keys) -> None:
-        merge_state(self.spark, self._path(table), updates, keys)
+    def merge(self, table: str, schema: str, updates: DataFrame, keys) -> None:
+        merge_state(self.spark, self._path(table), updates, keys, schema)
 
     def repoint(
-        self, table: str, schema: str, displaced: DataFrame, key: str, keys
+        self, table: str, schema: str, moves: dict, key: str, keys
     ) -> None:
-        """Point every row whose ``key`` names a displaced keeper
-        (``displaced``: doc_id, new_keep) at its new keeper. The table
-        is rewritten only when at least one of its rows moves, so tick
+        """Point every row whose ``key`` names a displaced keeper at its
+        new keeper (``moves``: old keeper -> new keeper, driver-held):
+        an ``isin`` scan and a literal map, no join. The table is
+        rewritten only when at least one of its rows moves, so tick
         cost scales with the delta, not with the untouched tables."""
+        if not moves:
+            return
         moved = (
             self.read(table, schema)
-            .join(
-                F.broadcast(
-                    displaced.select(F.col("doc_id").alias(key), "new_keep")
-                ),
-                key,
-            )
-            .withColumn(key, F.col("new_keep"))
-            .drop("new_keep")
+            .filter(F.col(key).isin(sorted(moves)))
+            .withColumn(key, remap(F.col(key), moves))
         )
         if not moved.isEmpty():
-            self.merge(table, moved, keys)
+            self.merge(table, schema, moved, keys)
 
     def start(self, *thunks) -> None:
         self._joins.append(session.start_concurrent(*thunks))
@@ -616,7 +648,7 @@ def live_file_count(path: str) -> int:
 def compact_state_table(
     spark: SparkSession,
     path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
+    target_file_bytes: int = TARGET_FILE_BYTES,
     min_files: int = 8,
     grace_seconds: float | None = None,
 ) -> dict:

@@ -44,7 +44,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from falcon_metrics_etl_spark.functions import text as TX
 from falcon_metrics_etl_spark.sinks.merge import merge_upsert
-from falcon_metrics_etl_spark.state import append_state, read_state
+from falcon_metrics_etl_spark.state import append_state, batch_tag, read_state
 
 ADMISSION_W = 8  # token window length (matches SUBSTR_W)
 
@@ -100,7 +100,7 @@ def substring_admission_batch(
             F.round(n_seen.cast("double") / F.col("n_windows"), 6).alias(
                 "seen_ratio"
             ),
-            F.lit(int(batch_id)).alias("batch_id"),
+            batch_tag(batch_id),
         )
     )
     # flags partition by batch_id: a document belongs to exactly one
@@ -148,7 +148,7 @@ def substring_admission_batch(
         wins.select("h1", "h2")
         .distinct()
         .join(full_idx, ["h1", "h2"], "left_anti")
-        .withColumn("batch_id", F.lit(int(batch_id)))
+        .select("*", batch_tag(batch_id))
     )
     # pointer-resolved append: lands INSIDE the live snapshot dir when
     # the index is versioned, so compaction can never orphan it

@@ -55,6 +55,7 @@ from falcon_metrics_etl_spark.plans.dedup_lsh import (
 from falcon_metrics_etl_spark.session import run_concurrent
 from falcon_metrics_etl_spark.state import (
     TickState,
+    batch_tag,
     maintain_state_dir,
     overwrite_state,
 )
@@ -62,6 +63,7 @@ from falcon_metrics_etl_spark.state import (
 FP_SCHEMA = "fp string, canonical_id long, batch_id long"
 BAND_SCHEMA = "doc_id long, band int, bkey string, batch_id long"
 SHINGLE_SCHEMA = "doc_id long, shs array<string>, batch_id long"
+FLAGS_SCHEMA = "doc_id long, status string, n_tokens long, batch_id long"
 
 
 def _gate_status(docs: DataFrame) -> DataFrame:
@@ -108,7 +110,7 @@ def stage_corpus_state(
     admitted = canon.filter(F.col("doc_id") == F.col("canonical_id")).select(
         "doc_id", "text"
     )
-    tag = F.lit(int(batch_id)).alias("batch_id")
+    tag = batch_tag(batch_id)
     overwrite_state(
         canon.select("fp", "canonical_id").distinct().select(
             "fp", "canonical_id", tag
@@ -303,7 +305,7 @@ def corpus_ingest_tick(
     )
     flags = status.join(
         budgets.select("doc_id", "n_tokens"), "doc_id", "left"
-    ).select("doc_id", "status", "n_tokens", F.lit(bid).alias("batch_id"))
+    ).select("doc_id", "status", "n_tokens", batch_tag(bid))
     # only ADMITTED docs register their fp (advisor r10: a near-dup-
     # rejected doc must not become canonical_id for future exact
     # copies — those copies now fall through to the near-dup gate and
@@ -316,7 +318,9 @@ def corpus_ingest_tick(
         # r17: the flags merge (which carries the tokenize compute in
         # its lineage) touches only the flags table — disjoint from the
         # three index appends — so it overlaps them
-        st.start(lambda: st.merge("flags", flags, ["doc_id"]))
+        st.start(
+            lambda: st.merge("flags", FLAGS_SCHEMA, flags, ["doc_id"])
+        )
         # the three appends target disjoint tables — one concurrent wave
         run_concurrent(
             lambda: st.append(

@@ -83,9 +83,11 @@ from falcon_metrics_etl_spark.plans.media_dedup import (
 from falcon_metrics_etl_spark.session import run_concurrent
 from falcon_metrics_etl_spark.state import (
     TickState,
+    batch_tag,
     claim_state_layout,
     maintain_state_dir,
     overwrite_state,
+    remap,
 )
 
 CM_IMG_SCHEMA = (
@@ -107,6 +109,9 @@ CM3_AUDIO_SCHEMA = (
 )
 CM3_SPBAND_SCHEMA = (
     "doc_id long, sphash long, band int, byte long, batch_id long"
+)
+CM_FLAGS_SCHEMA = (
+    "doc_id long, modality string, status string, batch_id long"
 )
 # per modality, in family order: node index, its schema, the key a
 # repoint rewrites rows by, and the SQL expression of its decoded units
@@ -165,7 +170,7 @@ def _flags(
             (F.col("node") % n).cast("int")
         ].alias("modality"),
         "status",
-        F.lit(int(batch_id)).alias("batch_id"),
+        batch_tag(batch_id),
     )
 
 
@@ -236,7 +241,7 @@ def _stage(
     kb = mixed_keep_best_of(modalities, t, v, *audio).localCheckpoint(
         eager=True
     )
-    tag = F.lit(int(batch_id)).alias("batch_id")
+    tag = batch_tag(batch_id)
     vsig = v.select("doc_id", "frame_dhash").distinct()
     units = F.col(keep_rule(modalities)[-1]).alias("n_frames")
     writes = [
@@ -360,8 +365,8 @@ def _tick(
         new_q = mixed_nodes_of(
             modalities, t_new, v_new, *audio_new[:1]
         ).select(F.col("node").alias("doc_id"), *rule)
-        # per-frame rows: bounded resolve dedupes per doc after its
-        # endpoint semi-join — no state-wide shuffle
+        # per-frame rows: bounded resolve dedupes the endpoint rows it
+        # reads — no state-wide shuffle
         idx_q = reduce(
             DataFrame.unionByName,
             (
@@ -373,10 +378,17 @@ def _tick(
                 for (m, (_, _, _, units)), df in zip(node_indexes, idx)
             ),
         )
+        # bounded: driver-built verdict frames, frozen before any state
+        # mutation; the landing below reads them as driver data
         verdicts, displaced = resolve_keep_best(
             new_q, idx_q, edges, rule, bounded_batch=True
         )
-        verdicts, displaced = _checkpoint(verdicts, displaced)
+        moves = {r["doc_id"]: r["new_keep"] for r in displaced.collect()}
+        kmap = {
+            r["doc_id"]: r["keep_id"]
+            for r in verdicts.collect()
+            if not r["is_kept"]
+        }
         mark("resolve")
 
         # ---- 1) land flags (keyed merge) --------------------------------
@@ -384,7 +396,9 @@ def _tick(
         # the flags merge touches only the flags table — disjoint from
         # the repoints (node indexes) and every append — so it overlaps
         st.start(
-            lambda: st.merge(pre + "flags", flags, ["doc_id", "modality"])
+            lambda: st.merge(
+                pre + "flags", CM_FLAGS_SCHEMA, flags, ["doc_id", "modality"]
+            )
         )
         mark("flags")
 
@@ -392,15 +406,12 @@ def _tick(
         # a row's keeper can be any modality, so every index matches on
         # keep_node; st.repoint rewrites only the indexes with a row
         # that moves
-        if not displaced.isEmpty():
-            rp = displaced.select("doc_id", "new_keep").localCheckpoint(
-                eager=True
-            )
+        if moves:
             # per-modality repoints touch disjoint tables — concurrent
             run_concurrent(
                 *(
                     lambda sub=sub, schema=schema, keys=keys: st.repoint(
-                        pre + sub, schema, rp, "keep_node", keys
+                        pre + sub, schema, moves, "keep_node", keys
                     )
                     for _, (sub, schema, keys, _) in node_indexes
                 )
@@ -408,9 +419,7 @@ def _tick(
         mark("repoint")
 
         # ---- 3) append the batch (kept AND dropped; anti-joined) --------
-        kmap = verdicts.select(
-            F.col("doc_id").alias("node"), F.col("keep_id").alias("keep_node")
-        )
+        # every batch node keeps itself unless its verdict says otherwise
         rows = (t_new, vsig_new.join(n_new, "doc_id"), *audio_new[:1])
         # the node appends run as one concurrent wave; the band appends
         # (started after decode) and the flags merge (started after
@@ -424,7 +433,7 @@ def _tick(
                     df.select(
                         (F.col("doc_id") * n + i).alias("node"),
                         *_cols(schema)[1:-1],
-                    ).join(F.broadcast(kmap), "node"),
+                    ).withColumn("keep_node", remap(F.col("node"), kmap)),
                     "node",
                     _cols(schema),
                 )

@@ -76,6 +76,7 @@ from falcon_metrics_etl_spark.plans.media_dedup import (
 from falcon_metrics_etl_spark.session import run_concurrent
 from falcon_metrics_etl_spark.state import (
     TickState,
+    batch_tag,
     maintain_state_dir,
     overwrite_state,
 )
@@ -89,6 +90,7 @@ FRAME_SCHEMA = (
     "doc_id long, frame_idx int, frame_dhash long, n_frames long, "
     "keep_id long, batch_id long"
 )
+FLAGS_SCHEMA = "doc_id long, modality string, status string, batch_id long"
 
 
 def _status(is_kept_col):
@@ -119,7 +121,7 @@ def stage_media_state(
         images = MM.attach_payload_dhash_corpus(docs)
     if clips is None:
         clips = MM.attach_payload_video_clips(docs)
-    tag = F.lit(int(batch_id)).alias("batch_id")
+    tag = batch_tag(batch_id)
     # backfill is job-count bound too (r14): the two modality decodes,
     # their independent keep-best closures, and the three state writes
     # each run as one concurrent wave
@@ -171,7 +173,7 @@ def stage_media_state(
                 _status(F.col("status") == "kept").alias("status"),
             )
         )
-        .withColumn("batch_id", F.lit(int(batch_id)))
+        .select("*", batch_tag(batch_id))
     )
     overwrite_state(flags, f"{state_dir}/media_flags")
 
@@ -366,8 +368,8 @@ def media_ingest_tick(
             wh_q1,
             F.col("detail").alias("q2"),
         ).unionByName(
-            # per-frame rows: bounded resolve dedupes per doc after its
-            # endpoint semi-join (r16) — no state-wide shuffle per tick
+            # per-frame rows: bounded resolve dedupes the endpoint rows
+            # it reads — no state-wide shuffle per tick
             frame_idx_state.select("doc_id", "keep_id", "n_frames")
             .select(
                 (F.col("doc_id") * 2 + 1).alias("doc_id"),
@@ -376,15 +378,15 @@ def media_ingest_tick(
                 F.lit(0).cast("long").alias("q2"),
             )
         )
+        # bounded: driver-built verdict frames, frozen before any
+        # state mutation
         verdicts, displaced = resolve_keep_best(
             new_q, idx_q, node_edges, ["q1", "q2"], bounded_batch=True
         )
-        # freeze the decisions BEFORE any state mutation: their lineage
-        # reads the index parquet the repoint/appends are about to rewrite
-        verdicts, displaced = run_concurrent(
-            lambda: verdicts.localCheckpoint(eager=True),
-            lambda: displaced.localCheckpoint(eager=True),
-        )
+        # per parity (images even, clips odd): doc -> new keeper doc
+        moves = ({}, {})
+        for r in displaced.collect():
+            moves[r["doc_id"] % 2][r["doc_id"] // 2] = r["new_keep"] // 2
         half = F.expr("doc_id div 2").cast("long").alias("doc_id")
         keep_half = F.expr("keep_id div 2").cast("long").alias("keep_id")
         img_verdicts = verdicts.filter(F.col("doc_id") % 2 == 0).select(
@@ -445,25 +447,24 @@ def media_ingest_tick(
                 )
             )
         )
-        flags = img_flags.unionByName(vid_flags).withColumn(
-            "batch_id", F.lit(bid)
-        )
+        flags = img_flags.unionByName(vid_flags).select("*", batch_tag(bid))
         # r17: the flags merge touches only media_flags — disjoint from
         # the repoints and appends — so it overlaps them
         st.start(
-            lambda: st.merge("media_flags", flags, ["doc_id", "modality"])
+            lambda: st.merge(
+                "media_flags", FLAGS_SCHEMA, flags, ["doc_id", "modality"]
+            )
         )
 
         # ---- 2) repoint displaced keepers (keyed merge) -------------
         # the two index repoints touch disjoint tables — concurrent
-        if not displaced.isEmpty():
+        if any(moves):
             run_concurrent(
                 lambda: st.repoint(
-                    "fp_index", FP_SCHEMA, img_displaced, "keep_id",
-                    ["doc_id"],
+                    "fp_index", FP_SCHEMA, moves[0], "keep_id", ["doc_id"],
                 ),
                 lambda: st.repoint(
-                    "frame_index", FRAME_SCHEMA, vid_displaced, "keep_id",
+                    "frame_index", FRAME_SCHEMA, moves[1], "keep_id",
                     ["doc_id", "frame_idx"],
                 ),
             )

@@ -7,6 +7,12 @@ tick's witness, extended to the joint closure). ``bimodal`` stages
 thumbnails and clips; ``trimodal`` adds recordings and soundtrack
 rips.
 
+Every timed tick also prints its per-phase wall time and Spark job
+count: the tick's ``_phase_timer`` is swapped for a mark that diffs
+the status tracker's job ids (jobs are numbered in submission order,
+so the jobs of a phase are the ids submitted between two marks,
+background waves included).
+
 Usage: python scripts/cross_modal_tick_probe.py [bimodal|trimodal] [n_delta] [draws]
 """
 
@@ -21,12 +27,39 @@ sys.path.insert(0, ".")
 
 from falcon_metrics_etl_spark.session import get_spark
 from falcon_metrics_etl_spark.sources import load_table
+from falcon_metrics_etl_spark.streaming import cross_modal_tick as CMT
 from falcon_metrics_etl_spark.streaming.cross_modal_tick import (
     cross_modal_ingest_tick,
     stage_cross_modal_state,
     stage_trimodal_state,
     trimodal_ingest_tick,
 )
+
+
+def next_job_id(spark) -> int:
+    """Smallest job id not yet submitted."""
+    st = spark.sparkContext.statusTracker()
+    j = max([-1, *st.getJobIdsForGroup(None), *st.getActiveJobsIds()]) + 1
+    while st.getJobInfo(j) is not None:
+        j += 1
+    return j
+
+
+def job_phase_timer(spark, phases: list):
+    """A ``_phase_timer`` stand-in: each mark appends (label, wall s,
+    jobs) of the phase that ended at it to ``phases``."""
+
+    def factory():
+        last = [time.perf_counter(), next_job_id(spark)]
+
+        def mark(label: str) -> None:
+            now, job = time.perf_counter(), next_job_id(spark)
+            phases.append((label, now - last[0], job - last[1]))
+            last[:] = [now, job]
+
+        return mark
+
+    return factory
 
 
 def main() -> None:
@@ -40,6 +73,8 @@ def main() -> None:
     n_delta = int(sys.argv[2]) if len(sys.argv) > 2 else 120
     draws = int(sys.argv[3]) if len(sys.argv) > 3 else 3
     spark = get_spark(f"{family}_tick_probe")
+    phases: list = []
+    CMT._phase_timer = job_phase_timer(spark, phases)
     # fixed delta: fresh content groups far beyond both corpora;
     # multiples of CM_THUMB_MOD/CM_TRACK_MOD land thumbnails and rips
     # in every batch
@@ -57,9 +92,15 @@ def main() -> None:
         tick(spark, delta, state, batch_id=1)
         runs = []
         for _ in range(draws):
+            phases.clear()
             t0 = time.time()
             tick(spark, delta, state, batch_id=1)
             runs.append(time.time() - t0)
+            print(f"{tag} tick {time.time() - t0:.2f}s, jobs "
+                  f"{sum(j for _, _, j in phases)}: " + ", ".join(
+                      f"{label} {wall:.2f}s/{jobs}j"
+                      for label, wall, jobs in phases
+                  ), flush=True)
         med = sorted(runs)[len(runs) // 2]
         results[tag] = med
         print(f"{tag}: base={base.count()} docs, tick median "

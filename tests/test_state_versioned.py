@@ -439,3 +439,43 @@ def test_overwrite_state_repairs_dangling_pointer(spark, tmp_path):
     fixed = spark.createDataFrame([(9, "ok")], "id long, v string")
     overwrite_state(fixed, path)
     assert _rows(read_state(spark, path)) == [("9", "ok")]
+
+
+def test_pinned_read_widens_int32_batch_tags(spark, tmp_path):
+    """State written before the tag was cast holds int32 ``batch_id``
+    files; later ticks append int64 ones. An inferred read of such a
+    table fails on the mixed column; the schema-pinned read every tick
+    uses returns every row with ``batch_id`` typed long."""
+    from falcon_metrics_etl_spark.state import append_state, batch_tag
+
+    schema = "node long, keep_node long, batch_id long"
+    path = str(tmp_path / "idx")
+    old = spark.createDataFrame([(1, 1), (2, 1)], "node long, keep_node long")
+    overwrite_state(old.select("*", F.lit(0).alias("batch_id")), path)
+    new = spark.createDataFrame([(3, 3)], "node long, keep_node long")
+    append_state(new.select("*", batch_tag(7)), path)
+    got = read_state(spark, path, schema)
+    assert dict(got.dtypes)["batch_id"] == "bigint"
+    assert sorted(tuple(r) for r in got.collect()) == [
+        (1, 1, 0), (2, 1, 0), (3, 3, 7),
+    ]
+
+
+def test_merge_state_leaves_one_file_per_target_size(spark, tmp_path):
+    """A merge rewrites every row, so a fragmented small table comes
+    back as one file, whichever join strategy the anti join took."""
+    from falcon_metrics_etl_spark.state import merge_state
+
+    path = str(tmp_path / "t")
+    overwrite_state(
+        spark.createDataFrame([(0, "v0")], "id long, v string"), path
+    )
+    _fragment(spark, path, n_batches=6, rows_per=2, start=1)
+    assert live_file_count(path) > 6
+    merge_state(
+        spark, path, spark.createDataFrame([(3, "new")], "id long, v string"),
+        ["id"], schema="id long, v string",
+    )
+    assert live_file_count(path) == 1
+    got = dict(read_state(spark, path).collect())
+    assert len(got) == 13 and got[3] == "new"
