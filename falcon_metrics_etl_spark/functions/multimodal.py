@@ -25,8 +25,13 @@ bytes scanned; with payloads in their own parquet column, column
 pruning means metadata-only queries never read the bytes at all.
 ``spark.sql.execution.arrow.maxRecordsPerBatch`` bounds batch memory
 for fat rows. Every Arrow stage goes through the one row-map
-``_map_rows``; whether a ``_fan_out`` exchange goes in front of it is
-the caller's choice.
+``_map_rows``, which has two executors: driver data (a frame whose
+optimized plan is a ``LocalRelation``, such as a tick's micro-batch
+after ``session.localize``) is mapped in-process on the driver and comes
+back as driver data, so a chain of stages over a small batch runs no
+Python-worker job; any other frame is mapped by ``mapInPandas`` on the
+executors. Whether a ``_fan_out`` exchange goes in front of an executor
+map is the caller's choice; driver data never gets one.
 """
 
 from __future__ import annotations
@@ -39,10 +44,13 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import _parse_datatype_string
+
+from falcon_metrics_etl_spark.session import arrow_rows, is_local
 
 # media_type assignment for the synthetic corpus: stable on doc_id
 MEDIA_TYPES = ("image", "audio", "video")
@@ -72,8 +80,12 @@ def _fan_out(df: DataFrame, heavy: bool = True) -> DataFrame:
       (the at-scale case: a 100 TB docs table arrives in thousands of
       splits) the repartition is a no-op at best and a partition-count
       REDUCTION at worst — skip it.
+
+    Driver data (``session.is_local``) passes through unchanged:
+    ``_map_rows`` maps it in-process, and a repartition would turn it
+    back into a shuffle.
     """
-    if not heavy:
+    if not heavy or is_local(df):
         return df
     sc = df.sparkSession.sparkContext
     if df.rdd.getNumPartitions() >= sc.defaultParallelism:
@@ -90,13 +102,37 @@ def _md5hex(text: str) -> str:
     return hashlib.md5(text.encode("utf-8")).hexdigest()
 
 
+# The largest micro-batch (docs) the ingest ticks decode as driver data
+# (session.localize, then _map_rows in-process); a larger batch decodes
+# on the executors. Measured on a 4-core host, local[2], parquet-read
+# batches: the four trimodal roles decoded and materialized took (wall
+# s, 3 draws) 2.2-2.7 distributed / 0.4-0.6 on the driver at 3 docs,
+# 1.7-2.0 / 0.5 at 30, 2.2-2.3 / 1.1-1.2 at 300, 2.1-2.3 / 1.4-1.5 at
+# 500, 2.2-2.3 / 2.1-2.3 at 700 and 2.3-2.7 / 2.8-3.0 at 1000. The paths
+# cross at about 700 docs; the driver decodes on one core, so more
+# executor cores move the crossing down.
+DRIVER_DECODE_DOCS = 512
+
+
 def _map_rows(df: DataFrame, fn, schema: str) -> DataFrame:
     """The module's one Arrow batch boundary: ``fn(*row)`` runs once per
     row of ``df`` (its columns in order) and yields zero or more output
     tuples in ``schema`` order; the column names come from ``schema``.
     A pure map — no shuffle — so exchange placement stays with the
-    caller."""
-    names = _parse_datatype_string(schema).names
+    caller.
+
+    Two executors run the same ``mapped`` generator:
+    - driver data (``session.is_local``: the optimized plan is a
+      ``LocalRelation``) is collected (no job), converted Arrow ->
+      pandas as an executor receives it, mapped in-process, and
+      returned as an Arrow-built ``LocalRelation`` of ``schema`` (empty
+      results keep its types), so a tick's small batch decodes with no
+      Python-worker job. If Spark does not keep a large result local,
+      the frame is still correct and the next ``_map_rows`` maps it on
+      the executors;
+    - any other frame runs in ``mapInPandas``."""
+    struct = _parse_datatype_string(schema)
+    names = struct.names
 
     def mapped(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -107,7 +143,18 @@ def _map_rows(df: DataFrame, fn, schema: str) -> DataFrame:
             ]
             yield pd.DataFrame(rows, columns=names)
 
-    return df.mapInPandas(mapped, schema=schema)
+    if not is_local(df):
+        return df.mapInPandas(mapped, schema=schema)
+    fields = [(f.name, f.dataType) for f in df.schema]
+    # the pandas options an executor converts its Arrow batches with
+    pdf = arrow_rows(fields, df.collect()).to_pandas(
+        date_as_object=True, coerce_temporal_nanoseconds=True
+    )
+    (out,) = mapped([pdf])
+    table = pa.Table.from_pandas(
+        out, schema=to_arrow_schema(struct), preserve_index=False, safe=False
+    )
+    return df.sparkSession.createDataFrame(table, struct)
 
 
 def attach_payload(docs: DataFrame) -> DataFrame:

@@ -39,18 +39,20 @@ from __future__ import annotations
 
 from typing import Sequence
 
-import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import to_arrow_type
-from pyspark.sql.types import BooleanType, StructField, StructType
+from pyspark.sql.types import BooleanType
 
 from falcon_metrics_etl_spark.operators.components import (
     SMALL_GRAPH_EDGES,
     _unionfind_min_labels,
     duplicate_clusters,
 )
-from falcon_metrics_etl_spark.session import perf_checkpoint
+from falcon_metrics_etl_spark.session import (
+    capped_rows,
+    local_frame,
+    perf_checkpoint,
+)
 
 
 def _admit_all(new_q: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -67,27 +69,6 @@ def _admit_all(new_q: DataFrame) -> tuple[DataFrame, DataFrame]:
     return verdicts, displaced
 
 
-def _capped(df: DataFrame) -> list | None:
-    """All rows of ``df``, or None past SMALL_GRAPH_EDGES rows. One
-    partition, so the capped take runs as one job."""
-    rows = df.coalesce(1).limit(SMALL_GRAPH_EDGES + 1).collect()
-    return rows if len(rows) <= SMALL_GRAPH_EDGES else None
-
-
-def _local_frame(spark, fields, rows) -> DataFrame:
-    """Driver rows (tuples in ``fields`` order of (name, type)) as an
-    Arrow-built LocalRelation: the planner sizes (and broadcasts) it,
-    and collect/isEmpty on it run no job — unlike a list-built frame,
-    an RDD whose rows every consumer re-deserializes."""
-    cols = list(zip(*rows)) or [()] * len(fields)
-    table = pa.table(
-        {n: pa.array(c, to_arrow_type(t)) for (n, t), c in zip(fields, cols)}
-    )
-    return spark.createDataFrame(
-        table, StructType([StructField(n, t) for n, t in fields])
-    )
-
-
 def _resolve_on_driver(
     new_q: DataFrame,
     idx_q: DataFrame,
@@ -101,10 +82,12 @@ def _resolve_on_driver(
     with a quality row compete, the argmax compares the quality tuple
     DESC (null lowest, as Spark orders structs) and node ASC, and a
     displaced keeper is a beaten component node outside the batch."""
-    raw = _capped(edges.select("id_a", "id_b"))
+    raw = capped_rows(edges.select("id_a", "id_b"), SMALL_GRAPH_EDGES)
     if raw is None:
         return None
-    batch = _capped(new_q.select("doc_id", *quality_cols))
+    batch = capped_rows(
+        new_q.select("doc_id", *quality_cols), SMALL_GRAPH_EDGES
+    )
     if batch is None:
         return None
     qual = {}
@@ -145,13 +128,13 @@ def _resolve_on_driver(
     winner = {n: best[c] for n, c in labels if n in qual}
     batch_ids = [r[0] for r in batch]
     id_type = new_q.schema["doc_id"].dataType
-    verdicts = _local_frame(
+    verdicts = local_frame(
         new_q.sparkSession,
         [("doc_id", id_type), ("keep_id", id_type), ("is_kept", BooleanType())],
         [(d, winner.get(d, d), winner.get(d, d) == d) for d in batch_ids],
     )
     in_batch = set(batch_ids)
-    displaced = _local_frame(
+    displaced = local_frame(
         new_q.sparkSession,
         [("doc_id", id_type), ("new_keep", id_type)],
         [(n, w) for n, w in winner.items() if n != w and n not in in_batch],

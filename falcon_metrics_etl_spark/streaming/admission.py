@@ -47,6 +47,12 @@ from falcon_metrics_etl_spark.sinks.merge import merge_upsert
 from falcon_metrics_etl_spark.state import append_state, batch_tag, read_state
 
 ADMISSION_W = 8  # token window length (matches SUBSTR_W)
+# the per-doc flags table, batch_id its hive partition column; pinned on
+# read so the partition-migration probe runs no footer-inference job
+ADMISSION_FLAGS_SCHEMA = (
+    "doc_id long, n_windows long, n_seen long, seen_ratio double, "
+    "batch_id long"
+)
 
 
 def _window_hashes(docs: DataFrame, w: int) -> DataFrame:
@@ -119,7 +125,7 @@ def substring_admission_batch(
     # large batch rewrite ~the whole table.
     if _index_exists(spark, out_path):
         migrated = (
-            read_state(spark, out_path)
+            read_state(spark, out_path, schema=ADMISSION_FLAGS_SCHEMA)
             .select("doc_id", "batch_id")
             .filter(F.col("batch_id") != int(batch_id))
             .join(flags.select("doc_id"), "doc_id", "left_semi")

@@ -80,7 +80,11 @@ from falcon_metrics_etl_spark.plans.media_dedup import (
     mixed_nodes_of,
     mixed_probes_of,
 )
-from falcon_metrics_etl_spark.session import run_concurrent
+from falcon_metrics_etl_spark.session import (
+    checkpoint_wave,
+    localize,
+    run_concurrent,
+)
 from falcon_metrics_etl_spark.state import (
     TickState,
     batch_tag,
@@ -214,13 +218,6 @@ def _cols(schema: str) -> list[str]:
     return [c.split()[0] for c in schema.split(",")][:-1]
 
 
-def _checkpoint(*dfs: DataFrame) -> list[DataFrame]:
-    """Eager checkpoints of independent frames, one concurrent wave."""
-    return run_concurrent(
-        *(lambda df=df: df.localCheckpoint(eager=True) for df in dfs)
-    )
-
-
 def _stage(
     spark: SparkSession,
     modalities: tuple,
@@ -235,7 +232,7 @@ def _stage(
     pre = _claim_state(modalities, state_dir)
     # backfill is job-count bound too: the decode checkpoints and the
     # state writes each run as one concurrent wave
-    t, v, *audio = _checkpoint(
+    t, v, *audio = checkpoint_wave(
         *mixed_fingerprints_of(modalities, docs, **media)
     )
     kb = mixed_keep_best_of(modalities, t, v, *audio).localCheckpoint(
@@ -301,16 +298,20 @@ def _tick(
     n = len(modalities)
     bid = int(batch_id)
     mark = _phase_timer()
+    # one capped collect makes a batch of at most DRIVER_DECODE_DOCS docs
+    # driver data: every role then decodes in-process on the driver
+    # (functions/multimodal._map_rows) and is already materialized, so
+    # decode runs no Python-worker job and no checkpoint. A larger batch
+    # decodes on the executors, and its per-role checkpoints run as one
+    # concurrent wave; injected frames are already materialized
+    batch_docs = localize(batch_docs, MM.DRIVER_DECODE_DOCS)
     t_new, v_new, *audio_new = mixed_fingerprints_of(
         modalities, batch_docs, vfp=vfp, **media
     )
-    # the per-role decode checkpoints are independent jobs — one
-    # concurrent wave (tick cost is job-count dominated at batch scale);
-    # injected frames are already checkpoint blocks
     if vfp is None:
-        t_new, v_new, *audio_new = _checkpoint(t_new, v_new, *audio_new)
+        t_new, v_new, *audio_new = checkpoint_wave(t_new, v_new, *audio_new)
     else:
-        t_new, *audio_new = _checkpoint(t_new, *audio_new)
+        t_new, *audio_new = checkpoint_wave(t_new, *audio_new)
     mark("decode")
     vsig_new = v_new.select("doc_id", "frame_dhash").distinct()
     n_new = v_new.groupBy("doc_id").agg(
@@ -553,7 +554,8 @@ def unified_media_ingest_tick(
     resolves on (area, detail); a mixed cluster on n_frames). What a
     user running both SHOULD share is the expensive part: the batch's
     Y4M clip decode, by far the heaviest stage (full frame walk per
-    clip). This entry decodes the clip frames once (eager checkpoint)
+    clip). This entry decodes the clip frames once (driver data for a
+    batch within DRIVER_DECODE_DOCS docs, an eager checkpoint past it)
     and injects them into both ticks; the stills differ per family
     (photos vs keyframe thumbnails) and decode once each either way.
 
@@ -566,12 +568,15 @@ def unified_media_ingest_tick(
     closure) against that state dir, still sharing the one clip
     decode — the superset configuration for a corpus that also
     carries audio."""
+    # localized once: both ticks receive driver data and skip their own
+    # capped collect
+    batch_docs = localize(batch_docs, MM.DRIVER_DECODE_DOCS)
     if clips is None:
         clips = MM.attach_payload_video_clips(batch_docs)
-    vfp = (
-        MM.video_frame_dhash(clips)
-        .select("doc_id", "frame_idx", "frame_dhash")
-        .localCheckpoint(eager=True)
+    (vfp,) = checkpoint_wave(
+        MM.video_frame_dhash(clips).select(
+            "doc_id", "frame_idx", "frame_dhash"
+        )
     )
     from falcon_metrics_etl_spark.streaming.media_tick import (
         media_ingest_tick,

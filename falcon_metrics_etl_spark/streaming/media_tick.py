@@ -73,7 +73,11 @@ from falcon_metrics_etl_spark.plans.media_dedup import (
     image_keep_best_of,
     video_keep_best_of,
 )
-from falcon_metrics_etl_spark.session import run_concurrent
+from falcon_metrics_etl_spark.session import (
+    checkpoint_wave,
+    localize,
+    run_concurrent,
+)
 from falcon_metrics_etl_spark.state import (
     TickState,
     batch_tag,
@@ -129,10 +133,7 @@ def stage_media_state(
     vfp = MM.video_frame_dhash(clips).select(
         "doc_id", "frame_idx", "frame_dhash"
     )
-    fp, vfp = run_concurrent(
-        lambda: fp.localCheckpoint(eager=True),
-        lambda: vfp.localCheckpoint(eager=True),
-    )
+    fp, vfp = checkpoint_wave(fp, vfp)
     kb, vkb = run_concurrent(
         lambda: image_keep_best_of(fp).localCheckpoint(eager=True),
         lambda: video_keep_best_of(vfp).localCheckpoint(eager=True),
@@ -198,27 +199,28 @@ def media_ingest_tick(
     (streaming/cross_modal_tick.unified_media_ingest_tick — r13
     consolidation)."""
     bid = int(batch_id)
+    # ---- delta decode ------------------------------------------------
+    # a batch of at most DRIVER_DECODE_DOCS docs becomes driver data in
+    # one capped collect and decodes in-process (no Python-worker job,
+    # nothing to checkpoint); a larger one decodes on the executors and
+    # both modalities checkpoint concurrently
+    batch_docs = localize(batch_docs, MM.DRIVER_DECODE_DOCS)
     if images is None:
         images = MM.attach_payload_dhash_corpus(batch_docs)
     if clips is None and vfp is None:
         clips = MM.attach_payload_video_clips(batch_docs)
-
-    # ---- delta decode: both modalities checkpoint concurrently -----
     fp_new = MM.media_dhash(images, with_detail=True).select(
         "doc_id", "codec", "dhash", "width", "height", "detail"
     )
     if vfp is not None:
         vfp_new = vfp.select("doc_id", "frame_idx", "frame_dhash")
-        (fp_new,) = run_concurrent(
-            lambda: fp_new.localCheckpoint(eager=True)
-        )
+        (fp_new,) = checkpoint_wave(fp_new)
     else:
-        vfp_new = MM.video_frame_dhash(clips).select(
-            "doc_id", "frame_idx", "frame_dhash"
-        )
-        fp_new, vfp_new = run_concurrent(
-            lambda: fp_new.localCheckpoint(eager=True),
-            lambda: vfp_new.localCheckpoint(eager=True),
+        fp_new, vfp_new = checkpoint_wave(
+            fp_new,
+            MM.video_frame_dhash(clips).select(
+                "doc_id", "frame_idx", "frame_dhash"
+            ),
         )
 
     with TickState(spark, state_dir, bid) as st:

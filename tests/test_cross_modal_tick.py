@@ -535,3 +535,74 @@ def test_node_id_arithmetic_exact_on_huge_doc_ids(spark):
     )
     assert row["exact"] == huge
     assert row["via_float"] != huge
+
+
+# ---------------------------------------------------------------------------
+# decode as driver data (functions/multimodal.DRIVER_DECODE_DOCS)
+# ---------------------------------------------------------------------------
+
+
+def test_trimodal_decode_runs_at_most_one_job(
+    spark, tmp_path_factory, monkeypatch
+):
+    """A batch within DRIVER_DECODE_DOCS decodes in-process on the
+    driver: the tick's decode phase submits at most the batch's one
+    capped collect (jobs counted by the job-id differ of
+    scripts/cross_modal_tick_probe.py)."""
+    from scripts.cross_modal_tick_probe import job_phase_timer
+
+    from falcon_metrics_etl_spark.streaming import cross_modal_tick as CMT
+
+    assert len(DELTA_IDS) <= MM.DRIVER_DECODE_DOCS
+    state = str(tmp_path_factory.mktemp("cm3_decode_jobs"))
+    CMT.stage_trimodal_state(spark, _docs(spark, BASE_IDS), state, batch_id=0)
+    phases = []
+    monkeypatch.setattr(CMT, "_phase_timer", job_phase_timer(spark, phases))
+    CMT.trimodal_ingest_tick(spark, _docs(spark, DELTA_IDS), state, batch_id=1)
+    jobs = {label: n for label, _, n in phases}
+    assert jobs["decode"] <= 1, phases
+
+
+def test_distributed_decode_keeps_ticks_equal_batch(
+    spark, tmp_path, monkeypatch
+):
+    """With the decode cap at 0 every batch decodes on the executors
+    (the path of a batch past DRIVER_DECODE_DOCS); the trimodal and the
+    media tick still land their batch closures."""
+    import test_media_tick as MT
+
+    from falcon_metrics_etl_spark.session import is_local
+    from falcon_metrics_etl_spark.streaming.cross_modal_tick import (
+        stage_trimodal_state,
+        trimodal_ingest_tick,
+    )
+    from falcon_metrics_etl_spark.streaming.media_tick import (
+        media_ingest_tick,
+        stage_media_state,
+    )
+
+    on_driver = []
+    map_rows = MM._map_rows
+    monkeypatch.setattr(MM, "DRIVER_DECODE_DOCS", 0)
+    monkeypatch.setattr(
+        MM, "_map_rows",
+        lambda df, fn, schema: on_driver.append(is_local(df))
+        or map_rows(df, fn, schema),
+    )
+
+    state = str(tmp_path / "cm3")
+    stage_trimodal_state(spark, _docs(spark, BASE_IDS), state, batch_id=0)
+    trimodal_ingest_tick(spark, _docs(spark, DELTA_IDS), state, batch_id=1)
+    expect = _batch_expect3(spark, ALL_IDS)
+    assert _keeps3(spark, state) == {n: k for n, (k, _) in expect.items()}
+
+    state = str(tmp_path / "media")
+    stage_media_state(spark, MT._docs(spark, MT.BASE_IDS), state, batch_id=0)
+    media_ingest_tick(spark, MT._docs(spark, MT.DELTA_IDS), state, batch_id=1)
+    assert MT._fp_keep_ids(spark, state) == {
+        d: k for d, (k, _) in MT._batch_image_expect(spark, MT.ALL_IDS).items()
+    }
+    assert MT._frame_keep_ids(spark, state) == {
+        d: k for d, (k, _) in MT._batch_video_expect(spark, MT.ALL_IDS).items()
+    }
+    assert on_driver and not any(on_driver)

@@ -94,6 +94,47 @@ def test_map_rows_contract(spark):
         (18, 2, "delta echo foxtrot"),
     ]
 
+@pytest.mark.parametrize(
+    "ids",
+    [
+        list(range(30)),
+        # no multiple of CM_THUMB_MOD or CM_TRACK_MOD: the thumbnail and
+        # soundtrack roles are empty
+        [
+            i for i in range(1, 13)
+            if i % MM.CM_THUMB_MOD and i % MM.CM_TRACK_MOD
+        ],
+    ],
+)
+def test_tick_decoders_match_on_driver(spark, ids):
+    """Every decoder the ingest ticks run gives the same rows and
+    dtypes in-process on driver data as in mapInPandas on executors."""
+    from falcon_metrics_etl_spark.session import is_local, localize
+
+    docs = spark.createDataFrame([(i,) for i in ids], "doc_id long")
+    driver = localize(docs, len(ids))
+    assert not is_local(docs) and is_local(driver)
+
+    def decoders(d):
+        return [
+            MM.media_dhash(MM.attach_payload_keyframe_thumbs(d)),
+            MM.media_dhash(MM.attach_payload_dhash_corpus(d)),
+            MM.media_dhash(
+                MM.attach_payload_dhash_corpus(d), with_detail=True
+            ),
+            MM.video_frame_dhash(MM.attach_payload_video_clips(d)),
+            MM.audio_spectral_dhash(MM.attach_payload_audio_clips(d)),
+            MM.audio_spectral_dhash(MM.attach_payload_soundtrack_wavs(d)),
+        ]
+
+    for executors, local in zip(decoders(docs), decoders(driver)):
+        assert is_local(local) and not is_local(executors)
+        assert local.dtypes == executors.dtypes
+        assert sorted(map(tuple, local.collect())) == sorted(
+            map(tuple, executors.collect())
+        )
+
+
 # --------------------------------------------------------------------------
 # Real PNG codec path (encode_png / parse_png_header / codec='png')
 # --------------------------------------------------------------------------

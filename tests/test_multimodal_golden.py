@@ -5,7 +5,9 @@ keeps the statistics but alters the bytes would pass it. These hashes
 pin the bytes: each builder runs on the sf0.001 ``documents`` table and
 its rows, sorted, are hashed with sha256 over every column
 (``doc_id, media_type, codec, payload``, or ``doc_id, law, payload``
-for G.711).
+for G.711). ``test_driver_rows_match_golden`` runs the same builders on
+a driver-held copy of that table, where ``_map_rows`` maps in-process,
+against the same hashes.
 
 The constants were computed at commit
 96ab48514e445deeff2af551114deea784b58141 (before the builders
@@ -19,6 +21,7 @@ import hashlib
 import pytest
 
 from falcon_metrics_etl_spark.functions import multimodal as MM
+from falcon_metrics_etl_spark.session import is_local, localize
 from falcon_metrics_etl_spark.sources.tables import load_table
 
 GOLDEN = {
@@ -137,3 +140,19 @@ def docs(spark, sf_smoke):
 @pytest.mark.parametrize("name", sorted(GOLDEN))
 def test_payload_bytes_match_golden(docs, name):
     assert payload_digest(getattr(MM, name)(docs)) == GOLDEN[name]
+
+
+@pytest.fixture(scope="module")
+def driver_docs(docs):
+    return localize(docs, 1000)
+
+
+@pytest.mark.parametrize("name", sorted(GOLDEN))
+def test_driver_rows_match_golden(driver_docs, name):
+    """The same builders over a driver-held copy of ``docs``: every
+    ``_map_rows`` runs in-process and returns driver data, with the
+    same bytes."""
+    assert is_local(driver_docs)
+    out = getattr(MM, name)(driver_docs)
+    assert is_local(out)
+    assert payload_digest(out) == GOLDEN[name]

@@ -750,3 +750,38 @@ def test_stream_windowed_daily_structure(spark, tmp_path):
     state = p.stateOperators[0]
     assert state["numRowsTotal"] == n_groups
     assert p.sink["numOutputRows"] == n_groups
+
+
+def test_admission_flags_pinned_read_returns_every_partition(spark, tmp_path):
+    """The redelivery probe reads the batch_id-partitioned flags table
+    with ADMISSION_FLAGS_SCHEMA pinned (no footer-inference job); over a
+    two-partition table that read returns every row, partition column
+    included, as the inferring read does."""
+    from falcon_metrics_etl_spark.state import read_state
+    from falcon_metrics_etl_spark.streaming.admission import (
+        ADMISSION_FLAGS_SCHEMA,
+        substring_admission_batch,
+    )
+
+    idx = str(tmp_path / "index")
+    out = str(tmp_path / "flags")
+    passage = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    for bid, rows in (
+        (1, [(1, passage), (2, "one two three four five six seven eight")]),
+        (2, [(3, passage)]),
+    ):
+        substring_admission_batch(
+            spark, spark.createDataFrame(rows, "doc_id long, text string"),
+            idx, out, batch_id=bid,
+        )
+    pinned = read_state(spark, out, schema=ADMISSION_FLAGS_SCHEMA)
+    assert pinned.dtypes == [
+        ("doc_id", "bigint"), ("n_windows", "bigint"), ("n_seen", "bigint"),
+        ("seen_ratio", "double"), ("batch_id", "bigint"),
+    ]
+    got = sorted(tuple(sorted(r.asDict().items())) for r in pinned.collect())
+    assert got == sorted(
+        tuple(sorted(r.asDict().items()))
+        for r in spark.read.parquet(out).collect()
+    )
+    assert sorted(dict(r)["batch_id"] for r in got) == [1, 1, 2]
