@@ -162,7 +162,9 @@ def resolve_keep_best(
             default path requires unique doc_id rows.
     edges:  (id_a, id_b) verified duplicate pairs, each touching at
             least one batch doc; either side may be a batch mate or an
-            index doc, in either orientation.
+            index doc, in either orientation. On the
+            ``bounded_batch`` path pass them materialized (the ticks
+            pass an eager checkpoint): its fallback reads them thrice.
     quality_cols: argmax priority order; each compared DESC, with
             doc_id ASC as the final tiebreak.
 
@@ -195,11 +197,8 @@ def resolve_keep_best(
         resolved = _resolve_on_driver(new_q, idx_q, edges, quality_cols)
         if resolved is not None:
             return resolved
-        # past the cap. Materialize the caller's edge plan ONCE: the
-        # endpoint harvest below scans it twice and the keeper lift
-        # once more
-        edges = edges.localCheckpoint(eager=True)
-        # no broadcast HINT on ids/rep: the endpoint set is bounded
+        # past the cap (edges arrive materialized, see above).
+        # No broadcast HINT on ids/rep: the endpoint set is bounded
         # by batch x bucket-occupancy, not by the batch alone (a hot
         # LSH bucket can make it state-proportional), so the join
         # strategy is left to AQE — it broadcasts the post-shuffle

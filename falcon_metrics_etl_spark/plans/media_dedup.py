@@ -34,6 +34,7 @@ SimHash pairing documents.
 
 from __future__ import annotations
 
+from dataclasses import dataclass
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
@@ -406,8 +407,8 @@ def aligned_runs_of(fm: DataFrame) -> DataFrame:
     consecutive same-offset aligned run per pair (classic
     gaps-and-islands: group by offset = ib - ia, island key = ia -
     row_number within the offset, max island size). Factored so the
-    incremental media tick's delta verification (streaming/
-    media_tick.py, r11 verdict #5) runs the SAME algebra as the batch
+    media tick's temporal-order check (streaming/cross_modal_tick.
+    _reordered, r11 verdict #5) runs the SAME algebra as the batch
     query over its delta-only match set."""
     fm = fm.withColumn("off", F.col("ib") - F.col("ia"))
     isl = F.col("ia") - F.row_number().over(
@@ -2282,66 +2283,162 @@ FROM members m JOIN best b ON b.cluster_id = m.cluster_id
     oracle=_CM_KB_ORACLE,
 )
 def cross_modal_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _mixed_keep_best(spark, sf_dir, CM_MODALITIES)
+    return _mixed_keep_best(spark, sf_dir, CM_FAMILY)
 
 
 # ---------------------------------------------------------------------------
-# The mixed-modality closure, shared by the bimodal family (image +
-# video) and the trimodal one (+ audio): node = len(modalities) *
-# doc_id + index of the doc's modality, so the node stride and the
-# modality set are data and the bimodal family is the trimodal one
-# without its audio roles.
+# The mixed-modality closure, shared by every node-tagged media family:
+# node = len(modalities) * doc_id + index of the doc's modality. A
+# family is data (MediaFamily): its modalities, keep rule, band probes
+# and their pairings, still decode and state tables. The bimodal family
+# (image + video) is the trimodal one (+ audio) without its audio
+# roles; the per-modality media family (streaming/media_tick.py) pairs
+# only like with like, so its clusters never mix modalities.
 # ---------------------------------------------------------------------------
-CM_MODALITIES = ("image", "video")
-CM3_MODALITIES = ("image", "video", "audio")
-# trimodal keeper rank: source footage beats both of its exported
-# artifacts, the keyframe still and the soundtrack rip
-_MRANK = {"image": 0, "video": 2, "audio": 1}
+
+# the banded probe kinds: name -> (fingerprint role, hash column, bands,
+# node modality, Hamming threshold). Roles index the rows
+# mixed_probes_of bands: stills, the clip signature, recordings, rips
+BAND_PROBES = {
+    "still": (0, "dhash", DHASH_BANDS, "image", DHASH_HAMMING_T),
+    "frame": (1, "frame_dhash", DHASH_BANDS, "video", DHASH_HAMMING_T),
+    "rec": (2, "sphash", AUDIO_SPHASH_BANDS, "audio", AUDIO_SPECTRAL_T),
+    "rip": (3, "sphash", AUDIO_SPHASH_BANDS, "video", AUDIO_SPECTRAL_T),
+}
 
 
-def keep_rule(modalities: tuple) -> list[str]:
-    """The family's quality columns, each compared DESC in order with
-    node ASC as the final tiebreak: decoded units (``n_frames``; a
-    still counts one frame) for image/video, modality rank first
-    (``mrank``, ``n_units``) once audio joins the family."""
-    return ["mrank", "n_units"] if "audio" in modalities else ["n_frames"]
+@dataclass(frozen=True)
+class MediaFamily:
+    """One node-tagged media family as data.
+
+    - ``rule``: the quality columns, each compared DESC in order, node
+      ASC the final tiebreak; ``quality`` gives, per modality, one SQL
+      expression per rule column over that role's rows (its decoded
+      fingerprint rows and its node index rows carry the same columns).
+    - ``bands``: (probe kind, state table) of every band index, in
+      probe order; ``pairings``: the banded edge families as pairs of
+      probe kinds. Clip<->clip (shared frame hashes) is in every family.
+    - ``photos``: the still role decodes photos with their detail score,
+      else keyframe thumbnails.
+    - ``nodes``: per modality, (state table, schema, repoint keys);
+      ``flags``: the flags table; ``layout``: the token the state dir
+      is claimed with (state.claim_state_layout), if any;
+      ``verify_order``: dropped clips whose every pair is order-broken
+      flag as re-cuts."""
+
+    modalities: tuple
+    rule: tuple
+    quality: tuple
+    bands: tuple
+    pairings: tuple
+    photos: bool
+    nodes: tuple
+    flags: str
+    layout: str | None = None
+    verify_order: bool = False
 
 
-def keep_quality(modalities: tuple, modality: str, units) -> list:
-    """The ``keep_rule`` columns of one modality's node rows, given
-    the column that holds its decoded units."""
-    *rank, unit = keep_rule(modalities)
-    return [F.lit(_MRANK[modality]).alias(c) for c in rank] + [
-        units.cast("long").alias(unit)
-    ]
+CM_IMG_SCHEMA = (
+    "node long, doc_id long, dhash long, keep_node long, batch_id long"
+)
+CM_FRAME_SCHEMA = (
+    "node long, doc_id long, frame_dhash long, n_frames long, "
+    "keep_node long, batch_id long"
+)
+CM3_AUDIO_SCHEMA = (
+    "node long, doc_id long, sphash long, n_windows int, "
+    "keep_node long, batch_id long"
+)
+# the bimodal family: the keyframe still a clip exports is its
+# duplicate, and the clip with the most decoded frames keeps
+CM_FAMILY = MediaFamily(
+    modalities=("image", "video"),
+    rule=("n_frames",),
+    quality=(("1",), ("n_frames",)),
+    bands=(("still", "cm_tband_index"), ("frame", "cm_fband_index")),
+    pairings=(("still", "frame"), ("still", "still")),
+    photos=False,
+    nodes=(
+        ("cm_image_index", CM_IMG_SCHEMA, ("node",)),
+        ("cm_frame_index", CM_FRAME_SCHEMA, ("node", "frame_dhash")),
+    ),
+    flags="cm_flags",
+)
+# the trimodal family: source footage (rank 2) beats both of its
+# exported artifacts, the soundtrack rip's recording (1) and the
+# keyframe still (0), then most decoded units. Its spectral bands are
+# layout-sensitive (the 4x16-bit operating point slices sphash
+# differently from the older 8x8), so its state dir is claimed
+CM3_FAMILY = MediaFamily(
+    modalities=("image", "video", "audio"),
+    rule=("mrank", "n_units"),
+    quality=(("0", "1"), ("2", "n_frames"), ("1", "n_windows")),
+    bands=(
+        ("still", "cm3_tband_index"),
+        ("frame", "cm3_fband_index"),
+        ("rec", "cm3_aband_index"),
+        ("rip", "cm3_trband_index"),
+    ),
+    pairings=(
+        ("still", "frame"), ("still", "still"), ("rec", "rec"),
+        ("rec", "rip"),
+    ),
+    photos=False,
+    nodes=(
+        ("cm3_image_index", CM_IMG_SCHEMA, ("node",)),
+        ("cm3_frame_index", CM_FRAME_SCHEMA, ("node", "frame_dhash")),
+        ("cm3_audio_index", CM3_AUDIO_SCHEMA, ("node",)),
+    ),
+    flags="cm3_flags",
+    layout=f"sphash={AUDIO_SPHASH_BANDS}x{64 // AUDIO_SPHASH_BANDS}",
+)
+
+
+def state_cols(schema: str) -> list[str]:
+    """A state schema's columns without the batch_id tag."""
+    return [c.split()[0] for c in schema.split(",")][:-1]
+
+
+def keep_quality(fam: MediaFamily, modality: str) -> list:
+    """The ``fam.rule`` columns of one modality's rows."""
+    exprs = fam.quality[fam.modalities.index(modality)]
+    return [F.expr(e).cast("long").alias(c) for c, e in zip(fam.rule, exprs)]
 
 
 def mixed_fingerprints_of(
-    modalities: tuple,
+    fam: MediaFamily,
     docs: DataFrame,
-    thumbs: DataFrame | None = None,
+    stills: DataFrame | None = None,
     clips: DataFrame | None = None,
     recordings: DataFrame | None = None,
     tracks: DataFrame | None = None,
     vfp: DataFrame | None = None,
 ) -> list[DataFrame]:
-    """Decode the family's media roles of ``docs``: (doc_id, dhash)
-    keyframe stills, (doc_id, frame_idx, frame_dhash) clip frames and,
-    with audio, (doc_id, n_windows, sphash) recordings and (doc_id,
-    sphash) soundtrack rips. Media rows passed for a role replace its
-    payload attach; ``vfp`` injects already-decoded clip frames (the
-    unified tick decodes each Y4M stream once for both families)."""
-    if thumbs is None:
-        thumbs = MM.attach_payload_keyframe_thumbs(docs)
+    """Decode the family's media roles of ``docs``: stills (doc_id,
+    dhash; photos add codec, width, height and detail), (doc_id,
+    frame_idx, frame_dhash) clip frames and, with audio, (doc_id,
+    n_windows, sphash) recordings and (doc_id, sphash) soundtrack rips.
+    Media rows passed for a role replace its payload attach; ``vfp``
+    injects already-decoded clip frames (the unified tick decodes each
+    Y4M stream once for both families)."""
+    if stills is None:
+        stills = (
+            MM.attach_payload_dhash_corpus
+            if fam.photos
+            else MM.attach_payload_keyframe_thumbs
+        )(docs)
     if vfp is None:
         if clips is None:
             clips = MM.attach_payload_video_clips(docs)
         vfp = MM.video_frame_dhash(clips)
+    # a still's columns are the ones its node index stores, between
+    # node and keep_node
+    still_cols = state_cols(fam.nodes[0][1])[1:-1]
     fps = [
-        MM.media_dhash(thumbs).select("doc_id", "dhash"),
+        MM.media_dhash(stills, with_detail=fam.photos).select(*still_cols),
         vfp.select("doc_id", "frame_idx", "frame_dhash"),
     ]
-    if "audio" in modalities:
+    if "audio" in fam.modalities:
         if recordings is None:
             recordings = MM.attach_payload_audio_clips(docs)
         if tracks is None:
@@ -2356,44 +2453,36 @@ def mixed_fingerprints_of(
 
 
 def mixed_probes_of(
-    thumbs: DataFrame,
+    fam: MediaFamily,
+    stills: DataFrame,
     vsig: DataFrame,
     afp: DataFrame | None = None,
     trk: DataFrame | None = None,
 ) -> list[DataFrame]:
-    """The probe frames of the mixed edge families, in order: the
+    """The probe frames of the family's edge families, in order: the
     (doc_id, frame_dhash) DISTINCT clip signature ``vsig`` that
     clip<->clip probes directly, then the band rows (image_bands_of,
-    hash carried) of stills, clip frames and, with audio, recordings
-    and soundtrack rips on the AUDIO_SPHASH_BANDS layout."""
-    probes = [
-        vsig, image_bands_of(thumbs), image_bands_of(vsig, "frame_dhash")
-    ]
-    if afp is not None:
-        probes += [
-            image_bands_of(
-                afp.select("doc_id", "sphash"), "sphash",
-                n_bands=AUDIO_SPHASH_BANDS,
-            ),
-            image_bands_of(trk, "sphash", n_bands=AUDIO_SPHASH_BANDS),
-        ]
+    hash carried) of each of ``fam.bands``."""
+    roles = (stills, vsig, afp, trk)
+    probes = [vsig]
+    for kind, _ in fam.bands:
+        role, hash_col, n_bands, _, _ = BAND_PROBES[kind]
+        probes.append(image_bands_of(roles[role], hash_col, n_bands))
     return probes
 
 
 def mixed_nodes_of(
-    modalities: tuple,
-    thumbs: DataFrame,
+    fam: MediaFamily,
+    stills: DataFrame,
     vfp: DataFrame,
     afp: DataFrame | None = None,
 ) -> DataFrame:
     """Stills, clip frames and, with audio, recordings -> the node
-    frame (node, doc_id, modality, *keep_rule) of the mixed closure. A
-    still's units are 1, a clip's its decoded frame rows, a
-    recording's its spectral windows. Soundtrack rips add no node:
-    they are edge evidence for their clip."""
-    n = len(modalities)
-    nfr = vfp.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    roles = ((thumbs, F.lit(1)), (nfr, F.col("n")), (afp, F.col("n_windows")))
+    frame (node, doc_id, modality, *rule) of the family. A clip's rows
+    are (doc_id, n_frames), its decoded frame count. Soundtrack rips add
+    no node: they are edge evidence for their clip."""
+    n = len(fam.modalities)
+    nfr = vfp.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_frames"))
     return reduce(
         DataFrame.unionByName,
         (
@@ -2401,24 +2490,26 @@ def mixed_nodes_of(
                 (F.col("doc_id") * n + i).alias("node"),
                 "doc_id",
                 F.lit(m).alias("modality"),
-                *keep_quality(modalities, m, units),
+                *keep_quality(fam, m),
             )
-            for i, (m, (df, units)) in enumerate(zip(modalities, roles))
+            for i, (m, df) in enumerate(
+                zip(fam.modalities, (stills, nfr, afp))
+            )
         ),
     )
 
 
 def mixed_edges_of(
-    modalities: tuple,
+    fam: MediaFamily,
     probing: list[DataFrame],
     probed: list[DataFrame] | None = None,
 ) -> DataFrame:
-    """Node-tagged duplicate edges (id_a, id_b) of the mixed closure,
-    every family a banded or inverted-index equi-join: thumb<->clip
-    frame and thumb<->thumb (banded, Hamming <= DHASH_HAMMING_T),
-    clip<->clip (>= VIDEO_SHARED_T shared frame hashes) and, with
-    audio, rec<->rec and rec<->clip through the clip's soundtrack rip
-    (spectral bands, Hamming <= AUDIO_SPECTRAL_T).
+    """Node-tagged duplicate edges (id_a, id_b) of the family, every
+    edge family a banded or inverted-index equi-join: clip<->clip (>=
+    VIDEO_SHARED_T shared frame hashes), then each of ``fam.pairings``
+    (banded, Hamming <= the probe kind's threshold): thumb<->clip frame
+    and thumb<->thumb (DHASH_HAMMING_T) and, with audio, rec<->rec and
+    rec<->clip through the clip's soundtrack rip (AUDIO_SPECTRAL_T).
 
     ``probing`` and ``probed`` are mixed_probes_of frames. Closure
     form (``probed`` None): ``probing`` is the whole corpus and each
@@ -2427,7 +2518,7 @@ def mixed_edges_of(
     on != with least/greatest order and the cross families probe from
     both sides, so every edge touching a probing doc is emitted and
     base-base pairs are never recomputed."""
-    n = len(modalities)
+    n = len(fam.modalities)
     closure = probed is None
     if closure:
         probed = probing
@@ -2438,12 +2529,17 @@ def mixed_edges_of(
         # a delta-form self-join meets each new-new pair from both sides
         return (a, b) if closure else (F.least(a, b), F.greatest(a, b))
 
-    def banded(a, b, hash_a, hash_b, m_a, m_b, t, same):
+    def banded(a, b, kind_a, kind_b):
+        _, hash_a, _, m_a, t = BAND_PROBES[kind_a]
+        _, hash_b, _, m_b, _ = BAND_PROBES[kind_b]
         on = (F.col("x.band") == F.col("y.band")) & (
             F.col("x.byte") == F.col("y.byte")
         )
-        ids = (da * n + modalities.index(m_a), db * n + modalities.index(m_b))
-        if same:
+        ids = (
+            da * n + fam.modalities.index(m_a),
+            db * n + fam.modalities.index(m_b),
+        )
+        if kind_a == kind_b:
             on &= other_doc
             ids = ordered(*ids)
         return (
@@ -2453,11 +2549,13 @@ def mixed_edges_of(
             .select(ids[0].alias("id_a"), ids[1].alias("id_b"))
         )
 
-    def family(i, j, *pairing):
-        # i, j: positions of the two sides in the probe frames
-        e = banded(probing[i], probed[j], *pairing, i == j)
+    def family(kind_a, kind_b):
+        # positions of the two sides in the probe frames
+        kinds = [kind for kind, _ in fam.bands]
+        i, j = kinds.index(kind_a) + 1, kinds.index(kind_b) + 1
+        e = banded(probing[i], probed[j], kind_a, kind_b)
         if not closure and i != j:
-            e = e.unionByName(banded(probed[i], probing[j], *pairing, False))
+            e = e.unionByName(banded(probed[i], probing[j], kind_a, kind_b))
         return e.distinct()
 
     lo, hi = ordered(da, db)
@@ -2473,36 +2571,31 @@ def mixed_edges_of(
     )
     if not closure:
         shared = shared.distinct()
-    v = modalities.index("video")
-    dh, sp = DHASH_HAMMING_T, AUDIO_SPECTRAL_T
-    edges = [
-        family(1, 2, "dhash", "frame_dhash", "image", "video", dh),
-        family(1, 1, "dhash", "dhash", "image", "image", dh),
+    v = fam.modalities.index("video")
+    clip_edges = (
         shared.groupBy("da", "db")
         .agg(F.count(F.lit(1)).alias("n_shared"))
         .filter(F.col("n_shared") >= VIDEO_SHARED_T)
         .select(
             (F.col("da") * n + v).alias("id_a"),
             (F.col("db") * n + v).alias("id_b"),
-        ),
-    ]
-    if "audio" in modalities:
-        edges += [
-            family(3, 3, "sphash", "sphash", "audio", "audio", sp),
-            family(3, 4, "sphash", "sphash", "audio", "video", sp),
-        ]
-    return reduce(DataFrame.unionByName, edges)
+        )
+    )
+    return reduce(
+        DataFrame.unionByName,
+        [clip_edges, *(family(a, b) for a, b in fam.pairings)],
+    )
 
 
 def mixed_keep_best_of(
-    modalities: tuple,
-    thumbs: DataFrame,
+    fam: MediaFamily,
+    stills: DataFrame,
     vfp: DataFrame,
     afp: DataFrame | None = None,
     trk: DataFrame | None = None,
 ) -> DataFrame:
-    """Full mixed-cluster closure -> member rows (node, doc_id,
-    modality, *keep_rule, cluster_id, keep_node): closure-form edge
+    """Full closure of the family -> member rows (node, doc_id,
+    modality, *rule, cluster_id, keep_node): closure-form edge
     families, connected components over the node-tagged ids, argmax of
     the keep rule with node ASC last. One closure definition for the
     batch queries, the ticks' tick-0 staging and the delta twins'
@@ -2512,17 +2605,17 @@ def mixed_keep_best_of(
     )
 
     vsig = vfp.select("doc_id", "frame_dhash").distinct()
-    edges = mixed_edges_of(modalities, mixed_probes_of(thumbs, vsig, afp, trk))
+    edges = mixed_edges_of(fam, mixed_probes_of(fam, stills, vsig, afp, trk))
     comp = duplicate_clusters(edges).select("node", "cluster_id")
     members = (
-        mixed_nodes_of(modalities, thumbs, vfp, afp)
+        mixed_nodes_of(fam, stills, vfp, afp)
         .join(comp, "node", "left")
         .withColumn(
             "cluster_id", F.coalesce(F.col("cluster_id"), F.col("node"))
         )
     )
     best = F.max(
-        F.struct(*keep_rule(modalities), (-F.col("node")).alias("negnode"))
+        F.struct(*fam.rule, (-F.col("node")).alias("negnode"))
     ).over(Window.partitionBy("cluster_id"))
     return members.withColumn("keep_node", -best.getField("negnode"))
 
@@ -2531,20 +2624,20 @@ def cross_modal_keep_best_of(thumbs: DataFrame, vfp: DataFrame) -> DataFrame:
     """The bimodal closure of stills (doc_id, dhash) and clip frames
     (doc_id, frame_idx, frame_dhash) on nodes 2*doc_id + m -> member
     rows (node, doc_id, modality, n_frames, cluster_id, keep_node)."""
-    return mixed_keep_best_of(CM_MODALITIES, thumbs, vfp)
+    return mixed_keep_best_of(CM_FAMILY, thumbs, vfp)
 
 
-def _mixed_format(modalities: tuple, members: DataFrame) -> DataFrame:
+def _mixed_format(fam: MediaFamily, members: DataFrame) -> DataFrame:
     """(node, doc_id, modality, units, keep_node) member rows -> the
     registered output shape shared by a family's batch query and its
     delta twin (same oracle)."""
-    n = len(modalities)
+    n = len(fam.modalities)
     return members.select(
         "doc_id",
         "modality",
-        keep_rule(modalities)[-1],
+        fam.rule[-1],
         F.expr(f"keep_node div {n}").cast("long").alias("keep_doc"),
-        F.array(*(F.lit(m) for m in modalities))[
+        F.array(*(F.lit(m) for m in fam.modalities))[
             (F.col("keep_node") % n).cast("int")
         ].alias("keep_modality"),
         F.when(F.col("node") == F.col("keep_node"), F.lit("kept"))
@@ -2554,20 +2647,17 @@ def _mixed_format(modalities: tuple, members: DataFrame) -> DataFrame:
 
 
 def _mixed_keep_best(
-    spark: SparkSession, sf_dir: str, modalities: tuple
+    spark: SparkSession, sf_dir: str, fam: MediaFamily
 ) -> DataFrame:
     """The batch keep-best query of a family over the whole corpus."""
-    fps = mixed_fingerprints_of(
-        modalities, load_table(spark, sf_dir, "documents")
-    )
+    fps = mixed_fingerprints_of(fam, load_table(spark, sf_dir, "documents"))
     return _mixed_format(
-        modalities,
-        mixed_keep_best_of(modalities, *(perf_checkpoint(f) for f in fps)),
+        fam, mixed_keep_best_of(fam, *(perf_checkpoint(f) for f in fps))
     )
 
 
 def _mixed_keep_best_delta(
-    spark: SparkSession, sf_dir: str, modalities: tuple, base_key: str
+    spark: SparkSession, sf_dir: str, fam: MediaFamily, base_key: str
 ) -> DataFrame:
     """The IVM twin of a family's batch query: the base corpus
     (doc_id % MEDIA_DELTA_MOD != 0) resolved by the batch closure
@@ -2586,7 +2676,7 @@ def _mixed_keep_best_delta(
     # concurrently on a cold state root.
     audio_bases = (
         (staged_audio_base, staged_track_base)
-        if "audio" in modalities
+        if "audio" in fam.modalities
         else ()
     )
     base = _warm_staged_bases(
@@ -2594,12 +2684,12 @@ def _mixed_keep_best_delta(
     )
     delta = [
         perf_checkpoint(f)
-        for f in mixed_fingerprints_of(modalities, docs.filter(is_delta))
+        for f in mixed_fingerprints_of(fam, docs.filter(is_delta))
     ]
     base_kb = staged_index(
         spark,
         f"{base_key}:{sf_dir}",
-        lambda: mixed_keep_best_of(modalities, *base),
+        lambda: mixed_keep_best_of(fam, *base),
         src_dir=sf_dir,
     )
     # delta and base doc sets are disjoint, so DISTINCT and the node
@@ -2610,12 +2700,12 @@ def _mixed_keep_best_delta(
     vsig = staged_video_sig_base(spark, sf_dir).unionByName(vsig_delta)
     full = [b.unionByName(d) for b, d in zip(base, delta)]
     edges = mixed_edges_of(
-        modalities,
-        mixed_probes_of(delta[0], vsig_delta, *delta[2:]),
-        mixed_probes_of(full[0], vsig, *full[2:]),
+        fam,
+        mixed_probes_of(fam, delta[0], vsig_delta, *delta[2:]),
+        mixed_probes_of(fam, full[0], vsig, *full[2:]),
     )
-    delta_nodes = perf_checkpoint(mixed_nodes_of(modalities, *delta[:3]))
-    rule = keep_rule(modalities)
+    delta_nodes = perf_checkpoint(mixed_nodes_of(fam, *delta[:3]))
+    rule = list(fam.rule)
     new_q = delta_nodes.select(F.col("node").alias("doc_id"), *rule)
     idx_q = base_kb.select(
         F.col("node").alias("doc_id"),
@@ -2647,8 +2737,7 @@ def _mixed_keep_best_delta(
         )
     )
     return _mixed_format(
-        modalities,
-        base_rows.unionByName(delta_rows.select(*cols, "keep_node")),
+        fam, base_rows.unionByName(delta_rows.select(*cols, "keep_node"))
     )
 
 
@@ -2673,7 +2762,7 @@ def _mixed_keep_best_delta(
     oracle=_CM_KB_ORACLE,
 )
 def cross_modal_keep_best_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _mixed_keep_best_delta(spark, sf_dir, CM_MODALITIES, "cm_base_kb")
+    return _mixed_keep_best_delta(spark, sf_dir, CM_FAMILY, "cm_base_kb")
 
 
 # ---------------------------------------------------------------------------
@@ -2919,7 +3008,7 @@ FROM members m JOIN best b ON b.cluster_id = m.cluster_id
 def cross_modal_keep_best_trimodal(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    return _mixed_keep_best(spark, sf_dir, CM3_MODALITIES)
+    return _mixed_keep_best(spark, sf_dir, CM3_FAMILY)
 
 
 def trimodal_keep_best_of(
@@ -2932,7 +3021,7 @@ def trimodal_keep_best_of(
     (doc_id, n_windows, sphash) and soundtrack rips (doc_id, sphash)
     on nodes 3*doc_id + m -> member rows (node, doc_id, modality,
     mrank, n_units, cluster_id, keep_node)."""
-    return mixed_keep_best_of(CM3_MODALITIES, thumbs, vfp, afp, trk)
+    return mixed_keep_best_of(CM3_FAMILY, thumbs, vfp, afp, trk)
 
 
 
@@ -3202,6 +3291,4 @@ def cross_modal_audio_incremental_update(
 def cross_modal_trimodal_delta(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    return _mixed_keep_best_delta(
-        spark, sf_dir, CM3_MODALITIES, "cm3_base_kb"
-    )
+    return _mixed_keep_best_delta(spark, sf_dir, CM3_FAMILY, "cm3_base_kb")

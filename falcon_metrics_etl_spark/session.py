@@ -195,13 +195,6 @@ def localize(df, cap: int):
     )
 
 
-# maintained-index staging for the IVM proof twins (r14; r13 used a
-# session-scoped eager localCheckpoint, r13 verdict #1 asked for the
-# tick-persisted read to be the AUDITED plan): state lands as plain
-# parquet under a state root, exactly the shape the streaming ticks
-# persist (streaming/cross_modal_tick.stage_cross_modal_state), and
-# the twins' audited plans READ it as a parquet scan instead of
-# re-deriving the batch closure in-lineage on a cold session.
 def run_concurrent(*thunks):
     """Submit independent Spark actions from one driver concurrently
     and return their results in order.
@@ -286,6 +279,13 @@ def checkpoint_wave(*dfs):
     )
 
 
+# maintained-index staging for the IVM proof twins (r14; r13 used a
+# session-scoped eager localCheckpoint, r13 verdict #1 asked for the
+# tick-persisted read to be the AUDITED plan): state lands as plain
+# parquet under a state root, exactly the shape the streaming ticks
+# persist (streaming/cross_modal_tick.stage_cross_modal_state), and
+# the twins' audited plans READ it as a parquet scan instead of
+# re-deriving the batch closure in-lineage on a cold session.
 STATE_DIR_ENV = "FALCON_METRICS_STATE_DIR"
 
 # Mixed into every staged-state fingerprint: bump when ANY staged

@@ -64,6 +64,11 @@ FP_SCHEMA = "fp string, canonical_id long, batch_id long"
 BAND_SCHEMA = "doc_id long, band int, bkey string, batch_id long"
 SHINGLE_SCHEMA = "doc_id long, shs array<string>, batch_id long"
 FLAGS_SCHEMA = "doc_id long, status string, n_tokens long, batch_id long"
+# the frozen tokenizer tables, in the types plans/bpe._merges_df and
+# plans/ulm._ulm_vocab_df produce; staging casts to them and every tick
+# reads them pinned, so no read runs a footer-inference job
+MERGES_SCHEMA = "merge_rank int, lhs string, rhs string"
+ULM_VOCAB_SCHEMA = "piece string, piece_count long, cost long"
 
 
 def _gate_status(docs: DataFrame) -> DataFrame:
@@ -125,10 +130,16 @@ def stage_corpus_state(
     overwrite_state(
         toks.select("doc_id", "shs", tag), f"{state_dir}/shingle_index"
     )
-    if merges is not None:
-        overwrite_state(merges, f"{state_dir}/merges")
-    else:
-        overwrite_state(ulm_vocab, f"{state_dir}/ulm_vocab")
+    name, table, schema = (
+        ("merges", merges, MERGES_SCHEMA)
+        if merges is not None
+        else ("ulm_vocab", ulm_vocab, ULM_VOCAB_SCHEMA)
+    )
+    fields = (f.split() for f in schema.split(", "))
+    overwrite_state(
+        table.select(*(F.col(c).cast(t).alias(c) for c, t in fields)),
+        f"{state_dir}/{name}",
+    )
 
 
 def corpus_ingest_tick(
@@ -276,10 +287,10 @@ def corpus_ingest_tick(
             words_of,
         )
 
-        vocab = st.read("ulm_vocab")
+        vocab = st.read("ulm_vocab", ULM_VOCAB_SCHEMA)
         budgets = ulm_token_budgets(words_of(admitted), vocab=vocab)
     else:
-        merges = st.read("merges")
+        merges = st.read("merges", MERGES_SCHEMA)
         budgets = byte_token_budgets(
             byte_words_of(admitted), merges=merges
         )

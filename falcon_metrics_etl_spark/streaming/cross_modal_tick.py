@@ -1,62 +1,58 @@
-"""Incremental CROSS-MODAL ingest tick — the delta shape of the mixed
-keep-best closure (plans/media_dedup.mixed_keep_best_of) over one
-node-tagged family of 2 or 3 modalities: node = len(modalities) *
-doc_id + index of the doc's modality. The bimodal family
-(CM_MODALITIES: keyframe stills and clips, ``cm_*`` state) is the
-trimodal one (CM3_MODALITIES: + standalone audio recordings and each
-clip's soundtrack rip, ``cm3_*`` state) without its audio roles, and
-both run the same stage and tick bodies.
+"""Incremental ingest tick of every node-tagged media family — the
+delta shape of the family closure (plans/media_dedup.mixed_keep_best_of)
+over node = len(modalities) * doc_id + index of the doc's modality. A
+family is data (media_dedup.MediaFamily), and all three run the same
+stage and tick bodies:
+
+- bimodal (CM_FAMILY: keyframe stills and clips, ``cm_*`` state): a
+  thumbnail is displaced the tick its source footage arrives;
+- trimodal (CM3_FAMILY: + standalone audio recordings and each clip's
+  soundtrack rip, ``cm3_*`` state);
+- per-modality media (streaming/media_tick.MEDIA: photos scored on
+  area then detail, clips on frame count; like pairs with like only).
 
 A batch of NEW media docs fingerprints delta-only and probes the
 maintained indexes through the SAME edge families as the batch closure
-(plans/media_dedup.mixed_edges_of, delta form): thumb<->clip frame and
-thumb<->thumb (banded Hamming), clip<->clip (exact frame-hash share
->= VIDEO_SHARED_T) and, with audio, rec<->rec and rec<->clip through
-the clip's rip (spectral bands). Verified edges lift onto the keeper
-graph and resolve by connected components + argmax of the family's
-keep rule (media_dedup.keep_rule: most frames for the bimodal family;
-modality rank video > audio > image, then units, for the trimodal one)
-with node ASC last (operators/keep_best.resolve_keep_best), so the
-tick's keep set stays row-identical to the batch closure recomputed
-over everything processed so far — the IVM invariant the oracled
-``cross_modal_keep_best_delta`` and ``cross_modal_trimodal_delta``
-twins hash-match against their batch closures.
+(media_dedup.mixed_edges_of, delta form): clip<->clip (exact
+frame-hash share >= VIDEO_SHARED_T) and the family's banded pairings
+(thumb<->clip frame, thumb<->thumb, rec<->rec, rec<->clip through the
+clip's rip). Verified edges lift onto the keeper graph and resolve by
+connected components + argmax of the family's keep rule with node ASC
+last (operators/keep_best.resolve_keep_best), so the tick's keep set
+stays row-identical to the batch closure recomputed over everything
+processed so far — the IVM invariant the oracled delta twins
+(``cross_modal_keep_best_delta``, ``cross_modal_trimodal_delta``,
+``media_keep_best_delta``, ``video_keep_best_delta``) hash-match
+against their batch closures.
 
-The semantics this buys a training pipeline: a thumbnail or recording
-admitted while alone is DISPLACED the tick its source footage arrives
-— the footage keeps, the artifact flags 'displaced:near_dup', and
-every index row pointing at it repoints to the clip.
+State under ``state_dir`` (plain parquet), tables named by the family:
 
-State under ``state_dir`` (plain parquet), ``cm_`` prefix for the
-bimodal family and ``cm3_`` for the trimodal one:
+- one node index per modality (node, doc_id, the role's fingerprint
+  and quality columns, keep_node, batch_id) — every processed doc,
+  kept AND dropped (dropped fingerprints make the cluster closure exact
+  across ticks). A clip index holds the DISTINCT frame hashes of each
+  clip, or with ``frame_idx`` every decoded frame (the media family's
+  temporal-order check reads them);
+- one band index per probe kind (doc_id, hash, band, byte, batch_id)
+  CARRYING the hash: at DHASH_HAMMING_T = 12 > 7 the banding is part of
+  the edge DEFINITION (a pair at Hamming 8..12 sharing no band is NOT
+  an edge), so probes verify the exact banded hash pairs;
+- flags (doc_id, modality, status, batch_id) — 'kept',
+  'dropped:near_dup', 'displaced:near_dup' and, for the media family,
+  'dropped:near_dup:reordered' (a dropped clip none of whose duplicate
+  pairs has an aligned run of VIDEO_SHARED_T frames: a re-cut, not a
+  trim) through the keyed MERGE.
 
-- ``image_index`` (node, doc_id, dhash, keep_node, batch_id) — every
-  processed still, kept AND dropped (dropped fingerprints make the
-  cluster closure exact across ticks).
-- ``tband_index`` (doc_id, dhash, band, byte, batch_id) — still-hash
-  band rows CARRYING the hash: at DHASH_HAMMING_T = 12 > 7 the banding
-  is part of the edge DEFINITION (a pair at Hamming 8..12 sharing no
-  band is NOT an edge), so probes verify the exact banded hash pairs —
-  the stored rows are the frames image_bands_of builds, fed to the
-  edge builder unchanged.
-- ``frame_index`` (node, doc_id, frame_dhash, n_frames, keep_node,
-  batch_id) — DISTINCT frame hashes per processed clip; n_frames is
-  the clip's decoded frame count.
-- ``fband_index`` (doc_id, frame_dhash, band, byte, batch_id) —
-  frame-hash band rows, hash carried for the same reason.
-- trimodal only: ``audio_index`` (node, doc_id, sphash, n_windows,
-  keep_node, batch_id), and ``aband_index`` / ``trband_index``
-  (doc_id, sphash, band, byte, batch_id) — recording and rip band rows
-  on the AUDIO_SPHASH_BANDS layout, stamped by claim_state_layout.
-- ``flags`` (doc_id, modality, status, batch_id) — 'kept',
-  'dropped:near_dup', 'displaced:near_dup' through the keyed MERGE.
+A family with a layout token claims its state dir first
+(state.claim_state_layout), so a dir staged under another layout
+raises instead of silently re-admitting duplicates.
 
 Replay safety: the contract of ``state.TickState``, flags keyed on
 (doc_id, modality).
 
 ``unified_media_ingest_tick`` is the production entry for a corpus
 carrying photos, stills and clips: one Y4M decode of the batch feeds
-both the per-modality tick and this mixed tick.
+both the media family's tick and a cross-modal family's tick.
 """
 
 from __future__ import annotations
@@ -70,15 +66,18 @@ from falcon_metrics_etl_spark.functions import multimodal as MM
 from falcon_metrics_etl_spark.operators.keep_best import resolve_keep_best
 from falcon_metrics_etl_spark.plans import media_dedup as MD
 from falcon_metrics_etl_spark.plans.media_dedup import (
-    AUDIO_SPHASH_BANDS,
-    CM3_MODALITIES,
-    CM_MODALITIES,
+    BAND_PROBES,
+    CM3_FAMILY,
+    CM_FAMILY,
+    VIDEO_SHARED_T,
+    MediaFamily,
+    aligned_runs_of,
     keep_quality,
-    keep_rule,
     mixed_fingerprints_of,
     mixed_keep_best_of,
     mixed_nodes_of,
     mixed_probes_of,
+    state_cols,
 )
 from falcon_metrics_etl_spark.session import (
     checkpoint_wave,
@@ -94,55 +93,13 @@ from falcon_metrics_etl_spark.state import (
     remap,
 )
 
-CM_IMG_SCHEMA = (
-    "node long, doc_id long, dhash long, keep_node long, batch_id long"
-)
-CM_TBAND_SCHEMA = (
-    "doc_id long, dhash long, band int, byte long, batch_id long"
-)
-CM_FBAND_SCHEMA = (
-    "doc_id long, frame_dhash long, band int, byte long, batch_id long"
-)
-CM_FRAME_SCHEMA = (
-    "node long, doc_id long, frame_dhash long, n_frames long, "
-    "keep_node long, batch_id long"
-)
-CM3_AUDIO_SCHEMA = (
-    "node long, doc_id long, sphash long, n_windows int, "
-    "keep_node long, batch_id long"
-)
-CM3_SPBAND_SCHEMA = (
-    "doc_id long, sphash long, band int, byte long, batch_id long"
-)
-CM_FLAGS_SCHEMA = (
-    "doc_id long, modality string, status string, batch_id long"
-)
-# per modality, in family order: node index, its schema, the key a
-# repoint rewrites rows by, and the SQL expression of its decoded units
-_NODE_INDEXES = (
-    ("image_index", CM_IMG_SCHEMA, ["node"], "1"),
-    ("frame_index", CM_FRAME_SCHEMA, ["node", "frame_dhash"], "n_frames"),
-    ("audio_index", CM3_AUDIO_SCHEMA, ["node"], "n_windows"),
-)
-# per band probe frame of mixed_probes_of (after vsig), in order
-_BAND_INDEXES = (
-    ("tband_index", CM_TBAND_SCHEMA),
-    ("fband_index", CM_FBAND_SCHEMA),
-    ("aband_index", CM3_SPBAND_SCHEMA),
-    ("trband_index", CM3_SPBAND_SCHEMA),
-)
+FLAGS_SCHEMA = "doc_id long, modality string, status string, batch_id long"
 
-# the trimodal state's spectral band tables are layout-sensitive: the
-# 4x16-bit operating point slices sphash differently from the older
-# 8x8, so stage AND tick stamp/verify the layout before touching state
-# (state.claim_state_layout — probing an old-layout index silently
-# re-admits duplicates otherwise)
-CM3_LAYOUT_TOKEN = (
-    f"sphash={AUDIO_SPHASH_BANDS}x{64 // AUDIO_SPHASH_BANDS}"
-)
-_CM3_LAYOUT_GUARDS = (
-    "cm3_aband_index", "cm3_trband_index", "cm3_audio_index"
-)
+
+def _band_schema(kind: str) -> str:
+    """The state schema of a band index of one probe kind."""
+    hash_col = BAND_PROBES[kind][1]
+    return f"doc_id long, {hash_col} long, band int, byte long, batch_id long"
 
 
 def _flags(
@@ -150,15 +107,21 @@ def _flags(
     modalities: tuple,
     batch_id: int,
     displaced: DataFrame | None = None,
+    reordered=(),
 ) -> DataFrame:
     """Per-doc flag rows (doc_id, modality, status, batch_id) of node
     verdicts (doc_id = node = len(modalities) * doc + modality index,
-    is_kept) and of the keepers they displaced (doc_id = node)."""
+    is_kept), of the keepers they displaced (doc_id = node) and of the
+    ``reordered`` dropped nodes."""
+    status = F.when(F.col("is_kept"), F.lit("kept"))
+    if reordered:
+        status = status.when(
+            F.col("doc_id").isin(sorted(reordered)),
+            F.lit("dropped:near_dup:reordered"),
+        )
     nodes = verdicts.select(
         F.col("doc_id").alias("node"),
-        F.when(F.col("is_kept"), F.lit("kept"))
-        .otherwise(F.lit("dropped:near_dup"))
-        .alias("status"),
+        status.otherwise(F.lit("dropped:near_dup")).alias("status"),
     )
     if displaced is not None:
         nodes = nodes.unionByName(
@@ -202,25 +165,75 @@ def _phase_timer():
     return mark
 
 
-def _claim_state(modalities: tuple, state_dir: str) -> str:
-    """The family's state-table prefix; a family with audio first
-    claims the spectral band layout of ``state_dir``."""
-    if "audio" not in modalities:
-        return "cm_"
-    claim_state_layout(
-        state_dir, CM3_LAYOUT_TOKEN, guard_tables=_CM3_LAYOUT_GUARDS
+def _claim_state(fam: MediaFamily, state_dir: str) -> None:
+    """A family with a layout token claims ``state_dir`` for it,
+    guarded by every index it maintains."""
+    if fam.layout is not None:
+        claim_state_layout(
+            state_dir,
+            fam.layout,
+            guard_tables=[t for t, _, _ in fam.nodes]
+            + [t for _, t in fam.bands],
+        )
+
+
+def _clip_rows(fam: MediaFamily, frames: DataFrame, vsig: DataFrame):
+    """The rows the family's clip index stores: every decoded frame
+    when it keys on frame_idx, else the distinct clip signature."""
+    return frames if "frame_idx" in fam.nodes[1][1] else vsig
+
+
+def _reordered(
+    fam: MediaFamily, kmap: dict, v_new: DataFrame, clip_idx: DataFrame
+) -> set:
+    """The media family's temporal-order check: of the batch clips the
+    resolve dropped (``kmap`` keys), the nodes none of whose pairs of
+    >= VIDEO_SHARED_T shared frame hashes has an order-aligned run of
+    VIDEO_SHARED_T frames (media_dedup.aligned_runs_of, the batch
+    query's algebra) — a re-cut, not a copy. ``clip_idx``: the probed
+    per-frame clip index."""
+    n, v = len(fam.modalities), fam.modalities.index("video")
+    dropped = sorted(node // n for node in kmap if node % n == v)
+    if not fam.verify_order or not dropped:
+        return set()
+    frames = clip_idx.select(*v_new.columns).unionByName(v_new)
+    a, b = F.col("a.doc_id"), F.col("b.doc_id")
+    fm = (
+        F.broadcast(v_new.filter(F.col("doc_id").isin(dropped))).alias("a")
+        .join(
+            frames.alias("b"),
+            (F.col("a.frame_dhash") == F.col("b.frame_dhash")) & (a != b),
+        )
+        .select(
+            F.least(a, b).alias("id_a"),
+            F.greatest(a, b).alias("id_b"),
+            F.when(a < b, F.col("a.frame_idx"))
+            .otherwise(F.col("b.frame_idx"))
+            .alias("ia"),
+            F.when(a < b, F.col("b.frame_idx"))
+            .otherwise(F.col("a.frame_idx"))
+            .alias("ib"),
+            F.col("a.frame_dhash").alias("fd"),
+        )
+        # both orientations appear when both sides are dropped clips
+        .distinct()
     )
-    return "cm3_"
-
-
-def _cols(schema: str) -> list[str]:
-    """A state schema's columns without the batch_id tag."""
-    return [c.split()[0] for c in schema.split(",")][:-1]
+    aligned = (
+        fm.select("id_a", "id_b", "fd")
+        .distinct()
+        .groupBy("id_a", "id_b")
+        .agg(F.count(F.lit(1)).alias("n_shared"))
+        .filter(F.col("n_shared") >= VIDEO_SHARED_T)
+        .join(aligned_runs_of(fm.drop("fd")), ["id_a", "id_b"])
+        .filter(F.col("aligned_run") >= VIDEO_SHARED_T)
+    )
+    touched = {d for r in aligned.collect() for d in (r["id_a"], r["id_b"])}
+    return {d * n + v for d in dropped if d not in touched}
 
 
 def _stage(
     spark: SparkSession,
-    modalities: tuple,
+    fam: MediaFamily,
     docs: DataFrame,
     state_dir: str,
     batch_id: int,
@@ -229,42 +242,41 @@ def _stage(
     """Tick-0 backfill: run the batch closure of the family over the
     base corpus and persist its full resolution as the maintained
     state."""
-    pre = _claim_state(modalities, state_dir)
+    _claim_state(fam, state_dir)
     # backfill is job-count bound too: the decode checkpoints and the
     # state writes each run as one concurrent wave
-    t, v, *audio = checkpoint_wave(
-        *mixed_fingerprints_of(modalities, docs, **media)
-    )
-    kb = mixed_keep_best_of(modalities, t, v, *audio).localCheckpoint(
-        eager=True
-    )
+    t, v, *audio = checkpoint_wave(*mixed_fingerprints_of(fam, docs, **media))
+    kb = mixed_keep_best_of(fam, t, v, *audio).localCheckpoint(eager=True)
     tag = batch_tag(batch_id)
     vsig = v.select("doc_id", "frame_dhash").distinct()
-    units = F.col(keep_rule(modalities)[-1]).alias("n_frames")
+    # a clip's frame count is the rule column its quality reads as
+    # n_frames
+    video_quality = fam.quality[fam.modalities.index("video")]
+    units = F.col(fam.rule[video_quality.index("n_frames")]).alias("n_frames")
     writes = [
         (
-            sub,
+            table,
             schema,
             kb.filter(F.col("modality") == m)
             .select("node", "doc_id", "keep_node", units)
             .join(rows, "doc_id"),
         )
-        for m, (sub, schema, _, _), rows in zip(
-            modalities, _NODE_INDEXES, (t, vsig, *audio)
+        for m, (table, schema, _), rows in zip(
+            fam.modalities, fam.nodes, (t, _clip_rows(fam, v, vsig), *audio)
         )
     ]
     writes += [
-        (sub, schema, bands)
-        for (sub, schema), bands in zip(
-            _BAND_INDEXES, mixed_probes_of(t, vsig, *audio)[1:]
+        (table, _band_schema(kind), bands)
+        for (kind, table), bands in zip(
+            fam.bands, mixed_probes_of(fam, t, vsig, *audio)[1:]
         )
     ]
     run_concurrent(
         *(
-            lambda sub=sub, schema=schema, df=df: overwrite_state(
-                df.select(*_cols(schema), tag), f"{state_dir}/{pre}{sub}"
+            lambda table=table, schema=schema, df=df: overwrite_state(
+                df.select(*state_cols(schema), tag), f"{state_dir}/{table}"
             )
-            for sub, schema, df in writes
+            for table, schema, df in writes
         )
     )
     overwrite_state(
@@ -273,16 +285,16 @@ def _stage(
                 F.col("node").alias("doc_id"),
                 (F.col("node") == F.col("keep_node")).alias("is_kept"),
             ),
-            modalities,
+            fam.modalities,
             batch_id,
         ),
-        f"{state_dir}/{pre}flags",
+        f"{state_dir}/{fam.flags}",
     )
 
 
 def _tick(
     spark: SparkSession,
-    modalities: tuple,
+    fam: MediaFamily,
     batch_docs: DataFrame,
     state_dir: str,
     batch_id: int,
@@ -294,8 +306,8 @@ def _tick(
     probe every index -> joint resolve -> flag/repoint/append ->
     maintain), idempotent under replay of the same (batch_docs,
     batch_id)."""
-    pre = _claim_state(modalities, state_dir)
-    n = len(modalities)
+    _claim_state(fam, state_dir)
+    n = len(fam.modalities)
     bid = int(batch_id)
     mark = _phase_timer()
     # one capped collect makes a batch of at most DRIVER_DECODE_DOCS docs
@@ -306,7 +318,7 @@ def _tick(
     # concurrent wave; injected frames are already materialized
     batch_docs = localize(batch_docs, MM.DRIVER_DECODE_DOCS)
     t_new, v_new, *audio_new = mixed_fingerprints_of(
-        modalities, batch_docs, vfp=vfp, **media
+        fam, batch_docs, vfp=vfp, **media
     )
     if vfp is None:
         t_new, v_new, *audio_new = checkpoint_wave(t_new, v_new, *audio_new)
@@ -317,24 +329,22 @@ def _tick(
     n_new = v_new.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_frames")
     )
-    new = mixed_probes_of(t_new, vsig_new, *audio_new)
-    node_indexes = list(zip(modalities, _NODE_INDEXES))
-    band_indexes = list(zip(_BAND_INDEXES, new[1:]))
+    new = mixed_probes_of(fam, t_new, vsig_new, *audio_new)
+    band_indexes = [
+        (table, _band_schema(kind), f)
+        for (kind, table), f in zip(fam.bands, new[1:])
+    ]
 
     with TickState(spark, state_dir, bid) as st:
-        idx = [
-            st.probe(pre + sub, schema)
-            for _, (sub, schema, _, _) in node_indexes
-        ]
+        idx = [st.probe(table, schema) for table, schema, _ in fam.nodes]
         # probed side = stored band rows (hash carried) + the batch's own
         # bands (batch-mate edges). No DISTINCT on the clip signature:
-        # stored frame rows are distinct per doc by the append contract,
-        # vsig_new is distinct, and the clip<->clip family re-distincts
-        # its (pair, frame) rows before counting
+        # the clip<->clip family re-distincts its (pair, frame) rows
+        # before counting
         full = [idx[1].select("doc_id", "frame_dhash").unionByName(vsig_new)]
         full += [
-            st.probe(pre + sub, schema).select(*_cols(schema)).unionByName(f)
-            for (sub, schema), f in band_indexes
+            st.probe(table, schema).select(*state_cols(schema)).unionByName(f)
+            for table, schema, f in band_indexes
         ]
         # ---- band appends, overlapped ----------------------------------
         # the band-index appends depend ONLY on the decode outputs — not
@@ -346,10 +356,10 @@ def _tick(
         # their file sets before these writes land.
         st.start(
             *(
-                lambda sub=sub, schema=schema, f=f: st.append(
-                    pre + sub, schema, f, "doc_id", _cols(schema)
+                lambda table=table, schema=schema, f=f: st.append(
+                    table, schema, f, "doc_id", state_cols(schema)
                 )
-                for (sub, schema), f in band_indexes
+                for table, schema, f in band_indexes
             )
         )
 
@@ -357,15 +367,15 @@ def _tick(
         # edge family broadcasts it and the state side never shuffles.
         # The edge builder is looked up at call time.
         edges = MD.mixed_edges_of(
-            modalities, [F.broadcast(f) for f in new], full
+            fam, [F.broadcast(f) for f in new], full
         ).localCheckpoint(eager=True)
         mark("edges")
 
         # joint resolution over the node-tagged ids
-        rule = keep_rule(modalities)
-        new_q = mixed_nodes_of(
-            modalities, t_new, v_new, *audio_new[:1]
-        ).select(F.col("node").alias("doc_id"), *rule)
+        rule = list(fam.rule)
+        new_q = mixed_nodes_of(fam, t_new, v_new, *audio_new[:1]).select(
+            F.col("node").alias("doc_id"), *rule
+        )
         # per-frame rows: bounded resolve dedupes the endpoint rows it
         # reads — no state-wide shuffle
         idx_q = reduce(
@@ -374,9 +384,9 @@ def _tick(
                 df.select(
                     F.col("node").alias("doc_id"),
                     F.col("keep_node").alias("keep_id"),
-                    *keep_quality(modalities, m, F.expr(units)),
+                    *keep_quality(fam, m),
                 )
-                for (m, (_, _, _, units)), df in zip(node_indexes, idx)
+                for m, df in zip(fam.modalities, idx)
             ),
         )
         # bounded: driver-built verdict frames, frozen before any state
@@ -393,12 +403,13 @@ def _tick(
         mark("resolve")
 
         # ---- 1) land flags (keyed merge) --------------------------------
-        flags = _flags(verdicts, modalities, bid, displaced)
+        reordered = _reordered(fam, kmap, v_new, idx[1])
+        flags = _flags(verdicts, fam.modalities, bid, displaced, reordered)
         # the flags merge touches only the flags table — disjoint from
         # the repoints (node indexes) and every append — so it overlaps
         st.start(
             lambda: st.merge(
-                pre + "flags", CM_FLAGS_SCHEMA, flags, ["doc_id", "modality"]
+                fam.flags, FLAGS_SCHEMA, flags, ["doc_id", "modality"]
             )
         )
         mark("flags")
@@ -411,35 +422,39 @@ def _tick(
             # per-modality repoints touch disjoint tables — concurrent
             run_concurrent(
                 *(
-                    lambda sub=sub, schema=schema, keys=keys: st.repoint(
-                        pre + sub, schema, moves, "keep_node", keys
+                    lambda table=table, schema=schema, keys=keys: st.repoint(
+                        table, schema, moves, "keep_node", list(keys)
                     )
-                    for _, (sub, schema, keys, _) in node_indexes
+                    for table, schema, keys in fam.nodes
                 )
             )
         mark("repoint")
 
         # ---- 3) append the batch (kept AND dropped; anti-joined) --------
         # every batch node keeps itself unless its verdict says otherwise
-        rows = (t_new, vsig_new.join(n_new, "doc_id"), *audio_new[:1])
+        rows = (
+            t_new,
+            _clip_rows(fam, v_new, vsig_new).join(n_new, "doc_id"),
+            *audio_new[:1],
+        )
         # the node appends run as one concurrent wave; the band appends
         # (started after decode) and the flags merge (started after
         # resolve) join as the block exits, before maintenance can
         # compact the tables they write
         run_concurrent(
             *(
-                lambda sub=sub, schema=schema, df=df, i=i: st.append(
-                    pre + sub,
+                lambda table=table, schema=schema, df=df, i=i: st.append(
+                    table,
                     schema,
                     df.select(
                         (F.col("doc_id") * n + i).alias("node"),
-                        *_cols(schema)[1:-1],
+                        *state_cols(schema)[1:-1],
                     ).withColumn("keep_node", remap(F.col("node"), kmap)),
                     "node",
-                    _cols(schema),
+                    state_cols(schema),
                 )
-                for i, ((_, (sub, schema, _, _)), df) in enumerate(
-                    zip(node_indexes, rows)
+                for i, ((table, schema, _), df) in enumerate(
+                    zip(fam.nodes, rows)
                 )
             )
         )
@@ -464,8 +479,8 @@ def stage_cross_modal_state(
 ) -> None:
     """Tick-0 backfill of the bimodal (still + clip) family."""
     _stage(
-        spark, CM_MODALITIES, docs, state_dir, batch_id,
-        thumbs=thumbs, clips=clips,
+        spark, CM_FAMILY, docs, state_dir, batch_id,
+        stills=thumbs, clips=clips,
     )
 
 
@@ -482,8 +497,8 @@ def cross_modal_ingest_tick(
     """One delta tick of the bimodal family. ``vfp`` injects
     already-decoded clip frames (see unified_media_ingest_tick)."""
     _tick(
-        spark, CM_MODALITIES, batch_docs, state_dir, batch_id, vfp,
-        maintenance_file_threshold, thumbs=thumbs, clips=clips,
+        spark, CM_FAMILY, batch_docs, state_dir, batch_id, vfp,
+        maintenance_file_threshold, stills=thumbs, clips=clips,
     )
 
 
@@ -500,8 +515,8 @@ def stage_trimodal_state(
     """Tick-0 backfill of the trimodal (still + clip + recording)
     family."""
     _stage(
-        spark, CM3_MODALITIES, docs, state_dir, batch_id,
-        thumbs=thumbs, clips=clips, recordings=recordings, tracks=tracks,
+        spark, CM3_FAMILY, docs, state_dir, batch_id,
+        stills=thumbs, clips=clips, recordings=recordings, tracks=tracks,
     )
 
 
@@ -520,8 +535,8 @@ def trimodal_ingest_tick(
     """One delta tick of the trimodal family. ``vfp`` injects
     already-decoded clip frames (see unified_media_ingest_tick)."""
     _tick(
-        spark, CM3_MODALITIES, batch_docs, state_dir, batch_id, vfp,
-        maintenance_file_threshold, thumbs=thumbs, clips=clips,
+        spark, CM3_FAMILY, batch_docs, state_dir, batch_id, vfp,
+        maintenance_file_threshold, stills=thumbs, clips=clips,
         recordings=recordings, tracks=tracks,
     )
 
@@ -543,12 +558,12 @@ def unified_media_ingest_tick(
     stills and clips (r13 consolidation, r12 verdict #5): ONE decode
     of the batch feeds BOTH maintained state families.
 
-    The per-modality tick (streaming/media_tick.py — photo corpus
-    with quality-scored image argmax, clip corpus with temporal-order
-    verification) and the cross-modal tick (node-tagged mixed
-    closure: a still is displaced the tick its source footage
-    arrives) maintain distinct state layouts because their proven
-    invariants differ — each hash-matches its own oracled batch twin
+    The media family (streaming/media_tick.py — photo corpus with
+    quality-scored image argmax, clip corpus with temporal-order
+    verification) and a cross-modal family (mixed closure: a still is
+    displaced the tick its source footage arrives) run the same tick
+    body but maintain distinct state because their proven invariants
+    differ — each hash-matches its own oracled batch twin
     (media/video_keep_best_delta vs cross_modal_keep_best_delta) and
     the two keep rules disagree in corner cases (a pure-image cluster
     resolves on (area, detail); a mixed cluster on n_frames). What a
@@ -559,9 +574,9 @@ def unified_media_ingest_tick(
     and injects them into both ticks; the stills differ per family
     (photos vs keyframe thumbnails) and decode once each either way.
 
-    Mutation semantics are unchanged — each tick keeps its own
-    flags/repoint/append steps and replay contract, so replaying this
-    unified tick replays both families idempotently.
+    Mutation semantics are unchanged — each family's tick runs its
+    own flags/repoint/append steps under the replay contract, so
+    replaying this unified tick replays both families idempotently.
 
     ``trimodal_state_dir`` swaps the bimodal cross-modal tick for the
     TRIMODAL one (audio recordings + soundtrack rips join the mixed

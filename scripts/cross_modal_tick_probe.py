@@ -1,11 +1,10 @@
-"""Cross-modal tick flatness probe: stage a cross-modal family's
-node-tagged indexes on a 1x corpus (sf0.001, 500 docs) and a 10x
-corpus (sf0.1, 5000 docs), then tick the SAME fixed fresh-group delta
-against each and compare wall clock — the claim under test is that
-tick cost scales with the DELTA, not the maintained state (the media
-tick's witness, extended to the joint closure). ``bimodal`` stages
+"""Media tick flatness probe: stage a node-tagged media family's
+indexes on a 1x corpus (sf0.001, 500 docs) and a 10x corpus (sf0.1,
+5000 docs), then tick the SAME fixed fresh-group delta against each
+and compare wall clock — the claim under test is that tick cost
+scales with the DELTA, not the maintained state. ``bimodal`` stages
 thumbnails and clips; ``trimodal`` adds recordings and soundtrack
-rips.
+rips; ``media`` stages the per-modality family (photos and clips).
 
 Every timed tick also prints its per-phase wall time and Spark job
 count: the tick's ``_phase_timer`` is swapped for a mark that diffs
@@ -13,7 +12,7 @@ the status tracker's job ids (jobs are numbered in submission order,
 so the jobs of a phase are the ids submitted between two marks,
 background waves included).
 
-Usage: python scripts/cross_modal_tick_probe.py [bimodal|trimodal] [n_delta] [draws]
+Usage: python scripts/cross_modal_tick_probe.py [bimodal|trimodal|media] [n_delta] [draws]
 """
 
 from __future__ import annotations
@@ -33,6 +32,10 @@ from falcon_metrics_etl_spark.streaming.cross_modal_tick import (
     stage_cross_modal_state,
     stage_trimodal_state,
     trimodal_ingest_tick,
+)
+from falcon_metrics_etl_spark.streaming.media_tick import (
+    media_ingest_tick,
+    stage_media_state,
 )
 
 
@@ -63,13 +66,15 @@ def job_phase_timer(spark, phases: list):
 
 
 def main() -> None:
+    families = {
+        "bimodal": (stage_cross_modal_state, cross_modal_ingest_tick),
+        "trimodal": (stage_trimodal_state, trimodal_ingest_tick),
+        "media": (stage_media_state, media_ingest_tick),
+    }
     family = sys.argv[1] if len(sys.argv) > 1 else "bimodal"
-    if family == "bimodal":
-        stage, tick = stage_cross_modal_state, cross_modal_ingest_tick
-    elif family == "trimodal":
-        stage, tick = stage_trimodal_state, trimodal_ingest_tick
-    else:
-        raise SystemExit("family must be bimodal or trimodal")
+    if family not in families:
+        raise SystemExit(f"family must be one of {', '.join(families)}")
+    stage, tick = families[family]
     n_delta = int(sys.argv[2]) if len(sys.argv) > 2 else 120
     draws = int(sys.argv[3]) if len(sys.argv) > 3 else 3
     spark = get_spark(f"{family}_tick_probe")

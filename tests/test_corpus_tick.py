@@ -20,6 +20,7 @@ from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
@@ -31,6 +32,8 @@ from falcon_metrics_etl_spark.plans.registry import all_queries
 from falcon_metrics_etl_spark.sources import load_table
 from falcon_metrics_etl_spark.state import read_state
 from falcon_metrics_etl_spark.streaming.corpus_tick import (
+    MERGES_SCHEMA,
+    ULM_VOCAB_SCHEMA,
     _gate_status,
     corpus_ingest_tick,
     stage_corpus_state,
@@ -193,13 +196,17 @@ def test_replay_is_idempotent(spark, state):
 
 def test_tokenizer_stays_frozen(spark, state):
     """The tick encodes with the staged merge table and never
-    retrains it."""
+    retrains it; the table lands on disk in exactly the schema the
+    tick pins its read to."""
     state_dir, base, delta = state
-    staged = sorted(
-        tuple(r) for r in read_state(spark, f"{state_dir}/merges").collect()
-    )
+    on_disk = read_state(spark, f"{state_dir}/merges")
+    assert on_disk.schema == StructType.fromDDL(MERGES_SCHEMA)
+    staged = sorted(tuple(r) for r in on_disk.collect())
     fresh = sorted(
-        tuple(r) for r in _byte_merges_df(byte_words_of(base)).collect()
+        tuple(r)
+        for r in _byte_merges_df(byte_words_of(base))
+        .select("merge_rank", "lhs", "rhs")
+        .collect()
     )
     assert staged == fresh
 
@@ -238,6 +245,9 @@ def test_tick_with_frozen_ulm_vocab(spark, tmp_path):
     stage_corpus_state(
         spark, base, None, state_dir, batch_id=0, ulm_vocab=vocab
     )
+    assert read_state(
+        spark, f"{state_dir}/ulm_vocab"
+    ).schema == StructType.fromDDL(ULM_VOCAB_SCHEMA)
     delta = spark.createDataFrame(
         [(910001, planted[0]), (910002, planted[1])],
         "doc_id long, text string",

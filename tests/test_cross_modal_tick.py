@@ -447,15 +447,17 @@ def test_both_families_mark_tick_phases_in_order(
 ):
     """The benchmark tracer swaps ``cross_modal_tick._phase_timer`` for
     a span recorder keyed on the mark labels (perfbench/tracer.py
-    TICK_PHASES): a bimodal and a trimodal tick both mark every phase,
-    in tick order."""
+    TICK_PHASES): a bimodal, a trimodal and a media tick all mark every
+    phase, in tick order."""
     from falcon_metrics_etl_spark.streaming import cross_modal_tick as CMT
+    from falcon_metrics_etl_spark.streaming import media_tick as MT
 
     marks = []
     monkeypatch.setattr(CMT, "_phase_timer", lambda: marks.append)
     for stage, tick in (
         (CMT.stage_cross_modal_state, CMT.cross_modal_ingest_tick),
         (CMT.stage_trimodal_state, CMT.trimodal_ingest_tick),
+        (MT.stage_media_state, MT.media_ingest_tick),
     ):
         state = str(tmp_path_factory.mktemp("phases"))
         stage(spark, _docs(spark, BASE_IDS), state, batch_id=0)

@@ -48,17 +48,18 @@ def _flags(spark, state_dir):
 
 
 def _fp_keep_ids(spark, state_dir):
+    # node-tagged index: a keeper node is 2 * keeper doc (+ 1 for clips)
     return {
-        r["doc_id"]: r["keep_id"]
+        r["doc_id"]: r["keep_node"] // 2
         for r in read_state(spark, f"{state_dir}/fp_index").collect()
     }
 
 
 def _frame_keep_ids(spark, state_dir):
     return {
-        r["doc_id"]: r["keep_id"]
+        r["doc_id"]: r["keep_node"] // 2
         for r in read_state(spark, f"{state_dir}/frame_index")
-        .select("doc_id", "keep_id")
+        .select("doc_id", "keep_node")
         .distinct()
         .collect()
     }
@@ -290,3 +291,33 @@ def test_video_shared_threshold_pins_group_distance(spark):
     assert len(by_doc[a] & by_doc[b]) == MM.VIDEO_FRAMES - 2
     assert len(by_doc[a] & by_doc[100]) == 0
     assert MM.VIDEO_FRAMES - 2 >= VIDEO_SHARED_T
+
+
+def test_tick_refuses_doc_keyed_layout(spark, tmp_path):
+    """The media state is node-tagged and its band rows carry their
+    hash. A dir staged by the older doc-keyed layout (keep_id columns,
+    band rows without the hash) carries no layout stamp; probing it
+    would read a null hash and re-admit duplicates without an error, so
+    the stage and the tick both refuse it."""
+    state = str(tmp_path / "media")
+    old = {
+        "fp_index": (
+            [(1, "png", 5, 8, 8, 3, 1, 0)],
+            "doc_id long, codec string, dhash long, width int, "
+            "height int, detail long, keep_id long, batch_id long",
+        ),
+        "band_index": (
+            [(1, 0, 5, 0)], "doc_id long, band int, byte long, batch_id long"
+        ),
+        "frame_index": (
+            [(1, 0, 7, 1, 1, 0)],
+            "doc_id long, frame_idx int, frame_dhash long, n_frames long, "
+            "keep_id long, batch_id long",
+        ),
+    }
+    for table, (rows, schema) in old.items():
+        spark.createDataFrame(rows, schema).write.parquet(f"{state}/{table}")
+    with pytest.raises(ValueError, match="predates layout stamping"):
+        media_ingest_tick(spark, _docs(spark, [4]), state, batch_id=1)
+    with pytest.raises(ValueError, match="predates layout stamping"):
+        stage_media_state(spark, _docs(spark, [4]), state, batch_id=0)

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from falcon_metrics_etl_spark.session import run_concurrent
 from falcon_metrics_etl_spark.streaming import cross_modal_tick as CMT
+from falcon_metrics_etl_spark.streaming import media_tick as MT
 from falcon_metrics_etl_spark.state import TickState, read_state
 
 
@@ -184,16 +185,17 @@ def test_tick_state_joins_every_wave_before_raising(tmp_path):
     [
         (CMT.stage_cross_modal_state, CMT.cross_modal_ingest_tick),
         (CMT.stage_trimodal_state, CMT.trimodal_ingest_tick),
+        (MT.stage_media_state, MT.media_ingest_tick),
     ],
-    ids=["bimodal", "trimodal"],
+    ids=["bimodal", "trimodal", "media"],
 )
 def test_failed_trimodal_tick_stops_writers_and_replays(
     spark, tmp_path, monkeypatch, stage_state, ingest_tick
 ):
-    """A cross-modal tick's edge phase fails while the band appends it
-    started are running: no thread started during the call outlives
-    it, and a replay of the same batch with the real edges lands state
-    equal to a control run that never failed."""
+    """A node-tagged family tick's edge phase fails while the band
+    appends it started are running: no thread started during the call
+    outlives it, and a replay of the same batch with the real edges
+    lands state equal to a control run that never failed."""
     import falcon_metrics_etl_spark.plans.media_dedup as MD
 
     def docs(ids):
