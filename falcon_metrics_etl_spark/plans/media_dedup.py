@@ -721,10 +721,12 @@ def _warm_staged_bases(spark: SparkSession, sf_dir: str, *getters):
     decode+fingerprint build as its own Spark job, and the scheduler
     interleaves them across the same executors — the trimodal twins'
     first-touch staging was paying four decode walls serially. Warm
-    calls are a parquet-footer read each, so the pool overhead is
-    noise there. Per-key build locks in ``staged_index`` make the
-    concurrent path race-free (same-process builders of one key
-    serialize; cross-process builders already raced benignly)."""
+    calls are a pointer read and a parquet-footer read each, so the
+    pool overhead is noise there. Per-table build locks in
+    ``staged_index`` make the concurrent path race-free (same-process
+    builders of one key serialize; cross-process builders each publish
+    a snapshot through ``state.overwrite_state`` and the last repoint
+    wins)."""
     from falcon_metrics_etl_spark.session import run_concurrent
 
     return run_concurrent(

@@ -279,13 +279,12 @@ def checkpoint_wave(*dfs):
     )
 
 
-# maintained-index staging for the IVM proof twins (r14; r13 used a
-# session-scoped eager localCheckpoint, r13 verdict #1 asked for the
-# tick-persisted read to be the AUDITED plan): state lands as plain
-# parquet under a state root, exactly the shape the streaming ticks
-# persist (streaming/cross_modal_tick.stage_cross_modal_state), and
-# the twins' audited plans READ it as a parquet scan instead of
-# re-deriving the batch closure in-lineage on a cold session.
+# maintained-index staging for the IVM proof twins: each staged key is
+# one state.py table under a state root, committed through the same
+# pointer protocol the streaming ticks use (new snapshot, atomic
+# _CURRENT repoint, grace-period GC), and the twins' audited plans
+# READ it as a parquet scan instead of re-deriving the batch closure
+# in-lineage on a cold session.
 STATE_DIR_ENV = "FALCON_METRICS_STATE_DIR"
 
 # Mixed into every staged-state fingerprint: bump when ANY staged
@@ -293,12 +292,10 @@ STATE_DIR_ENV = "FALCON_METRICS_STATE_DIR"
 # persisted state from older code can never silently serve under new
 # code — the state root outlives the process, unlike the r13
 # session-scoped cache, so code upgrades are a real staleness vector.
-# (r15.1: key-hashed slugs + deferred eviction changed the path
-# layout, so r14 state dirs are invisible to r15 code by design.)
 STATE_FORMAT_VERSION = "r15.1"
 
-# per-state-path build locks: same-process concurrent builders of one
-# key serialize (see staged_index); guarded dict creation
+# per-table build locks: same-process concurrent builders of one key
+# serialize (see staged_index); guarded dict creation
 import threading as _threading
 
 _BUILD_LOCKS: dict = {}
@@ -349,6 +346,20 @@ def write_version_manifest(src_dir: str, version: str | None = None) -> str:
     return token
 
 
+def _manifest_token(dir_path: str) -> str | None:
+    """The token of ``dir_path``'s version manifest, or None when it
+    has none (or an unreadable one)."""
+    import json
+
+    try:
+        with open(
+            os.path.join(dir_path, VERSION_MANIFEST_NAME), encoding="utf-8"
+        ) as f:
+            return str(json.load(f)["version"])
+    except (OSError, ValueError, KeyError, TypeError):
+        return None
+
+
 def _walk_fingerprint(src_dir: str) -> str:
     import hashlib
 
@@ -376,14 +387,11 @@ def _data_version(src_dir: str) -> str:
     ``STATE_FORMAT_VERSION`` is mixed in either way so persisted
     state from older code never serves under new code."""
     import hashlib
-    import json
 
-    manifest = os.path.join(src_dir, VERSION_MANIFEST_NAME)
-    try:
-        with open(manifest, encoding="utf-8") as f:
-            token = str(json.load(f)["version"])
+    token = _manifest_token(src_dir)
+    if token is not None:
         src = f"manifest={token}"
-    except (OSError, ValueError, KeyError, TypeError):
+    else:
         src = f"walk={_walk_fingerprint(src_dir)}"
     h = hashlib.sha256(f"fmt={STATE_FORMAT_VERSION};{src}".encode())
     return h.hexdigest()[:16]
@@ -392,9 +400,9 @@ def _data_version(src_dir: str) -> str:
 def _staged_slug(key: str) -> str:
     """Filesystem slug for a staged-state key: sanitized prefix for
     human debuggability + a short hash of the RAW key, so two distinct
-    keys can never share an eviction namespace (r14 advisor: the
-    sanitizer collapses runs of disallowed chars, so 'k:/a_b' and
-    'k:/a/b' collided and mutually evicted)."""
+    keys can never share a state table (r14 advisor: the sanitizer
+    collapses runs of disallowed chars, so 'k:/a_b' and 'k:/a/b'
+    collided and mutually evicted)."""
     import hashlib
     import re
 
@@ -402,99 +410,17 @@ def _staged_slug(key: str) -> str:
     return f"{pretty}.{hashlib.sha256(key.encode()).hexdigest()[:8]}"
 
 
-_STAGED_VERSION_RE = r"-[0-9a-f]{16}"
+def _fresh_snapshot(table: str, version: str) -> str | None:
+    """The current snapshot of a staged table when it was built from
+    ``version``, else None. A snapshot without a token (a crash
+    between the repoint and the token write) counts as stale; a
+    dangling pointer raises (``state.resolve_state_path``)."""
+    from falcon_metrics_etl_spark.state import resolve_state_path
 
-
-def gc_staged_state(
-    root: str | None = None, grace_seconds: float | None = None
-) -> int:
-    """Age-based sweep of the staged-index root (r15, verdict #1):
-    physically deletes version dirs whose ``_RETIRED`` stamp is older
-    than the grace period, retires resurrected corpses (a version dir
-    that is not its key's most recent publish — the slow-builder race
-    the r14 advisor flagged), and removes orphaned tmp dirs of dead
-    builder pids. ``staged_index`` itself never rmtrees — eviction is
-    deferred here, out of the read hot path, so a reader mid-scan of
-    a superseded version keeps its files through the grace period.
-    Called from ``sinks.compaction.compact_state_dir`` (the ticks'
-    maintenance window) and safe to call any time. Returns dirs
-    removed."""
-    import re
-
-    from falcon_metrics_etl_spark.state import (
-        RETIRED_MARKER,
-        gc_grace_seconds,
-        mark_retired,
-    )
-
-    root = root or _state_root()
-    if not os.path.isdir(root):
-        return 0
-    grace = (
-        gc_grace_seconds() if grace_seconds is None else grace_seconds
-    )
-    import shutil
-    import time
-
-    version_re = re.compile(rf"(?P<slug>.+){_STAGED_VERSION_RE}$")
-    orphan_re = re.compile(
-        rf".+{_STAGED_VERSION_RE}\.tmp-(?P<pid>\d+)-[0-9a-f]+$"
-    )
-    now = time.time()
-    # group live versions by slug; the newest _SUCCESS per slug is the
-    # presumed-current version, every other one gets retired (covers
-    # corpses a slow builder renamed in after its version went stale)
-    by_slug: dict[str, list[tuple[float, str]]] = {}
-    removed = 0
-    for entry in os.listdir(root):
-        p = os.path.join(root, entry)
-        m = orphan_re.fullmatch(entry)
-        if m:
-            try:
-                os.kill(int(m.group("pid")), 0)
-            except ProcessLookupError:
-                shutil.rmtree(p, ignore_errors=True)
-                removed += 1
-            except OSError:
-                pass  # alive under another uid: leave it
-            continue
-        m = version_re.fullmatch(entry)
-        if m and os.path.isdir(p):
-            try:
-                pub = os.stat(os.path.join(p, "_SUCCESS")).st_mtime
-            except OSError:
-                pub = 0.0
-            by_slug.setdefault(m.group("slug"), []).append((pub, p))
-    # one-time upgrade sweep (r15 advisor, low #4): r15 keying appends
-    # an 8-hex key hash to every slug, so a version dir whose slug
-    # LACKS that suffix was written by pre-r15 code and is unreachable
-    # by construction — but it forms a singleton slug group here, so
-    # the newest-publish heuristic alone would keep it forever. Retire
-    # such groups outright; grace still applies before deletion.
-    legacy_slug = re.compile(r".*\.[0-9a-f]{8}$")
-    for slug, versions in by_slug.items():
-        if not legacy_slug.fullmatch(slug):
-            for _pub, p in versions:
-                mark_retired(p)
-    for versions in by_slug.values():
-        versions.sort()
-        # strictly-older only: an mtime TIE with the newest publish
-        # (coarse-mtime filesystems) must not retire what may be the
-        # genuinely-current version (r15 self-review #6)
-        maxpub = versions[-1][0]
-        for pub, p in versions:
-            if pub < maxpub:
-                mark_retired(p)
-        for _pub, p in versions:
-            marker = os.path.join(p, RETIRED_MARKER)
-            try:
-                age = now - os.stat(marker).st_mtime
-            except OSError:
-                continue
-            if age >= grace:
-                shutil.rmtree(p, ignore_errors=True)
-                removed += 1
-    return removed
+    snap = resolve_state_path(table)
+    if snap != table and _manifest_token(snap) == version:
+        return snap
+    return None
 
 
 def staged_index(
@@ -514,26 +440,31 @@ def staged_index(
     ``state_dir``; stage_cross_modal_state is the tick-0 backfill).
     This helper gives the registered twins the same economics AND the
     same audited plan: the first invocation anywhere builds the slice
-    and lands it as parquet (atomic rename, ``_SUCCESS``-validated);
-    every invocation — including the first in a cold session that
-    finds existing state — plans a plain parquet scan, so the cold
-    plan prices the delta resolution, not the closure rebuild. The
-    staged frame is value-identical to the inline subtree it replaces
-    (long/double/string columns round-trip parquet exactly), so
-    result hashes are untouched.
+    and lands it as a state table; every invocation — including the
+    first in a cold session that finds existing state — plans a plain
+    parquet scan of the current snapshot, so the cold plan prices the
+    delta resolution, not the closure rebuild. The staged frame is
+    value-identical to the inline subtree it replaces (long/double/
+    string columns round-trip parquet exactly), so result hashes are
+    untouched.
+
+    Each key is one ``state.py`` table at ``<state root>/<slug>``. A
+    rebuild lands through ``overwrite_state`` (new ``_v-*`` snapshot,
+    atomic ``_CURRENT`` repoint, the superseded snapshot stamped
+    ``_RETIRED``), then records the source version it was built from
+    as the snapshot's version manifest. Every call runs
+    ``gc_state_table`` on the key's table (a listdir and a pointer
+    read), which deletes retired snapshots past the grace period —
+    so a reader mid-scan of a superseded snapshot keeps its files.
 
     Staleness: state is keyed on ``_data_version(src_dir)`` — the
     source's manifest token when ``_VERSION_MANIFEST.json`` exists,
     else a fingerprint of the source files (``data_version`` passes
     an explicit token instead, for catalog-driven deployments) — so
-    regenerated source data can never serve old fingerprints.
-    Concurrent builders race benignly: both write a private tmp dir,
-    one atomic-renames it into place, the loser deletes its copy and
-    reads the winner's. Eviction is DEFERRED (r15, verdict #1): a
-    rebuild only MARKS stale versions of its key retired; physical
-    deletion happens in ``gc_staged_state`` after a grace period —
-    in the maintenance window, never here — so a concurrent reader
-    mid-scan of the superseded version keeps its files.
+    regenerated source data can never serve old fingerprints; a
+    source that reverts to an older version rebuilds. Same-process
+    builders of one key serialize on a per-table lock; cross-process
+    builders each publish a snapshot and the last repoint wins.
 
     At 100 TB the same contract holds with the state root on shared
     storage and the hot indexes written through sinks/bucketed.py
@@ -543,88 +474,27 @@ def staged_index(
     Deployments that disable ``spark.falconMetricsEtl.perfCheckpoints``
     get the raw builder (full lineage, no state dependency)."""
     import hashlib
-    import re
-    import shutil
-    import threading
-    import uuid
 
-    from falcon_metrics_etl_spark.state import RETIRED_MARKER, mark_retired
+    from falcon_metrics_etl_spark.state import gc_state_table, overwrite_state
 
     conf = spark.conf.get(PERF_CHECKPOINT_CONF, "true")
     if (conf or "").strip().lower() in ("false", "0", "no", "off"):
         return build()
-    slug = _staged_slug(key)
-
-    def _resolve_version() -> str:
-        if data_version is not None:
-            return hashlib.sha256(
-                f"fmt={STATE_FORMAT_VERSION};token={data_version}".encode()
-            ).hexdigest()[:16]
-        return _data_version(src_dir) if src_dir else "0" * 16
-
-    version = _resolve_version()
-    root = _state_root()
-    path = os.path.join(root, f"{slug}-{version}")
-    success = os.path.join(path, "_SUCCESS")
-    if os.path.isfile(success):
-        # re-activation (a source reverted to an old fingerprint, or a
-        # mid-build staleness stamp proved premature): this version is
-        # current again — clear its retirement and refresh its publish
-        # time so gc_staged_state's newest-publish heuristic keeps it.
-        marker = os.path.join(path, RETIRED_MARKER)
-        if os.path.isfile(marker):
-            try:
-                os.remove(marker)
-                os.utime(success)
-            except OSError:
-                pass
+    if data_version is not None:
+        version = hashlib.sha256(
+            f"fmt={STATE_FORMAT_VERSION};token={data_version}".encode()
+        ).hexdigest()[:16]
     else:
-        # same-process builders serialize per key (the second waits,
-        # then finds the state); cross-process builders race benignly
-        # through a UNIQUE tmp dir + atomic rename (a shared tmp name
-        # would let two Spark writes clobber each other's _temporary)
+        version = _data_version(src_dir) if src_dir else "0" * 16
+    table = os.path.join(_state_root(), _staged_slug(key))
+    gc_state_table(table)
+    snap = _fresh_snapshot(table, version)
+    if snap is None:
         with _BUILD_LOCKS_GUARD:
-            lock = _BUILD_LOCKS.setdefault(path, threading.Lock())
+            lock = _BUILD_LOCKS.setdefault(table, _threading.Lock())
         with lock:
-            if not os.path.isfile(os.path.join(path, "_SUCCESS")):
-                os.makedirs(root, exist_ok=True)
-                tmp = f"{path}.tmp-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-                try:
-                    build().write.mode("overwrite").parquet(tmp)
-                except BaseException:
-                    # a failed build must not leak its partial tmp dir
-                    shutil.rmtree(tmp, ignore_errors=True)
-                    raise
-                try:
-                    os.rename(tmp, path)
-                except OSError:
-                    # lost a cross-process race: a complete copy
-                    # exists — use it
-                    shutil.rmtree(tmp, ignore_errors=True)
-                # slow-builder guard (r14 advisor): if the source was
-                # regenerated DURING the build, this version is
-                # already stale — still serve it (value-correct for
-                # the inventory this call observed) but stamp it
-                # retired now so it never outlives the grace period.
-                if _resolve_version() != version:
-                    mark_retired(path)
-                # DEFERRED eviction (r15): stale versions of this key
-                # are only STAMPED retired — gc_staged_state deletes
-                # them after the grace period, so a reader mid-scan
-                # of the old version never loses its files. Versions
-                # are always 16 hex chars; the key-hashed slug makes
-                # cross-key stamping impossible.
-                stale = re.compile(re.escape(slug) + r"-[0-9a-f]{16}$")
-                for entry in os.listdir(root):
-                    if stale.fullmatch(entry) and entry != f"{slug}-{version}":
-                        mark_retired(os.path.join(root, entry))
-                # sweep the whole root while we are already on the
-                # (rare, expensive) build path: pure staged_index
-                # consumers never enter a maintenance window, and
-                # without this the root would accrete retired
-                # versions and dead-pid tmp dirs unboundedly (r15
-                # self-review #2). Grace still applies — this only
-                # DELETES what an earlier rebuild/sweep retired more
-                # than a grace period ago.
-                gc_staged_state(root)
-    return spark.read.parquet(path)
+            snap = _fresh_snapshot(table, version)
+            if snap is None:
+                snap = overwrite_state(build(), table)
+                write_version_manifest(snap, version)
+    return spark.read.parquet(snap)

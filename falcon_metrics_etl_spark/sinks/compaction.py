@@ -21,12 +21,17 @@ parquet the engine does the same thing explicitly:
 Compaction is a pure rewrite: the row multiset is unchanged, and a
 second run over a compacted table is a no-op (idempotent maintenance,
 safe to schedule like the reference's daily jobs).
+
+Only partitioned tables compact here. Unpartitioned ``merge_upsert``
+targets are rewritten whole on every merge, so they do not accrete
+files; unpartitioned streaming state tables compact through
+``state.compact_state_table`` (new snapshot + atomic repoint), which
+``state.maintain_state_dir`` runs in every tick's maintenance window.
 """
 
 from __future__ import annotations
 
-import math
-from typing import Optional, Sequence
+from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -65,20 +70,18 @@ def partition_file_stats(
 def compact(
     spark: SparkSession,
     path: str,
-    partition_cols: Optional[Sequence[str]] = None,
+    partition_cols: Sequence[str],
     target_file_bytes: int = DEFAULT_TARGET_FILE_BYTES,
     min_files: int = 4,
 ) -> dict:
-    """Rewrite over-fragmented partitions into ~target-size files.
+    """Rewrite over-fragmented partitions of the table at ``path``,
+    partitioned by ``partition_cols``, into ~target-size files.
 
     Returns a report: {"partitions_compacted", "files_before",
     "files_after_target"} (0/0/0 when nothing qualifies).
     """
     if not _target_exists(spark, path):
         return {"partitions_compacted": 0, "files_before": 0, "files_after_target": 0}
-
-    if not partition_cols:
-        return _compact_unpartitioned(spark, path, target_file_bytes, min_files)
 
     pcols = list(partition_cols)
     # every read in here is VERBATIM (partition-type inference off):
@@ -150,110 +153,3 @@ def compact(
         "files_before": int(sum(r["n_files"] for r in need)),
         "files_after_target": int(sum(r["ideal_n"] for r in need)),
     }
-
-
-def _compact_unpartitioned(
-    spark: SparkSession, path: str, target_file_bytes: int, min_files: int
-) -> dict:
-    df = spark.read.parquet(path)
-    files = (
-        df.select(
-            F.col("_metadata.file_path").alias("p"),
-            F.col("_metadata.file_size").alias("s"),
-        )
-        .distinct()
-        .collect()
-    )
-    total = sum(r["s"] for r in files)
-    ideal_n = max(1, math.ceil(total / target_file_bytes))
-    if len(files) < min_files or len(files) <= ideal_n:
-        return {"partitions_compacted": 0, "files_before": 0, "files_after_target": 0}
-    stage = path.rstrip("/") + "__compact_stage__"
-    df.repartition(ideal_n).write.mode("overwrite").parquet(stage)
-    if not path.startswith(("s3://", "s3a://", "hdfs://", "abfss://")):
-        # crash-safe swap on a local filesystem: the old table survives
-        # as __compact_backup__ until the new one is in place (a static
-        # overwrite would delete the live files at job start — a crash
-        # mid-write loses the table).
-        # NOT concurrent-reader-safe: between the two renames the table
-        # path briefly does not exist, so a reader racing the swap gets
-        # path-not-found rather than either snapshot — the accepted
-        # trade for crash safety on local FS (object stores take the
-        # overwrite branch below; a transaction log a la Delta is the
-        # real fix). Run local compaction in a maintenance window.
-        import os
-        import shutil
-
-        backup = path.rstrip("/") + "__compact_backup__"
-        shutil.rmtree(backup, ignore_errors=True)
-        os.rename(path.rstrip("/"), backup)
-        os.rename(stage, path.rstrip("/"))
-        shutil.rmtree(backup, ignore_errors=True)
-    else:
-        # object stores: no cheap rename — fall back to overwrite from
-        # the stage (window bounded by the final job; stage retained on
-        # failure for manual recovery)
-        spark.read.parquet(stage).write.mode("overwrite").parquet(path)
-        _rm(stage)
-    return {
-        "partitions_compacted": 1,
-        "files_before": len(files),
-        "files_after_target": ideal_n,
-    }
-
-
-def compact_state_dir(
-    spark: SparkSession,
-    state_dir: str,
-    target_file_bytes: int = DEFAULT_TARGET_FILE_BYTES,
-    min_files: int = 8,
-    grace_seconds: float | None = None,
-) -> dict:
-    """Sweep every parquet state table under a streaming tick's
-    ``state_dir`` (r14): each tick APPENDS one task-wave of files per
-    index table, so at a 5-minute cadence the band/frame/fp indexes
-    accrete hundreds of small files and the probe scans become
-    file-count-bound. Each table compacts independently; the row
-    multiset — including every ``batch_id`` tag — is unchanged, so
-    the replay contract (probes exclude own-batch rows, appends
-    anti-join) is intact and a tick can run immediately after.
-    ``min_files`` defaults higher than table compaction so a
-    freshly-staged two-file state is never churned.
-
-    r15: each table compacts through the VERSIONED protocol
-    (state.compact_state_table — new snapshot dir + atomic
-    ``_CURRENT`` repoint + grace-period GC), so the sweep is
-    concurrent-reader-safe: a reader that planned against the old
-    snapshot keeps scanning files that persist through the grace
-    period, replacing r14's rename swap whose no-table window raced
-    readers. The sweep also age-GCs the ``staged_index`` root
-    (session.py) — stale fingerprint versions retired by rebuilds are
-    physically deleted here, in the maintenance window, never in the
-    read hot path.
-
-    Local-FS sweep (os.listdir); a cloud deployment enumerates its
-    state tables from the catalog and calls ``compact`` per table
-    (or a table format's OPTIMIZE).
-    """
-    import os
-
-    from falcon_metrics_etl_spark.session import gc_staged_state
-    from falcon_metrics_etl_spark.state import compact_state_table
-
-    report: dict = {}
-    gc_staged_state(grace_seconds=grace_seconds)
-    if not os.path.isdir(state_dir):
-        return report
-    for entry in sorted(os.listdir(state_dir)):
-        if entry.startswith(("_", ".")):
-            continue
-        p = os.path.join(state_dir, entry)
-        if os.path.isdir(p):
-            report[entry] = compact_state_table(
-                spark,
-                p,
-                target_file_bytes=target_file_bytes,
-                min_files=min_files,
-                grace_seconds=grace_seconds,
-            )
-    return report

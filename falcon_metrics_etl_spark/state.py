@@ -5,8 +5,7 @@ under a ``state_dir`` (streaming/{corpus,media,cross_modal}_tick), and
 r14's small-file compaction rewrote those tables IN PLACE with a
 rename swap — between the two renames the table path briefly did not
 exist, so a concurrent reader racing the swap failed with
-path-not-found (the r14 advisor's eviction-vs-reader race; same
-hazard as ``staged_index``'s inline rmtree of stale versions). This
+path-not-found (the r14 advisor's eviction-vs-reader race). This
 module replaces the in-place swap with the protocol the r14 verdict
 asked for — **versioned state dirs + an atomic pointer file** — which
 is the reference's S3-staging durability contract (a writer never
@@ -37,6 +36,11 @@ s3_client.ts:42-61) transplanted to the local state layer:
   runs in the tick's maintenance window (single writer per state dir
   — the ticks' existing contract), so an append never races a
   repoint.
+
+The same protocol commits the staged index bases
+(``session.staged_index``): one table per staged key under the
+staged-state root, its current snapshot stamped with the source
+version it was built from.
 
 The grace period defaults to ``DEFAULT_GC_GRACE_SECONDS`` and is
 tunable via ``FALCON_METRICS_STATE_GC_GRACE_SECONDS``; it bounds how
@@ -658,10 +662,10 @@ def compact_state_table(
     including every ``batch_id`` tag — is unchanged, so the tick
     replay contract is intact and a tick can run immediately after.
 
-    Unlike r14's ``_compact_unpartitioned`` swap this is
-    concurrent-reader-safe: a reader that planned against the old
-    snapshot keeps scanning it (the files persist through the grace
-    period); the brief no-table window of the double-rename is gone.
+    Unlike r14's rename swap this is concurrent-reader-safe: a reader
+    that planned against the old snapshot keeps scanning it (the files
+    persist through the grace period); the brief no-table window of
+    the double-rename is gone.
     """
     report = {
         "partitions_compacted": 0,
@@ -807,12 +811,6 @@ def maintain_state_dir(
     report: dict = {}
     if _is_remote(state_dir) or not os.path.isdir(state_dir):
         return report
-    # the staged-index root (session.staged_index) shares the same
-    # deferred-eviction discipline and has no window of its own —
-    # sweep it whenever a tick sweeps its state dir
-    from falcon_metrics_etl_spark.session import gc_staged_state
-
-    gc_staged_state(grace_seconds=grace_seconds)
     for entry in sorted(os.listdir(state_dir)):
         p = os.path.join(state_dir, entry)
         if not os.path.isdir(p) or entry.startswith(("_", ".")):

@@ -82,18 +82,6 @@ def test_partition_file_stats(spark, fragmented):
     assert stats[0]["total_bytes"] > 0
 
 
-def test_compact_unpartitioned(spark, tmp_path):
-    path = str(tmp_path / "flat")
-    spark.createDataFrame(
-        [(i, f"v{i}") for i in range(200)], "id int, s string"
-    ).repartition(10).write.parquet(path)
-    before = rows_of(spark, path)
-    report = compact(spark, path)
-    assert report["partitions_compacted"] == 1
-    assert rows_of(spark, path) == before
-    assert len(parquet_files(path)) <= report["files_after_target"]
-
-
 def test_compact_preserves_stringy_numeric_partition_values(spark, tmp_path):
     """Partition dir org=0042 must survive compaction VERBATIM: with
     partition-type inference on, compaction would read it as int 42 and
@@ -119,26 +107,9 @@ def test_compact_preserves_stringy_numeric_partition_values(spark, tmp_path):
     assert sorted(r["v"] for r in rows) == [f"v{i}" for i in range(5)]
 
 
-def test_compact_unpartitioned_swap_preserves_rows(spark, tmp_path):
-    from falcon_metrics_etl_spark.sinks.compaction import compact
-
-    path = str(tmp_path / "u")
-    for i in range(6):
-        spark.createDataFrame(
-            [(i, f"v{i}")], "id int, v string"
-        ).coalesce(1).write.mode("append").parquet(path)
-    report = compact(spark, path, target_file_bytes=10 * 1024 * 1024)
-    assert report["partitions_compacted"] == 1
-    rows = spark.read.parquet(path).collect()
-    assert {r["v"] for r in rows} == {f"v{i}" for i in range(6)}
-    import os
-    assert not os.path.exists(path + "__compact_stage__")
-    assert not os.path.exists(path + "__compact_backup__")
-
-
-def test_compact_state_dir_preserves_tick_state_and_replay(spark, tmp_path):
-    """r14: N corpus ticks accrete one file-wave per index table;
-    compact_state_dir rewrites the fragmented tables, every table's
+def test_maintain_state_dir_preserves_tick_state_and_replay(spark, tmp_path):
+    """N corpus ticks accrete one file-wave per index table;
+    maintain_state_dir rewrites the fragmented tables, every table's
     row multiset (batch_id tags included) is unchanged, and the next
     tick over the compacted state behaves identically (replay
     contract intact)."""
@@ -147,8 +118,11 @@ def test_compact_state_dir_preserves_tick_state_and_replay(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from falcon_metrics_etl_spark.plans.bpe import _byte_merges_df, byte_words_of
-    from falcon_metrics_etl_spark.sinks.compaction import compact_state_dir
-    from falcon_metrics_etl_spark.state import live_file_count, read_state
+    from falcon_metrics_etl_spark.state import (
+        live_file_count,
+        maintain_state_dir,
+        read_state,
+    )
     from falcon_metrics_etl_spark.streaming.corpus_tick import (
         corpus_ingest_tick,
         stage_corpus_state,
@@ -192,17 +166,21 @@ def test_compact_state_dir_preserves_tick_state_and_replay(spark, tmp_path):
 
     before_rows = table_multisets()
     before_files = file_counts()
-    report = compact_state_dir(spark, state, min_files=2)
+    report = maintain_state_dir(spark, state, file_threshold=1, min_files=2)
     after_rows = table_multisets()
     after_files = file_counts()
     assert after_rows == before_rows  # byte-for-row identical state
-    compacted = [t for t, r in report.items() if r["partitions_compacted"]]
+    compacted = [
+        t for t, r in report.items() if r.get("partitions_compacted")
+    ]
     assert compacted  # the appended indexes actually fragmented
     for t in compacted:
         assert after_files[t] < before_files[t]
     # idempotent maintenance: an immediate second sweep is a no-op
-    report2 = compact_state_dir(spark, state, min_files=2)
-    assert all(r["partitions_compacted"] == 0 for r in report2.values())
+    report2 = maintain_state_dir(spark, state, file_threshold=1, min_files=2)
+    assert all(
+        r.get("partitions_compacted", 0) == 0 for r in report2.values()
+    )
     # the NEXT tick over compacted state behaves identically to the
     # same tick over a replica of it
     import shutil

@@ -15,8 +15,8 @@ assertions hold unchanged.
 Also pins the r15 advisor's state-layer items: strict pointer-read
 errors (an EXISTING but unreadable _CURRENT raises instead of
 serving the retired flat layout), the admission index surviving a
-maintenance compaction, pre-r15 staged-slug GC, flat-layout
-underscore-remnant GC, and the partitioned-table compaction guard.
+maintenance compaction, flat-layout underscore-remnant GC, and the
+partitioned-table compaction guard.
 """
 
 from __future__ import annotations
@@ -302,34 +302,3 @@ def test_flat_gc_removes_underscore_remnants(spark, tmp_path):
     assert "_SUCCESS" not in left and "_temporary" not in left
     assert "_CURRENT" in left
     assert read_state(spark, path).count() == 8
-
-
-def test_gc_staged_state_retires_pre_r15_slugs(tmp_path, monkeypatch):
-    """r15 advisor low #4 (staged half): version dirs whose slug lacks
-    the 8-hex key-hash suffix predate r15 keying and are unreachable —
-    they must be retired (and collected past grace) instead of leaking
-    forever as singleton slug groups."""
-    from falcon_metrics_etl_spark.session import (
-        STATE_DIR_ENV,
-        gc_staged_state,
-    )
-
-    root = str(tmp_path / "state-root")
-    monkeypatch.setenv(STATE_DIR_ENV, root)
-    legacy = os.path.join(root, "media_fp_base_sf0.1-" + "ab" * 8)
-    modern = os.path.join(
-        root, "media_fp_base_sf0.1.12345678-" + "cd" * 8
-    )
-    for p in (legacy, modern):
-        os.makedirs(p)
-        open(os.path.join(p, "_SUCCESS"), "w").write("")
-    # first sweep retires the legacy dir (grace clock starts)...
-    assert gc_staged_state(root, grace_seconds=3600) == 0
-    from falcon_metrics_etl_spark.state import RETIRED_MARKER
-
-    assert os.path.isfile(os.path.join(legacy, RETIRED_MARKER))
-    assert not os.path.isfile(os.path.join(modern, RETIRED_MARKER))
-    # ...second sweep past grace collects it; the modern dir survives
-    assert gc_staged_state(root, grace_seconds=0) == 1
-    assert not os.path.isdir(legacy)
-    assert os.path.isdir(modern)
